@@ -846,8 +846,8 @@ object SparkEntry {
        |  FROM u LEFT JOIN agg a ON u.conv_id = a.doc_id),
        |${dEchoCtes("allt")},
        |ce AS (SELECT conv_id, count(*)::BIGINT AS n_echo_scored,
-       |    sum(CASE WHEN overlap_ppm >= $echoThr THEN 1 ELSE 0 END) * 1000000
-       |      // count(*) AS echo_ppm
+       |    (sum(CASE WHEN overlap_ppm >= $echoThr THEN 1 ELSE 0 END) * 1000000
+       |      // count(*))::BIGINT AS echo_ppm
        |  FROM eo GROUP BY 1),
        |lin AS (SELECT dk.conv_id, dk.conv_id LIKE '%~f' AS is_fork, dk.is_dup,
        |    dk.dup_of, dk.dedup_keep,

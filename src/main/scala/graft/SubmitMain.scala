@@ -43,10 +43,17 @@ import graft.schema.{ConvRule, Turn}
   *    Iceberg layout) elides that side's shuffle entirely, which the
   *    unconditional `repartition` of the fused path never can.
   *
+  * `--buckets N` pins the conv_id shuffle of the default route at N
+  * partitions. Without it the route starts from the session's
+  * `spark.sql.shuffle.partitions` and, with AQE on (Spark's default), lets
+  * AQE coalesce small partitions from the actual shuffle sizes, so a small
+  * delta is not folded and written as hundreds of tiny tasks and files.
+  *
   * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE whichever
   * single pass materialized the segments — no route runs extraction twice.
-  * Master/executors come from spark-submit; nothing here assumes local
-  * mode.
+  * Each append's `row_count` is observed inside its own write job, so the
+  * job never re-reads what it wrote. Master/executors come from
+  * spark-submit; nothing here assumes local mode.
   */
 object SubmitMain {
 
@@ -144,14 +151,11 @@ object SubmitMain {
     val linSnap = store.append(
       Pipeline.lineageFromStats(spark, stage, stats.value, snapshotId = segSnap).toDF(),
       Map("table" -> "lineage", "segments_snapshot" -> segSnap.toString))
-    // committed row count comes from the append manifest (exact: counted
-    // over the staged files the commit published) — not the lineage
-    // accumulator (accumulator updates in transformations can double-count
-    // under stage retry/speculative execution) and not a full readback
-    // scan of the just-committed table (an extra read pass at 10^12
-    // turns). Fallback readback only for pre-row_count manifests.
-    val nSegs = store.rowCount(segSnap)
-      .getOrElse(store.read(spark, segSnap).count())
+    // committed row count comes from the append manifest (exact: observed
+    // in the write's result stage, once per committed partition — see
+    // SnapshotStore.append) — not a full readback scan of the
+    // just-committed table (an extra read pass at 10^12 turns)
+    val nSegs = store.rowCount(segSnap).get
     println(s"""{"segments_snapshot":$segSnap,"lineage_snapshot":$linSnap,"segments":$nSegs}""")
   }
 }

@@ -3,7 +3,8 @@ package graft.io
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Minimal snapshot-versioned parquet table — the in-sandbox stand-in for an
   * Iceberg table (no Iceberg runtime jar ships with this image; see SURVEY
@@ -315,13 +316,18 @@ final class SnapshotStore(val root: String) {
       statsCol: Option[String] = None): Long = {
     requireNoDroppedNames(df)
     requireNoRetiredNames(df)
-    val stage = stageWrite(df)
-    // exact committed row count, recorded in the manifest: count(*) over
-    // the staged parquet reads zero columns (row-group metadata only), so
-    // consumers (e.g. SubmitMain's summary line) never need a readback
-    // scan NOR a task accumulator — accumulators in transformations can
-    // double-count under stage retry/speculation; this count cannot.
-    val nRows = df.sparkSession.read.parquet(stage.toString).count()
+    // exact committed row count, recorded in the manifest so consumers
+    // (e.g. SubmitMain's summary line) never rescan the table. It is
+    // observed INSIDE the write job — no readback of the staged files. The
+    // observation sits directly under the write, so it is computed in the
+    // write's result stage, and the DAGScheduler applies a ResultTask's
+    // accumulator updates once per partition, only from the successful
+    // attempt (the one the commit coordinator let commit): failed, retried
+    // and speculative attempts never add. The no-arg Observation has a
+    // unique name, so concurrent appends in one session cannot mix counts.
+    val observed = Observation()
+    val stage = stageWrite(df.observe(observed, count(lit(1)).as("n")))
+    val nRows = observed.get("n").asInstanceOf[Long]
     val withStats = meta + ("row_count" -> nRows.toString) ++
       stagedStats(df.sparkSession, stage, statsCol)
     commitStaged(stage, () => withStats, () => true).get

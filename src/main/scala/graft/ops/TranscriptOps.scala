@@ -452,9 +452,12 @@ object TranscriptOps {
          else s"convs '${r.getString(2)}' and '${r.getString(3)}' collide on key ${r.getLong(0)}")
     })
     val packs = DocTextOps.packByTokens(keyed.select("n_tokens", "doc_id"), budget)
+    // the key is injective over the SELECTED pool only: a dropped conv
+    // sharing a selected one's key ('doc7' vs 'conv7') must not pick up its
+    // pack coordinates, so dropped rows join with a NULL key
     lineage
       .join(toks, Seq("conv_id"), "left")
-      .withColumn("conv_num", expr(numKeyExpr))
+      .withColumn("conv_num", expr(s"CASE WHEN selected THEN $numKeyExpr END"))
       .join(packs.selectExpr("doc_id AS conv_num", "pack_id", "pack_offset"),
         Seq("conv_num"), "left")
       .selectExpr("conv_id", "is_fork", "is_dup", "dup_of", "dedup_keep",

@@ -7,7 +7,7 @@ import graft.core.extract.Extractor
 import graft.core.seg.Demarcator
 import graft.core.xml.SubDocXml
 import graft.gen.SyntheticTranscripts
-import graft.pipeline.Pipeline
+import graft.pipeline.{PartitionStatsAcc, Pipeline}
 import graft.schema._
 
 /** End-to-end parity: the distributed pipeline must equal the sequential
@@ -166,6 +166,33 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       .count(_.text.indexOf(Extractor.CorruptMarker) >= 0)).sum
     assert(wantErrs > 0, "fixture must exercise the quarantine branch")
     assert(lin.map(_.errors).sum == wantErrs.toLong)
+  }
+
+  test("PartitionStatsAcc keeps one value per partition id across merges") {
+    val driver = new PartitionStatsAcc
+    def task(adds: (Int, Long, Long, Long)*): PartitionStatsAcc = {
+      val t = new PartitionStatsAcc
+      adds.foreach(t.add) // within a task, adds sum (per-conversation adds)
+      t
+    }
+    driver.merge(task((0, 3L, 1L, 0L), (0, 2L, 1L, 1L)))
+    driver.merge(task((1, 4L, 2L, 0L)))
+    // partition 0 reported again (a re-executed stage): replaced, not summed
+    driver.merge(task((0, 5L, 2L, 1L)))
+    assert(driver.value == Map(0 -> ((5L, 2L, 1L)), 1 -> ((4L, 2L, 0L))))
+  }
+
+  test("lineage stats stay exact when the extraction stage runs twice") {
+    import spark.implicits._
+    val turns = SyntheticTranscripts.turns(spark, 5, Seed).as[Turn]
+    val acc = new PartitionStatsAcc
+    spark.sparkContext.register(acc, "graft.partition_lineage.rerun")
+    val extracted = Pipeline.extract(turns, stats = Some(acc))
+    // two actions over one plan re-run every extraction task, as a
+    // resubmitted map stage would
+    extracted.count()
+    extracted.count()
+    assert(acc.value.values.map(_._1).sum == turns.count())
   }
 
   test("dedup clustering: chained near-dups collapse to one component") {

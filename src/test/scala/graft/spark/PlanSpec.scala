@@ -1,7 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,6 +85,40 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val bc = spark.sparkContext.broadcast(ruleMap)
     val df = Pipeline.segmentFused(turns, bc).toDF()
     assert(shuffleCount(df) == 1, formatted(df))
+  }
+
+  test("fused pipeline: AQE coalesces the conv_id shuffle unless buckets pin it") {
+    val turns = SyntheticTranscripts.turns(spark, 10)
+    val ruleMap = (0L until 10L).map { ci =>
+      SyntheticTranscripts.convId(ci) -> SyntheticTranscripts.rulesFor(42L, ci).map(Pipeline.toCoreRule)
+    }.toMap
+    val bc = spark.sparkContext.broadcast(ruleMap)
+    /** The fold's input reads after execution, from the final adaptive plan. */
+    def foldReads(buckets: Int): (Seq[AQEShuffleReadExec], Int) = {
+      val df = Pipeline.segmentFused(turns, bc, buckets).toDF()
+      df.collect()
+      val fin = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => fail(s"not an adaptive plan:\n$other")
+      }
+      // query stages are leaves of the adaptive tree: descend into them
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case q: QueryStageExec => q +: nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
+      }
+      val fold = nodes(fin).collectFirst { case m: MapPartitionsExec => m }
+        .getOrElse(fail(s"no fold in\n$fin"))
+      (nodes(fold).collect { case r: AQEShuffleReadExec => r }, fold.execute().getNumPartitions)
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // a few KB of turns over 7 session partitions: merged at runtime
+    val (auto, autoParts) = foldReads(0)
+    assert(auto.exists(_.hasCoalescedPartition), auto)
+    assert(autoParts < spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // a pinned width is a contract: no coalescing, exactly 8 partitions
+    val (pinned, pinnedParts) = foldReads(8)
+    assert(!pinned.exists(_.hasCoalescedPartition), pinned)
+    assert(pinnedParts == 8)
   }
 
   test("two-stage pipeline: two exchanges (salted extraction + conv regroup)") {

@@ -48,6 +48,32 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
     assert(lineage.selectExpr("sum(errors)").collect()(0).getLong(0) == wantErrs.toLong)
   }
 
+  test("AQE on or off: identical segment rows and lineage sums") {
+    spark
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    def run(aqe: Boolean) = {
+      spark.conf.set(key, aqe.toString)
+      val out = Files.createTempDirectory(s"graft-submit-aqe-$aqe").toString
+      SubmitMain.main(Array("--synthetic-convs", "12", "--out", out))
+      val store = new SnapshotStore(out)
+      val segs = store.read(spark, 1L).orderBy("conv_id", "Sequence").collect().toSeq
+      val sums = store.read(spark, 2L)
+        .selectExpr("sum(rows_in)", "sum(rows_out)", "sum(errors)").collect()(0)
+      (segs, (sums.getLong(0), sums.getLong(1), sums.getLong(2)), store.rowCount(1L))
+    }
+    try {
+      val on = run(aqe = true)
+      val off = run(aqe = false)
+      assert(on._1.nonEmpty)
+      assert(on == off)
+      assert(on._3 == Some(on._1.length.toLong))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("two-stage flag produces identical segments") {
     spark
     val out1 = Files.createTempDirectory("graft-submit-f").toString

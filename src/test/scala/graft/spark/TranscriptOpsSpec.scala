@@ -292,6 +292,21 @@ class TranscriptOpsSpec extends AnyFunSuite with SparkFixture {
     assert(e2.getMessage.contains("maps to NULL"), e2.getMessage)
   }
 
+  test("transcriptPipeline: a dropped conv sharing a selected conv's key gets no pack") {
+    // 'doc7' and 'conv7' both map to key 7; the key only has to be
+    // injective over the selected pool, and doc7 is dropped (full echo)
+    val collide = turns(
+      ("conv7", 1, "user", "f1 f2 f3"), ("conv7", 2, "assistant", "g1 g2 g3 g4"),
+      ("doc7", 1, "user", "e1 e2 e3"), ("doc7", 2, "assistant", "e1 e2 e3"))
+    val got = TranscriptOps.transcriptPipeline(collide, forkMod = 0L)
+      .selectExpr("conv_id", "selected", "pack_id", "pack_offset").collect()
+      .map(r => r.getString(0) -> ((r.getBoolean(1),
+        Option(r.get(2)), Option(r.get(3))))).toMap
+    assert(got === Map(
+      "conv7" -> ((true, Some(0L), Some(0L))),
+      "doc7" -> ((false, None, None))))
+  }
+
   test("transcriptPipeline equals the composition of its public stages") {
     // the generator corpus (150 convs): dedup columns must match convDedup,
     // echo columns must match the echoDetect rollup, pack coordinates must
