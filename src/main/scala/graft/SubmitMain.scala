@@ -14,7 +14,7 @@ import graft.schema.{ConvRule, Turn}
   *   --conf spark.sql.extensions=graft.functions.GraftExtensions \
   *   ocrspark.jar \
   *   --turns /data/transcripts.parquet --rules /data/rules.parquet \
-  *   --out /data/segments_store --buckets 4096 [--two-stage | --catalyst] \
+  *   --out /data/segments_store [--buckets 4096] [--two-stage] \
   *   [--format parquet|json|csv]
   * }}}
   *
@@ -25,29 +25,21 @@ import graft.schema.{ConvRule, Turn}
   * snapshots to the output [[SnapshotStore]]: the segment rows and the
   * per-partition lineage/metrics rows. Routes:
   *
-  *  - default: the fused single-shuffle path, rules broadcast at or below
-  *    `--broadcast-rule-limit` rules (default 1e6) AND
-  *    `--broadcast-byte-limit` estimated heap bytes (default 256 MiB —
-  *    fat rule strings route to cogroup even at low counts), else
-  *    shuffle-cogrouped (`Pipeline.segmentAuto`);
-  *  - `--two-stage`: salted extraction + regroup for monster-conversation
-  *    corpora (a single conversation big enough to straggle one fused
-  *    task);
-  *  - `--catalyst`: the whole-operator Catalyst route, two-child form
-  *    ([[graft.plans.SegmentPlans.segmentJoin]]) — turns AND rules are
-  *    children of one physical node that DECLARES
-  *    `ClusteredDistribution(conv_id)` + `(conv_id, turn_idx)` ordering,
-  *    so `EnsureRequirements` co-partitions the rule corpus with the turns
-  *    (no driver collect, no broadcast — rules scale with the table), and
-  *    on a turns table already bucketed+sorted by conv_id (the 10^12-turn
-  *    Iceberg layout) elides that side's shuffle entirely, which the
-  *    unconditional `repartition` of the fused path never can.
+  *  - default (`Pipeline.segmentAuto`): raw turns shuffle by `conv_id`
+  *    into a fold node that extracts and segments in one pass, rules
+  *    broadcast at or below `--broadcast-rule-limit` rules (default 1e6)
+  *    AND `--broadcast-byte-limit` estimated heap bytes (default 256 MiB),
+  *    else a co-partitioned child plan of the join node (no driver rule
+  *    state). The nodes declare `ClusteredDistribution(conv_id)`, so a
+  *    turns table bucketed by `conv_id` is not shuffled at all;
+  *  - `--two-stage` (`Pipeline.segmentTwoStage`): salted extraction, then
+  *    the join node regroups and folds, for monster-conversation corpora.
   *
-  * `--buckets N` pins the conv_id shuffle of the default route at N
-  * partitions. Without it the route starts from the session's
-  * `spark.sql.shuffle.partitions` and, with AQE on (Spark's default), lets
-  * AQE coalesce small partitions from the actual shuffle sizes, so a small
-  * delta is not folded and written as hundreds of tiny tasks and files.
+  * `--buckets N` pins the conv_id shuffle (under `--two-stage`, the salted
+  * extraction) at N partitions. Without it the shuffle starts from
+  * `spark.sql.shuffle.partitions` and AQE (on by default) coalesces small
+  * partitions, so a small delta is not written as hundreds of tiny files.
+  * Any other `--name` is rejected.
   *
   * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE whichever
   * single pass materialized the segments — no route runs extraction twice.
@@ -57,12 +49,19 @@ import graft.schema.{ConvRule, Turn}
   */
 object SubmitMain {
 
+  /** Every flag [[main]] reads; a typo must fail, not run the default. */
+  private val KnownFlags = Seq("turns", "rules", "synthetic-convs", "seed", "out",
+    "format", "master", "buckets", "broadcast-rule-limit", "broadcast-byte-limit",
+    "two-stage")
+
   private def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       val k = args(i)
       require(k.startsWith("--"), s"unexpected argument $k")
+      require(KnownFlags.contains(k.drop(2)),
+        s"unknown flag $k (known: ${KnownFlags.map("--" + _).mkString(" ")})")
       if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
         m(k.drop(2)) = args(i + 1); i += 2
       } else { m(k.drop(2)) = "true"; i += 1 }
@@ -130,18 +129,10 @@ object SubmitMain {
     val (segments, stage) =
       if (opts.contains("two-stage"))
         // salted per-turn extraction (stats filled there), then regroup
-        (Pipeline.segmentCogroup(
-          Pipeline.extract(turns, partitions = buckets, stats = Some(stats)), rules).toDF(),
-          "extract")
-      else if (opts.contains("catalyst"))
-        // whole-operator Catalyst route, TWO-child form: rules arrive as a
-        // co-partitioned plan (ClusteredDistribution on both children), so
-        // no rule corpus is ever collected or broadcast — the only route
-        // shape that survives 10^12 conversations
-        (graft.plans.SegmentPlans.segmentJoin(turns, rules, Some(stats)), "segment")
+        (Pipeline.segmentTwoStage(turns, rules, buckets, Some(stats)).toDF(), "extract")
       else
-        // fused single-shuffle; broadcast vs cogroup by rule-corpus size
-        // (count AND estimated heap bytes — fat rules route to cogroup)
+        // broadcast vs join node by rule-corpus size (count AND estimated
+        // heap bytes — fat rules take the join node)
         (Pipeline.segmentAuto(turns, rules, buckets, ruleLimit, Some(stats), byteLimit).toDF(),
           "segment")
 

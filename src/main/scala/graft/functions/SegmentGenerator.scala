@@ -25,8 +25,9 @@ import graft.core.seg.{Demarcator, Rule}
   * Used as `SELECT conv_id, segment_rows(...).*` after a `groupBy` —
   * Catalyst plans the standard `Generate` node over the aggregated
   * arrays. The eval path is `CodegenFallback` like every generator; the
-  * per-row work is the same core fold the production `flatMapGroups`
-  * path runs, so SQL users get byte-identical segments. */
+  * per-row work is the same core fold (`Demarcator.demarcateIsolated`)
+  * the batch routes' Catalyst fold nodes run, so SQL users get
+  * byte-identical segments. */
 case class SegmentRowsGenerator(turns: Expression, rules: Expression)
     extends Generator with CodegenFallback {
 
@@ -146,8 +147,8 @@ case class SegmentRowsGenerator(turns: Expression, rules: Expression)
         if (row == null || row.isNullAt(tText)) "" else row.getUTF8String(tText).toString
       (idx, text)
     }.sortBy(t => if (t._1 == null) Int.MaxValue else t._1.intValue())
-    // same loud invariant as the production GroupFold path
-    // (Pipeline.foldOne's "turn ordering violated"): null or duplicate
+    // same loud invariant as the batch routes' fold
+    // (Pipeline.GroupFold's "turn ordering violated"): null or duplicate
     // turn_idx must fail here too, not silently fold to different output
     var lastIdx = Int.MinValue
     sorted.foreach { case (idx, _) =>

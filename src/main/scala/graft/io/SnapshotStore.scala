@@ -1165,7 +1165,7 @@ object ResumableJob {
               SyntheticTranscripts.rulesFor(corpusSeed, i).map(Pipeline.toCoreRule)
           }.toMap
           val bc = spark.sparkContext.broadcast(ruleMap)
-          val segs = Pipeline.segment(Pipeline.extract(turns), bc)
+          val segs = Pipeline.segmentFused(turns, bc)
           segs.write.mode("overwrite").parquet(s"$workRoot/segments/bucket=$b")
         }
         atomicWrite(markerPath(workRoot, b), s"""{"bucket": $b, "convs": [$lo, $hi)}""")

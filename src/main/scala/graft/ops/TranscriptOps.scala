@@ -384,6 +384,10 @@ object TranscriptOps {
     * the composed document pipelines established. `numKeyExpr` maps a
     * conv id to the numeric pack key (fork twins offset by 10^9 so a
     * surviving fork can never collide with its original's key).
+    * Only turns with a role render tokens: a conversation whose turns all
+    * have a NULL role is still judged (and normally selected — it has no
+    * echo signal), but it has nothing to pack, so its `n_tokens`,
+    * `pack_id` and `pack_offset` are NULL.
     *
     * Shape at 100 TB: each stage keeps its own operator's shape (banded
     * candidate probe, conv-clustered window + rollup, one-row-per-conv

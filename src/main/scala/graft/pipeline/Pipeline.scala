@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.core.extract.Extractor
 import graft.core.seg.{Demarcator, Rule}
 import graft.core.xml.SubDocXml
+import graft.plans.SegmentPlans
 import graft.schema._
 
 /** Per-partition (rows_in, rows_out, errors) metrics collected INSIDE a
@@ -49,20 +50,14 @@ final class PartitionStatsAcc
 }
 
 /** The end-to-end extraction + segmentation pipeline (SURVEY §3.1 "Spark
-  * lifecycle we build"):
-  *
-  *   scan → [stage A] repartition by hash(conv_id, turn_idx)   — explicit
-  *   salting: hot conversations spread across all tasks (order-free per-turn
-  *   work) → mapPartitions extraction kernels →
-  *   [stage B] repartition by conv_id + sortWithinPartitions(conv_id,
-  *   turn_idx) — the secondary sort that guarantees stable turn ordering →
-  *   streaming per-conversation fold (constant memory beyond one
-  *   conversation, mirroring the reference's pages-in-memory bound,
-  *   `ocr_processor.py:247`) → segments + lineage.
-  *
-  * Exactly two shuffles; stage A's shuffle doubles as the salting step, so
-  * at 1000 executors a 10^6-turn conversation costs ~10^3 turns per task in
-  * extraction and only serializes in the (cheap, string-scan) fold.
+  * lifecycle we build"). Every batch route runs [[Pipeline.GroupFold]] —
+  * a streaming fold over (conv_id, turn_idx)-sorted rows, one conversation
+  * in memory at a time (the reference's pages-in-memory bound,
+  * `ocr_processor.py:247`) — inside one of the two Catalyst nodes in
+  * [[graft.plans.SegmentPlans]]: [[segmentFused]] (rules broadcast) or,
+  * above [[segmentAuto]]'s rule limits, the join node; [[segmentTwoStage]]
+  * salts extraction of a hot conversation across all tasks first, so a
+  * 10^6-turn conversation only serializes in the (cheap, string-scan) fold.
   */
 object Pipeline {
 
@@ -96,8 +91,9 @@ object Pipeline {
           "two-stage path (SubmitMain --two-stage) or raise the budget")
   }
 
-  /** Stage A: per-turn payload extraction. Salted repartition — partition key
-    * includes turn_idx so a hot conversation cannot straggle extraction.
+  /** Per-turn payload extraction, the first stage of [[segmentTwoStage]].
+    * Salted repartition — partition key includes turn_idx so a hot
+    * conversation cannot straggle extraction.
     * With `stats` set, per-partition (rows, rows, errors) are accumulated in
     * THIS pass (task-completion flush) so lineage needs no second action. */
   def extract(turns: Dataset[Turn], partitions: Int = 0,
@@ -140,8 +136,8 @@ object Pipeline {
     // nullable parquet strings: Option(...) (not Some) so a NULL column
     // becomes None — Some(null) would NPE inside demarcate's sequence
     // sort or leak null through getOrElse("") at emit; identifier-class
-    // fields null-coalesce to "" exactly like the catalyst route's
-    // rowToRule, so the two routes agree on NULL-bearing rule tables
+    // fields null-coalesce to "" exactly like the join node's rowToRule,
+    // so the two fold nodes agree on NULL-bearing rule tables
     documentTypeName = Option(r.DocumentTypeName).getOrElse(""),
     startingIdentifier = Option(r.StartingIdentifier).getOrElse(""),
     startingIdentifierPlus1 = Option(r.StartingIdentifierPlus1).getOrElse(""),
@@ -207,21 +203,7 @@ object Pipeline {
       }
       val (rows, decodeFailed) = Demarcator.demarcateIsolated(pages.result(), rulesFor(cid))
       if (decodeFailed) onRuleDecodeError(cid)
-      pending = rows.iterator.map { r =>
-        ConvSegment(
-          conv_id = cid,
-          DocReceivedId = r.DocReceivedId.getOrElse(0L),
-          FromPageNumber = r.FromPageNumber,
-          ToPageNumber = r.ToPageNumber,
-          FileNumber = r.FileNumber.getOrElse(""),
-          DocumentTypeId = r.DocumentTypeId.getOrElse(""),
-          UploadDataSheetId = r.UploadDataSheetId.getOrElse(0L),
-          TotalNumberOfpages = r.TotalNumberOfpages,
-          NoOfPages = r.NoOfPages,
-          Sequence = r.Sequence.getOrElse(""),
-          SessionId = r.SessionId.getOrElse("")
-        )
-      }
+      pending = rows.iterator.map(ConvSegment.of(cid, _))
     }
 
     def hasNext: Boolean = {
@@ -231,144 +213,30 @@ object Pipeline {
     def next(): ConvSegment = { if (!hasNext) throw new NoSuchElementException; pending.next() }
   }
 
-  /** Stage B: per-conversation demarcation. Rules arrive as a broadcast
-    * lookup (the reference's envelope→rule enrichment, `main.py:232-236`, is
-    * a broadcast join: rule corpora are tiny relative to turns). For rule
-    * tables too large to broadcast, use [[segmentCogroup]]. */
-  def segment(
-      extracted: Dataset[ExtractedTurn],
-      rules: Broadcast[Map[String, Seq[Rule]]],
-      buckets: Int = 0
-  ): Dataset[ConvSegment] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    val b = if (buckets > 0) buckets else spark.sessionState.conf.numShufflePartitions
-    extracted
-      .select($"conv_id", $"turn_idx", $"tool", $"text")
-      .repartition(b, $"conv_id")
-      .sortWithinPartitions($"conv_id", $"turn_idx")
-      .as[(String, Int, String, String)]
-      .mapPartitions(it =>
-        new GroupFold(it, cid => rules.value.getOrElse(cid, Nil), (_, text) => text))
-  }
-
-  /** Fused single-shuffle path: shuffle RAW turns once by `conv_id`,
-    * secondary-sort, and run extraction inside the same partition pass as
-    * the demarcation fold. Halves shuffle volume and row encode/decode
-    * versus [[extract]]→[[segment]] (payload text crosses the wire once) —
-    * the default when per-turn extracted output isn't separately needed.
-    * The two-stage salted path remains for the monster-conversation regime
-    * (a single conversation large enough to straggle one extraction task).
-    */
+  /** The default fold: raw turns into [[SegmentPlans.segment]], which
+    * extracts inside the fold, with a broadcast rule lookup (the
+    * reference's envelope→rule enrichment, `main.py:232-236`). The planner
+    * places the `conv_id` exchange: none on input bucketed by `conv_id`,
+    * else one AQE may coalesce (whole hash partitions, sorted after the
+    * merged read). `buckets > 0` pins the width with a repartition. */
   def segmentFused(
       turns: Dataset[Turn],
       rules: Broadcast[Map[String, Seq[Rule]]],
       buckets: Int = 0,
-      errorCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       stats: Option[PartitionStatsAcc] = None
   ): Dataset[ConvSegment] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val cols = turns.select($"conv_id", $"turn_idx", $"tool", $"text")
-    // buckets > 0 pins the width; otherwise the session's shuffle width is
-    // only the starting point and AQE may coalesce small partitions from
-    // the actual shuffle sizes. It merges WHOLE hash partitions and the
-    // sort runs after the merged read, so each conversation still arrives
-    // contiguous and in turn order.
-    (if (buckets > 0) cols.repartition(buckets, $"conv_id") else cols.repartition($"conv_id"))
-      .sortWithinPartitions($"conv_id", $"turn_idx")
-      .as[(String, Int, String, String)]
-      .mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var in = 0L
-        var out = 0L
-        var errs = 0L
-        for (acc <- stats; tc <- Option(TaskContext.get()))
-          tc.addTaskCompletionListener[Unit](_ => acc.add((pid, in, out, errs)))
-        val src = if (stats.isEmpty) it else it.map { t => in += 1; t }
-        val fold = new GroupFold(src, cid => rules.value.getOrElse(cid, Nil),
-          (tool, text) => {
-            val (ex, err) = Extractor.safeExtract(tool, text)
-            if (err) { errorCounter.foreach(_.add(1L)); errs += 1 }
-            ex.text
-          },
-          onRuleDecodeError = cid => {
-            errorCounter.foreach(_.add(1L)); errs += 1; logRuleDecodeError(cid)
-          })
-        if (stats.isEmpty) fold else fold.map { s => out += 1; s }
-      }
+    SegmentPlans.segment(if (buckets > 0) cols.repartition(buckets, $"conv_id") else cols,
+      cid => rules.value.getOrElse(cid, Nil), stats).as[ConvSegment]
   }
 
-  /** Fused cogroup path: raw turns cogrouped with the rules DATASET on
-    * conv_id, extraction running inside the cogroup pass — single shuffle
-    * of the payload text AND no driver/broadcast materialization of the
-    * rule corpus. The scale default when rules are per-conversation (rule
-    * volume grows with the corpus, so a broadcast map would grow
-    * unboundedly — VERDICT r1 #3). */
-  def segmentFusedCogroup(
-      turns: Dataset[Turn],
-      rules: Dataset[ConvRule],
-      errorCounter: Option[org.apache.spark.util.LongAccumulator] = None,
-      stats: Option[PartitionStatsAcc] = None
-  ): Dataset[ConvSegment] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns
-      .select($"conv_id", $"turn_idx", $"tool", $"text")
-      .as[(String, Int, String, String)]
-      .groupByKey(_._1)
-      .cogroup(rules.groupByKey(_.conv_id)) { (cid, ts, rs) =>
-        // an orphan rule (conv_id with no turns) emits NOTHING — identical
-        // to the turns-driven broadcast route, so segmentAuto's routing
-        // threshold can never change results
-        if (!ts.hasNext) Iterator.empty
-        else {
-          var errs = 0L
-          var nChars = 0L
-          val buf = Vector.newBuilder[(Int, String)]
-          var n = 0
-          ts.foreach { t =>
-            val (ex, err) = Extractor.safeExtract(t._3, t._4)
-            if (err) { errorCounter.foreach(_.add(1L)); errs += 1 }
-            n += 1
-            nChars += ex.text.length.toLong
-            guardConv(cid, n, nChars, DefaultMaxConvPages, DefaultMaxConvChars)
-            buf += ((t._2, ex.text))
-          }
-          val sorted = buf.result().sortBy(_._1)
-          // same loud invariant as GroupFold: a duplicated turn_idx must
-          // not silently fold in shuffle-arrival order (the routing
-          // threshold must never change results)
-          var last = Int.MinValue
-          sorted.foreach { p =>
-            require(p._1 > last, s"turn ordering violated in $cid: ${p._1} after $last")
-            last = p._1
-          }
-          val pages = sorted.map(_._2)
-          val (rows, decodeFailed) =
-            Demarcator.demarcateIsolated(pages, rs.map(toCoreRule).toSeq)
-          if (decodeFailed) {
-            errorCounter.foreach(_.add(1L)); errs += 1; logRuleDecodeError(cid)
-          }
-          // per-group accumulator add (locally merged until task end): the
-          // demarcation output is materialized, so counts are final here
-          stats.foreach(_.add((TaskContext.getPartitionId(), pages.size.toLong,
-            rows.size.toLong, errs)))
-          rows.iterator.map { r =>
-            ConvSegment(cid, r.DocReceivedId.getOrElse(0L), r.FromPageNumber,
-              r.ToPageNumber, r.FileNumber.getOrElse(""), r.DocumentTypeId.getOrElse(""),
-              r.UploadDataSheetId.getOrElse(0L), r.TotalNumberOfpages, r.NoOfPages,
-              r.Sequence.getOrElse(""), r.SessionId.getOrElse(""))
-          }
-        }
-      }
-  }
-
-  /** Routes between the two fused single-shuffle paths by rule-corpus SIZE
-    * IN BYTES as well as count: at or below both limits the corpus is
-    * collected once and broadcast ([[segmentFused]] — cheapest, no shuffle
-    * of the rules); above either, rules stay distributed and cogroup with
-    * the turns ([[segmentFusedCogroup]]). The byte gate matters because a
+  /** Routes between the two fold nodes by rule-corpus SIZE IN BYTES as
+    * well as count: at or below both limits the corpus is collected once
+    * and broadcast ([[segmentFused]] — cheapest, no shuffle of the rules);
+    * above either, rules stay distributed and co-partition with the turns
+    * under [[SegmentPlans.segmentJoin]]. The byte gate matters because a
     * row-count gate alone would let 10^5 rules × 10 KB identifier strings
     * collect gigabytes to the driver; the estimate (2 bytes/char JVM
     * strings + per-row overhead) comes from the same single cheap
@@ -383,6 +251,8 @@ object Pipeline {
       broadcastByteLimit: Long = 256L << 20
   ): Dataset[ConvSegment] = {
     import org.apache.spark.sql.types.StringType
+    val spark = turns.sparkSession
+    import spark.implicits._
     val strCols = rules.schema.fields.filter(_.dataType == StringType)
       .map(f => s"length(coalesce(`${f.name}`, ''))")
     val perRowHeap =
@@ -394,62 +264,24 @@ object Pipeline {
       .head()
     val (n, heap) = (sz.getLong(0), sz.getLong(1))
     if (n <= broadcastRuleLimit && heap <= broadcastByteLimit) {
-      val spark = turns.sparkSession
       val ruleMap = rules.collect().groupBy(_.conv_id)
         .map { case (k, v) => k -> v.toSeq.map(toCoreRule) }
       segmentFused(turns, spark.sparkContext.broadcast(ruleMap), buckets, stats = stats)
-    } else segmentFusedCogroup(turns, rules, stats = stats)
+    } else SegmentPlans.segmentJoin(turns, rules, stats).as[ConvSegment]
   }
 
-  /** Rules-as-dataset variant: shuffle-cogroup on conv_id — the scale path
-    * when the rule table itself is too big for one broadcast. */
-  def segmentCogroup(
-      extracted: Dataset[ExtractedTurn],
-      rules: Dataset[ConvRule]
+  /** `SubmitMain --two-stage`: salted [[extract]] (which fills `stats`),
+    * then the join node folds the text with extraction off — a U+FFFD in
+    * extracted text (a decoded `&#xFFFD;`) is never re-quarantined. */
+  def segmentTwoStage(
+      turns: Dataset[Turn],
+      rules: Dataset[ConvRule],
+      partitions: Int = 0,
+      stats: Option[PartitionStatsAcc] = None
   ): Dataset[ConvSegment] = {
-    val spark = extracted.sparkSession
+    val spark = turns.sparkSession
     import spark.implicits._
-    extracted
-      .select($"conv_id", $"turn_idx", $"text")
-      .as[(String, Int, String)]
-      .groupByKey(_._1)
-      .cogroup(rules.groupByKey(_.conv_id)) { (cid, ts, rs) =>
-        // orphan rules (no turns for the conv) emit nothing — matches the
-        // broadcast routes (see segmentFusedCogroup)
-        if (!ts.hasNext) Iterator.empty
-        else {
-          // same incremental fold budget as every other route: this is the
-          // --two-stage fold stage, and an unguarded toVector here would be
-          // exactly the silent OOM guardConv exists to prevent
-          var nChars = 0L
-          var n = 0
-          val buf = Vector.newBuilder[(Int, String)]
-          ts.foreach { t =>
-            n += 1
-            nChars += t._3.length.toLong
-            guardConv(cid, n, nChars, DefaultMaxConvPages, DefaultMaxConvChars)
-            buf += ((t._2, t._3))
-          }
-          val sorted = buf.result().sortBy(_._1)
-          // same loud invariant as GroupFold: a duplicated turn_idx must
-          // not silently fold in shuffle-arrival order
-          var last = Int.MinValue
-          sorted.foreach { p =>
-            require(p._1 > last, s"turn ordering violated in $cid: ${p._1} after $last")
-            last = p._1
-          }
-          val pages = sorted.map(_._2)
-          val coreRules = rs.map(toCoreRule).toSeq
-          val (rows, decodeFailed) = Demarcator.demarcateIsolated(pages, coreRules)
-          if (decodeFailed) logRuleDecodeError(cid)
-          rows.iterator.map { r =>
-            ConvSegment(cid, r.DocReceivedId.getOrElse(0L), r.FromPageNumber,
-              r.ToPageNumber, r.FileNumber.getOrElse(""), r.DocumentTypeId.getOrElse(""),
-              r.UploadDataSheetId.getOrElse(0L), r.TotalNumberOfpages, r.NoOfPages,
-              r.Sequence.getOrElse(""), r.SessionId.getOrElse(""))
-          }
-        }
-      }
+    SegmentPlans.segmentJoinExtracted(extract(turns, partitions, stats), rules).as[ConvSegment]
   }
 
   /** Per-partition lineage rows for the extraction stage (north rule:
@@ -523,7 +355,7 @@ object Pipeline {
   }
 
   /** Full pipeline for a synthetic corpus of `nConvs` conversations —
-    * broadcast-vs-cogroup selected by rule-corpus size ([[segmentAuto]]). */
+    * broadcast-vs-join selected by rule-corpus size ([[segmentAuto]]). */
   def run(spark: SparkSession, nConvs: Long, corpusSeed: Long = 42L): Dataset[ConvSegment] = {
     val turns = graft.gen.SyntheticTranscripts.turns(spark, nConvs, corpusSeed)
     val rules = graft.gen.SyntheticTranscripts.rules(spark, nConvs, corpusSeed)

@@ -13,23 +13,22 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.extract.Extractor
 import graft.core.seg.Rule
 import graft.pipeline.Pipeline
-import graft.schema.{ConvSegment, Turn}
+import graft.schema.{ConvRule, ConvSegment, ExtractedTurn, Turn}
 
 /** The segmentation fold as a FIRST-CLASS Catalyst operator — the brief's
   * option (c): a custom `LogicalPlan` node, a `SparkStrategy`, and a
   * physical `SparkPlan` registered through `SparkSessionExtensions` /
-  * `experimental.extraStrategies`.
+  * `experimental.extraStrategies`. These two nodes drive every batch
+  * segmentation route in [[Pipeline]].
   *
-  * The point of doing it at this layer (vs the `mapPartitions` pipeline,
-  * which stays the production default): the physical node DECLARES its
+  * The point of doing it at this layer: the physical node DECLARES its
   * needs — `requiredChildDistribution = ClusteredDistribution(conv_id)`,
   * `requiredChildOrdering = (conv_id, turn_idx)` — and Catalyst's
   * `EnsureRequirements` plans the exchange + sort. If the input is already
   * bucketed/sorted by `conv_id` (Iceberg/bucketed tables at 10^12 turns),
   * the optimizer elides the shuffle entirely — something a hand-rolled
   * `repartition().sortWithinPartitions()` can never do, because it is
-  * unconditional. Semantics are identical to [[Pipeline.segmentFused]]
-  * (asserted in PlanSpec).
+  * unconditional (PlanSpec pins both).
   */
 object SegmentPlans {
 
@@ -59,12 +58,12 @@ object SegmentPlans {
         spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ SegmentStrategy
     }
 
-  /** Dataset-API entry: project the needed columns, wrap the child plan in
-    * the logical operator, ensure the strategy is registered, and rebuild a
-    * DataFrame. With `stats` set, per-partition (turns in, segments out,
-    * extraction errors) accumulate inside the operator's single pass —
-    * same lineage contract as [[Pipeline.segmentFused]]. */
-  def segment(turns: org.apache.spark.sql.Dataset[Turn],
+  /** Dataset-API entry: project `conv_id`, `turn_idx`, `tool`, `text`,
+    * wrap the child plan in the logical operator, ensure the strategy is
+    * registered, and rebuild a DataFrame. With `stats` set, per-partition
+    * (turns in, segments out, errors) accumulate inside the operator's
+    * single pass. */
+  def segment(turns: org.apache.spark.sql.Dataset[_],
               rulesFor: String => Seq[Rule],
               stats: Option[graft.pipeline.PartitionStatsAcc] = None): org.apache.spark.sql.DataFrame = {
     val spark = turns.sparkSession
@@ -89,11 +88,24 @@ object SegmentPlans {
     * `ClusteredDistribution(conv_id)` and Catalyst's `EnsureRequirements`
     * co-partitions them (and elides either side's exchange when that side
     * is already bucketed by conv_id); the physical node merge-joins the
-    * sorted streams one conversation at a time. This is what
-    * `SubmitMain --catalyst` runs. */
+    * sorted streams one conversation at a time. [[Pipeline.segmentAuto]]
+    * takes this node when the rule corpus is above its broadcast limits. */
   def segmentJoin(turns: org.apache.spark.sql.Dataset[Turn],
-                  rules: org.apache.spark.sql.Dataset[graft.schema.ConvRule],
-                  stats: Option[graft.pipeline.PartitionStatsAcc] = None): org.apache.spark.sql.DataFrame = {
+                  rules: org.apache.spark.sql.Dataset[ConvRule],
+                  stats: Option[graft.pipeline.PartitionStatsAcc] = None): org.apache.spark.sql.DataFrame =
+    join(turns, rules, stats, extract = true)
+
+  /** [[segmentJoin]] with extraction off, for [[Pipeline.segmentTwoStage]];
+    * typed so raw turns can never skip extraction. */
+  private[graft] def segmentJoinExtracted(
+      extracted: org.apache.spark.sql.Dataset[ExtractedTurn],
+      rules: org.apache.spark.sql.Dataset[ConvRule]): org.apache.spark.sql.DataFrame =
+    join(extracted, rules, None, extract = false)
+
+  private def join(turns: org.apache.spark.sql.Dataset[_],
+                   rules: org.apache.spark.sql.Dataset[ConvRule],
+                   stats: Option[graft.pipeline.PartitionStatsAcc],
+                   extract: Boolean): org.apache.spark.sql.DataFrame = {
     val spark = turns.sparkSession
     ensureStrategy(spark)
     val tChild = turns.select("conv_id", "turn_idx", "tool", "text")
@@ -101,7 +113,7 @@ object SegmentPlans {
     val rChild = rules.toDF().select(RuleCols.map(org.apache.spark.sql.functions.col): _*)
       .queryExecution.analyzed
     org.apache.spark.sql.classic.GraftDatasetBridge.ofRows(
-      spark, SegmentConversationsJoin(tChild, rChild, stats))
+      spark, SegmentConversationsJoin(tChild, rChild, stats, extract))
   }
 }
 
@@ -113,23 +125,34 @@ final case class SegmentConversations(
     lineageStats: Option[graft.pipeline.PartitionStatsAcc] = None,
     output: Seq[Attribute] = SegmentPlans.segmentOutput()
 ) extends UnaryNode {
+  // plans print the output, not the rule closure or the accumulator
+  override def stringArgs: Iterator[Any] = Iterator(output)
   // the node GENERATES its output (it is not derived from child attrs) —
   // without this, CheckAnalysis reports the segment columns as missing
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
+  // the fold reads the child's columns by name, so ColumnPruning must keep
+  // them all under a Project (count(), select) — as Spark's ObjectConsumer
+  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
+    child.outputSet
   override protected def withNewChildInternal(newChild: LogicalPlan): SegmentConversations =
     copy(child = newChild)
 }
 
-/** Logical two-child node: turns ⋈ rules on conv_id → segment rows. */
+/** Logical two-child node: turns ⋈ rules on conv_id → segment rows;
+  * `extract = false` folds already-extracted `text` as is. */
 final case class SegmentConversationsJoin(
     left: LogicalPlan,
     right: LogicalPlan,
     lineageStats: Option[graft.pipeline.PartitionStatsAcc] = None,
+    extract: Boolean = true,
     output: Seq[Attribute] = SegmentPlans.segmentOutput()
 ) extends BinaryNode {
+  override def stringArgs: Iterator[Any] = Iterator(output, s"extract=$extract")
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
+  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
+    left.outputSet ++ right.outputSet
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): SegmentConversationsJoin =
     copy(left = newLeft, right = newRight)
@@ -141,7 +164,7 @@ object SegmentStrategy extends SparkStrategy {
     case s: SegmentConversations =>
       SegmentExec(s.output, s.rulesFor, s.lineageStats, planLater(s.child)) :: Nil
     case s: SegmentConversationsJoin =>
-      SegmentJoinExec(s.output, s.lineageStats,
+      SegmentJoinExec(s.output, s.lineageStats, s.extract,
         planLater(s.left), planLater(s.right)) :: Nil
     case _ => Nil
   }
@@ -156,6 +179,8 @@ final case class SegmentExec(
     lineageStats: Option[graft.pipeline.PartitionStatsAcc],
     child: SparkPlan
 ) extends UnaryExecNode {
+
+  override def stringArgs: Iterator[Any] = Iterator(output)
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
@@ -175,7 +200,7 @@ final case class SegmentExec(
     val acc = lineageStats
     val types = output.map(_.dataType).toArray
     child.execute().mapPartitions { it =>
-      SegmentJoinExec.foldPartition(it, ci, ti, to, te, rules, acc, types)
+      SegmentJoinExec.foldPartition(it, ci, ti, to, te, rules, acc, types, extract = true)
     }
   }
 
@@ -195,9 +220,12 @@ final case class SegmentExec(
 final case class SegmentJoinExec(
     output: Seq[Attribute],
     lineageStats: Option[graft.pipeline.PartitionStatsAcc],
+    extract: Boolean,
     left: SparkPlan,
     right: SparkPlan
 ) extends BinaryExecNode {
+
+  override def stringArgs: Iterator[Any] = Iterator(output, s"extract=$extract")
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
@@ -222,6 +250,7 @@ final case class SegmentJoinExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val (ci, ti, to, te) = (lOrd("conv_id"), lOrd("turn_idx"), lOrd("tool"), lOrd("text"))
     val acc = lineageStats
+    val ext = extract
     val types = output.map(_.dataType).toArray
     left.execute().zipPartitions(right.execute()) { (tIt, rIt0) =>
       // rules stream keyed by UTF8String so the merge compares in the SAME
@@ -244,7 +273,7 @@ final case class SegmentJoinExec(
         while (rIt.hasNext && rIt.head._1.compareTo(ck) == 0) b += rIt.next()._2
         b.result()
       }
-      SegmentJoinExec.foldPartition(tIt, ci, ti, to, te, rulesFor, acc, types)
+      SegmentJoinExec.foldPartition(tIt, ci, ti, to, te, rulesFor, acc, types, ext)
     }
   }
 
@@ -256,17 +285,17 @@ final case class SegmentJoinExec(
 object SegmentJoinExec {
 
   /** Shared per-partition decode → [[Pipeline.GroupFold]] → UnsafeRow
-    * encode used by BOTH physical operators (one copy: a fix to the row
-    * encode or stats wiring cannot silently miss the sibling). Rows with a
-    * NULL conv_id are counted as input and SKIPPED — the broadcast route's
-    * null group folds with no rules and emits nothing, so skipping keeps
-    * the routes-agree contract where a getUTF8String NPE would not. */
+    * encode used by BOTH physical operators, and so by every batch route.
+    * Rows with a NULL conv_id are counted as input and SKIPPED (no rule can
+    * match them); NULL tool/text extract as passthrough/empty; a NULL
+    * turn_idx fails loudly, naming the conversation. */
   private[plans] def foldPartition(
       it: Iterator[InternalRow],
       ci: Int, ti: Int, to: Int, te: Int,
       rulesFor: String => Seq[Rule],
       acc: Option[graft.pipeline.PartitionStatsAcc],
-      types: Array[org.apache.spark.sql.types.DataType]): Iterator[InternalRow] = {
+      types: Array[org.apache.spark.sql.types.DataType],
+      extract: Boolean): Iterator[InternalRow] = {
     // downstream consumers require UnsafeRow; the projection is created
     // per partition (codegen'd, not serializable)
     val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(types)
@@ -276,15 +305,22 @@ object SegmentJoinExec {
     var errs = 0L
     for (a <- acc; tc <- Option(org.apache.spark.TaskContext.get()))
       tc.addTaskCompletionListener[Unit](_ => a.add((pid, in, out, errs)))
+    def str(row: InternalRow, i: Int): String =
+      if (row.isNullAt(i)) null else row.getUTF8String(i).toString
     // copy out of the reused UnsafeRow before buffering
     val tuples = it.flatMap { row =>
       in += 1
       if (row.isNullAt(ci)) None
-      else Some((row.getUTF8String(ci).toString, row.getInt(ti),
-        row.getUTF8String(to).toString, row.getUTF8String(te).toString))
+      else {
+        val cid = row.getUTF8String(ci).toString
+        if (row.isNullAt(ti))
+          throw new IllegalArgumentException(s"NULL turn_idx in conversation $cid")
+        Some((cid, row.getInt(ti), str(row, to), str(row, te)))
+      }
     }
     new Pipeline.GroupFold(tuples, rulesFor,
-      (tool, text) => {
+      if (!extract) (_, text) => text
+      else (tool, text) => {
         val (ex, err) = Extractor.safeExtract(tool, text)
         if (err) errs += 1
         ex.text

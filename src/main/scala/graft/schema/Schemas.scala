@@ -73,6 +73,16 @@ final case class ConvSegment(
     SessionId: String
 )
 
+object ConvSegment {
+  /** The fold's output mapping: one core demarcation row of conversation
+    * `cid`, absent optional fields as 0 / "". */
+  def of(cid: String, r: graft.core.seg.SegmentRow): ConvSegment =
+    ConvSegment(cid, r.DocReceivedId.getOrElse(0L), r.FromPageNumber, r.ToPageNumber,
+      r.FileNumber.getOrElse(""), r.DocumentTypeId.getOrElse(""),
+      r.UploadDataSheetId.getOrElse(0L), r.TotalNumberOfpages, r.NoOfPages,
+      r.Sequence.getOrElse(""), r.SessionId.getOrElse(""))
+}
+
 /** Per-partition lineage/metrics row (north rule: "per-partition lineage +
   * metrics": partition id, input snapshot, rows in/out, extraction error
   * counts).

@@ -98,12 +98,7 @@ object StreamingSegmenter {
               if (decodeFailed)
                 org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingSegmenter")
                   .warn(s"quarantined conversation $cid: malformed rule Sequence")
-              segRows.iterator.map { r =>
-                ConvSegment(cid, r.DocReceivedId.getOrElse(0L), r.FromPageNumber,
-                  r.ToPageNumber, r.FileNumber.getOrElse(""), r.DocumentTypeId.getOrElse(""),
-                  r.UploadDataSheetId.getOrElse(0L), r.TotalNumberOfpages, r.NoOfPages,
-                  r.Sequence.getOrElse(""), r.SessionId.getOrElse(""))
-              }
+              segRows.iterator.map(ConvSegment.of(cid, _))
             }
           } else {
             val prev = state.getOption.getOrElse(ConvState(Nil, 0L, 0L))

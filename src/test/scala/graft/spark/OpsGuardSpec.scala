@@ -94,10 +94,10 @@ class OpsGuardSpec extends AnyFunSuite with SparkFixture {
     // a handful of rules is far under the count gate either way; only the
     // byte gate separates the two routes
     val fat = planOf(byteLimit = 1L)
-    assert(fat.queryExecution.executedPlan.toString.contains("CoGroup"),
-      "1-byte broadcast budget must route to the cogroup path")
+    assert(fat.queryExecution.executedPlan.toString.contains("SegmentJoin"),
+      "1-byte broadcast budget must route to the join node, rules co-grouped")
     val thin = planOf(byteLimit = 256L << 20)
-    assert(!thin.queryExecution.executedPlan.toString.contains("CoGroup"),
+    assert(!thin.queryExecution.executedPlan.toString.contains("SegmentJoin"),
       "small corpus under both gates must take the broadcast path")
     // and the routing can never change results
     val a = fat.collect().sortBy(s => (s.conv_id, s.Sequence))

@@ -64,7 +64,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       SyntheticTranscripts.convId(ci) -> SyntheticTranscripts.rulesFor(Seed, ci).map(Pipeline.toCoreRule)
     }.toMap
     val bc = spark.sparkContext.broadcast(ruleMap)
-    val got = Pipeline.segment(Pipeline.extract(turns), bc).collect()
+    // at a pinned width: the explicit repartition under the node
+    val got = Pipeline.segmentFused(turns, bc, buckets = 8).collect()
       .groupBy(_.conv_id).map { case (k, v) => k -> v.sortBy(_.Sequence.toInt).toVector }
 
     (0L until NConvs).foreach { ci =>
@@ -92,9 +93,11 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("cogroup path produces identical segments") {
     import spark.implicits._
+    // --two-stage: salted extraction, then the join node co-groups the
+    // extracted turns with the rules table
     val turns = SyntheticTranscripts.turns(spark, NConvs, Seed).as[Turn]
     val rules = SyntheticTranscripts.rules(spark, NConvs, Seed)
-    val viaCogroup = Pipeline.segmentCogroup(Pipeline.extract(turns), rules)
+    val viaCogroup = Pipeline.segmentTwoStage(turns, rules)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     val want = (0L until NConvs).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
     assert(viaCogroup == want)
@@ -105,7 +108,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     val turns = SyntheticTranscripts.turns(spark, NConvs, Seed).as[Turn]
     val rules = SyntheticTranscripts.rules(spark, NConvs, Seed)
     val want = (0L until NConvs).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
-    // rule count under the limit → broadcast fused; limit 0 → fused cogroup
+    // rule count under the limit → broadcast node; limit 0 → join node
     val viaBroadcast = Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 1000000L)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     val viaCogroup = Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 0L)
@@ -117,20 +120,20 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   test("orphan rules (conv_id with no turns) emit nothing on every route") {
     import spark.implicits._
     // rules exist for 5 conversations but turns only for 3: the routing
-    // threshold must never change results, so the cogroup routes drop the
-    // orphans exactly like the turns-driven broadcast route
+    // threshold must never change results, so the join-node routes drop
+    // the orphans exactly like the turns-driven broadcast route
     val turns = SyntheticTranscripts.turns(spark, 3, Seed).as[Turn]
     val rules5 = SyntheticTranscripts.rules(spark, 5, Seed)
     val want = (0L until 3L).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
     val viaBroadcast = Pipeline.segmentAuto(turns, rules5, broadcastRuleLimit = 1000000L)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val viaFusedCogroup = Pipeline.segmentAuto(turns, rules5, broadcastRuleLimit = 0L)
+    val viaJoin = Pipeline.segmentAuto(turns, rules5, broadcastRuleLimit = 0L)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val viaCogroup = Pipeline.segmentCogroup(Pipeline.extract(turns), rules5)
+    val viaTwoStage = Pipeline.segmentTwoStage(turns, rules5)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     assert(viaBroadcast == want)
-    assert(viaFusedCogroup == want)
-    assert(viaCogroup == want)
+    assert(viaJoin == want)
+    assert(viaTwoStage == want)
   }
 
   test("corpus hygiene: U+FFFD corruption only on parser-bound turns") {
@@ -330,16 +333,47 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(segs(0).TotalNumberOfpages == n)
   }
 
-  test("fused path surfaces extraction error counts via accumulator") {
+  test("two-stage folds extracted text as is: a decoded U+FFFD entity is not re-quarantined") {
     import spark.implicits._
-    val turns = SyntheticTranscripts.turns(spark, 5, Seed).as[Turn]
-    val acc = spark.sparkContext.longAccumulator("graft.extract.errors")
-    val bc = spark.sparkContext.broadcast(Map.empty[String, Seq[graft.core.seg.Rule]])
-    Pipeline.segmentFused(turns, bc, errorCounter = Some(acc)).count()
-    val wantErrs = (0L until 5L).map(ci => SyntheticTranscripts.turnsFor(Seed, ci)
-      .count(_.text.indexOf(Extractor.CorruptMarker) >= 0)).sum
-    assert(wantErrs > 0, "fixture must exercise the quarantine branch")
-    assert(acc.value == wantErrs.toLong) // exactly the planted corruptions
+    // the entity decodes to the very character raw payloads are refused
+    // for; extracting the extracted text again would blank page 2
+    val html = "<p>alpha START here &#xFFFD; " + ("filler words " * 15) + "</p>"
+    val (ex, err) = Extractor.safeExtract("html", html)
+    assert(!err && ex.text.contains('\uFFFD'), ex.text)
+    val ts = new java.sql.Timestamp(0L)
+    val turns = Seq(Turn("c-ent", 1, "user", "intro page", "", ts),
+      Turn("c-ent", 2, "user", html, "html", ts),
+      Turn("c-ent", 3, "user", "the END marker", "", ts)).toDS()
+    val rules = Seq(ConvRule("c-ent", "DT", "t", "START", " ", "END", " ",
+      0, 1, " ", " ", "1", 7L, "ff", 9L, "s")).toDS()
+    val bc = spark.sparkContext.broadcast(
+      Map("c-ent" -> rules.collect().toSeq.map(Pipeline.toCoreRule)))
+    val want = Pipeline.segmentFused(turns, bc).collect().toSeq
+    assert(want.map(_.FromPageNumber) == Seq(2), want)
+    assert(Pipeline.segmentTwoStage(turns, rules).collect().toSeq == want)
+  }
+
+  test("the fold reads NULL tool/text as passthrough/empty and rejects a NULL turn_idx") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    val schema = StructType(spark.emptyDataset[Turn].schema.map(_.copy(nullable = true)))
+    val ts = new java.sql.Timestamp(0L)
+    def fold(rows: Row*) = {
+      val turns = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).as[Turn]
+      val bc = spark.sparkContext.broadcast(Map("c-null" -> Seq(graft.core.seg.Rule(
+        documentTypeId = Some("DT"), startingIdentifier = "START", endingIdentifier = "END",
+        sequence = Some("1"), docReceivedId = Some(1L)))))
+      Pipeline.segmentFused(turns, bc).collect().toSeq
+    }
+    val withNulls = fold(Row("c-null", 1, "user", "alpha START", null, ts),
+      Row("c-null", 2, "user", null, "html", ts), Row("c-null", 3, "user", "the END", "", ts))
+    assert(withNulls.map(s => (s.FromPageNumber, s.ToPageNumber)) == Seq((1, 3)), withNulls)
+    assert(withNulls == fold(Row("c-null", 1, "user", "alpha START", "", ts),
+      Row("c-null", 2, "user", "", "html", ts), Row("c-null", 3, "user", "the END", "", ts)))
+    val e = intercept[org.apache.spark.SparkException](
+      fold(Row("c-null", null, "user", "alpha START", "", ts)))
+    assert(e.getMessage.contains("NULL turn_idx in conversation c-null"), e.getMessage)
   }
 
   test("observe() metrics report extraction row and error counts") {
@@ -379,7 +413,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       SyntheticTranscripts.convId(ci) -> SyntheticTranscripts.rulesFor(Seed, ci).map(Pipeline.toCoreRule)
     }.toMap
     val bc = spark.sparkContext.broadcast(ruleMap)
-    val segs = Pipeline.segment(Pipeline.extract(turns), bc)
+    val segs = Pipeline.segmentFused(turns, bc)
     val got = Pipeline.renderXml(segs).collect().toMap
     (0L until 6L).foreach { ci =>
       val cid = SyntheticTranscripts.convId(ci)

@@ -1,13 +1,15 @@
 package graft.spark
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.SyntheticTranscripts
 import graft.pipeline.Pipeline
+import graft.plans.{SegmentExec, SegmentJoinExec}
 import graft.queries.Relational
 
 /** Physical-plan shape assertions — the 100 TB contract, checked in CI:
@@ -27,6 +29,20 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     * formatted output: tree line + detail section). */
   private def shuffleCount(df: DataFrame): Int =
     "\\(\\d+\\) Exchange".r.findAllIn(formatted(df)).size
+
+  /** The physical plan with its exchanges placed. Call it before the
+    * query runs: AQE then still holds its initial plan, not query stages. */
+  private def prepared(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  private def exchanges(p: SparkPlan): Int = p.collect { case e: ShuffleExchangeExec => e }.size
+
+  /** The seed-42 oracle's segments for the first `n` conversations, as rows. */
+  private def oracleRows(n: Long): Seq[String] =
+    (0L until n).flatMap(SegmentOracle.segments(42L, _))
+      .map(s => org.apache.spark.sql.Row.fromTuple(s).toString).sorted
 
   test("q8: predicates push into the parquet scan; only needed columns read") {
     val p = formatted(Relational.q8Pushdown(spark, Sf))
@@ -76,17 +92,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
 
-  test("fused pipeline: exactly one exchange (single shuffle by conv_id)") {
-    import spark.implicits._
-    val turns = SyntheticTranscripts.turns(spark, 10)
-    val ruleMap = (0L until 10L).map { ci =>
-      SyntheticTranscripts.convId(ci) -> SyntheticTranscripts.rulesFor(42L, ci).map(Pipeline.toCoreRule)
-    }.toMap
-    val bc = spark.sparkContext.broadcast(ruleMap)
-    val df = Pipeline.segmentFused(turns, bc).toDF()
-    assert(shuffleCount(df) == 1, formatted(df))
-  }
-
   test("fused pipeline: AQE coalesces the conv_id shuffle unless buckets pin it") {
     val turns = SyntheticTranscripts.turns(spark, 10)
     val ruleMap = (0L until 10L).map { ci =>
@@ -106,7 +111,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         case q: QueryStageExec => q +: nodes(q.plan)
         case other => other +: other.children.flatMap(nodes)
       }
-      val fold = nodes(fin).collectFirst { case m: MapPartitionsExec => m }
+      val fold = nodes(fin).collectFirst { case m: SegmentExec => m }
         .getOrElse(fail(s"no fold in\n$fin"))
       (nodes(fold).collect { case r: AQEShuffleReadExec => r }, fold.execute().getNumPartitions)
     }
@@ -122,14 +127,16 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("two-stage pipeline: two exchanges (salted extraction + conv regroup)") {
-    import spark.implicits._
+    // the turns side of the join node; the rules side adds its own
     val turns = SyntheticTranscripts.turns(spark, 10)
-    val ruleMap = (0L until 10L).map { ci =>
-      SyntheticTranscripts.convId(ci) -> SyntheticTranscripts.rulesFor(42L, ci).map(Pipeline.toCoreRule)
-    }.toMap
-    val bc = spark.sparkContext.broadcast(ruleMap)
-    val df = Pipeline.segment(Pipeline.extract(turns), bc).toDF()
-    assert(shuffleCount(df) == 2, formatted(df))
+    val rules = SyntheticTranscripts.rules(spark, 10)
+    val df = Pipeline.segmentTwoStage(turns, rules).toDF()
+    val join = prepared(df).collectFirst { case j: SegmentJoinExec => j }
+      .getOrElse(fail(formatted(df)))
+    assert(!join.extract, formatted(df))
+    assert(exchanges(join.left) == 2, formatted(df))
+    assert(exchanges(join.right) == 1, formatted(df))
+    assert(df.collect().map(_.toString).sorted.toSeq == oracleRows(10))
   }
 
   test("bucketed tables co-locate the join: zero exchanges") {
@@ -202,20 +209,23 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val ruleMap = SyntheticTranscripts.rules(spark, n).collect()
       .groupBy(_.conv_id).map { case (k, v) => k -> v.toSeq.map(Pipeline.toCoreRule) }
     val bc = spark.sparkContext.broadcast(ruleMap)
-    val rulesFor = (cid: String) => bc.value.getOrElse(cid, Nil)
 
-    val df = graft.plans.SegmentPlans.segment(turns, rulesFor)
+    // the default route IS the operator
+    val df = Pipeline.segmentFused(turns, bc).toDF()
     val p = formatted(df)
     // the physical operator only DECLARES ClusteredDistribution(conv_id) +
     // (conv_id, turn_idx) ordering; the exchange and sort below it must be
-    // Catalyst's EnsureRequirements insertions — exactly one of each
+    // Catalyst's EnsureRequirements insertions — exactly one of each: the
+    // fused route's single shuffle by conv_id
     assert(p.contains("Segment ("), p) // SegmentExec renders as "Segment"
     assert(shuffleCount(df) == 1, p)
     assert(p.contains("Sort ("), p)
+    // plans print the node's output, not the rule closure
+    val seg = prepared(df).collectFirst { case s: SegmentExec => s }.getOrElse(fail(p))
+    assert(!seg.simpleString(1000).contains("Lambda"), seg.simpleString(1000))
 
-    val got = df.collect().map(_.toString).sorted.toSeq
-    val want = Pipeline.segmentFused(turns, bc).toDF().collect().map(_.toString).sorted.toSeq
-    assert(got == want, "custom-operator output must equal the fused pipeline")
+    assert(df.collect().map(_.toString).sorted.toSeq == oracleRows(n),
+      "custom-operator output must equal the sequential oracle")
   }
 
   test("custom operator over a bucketed+sorted turns table: ZERO exchanges") {
@@ -241,10 +251,31 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       // no longer advertises its sortBy ordering (only the legacy flag
       // restores it) — the expensive part, the network shuffle, is gone
       assert(p.contains("Bucketed: true"), p)
-      val got = df.collect().map(_.toString).sorted.toSeq
-      val want = Pipeline.segmentFused(turns, bc).toDF().collect().map(_.toString).sorted.toSeq
-      assert(got == want)
+      assert(df.collect().map(_.toString).sorted.toSeq == oracleRows(n))
     } finally spark.sql("DROP TABLE IF EXISTS turns_b")
+  }
+
+  test("default route over a bucketed turns table: no turns-side exchange on either rule branch") {
+    // segmentAuto itself, not the bare node: the broadcast branch plans
+    // no exchange at all, the join branch shuffles only the rules
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-turns-bucketed-auto").toString
+    val n = 6L
+    val rules = SyntheticTranscripts.rules(spark, n)
+    try {
+      SyntheticTranscripts.turns(spark, n).write.bucketBy(4, "conv_id")
+        .sortBy("conv_id", "turn_idx")
+        .option("path", s"$dir/turns_ba").saveAsTable("turns_ba")
+      val bucketed = spark.table("turns_ba").as[graft.schema.Turn]
+      val viaBroadcast = Pipeline.segmentAuto(bucketed, rules).toDF()
+      assert(exchanges(prepared(viaBroadcast)) == 0, formatted(viaBroadcast))
+      assert(viaBroadcast.collect().map(_.toString).sorted.toSeq == oracleRows(n))
+      val viaJoin = Pipeline.segmentAuto(bucketed, rules, broadcastRuleLimit = 0L).toDF()
+      val join = prepared(viaJoin).collectFirst { case j: SegmentJoinExec => j }
+        .getOrElse(fail(formatted(viaJoin)))
+      assert(exchanges(join.left) == 0, formatted(viaJoin))
+      assert(viaJoin.collect().map(_.toString).sorted.toSeq == oracleRows(n))
+    } finally spark.sql("DROP TABLE IF EXISTS turns_ba")
   }
 
   test("two-child segment join: both sides co-partitioned, no driver rule state") {

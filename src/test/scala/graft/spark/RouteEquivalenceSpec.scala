@@ -1,10 +1,12 @@
 package graft.spark
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.extract.Extractor
-import graft.core.seg.Demarcator
+import graft.core.seg.{Demarcator, Rule}
 import graft.gen.SyntheticTranscripts
 import graft.pipeline.Pipeline
 import graft.schema._
@@ -14,10 +16,19 @@ import graft.schema._
   * corpus; this spec re-derives the invariant on fresh corpus shapes so a
   * route bug that happens to be invisible under one rule/page distribution
   * (e.g. an ordering assumption only violated by a specific Sequence mix)
-  * still fails. All four routes — broadcast-fused, cogroup-fused,
-  * two-stage salted, whole-operator Catalyst — must agree field for field,
+  * still fails. All four routes — the broadcast node with a planned and
+  * with a pinned (`buckets = 8`) exchange, the join node (`segmentAuto`
+  * above its rule limits) and `--two-stage` — must agree field for field,
   * with shuffled input. */
 class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
+
+  /** The four surviving routes, by name. */
+  private def routes(turns: Dataset[Turn], rules: Dataset[ConvRule],
+                     bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] = Seq(
+    "broadcast node" -> Pipeline.segmentFused(turns, bc),
+    "broadcast node, buckets = 8" -> Pipeline.segmentFused(turns, bc, buckets = 8),
+    "join node" -> Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 0L),
+    "two-stage" -> Pipeline.segmentTwoStage(turns, rules))
 
   private def oracle(seed: Long, nConvs: Long): Seq[ConvSegment] =
     (0L until nConvs).flatMap(SegmentOracle.segments(seed, _))
@@ -39,13 +50,31 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
       val bc = spark.sparkContext.broadcast(ruleMap)
       def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
         xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-      assert(norm(Pipeline.segmentFused(turns, bc).collect()) == want, "broadcast-fused")
-      assert(norm(Pipeline.segmentFusedCogroup(turns, rules).collect()) == want, "cogroup-fused")
-      assert(norm(Pipeline.segmentCogroup(Pipeline.extract(turns), rules).collect()) == want,
-        "two-stage salted")
-      val viaCatalyst = graft.plans.SegmentPlans.segmentJoin(turns, rules, None)
-        .as[ConvSegment].collect()
-      assert(norm(viaCatalyst) == want, "whole-operator catalyst")
+      for ((route, segs) <- routes(turns, rules, bc))
+        assert(norm(segs.collect()) == want, route)
+    }
+  }
+
+  // count() and select() put a Project directly over the fold node, which
+  // ColumnPruning narrows to the columns the node references
+  test("count and select over every route's output equal the oracle") {
+    import spark.implicits._
+    val (seed, nConvs) = (1234L, 30L)
+    val want = oracle(seed, nConvs)
+    assert(want.nonEmpty)
+    val turns = SyntheticTranscripts.turns(spark, nConvs, seed)
+      .orderBy(hash($"text")).as[Turn]
+    val rules = SyntheticTranscripts.rules(spark, nConvs, seed)
+    val bc = spark.sparkContext.broadcast((0L until nConvs).map { ci =>
+      SyntheticTranscripts.convId(ci) ->
+        SyntheticTranscripts.rulesFor(seed, ci).map(Pipeline.toCoreRule)
+    }.toMap)
+    for ((route, segs) <- routes(turns, rules, bc)) {
+      assert(segs.count() == want.size, s"$route: count()")
+      assert(segs.select("conv_id").count() == want.size, s"$route: select(conv_id).count()")
+      val picked = segs.select("Sequence", "conv_id").as[(String, String)].collect()
+      assert(picked.toSeq.sortBy { case (sq, c) => (c, sq.toInt) } ==
+        want.map(s => (s.Sequence, s.conv_id)), s"$route: select(Sequence, conv_id)")
     }
   }
 
@@ -81,12 +110,8 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
       assert(want.nonEmpty)
       def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
         xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-      assert(norm(Pipeline.segmentFused(turns, bc).collect()) == want, "broadcast-fused")
-      assert(norm(Pipeline.segmentFusedCogroup(turns, rules).collect()) == want, "cogroup-fused")
-      assert(norm(Pipeline.segmentCogroup(Pipeline.extract(turns), rules).collect()) == want,
-        "two-stage salted")
-      assert(norm(graft.plans.SegmentPlans.segmentJoin(turns, rules, None)
-        .as[ConvSegment].collect()) == want, "whole-operator catalyst")
+      for ((route, segs) <- routes(turns, rules, bc))
+        assert(norm(segs.collect()) == want, route)
     }
   }
 
@@ -118,22 +143,25 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
         s"$route: poisoned conversations must emit zero segments")
       assert(norm(got) == want, s"$route: unpoisoned conversations diverged")
     }
-    check(Pipeline.segmentFused(turns, bc).collect(), "broadcast-fused")
-    check(Pipeline.segmentFusedCogroup(turns, rules).collect(), "cogroup-fused")
-    check(Pipeline.segmentCogroup(Pipeline.extract(turns), rules).collect(), "two-stage salted")
-    check(graft.plans.SegmentPlans.segmentJoin(turns, rules, None)
-      .as[ConvSegment].collect(), "whole-operator catalyst")
-    // the stats-carrying routes also surface the quarantine in lineage:
-    // the two poisoned conversations PLUS the corpus's planted U+FFFD
-    // extraction corruptions tick the error counter, nothing else
+    for ((route, segs) <- routes(turns, rules, bc)) check(segs.collect(), route)
+    // both fold nodes also surface the quarantine in lineage, identically:
+    // every turn in, every segment out, and the two poisoned conversations
+    // PLUS the corpus's planted U+FFFD extraction corruptions as errors
     val corruptTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci)
       .count(_.text.indexOf(Extractor.CorruptMarker) >= 0)).sum
-    val acc = new graft.pipeline.PartitionStatsAcc
-    spark.sparkContext.register(acc, "poisoned_route_stats")
-    Pipeline.segmentFusedCogroup(turns, rules, stats = Some(acc)).collect()
-    assert(acc.value.values.map(_._3).sum == 2L + corruptTurns,
-      s"lineage must count 2 rule quarantines + $corruptTurns extraction " +
-        s"corruptions, got ${acc.value}")
+    val nTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci).size).sum
+    def totals(limit: Long): (Long, Long, Long) = {
+      val acc = new graft.pipeline.PartitionStatsAcc
+      spark.sparkContext.register(acc, s"poisoned_route_stats_$limit")
+      Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit, stats = Some(acc)).collect()
+      val v = acc.value.values
+      (v.map(_._1).sum, v.map(_._2).sum, v.map(_._3).sum)
+    }
+    val viaBroadcast = totals(1000000L)
+    assert(viaBroadcast == totals(0L), "broadcast and join nodes must give the same lineage")
+    assert(viaBroadcast == ((nTurns.toLong, want.size.toLong, 2L + corruptTurns)),
+      s"lineage must count $nTurns turns, ${want.size} segments and 2 rule quarantines " +
+        s"+ $corruptTurns extraction corruptions, got $viaBroadcast")
   }
 }
 

@@ -116,19 +116,16 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("catalyst flag runs the whole-operator route end-to-end with equal output") {
-    spark
-    val out1 = Files.createTempDirectory("graft-submit-d").toString
-    val out2 = Files.createTempDirectory("graft-submit-c").toString
-    SubmitMain.main(Array("--synthetic-convs", "8", "--out", out1))
-    SubmitMain.main(Array("--synthetic-convs", "8", "--out", out2, "--catalyst"))
-    val a = new SnapshotStore(out1).read(spark, 1L).orderBy("conv_id", "Sequence").collect()
-    val b = new SnapshotStore(out2).read(spark, 1L).orderBy("conv_id", "Sequence").collect()
-    assert(a.toSeq == b.toSeq)
-    // the operator's internal stats feed the same single-pass lineage shape
-    val lin = new SnapshotStore(out2).read(spark, 2L)
-    val totalTurns = (0L until 8L).map(ci => SyntheticTranscripts.turnsFor(42L, ci).size).sum
-    assert(lin.selectExpr("sum(rows_in)").collect()(0).getLong(0) == totalTurns.toLong)
-    assert(lin.selectExpr("sum(rows_out)").collect()(0).getLong(0) == a.length.toLong)
+  test("unknown flags fail before any work, naming the known ones") {
+    // a typo must not silently run the default route; --catalyst is gone
+    for (bad <- Seq(Array("--bucket", "8"), Array("--catalyst"))) {
+      val out = Files.createTempDirectory("graft-submit-badflag").toString
+      val e = intercept[IllegalArgumentException](
+        SubmitMain.main(Array("--synthetic-convs", "8", "--out", out) ++ bad))
+      assert(e.getMessage.contains(s"unknown flag ${bad.head}"), e.getMessage)
+      assert(e.getMessage.contains("--buckets") && e.getMessage.contains("--two-stage"),
+        e.getMessage)
+      assert(new SnapshotStore(out).snapshots.isEmpty)
+    }
   }
 }

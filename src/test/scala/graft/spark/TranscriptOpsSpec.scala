@@ -307,6 +307,21 @@ class TranscriptOpsSpec extends AnyFunSuite with SparkFixture {
       "doc7" -> ((false, None, None))))
   }
 
+  test("transcriptPipeline: a conversation with no role is selected but never packed") {
+    // role-less turns carry no rendered-turn tokens, so the conversation
+    // has nothing to pack: selected, with NULL n_tokens and pack coordinates
+    val t = turns(
+      ("c3", 1, "user", "f1 f2 f3"), ("c3", 2, "assistant", "g1 g2 g3 g4"),
+      ("r5", 1, null, "q1 q2 q3"), ("r5", 2, null, "a1 a2"))
+    val got = TranscriptOps.transcriptPipeline(t, forkMod = 0L)
+      .selectExpr("conv_id", "selected", "n_tokens", "pack_id", "pack_offset").collect()
+      .map(r => r.getString(0) -> ((r.getBoolean(1),
+        Option(r.get(2)), Option(r.get(3)), Option(r.get(4))))).toMap
+    assert(got === Map(
+      "c3" -> ((true, Some(9L), Some(0L), Some(0L))),
+      "r5" -> ((true, None, None, None))))
+  }
+
   test("transcriptPipeline equals the composition of its public stages") {
     // the generator corpus (150 convs): dedup columns must match convDedup,
     // echo columns must match the echoDetect rollup, pack coordinates must
