@@ -30,8 +30,13 @@ import graft.schema.{ConvRule, Turn}
   *    broadcast at or below `--broadcast-rule-limit` rules (default 1e6)
   *    AND `--broadcast-byte-limit` estimated heap bytes (default 256 MiB),
   *    else a co-partitioned child plan of the join node (no driver rule
-  *    state). The nodes declare `ClusteredDistribution(conv_id)`, so a
-  *    turns table bucketed by `conv_id` is not shuffled at all;
+  *    state). One job over the rules sizes the corpus and, while each of
+  *    its P tasks stays within 1/P of both limits, returns the rows too
+  *    (else, when the total fits, a second collect caps each partition
+  *    at its first count), so the driver never receives more than the
+  *    limits; past ~2 GiB of binary rule rows the join node runs. The
+  *    nodes declare `ClusteredDistribution(conv_id)`, so a turns table
+  *    bucketed by `conv_id` is not shuffled at all;
   *  - `--two-stage` (`Pipeline.segmentTwoStage`): salted extraction, then
   *    the join node regroups and folds, for monster-conversation corpora.
   *

@@ -1,14 +1,19 @@
 package graft.pipeline
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkConf, TaskContext}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.Platform
 
 import graft.core.extract.Extractor
 import graft.core.seg.{Demarcator, Rule}
 import graft.core.xml.SubDocXml
-import graft.plans.SegmentPlans
+import graft.plans.{SegmentJoinExec, SegmentPlans}
 import graft.schema._
 
 /** Per-partition (rows_in, rows_out, errors) metrics collected INSIDE a
@@ -47,6 +52,33 @@ final class PartitionStatsAcc
     m.synchronized(m ++= theirs)
   }
   override def value: Map[Int, (Long, Long, Long)] = m.synchronized(m.toMap)
+}
+
+/** A rule corpus collected for broadcast ([[Pipeline.loadRules]]): the
+  * rule rows in [[SegmentPlans.RuleCols]] order as consecutive
+  * `[8-byte size][UnsafeRow bytes]` records in ONE byte array, so
+  * serializing it is a copy and the block manager sizes it at a glance —
+  * a map of ~10^4 case classes costs both a visit per object. The
+  * `conv_id` index is built once per JVM that reads the broadcast, with
+  * the join node's decoder [[SegmentJoinExec.rowToRule]]; rules of a NULL
+  * `conv_id` can match no conversation and are left out. */
+final class RuleRows private[graft] (bytes: Array[Byte]) extends Serializable {
+  @transient private lazy val byConv: Map[String, Seq[Rule]] = {
+    val row = new UnsafeRow(SegmentPlans.RuleCols.size)
+    val sizes = java.nio.ByteBuffer.wrap(bytes)
+    val b = Vector.newBuilder[(String, Rule)]
+    var off = 0
+    while (off < bytes.length) {
+      val size = sizes.getLong(off).toInt
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + off + 8, size)
+      if (!row.isNullAt(0)) b += row.getUTF8String(0).toString -> SegmentJoinExec.rowToRule(row)
+      off += 8 + size
+    }
+    b.result().groupMap(_._1)(_._2)
+  }
+
+  /** The rules of conversation `cid`, in load order. */
+  def rulesFor(cid: String): Seq[Rule] = byConv.getOrElse(cid, Nil)
 }
 
 /** The end-to-end extraction + segmentation pipeline (SURVEY §3.1 "Spark
@@ -224,24 +256,42 @@ object Pipeline {
       rules: Broadcast[Map[String, Seq[Rule]]],
       buckets: Int = 0,
       stats: Option[PartitionStatsAcc] = None
+  ): Dataset[ConvSegment] =
+    foldBroadcast(turns, cid => rules.value.getOrElse(cid, Nil), buckets, stats)
+
+  /** The broadcast fold behind [[segmentFused]] and [[segmentAuto]]'s
+    * broadcast branch: the four turn columns, pinned to `buckets`
+    * partitions when `buckets > 0`, into the fold node. */
+  private def foldBroadcast(
+      turns: Dataset[Turn],
+      rulesFor: String => Seq[Rule],
+      buckets: Int,
+      stats: Option[PartitionStatsAcc]
   ): Dataset[ConvSegment] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val cols = turns.select($"conv_id", $"turn_idx", $"tool", $"text")
     SegmentPlans.segment(if (buckets > 0) cols.repartition(buckets, $"conv_id") else cols,
-      cid => rules.value.getOrElse(cid, Nil), stats).as[ConvSegment]
+      rulesFor, stats).as[ConvSegment]
   }
 
   /** Routes between the two fold nodes by rule-corpus SIZE IN BYTES as
-    * well as count: at or below both limits the corpus is collected once
-    * and broadcast ([[segmentFused]] — cheapest, no shuffle of the rules);
-    * above either, rules stay distributed and co-partition with the turns
-    * under [[SegmentPlans.segmentJoin]]. The byte gate matters because a
+    * well as count. [[loadRules]] runs ONE job over the rules: every task
+    * counts its partition's rows and estimated heap (2 bytes/char JVM
+    * strings + 96 bytes per row) and returns the rows themselves,
+    * LZ4-compressed, only while the partition stays within 1/P of both
+    * limits (P = rule partitions), so the driver never receives more than
+    * the limits. At or below both limits in total the rows are broadcast
+    * as one byte array ([[RuleRows]]) into the fold node — a second
+    * collect, each partition capped at its first-job count, runs only when
+    * some partition went over its share; above either limit, or past the
+    * ~2 GiB of encoded rows one array holds ([[MaxRuleBytes]]), rules stay
+    * distributed and co-partition with the turns under
+    * [[SegmentPlans.segmentJoin]]. The byte gate matters because a
     * row-count gate alone would let 10^5 rules × 10 KB identifier strings
-    * collect gigabytes to the driver; the estimate (2 bytes/char JVM
-    * strings + per-row overhead) comes from the same single cheap
-    * aggregation as the count — one action against a table that is tiny
-    * relative to the turns. */
+    * collect gigabytes to the driver. Both branches decode a rule row with
+    * the same [[graft.plans.SegmentJoinExec.rowToRule]], so a NULL numeric
+    * rule field reads as 0 on either. */
   def segmentAuto(
       turns: Dataset[Turn],
       rules: Dataset[ConvRule],
@@ -249,25 +299,108 @@ object Pipeline {
       broadcastRuleLimit: Long = 1000000L,
       stats: Option[PartitionStatsAcc] = None,
       broadcastByteLimit: Long = 256L << 20
-  ): Dataset[ConvSegment] = {
-    import org.apache.spark.sql.types.StringType
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val strCols = rules.schema.fields.filter(_.dataType == StringType)
-      .map(f => s"length(coalesce(`${f.name}`, ''))")
-    val perRowHeap =
-      if (strCols.isEmpty) "CAST(96 AS BIGINT)"
-      else s"CAST(2 * (${strCols.mkString(" + ")}) + 96 AS BIGINT)"
-    val sz = rules.toDF()
-      .selectExpr(s"$perRowHeap AS sz")
-      .selectExpr("CAST(count(*) AS BIGINT) AS n", "CAST(coalesce(sum(sz), 0) AS BIGINT) AS heap")
-      .head()
-    val (n, heap) = (sz.getLong(0), sz.getLong(1))
-    if (n <= broadcastRuleLimit && heap <= broadcastByteLimit) {
-      val ruleMap = rules.collect().groupBy(_.conv_id)
-        .map { case (k, v) => k -> v.toSeq.map(toCoreRule) }
-      segmentFused(turns, spark.sparkContext.broadcast(ruleMap), buckets, stats = stats)
-    } else SegmentPlans.segmentJoin(turns, rules, stats).as[ConvSegment]
+  ): Dataset[ConvSegment] =
+    loadRules(rules, broadcastRuleLimit, broadcastByteLimit) match {
+      case Some(rows) =>
+        val bc = turns.sparkSession.sparkContext.broadcast(rows)
+        foldBroadcast(turns, cid => bc.value.rulesFor(cid), buckets, stats)
+      case None =>
+        val spark = turns.sparkSession
+        import spark.implicits._
+        SegmentPlans.segmentJoin(turns, rules, stats).as[ConvSegment]
+    }
+
+  /** The most encoded rule bytes [[loadRules]] collects: what one JVM
+    * array holds, less room for the compressed stream's block headers. */
+  private[graft] val MaxRuleBytes: Long = Int.MaxValue - (16L << 20)
+
+  /** The codec of the rule rows a task returns — LZ4, as Spark's own
+    * collect, so `spark.driver.maxResultSize` counts compressed bytes. */
+  private lazy val RuleCodec = new LZ4CompressionCodec(new SparkConf(false))
+
+  /** The rule corpus collected for broadcast when it is within `maxRows`
+    * rows, `maxHeap` estimated heap bytes and `maxBytes` encoded bytes,
+    * else None. One job over the rules projected in
+    * [[SegmentPlans.RuleCols]] order; each task runs [[loadPartition]]
+    * with a 1/P share of each limit. When the totals fit but some
+    * partition went over its share, a second job collects with each
+    * partition's own first-job counts as its share, so the driver never
+    * receives more than the totals it checked; a partition that grew in
+    * between sends the corpus to the join node. */
+  private[graft] def loadRules(rules: Dataset[ConvRule], maxRows: Long, maxHeap: Long,
+                               maxBytes: Long = MaxRuleBytes): Option[RuleRows] = {
+    val projected = rules.toDF().select(SegmentPlans.RuleCols.map(col): _*)
+    val schema = projected.schema
+    val rdd = projected.queryExecution.toRdd
+    val p = math.max(rdd.getNumPartitions, 1)
+    def load(shares: Array[(Long, Long, Long)]): Array[RulePart] =
+      rules.sparkSession.sparkContext.runJob(rdd, (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val (r, h, b) = shares(ctx.partitionId())
+        loadPartition(it, schema, r, h, b)
+      })
+    val first = load(Array.fill(p)((maxRows / p, maxHeap / p, maxBytes / p)))
+    if (first.map(_.rows).sum > maxRows || first.map(_.heap).sum > maxHeap ||
+        first.map(_.bytes).sum > maxBytes) None
+    else {
+      val parts =
+        if (first.forall(_.data.isDefined)) first
+        else load(first.map(f => (f.rows, f.heap, f.bytes)))
+      if (parts.forall(_.data.isDefined)) Some(ruleRows(parts.toSeq)) else None
+    }
+  }
+
+  /** One task's result in [[loadRules]]: the partition's row count,
+    * estimated heap and encoded bytes, and its rows, compressed, if all
+    * three stayed within the task's share. */
+  private[graft] final case class RulePart(rows: Long, heap: Long, bytes: Long,
+                                           data: Option[Array[Byte]])
+
+  /** Counts every row of a rules partition (`schema` = its columns), its
+    * estimated heap — 2 × chars of the string columns + 96 per row — and
+    * its encoded bytes. Rows are kept as `[8-byte size][UnsafeRow bytes]`
+    * records while the partition is within `maxRows`, `maxHeap` and
+    * `maxBytes`; past any, the kept rows are dropped and counting goes on.
+    * The rows are UnsafeRows, as Spark's own collect takes them. */
+  private[graft] def loadPartition(it: Iterator[InternalRow], schema: StructType,
+                                   maxRows: Long, maxHeap: Long, maxBytes: Long): RulePart = {
+    val strCols = schema.fields.indices.filter(schema(_).dataType == StringType).toArray
+    val size = java.nio.ByteBuffer.allocate(8)
+    val copyBuf = new Array[Byte](4096)
+    val out = new java.io.ByteArrayOutputStream()
+    var kept = RuleCodec.compressedOutputStream(out)
+    var rows = 0L
+    var heap = 0L
+    var bytes = 0L
+    it.foreach { row =>
+      val u = row.asInstanceOf[UnsafeRow]
+      var chars = 0L
+      strCols.foreach(i => if (!u.isNullAt(i)) chars += u.getUTF8String(i).numChars)
+      rows += 1
+      heap += 2 * chars + 96
+      bytes += 8 + u.getSizeInBytes
+      if (kept != null) {
+        if (rows > maxRows || heap > maxHeap || bytes > maxBytes) kept = null
+        else {
+          kept.write(size.putLong(0, u.getSizeInBytes.toLong).array(), 0, 8)
+          u.writeToStream(kept, copyBuf)
+        }
+      }
+    }
+    if (kept != null) kept.close()
+    RulePart(rows, heap, bytes, Option(kept).map(_ => out.toByteArray))
+  }
+
+  /** The kept rows of `parts`, decompressed into one [[RuleRows]]. */
+  private[graft] def ruleRows(parts: Seq[RulePart]): RuleRows = {
+    val all = new Array[Byte](parts.map(_.bytes).sum.toInt)
+    var off = 0
+    for (part <- parts; data <- part.data) {
+      val in = new java.io.DataInputStream(
+        RuleCodec.compressedInputStream(new java.io.ByteArrayInputStream(data)))
+      try in.readFully(all, off, part.bytes.toInt) finally in.close()
+      off += part.bytes.toInt
+    }
+    new RuleRows(all)
   }
 
   /** `SubmitMain --two-stage`: salted [[extract]] (which fills `stats`),

@@ -74,9 +74,9 @@ object SegmentPlans {
       spark, SegmentConversations(child, rulesFor, stats))
   }
 
-  /** Rule columns in the fixed projection order [[SegmentJoinExec]] reads
-    * by index. */
-  private[plans] val RuleCols = Seq("conv_id", "DocumentTypeID",
+  /** Rule columns in the fixed projection order [[SegmentJoinExec]] and
+    * the broadcast rule rows ([[graft.pipeline.RuleRows]]) read by index. */
+  private[graft] val RuleCols = Seq("conv_id", "DocumentTypeID",
     "DocumentTypeName", "StartingIdentifier", "StartingIdentifierPlus1",
     "EndingIdentifier", "EndingIdentifierMinus1", "NoOfPages", "Occurence",
     "StartingMinusN", "EndingMinusN", "Sequence", "DocReceivedId",
@@ -342,8 +342,9 @@ object SegmentJoinExec {
   }
 
   /** Decode one rules row (in [[SegmentPlans.RuleCols]] order) to the core
-    * rule — same mapping as [[Pipeline.toCoreRule]]. */
-  private[plans] def rowToRule(row: InternalRow): Rule = {
+    * rule — same mapping as [[Pipeline.toCoreRule]], with a NULL numeric
+    * field as 0. The one decoder of both `segmentAuto` branches. */
+  private[graft] def rowToRule(row: InternalRow): Rule = {
     def s(i: Int): String = if (row.isNullAt(i)) "" else row.getUTF8String(i).toString
     def sOpt(i: Int): Option[String] =
       if (row.isNullAt(i)) None else Some(row.getUTF8String(i).toString)

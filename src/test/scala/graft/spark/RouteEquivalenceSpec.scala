@@ -78,6 +78,23 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  /** The sequential fold of the generated turns under `ruleMap` (which
+    * must hold every conversation), with rule-decode quarantine
+    * (`demarcateIsolated`) and the test's own output mapping. */
+  private def sequential(seed: Long, nConvs: Long,
+                         ruleMap: Map[String, Seq[Rule]]): Seq[ConvSegment] =
+    (0L until nConvs).flatMap { ci =>
+      val cid = SyntheticTranscripts.convId(ci)
+      val pages = SyntheticTranscripts.turnsFor(seed, ci).sortBy(_.turn_idx)
+        .map(t => Extractor.safeExtract(t.tool, t.text)._1.text)
+      Demarcator.demarcateIsolated(pages.toVector, ruleMap(cid))._1.map { r =>
+        ConvSegment(cid, r.DocReceivedId.getOrElse(0L), r.FromPageNumber,
+          r.ToPageNumber, r.FileNumber.getOrElse(""), r.DocumentTypeId.getOrElse(""),
+          r.UploadDataSheetId.getOrElse(0L), r.TotalNumberOfpages, r.NoOfPages,
+          r.Sequence.getOrElse(""), r.SessionId.getOrElse(""))
+      }
+    }.sortBy(s => (s.conv_id, s.Sequence.toInt))
+
   import RouteEquivalenceSpec.mutate
 
   for (seed <- Seq(31L, 4242L, 161803L, 2718L, 777L, 424243L)) {
@@ -96,23 +113,59 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
       // because mutation case 4 plants a non-integer StartingMinusN —
       // int("x") raises in the reference too (ocr_processor.py:457) and
       // must quarantine that conversation identically on every route
-      val want = (0L until nConvs).flatMap { ci =>
-        val cid = SyntheticTranscripts.convId(ci)
-        val pages = SyntheticTranscripts.turnsFor(seed, ci).sortBy(_.turn_idx)
-          .map(t => Extractor.safeExtract(t.tool, t.text)._1.text)
-        Demarcator.demarcateIsolated(pages.toVector, ruleMap(cid))._1.map { r =>
-          ConvSegment(cid, r.DocReceivedId.getOrElse(0L), r.FromPageNumber,
-            r.ToPageNumber, r.FileNumber.getOrElse(""), r.DocumentTypeId.getOrElse(""),
-            r.UploadDataSheetId.getOrElse(0L), r.TotalNumberOfpages, r.NoOfPages,
-            r.Sequence.getOrElse(""), r.SessionId.getOrElse(""))
-        }
-      }.sortBy(s => (s.conv_id, s.Sequence.toInt))
+      val want = sequential(seed, nConvs, ruleMap)
       assert(want.nonEmpty)
       def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
         xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
       for ((route, segs) <- routes(turns, rules, bc))
         assert(norm(segs.collect()) == want, route)
     }
+  }
+
+  test("NULL numeric and string rule fields fold identically on every route (parquet rules table)") {
+    import spark.implicits._
+    val (seed, nConvs) = (2024L, 20L)
+    // NULLs in the four numeric columns (a typed ConvRule cannot hold them)
+    // and in four string columns, each on its own hash-chosen third of the rules
+    def nullSome(c: String, k: Int) =
+      when(pmod(hash($"conv_id", $"Sequence", lit(k)), lit(3)) === 0, lit(null))
+        .otherwise(col(c)).as(c)
+    val nulled = Map("DocReceivedId" -> 1, "UploadDatasheetid" -> 2, "NoOfPages" -> 3,
+      "Occurence" -> 4, "DocumentTypeID" -> 5, "EndingIdentifierMinus1" -> 6,
+      "FirmFile" -> 7, "SessionId" -> 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft-null-rules").resolve("rules").toString
+    val gen = SyntheticTranscripts.rules(spark, nConvs, seed).toDF()
+    gen.select(gen.columns.toSeq.map(c => nulled.get(c).fold(col(c))(nullSome(c, _))): _*)
+      .write.parquet(dir)
+    val rules = spark.read.schema(org.apache.spark.sql.Encoders.product[ConvRule].schema)
+      .parquet(dir).as[ConvRule]
+    val raw = spark.read.parquet(dir)
+    for (c <- nulled.keys)
+      assert(raw.where(col(c).isNull).count() > 0, s"no NULL planted in $c")
+    // the contract both decoders follow: a NULL number reads as 0, a NULL
+    // string as toCoreRule reads it
+    val ruleMap = raw.collect().toSeq.map { r =>
+      def i(c: String) = if (r.isNullAt(r.fieldIndex(c))) 0 else r.getAs[Int](c)
+      def l(c: String) = if (r.isNullAt(r.fieldIndex(c))) 0L else r.getAs[Long](c)
+      def s(c: String) = r.getAs[String](c)
+      ConvRule(s("conv_id"), s("DocumentTypeID"), s("DocumentTypeName"),
+        s("StartingIdentifier"), s("StartingIdentifierPlus1"), s("EndingIdentifier"),
+        s("EndingIdentifierMinus1"), i("NoOfPages"), i("Occurence"), s("StartingMinusN"),
+        s("EndingMinusN"), s("Sequence"), l("DocReceivedId"), s("FirmFile"),
+        l("UploadDatasheetid"), s("SessionId"))
+    }.groupBy(_.conv_id).map { case (cid, rs) => cid -> rs.map(Pipeline.toCoreRule) }
+    val want = sequential(seed, nConvs, ruleMap)
+    assert(want.nonEmpty)
+    val turns = SyntheticTranscripts.turns(spark, nConvs, seed)
+      .orderBy(hash($"text")).as[Turn]
+    val viaAuto = Pipeline.segmentAuto(turns, rules)
+    assert(!viaAuto.queryExecution.executedPlan.toString.contains("SegmentJoin"))
+    def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
+      xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
+    val all = routes(turns, rules, spark.sparkContext.broadcast(ruleMap)) :+
+      ("segmentAuto broadcast branch" -> viaAuto)
+    for ((route, segs) <- all)
+      assert(norm(segs.collect()) == want, route)
   }
 
   test("poisoned rule decode quarantines ONE conversation identically on all four routes") {
