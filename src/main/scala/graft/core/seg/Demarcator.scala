@@ -58,8 +58,9 @@ final case class SegmentRow(
 object Demarcator {
 
   /** One pipe-alternative, pre-parsed. Alternatives are themselves normalized
-    * at split time (`ocr_processor.py:336,358,396,418`). */
-  private final case class Alt(norm: String, isExact: Boolean, cleanId: String)
+    * at split time (`ocr_processor.py:336,358,396,418`); both lowered forms
+    * are taken here once, not per page. */
+  private final case class Alt(norm: String, normLower: String, isExact: Boolean, cleanLower: String)
 
   private def splitAlts(ids: String): Array[Alt] =
     ids
@@ -69,16 +70,36 @@ object Demarcator {
       .map { s =>
         val norm = PyText.normalize(s)
         val exact = PyText.isExactMatch(norm)
-        Alt(norm, exact, if (exact) PyText.cleanExactMatch(norm) else norm)
+        Alt(norm, PyText.pyLower(norm), exact,
+          PyText.pyLower(if (exact) PyText.cleanExactMatch(norm) else norm))
       }
       .toArray
 
-  /** Pages pre-normalized once per conversation (semantically identical to
-    * the reference's per-rule re-normalization — `normalize_text` is pure). */
+  /** For an ExactMatch alternative `_is_page_contains_only`
+    * (`ocr_processor.py:285-287`), `page.lower() == id.lower()`; otherwise
+    * the substring gate `id.lower() in page.lower()`. */
+  @inline private def altHits(doc: Doc, page: Int, alt: Alt): Boolean =
+    if (alt.isExact) doc.normLower(page) == alt.cleanLower
+    else doc.normLower(page).contains(alt.normLower)
+
+  /** A conversation's pages, each prepared (normalized and lowered) when a
+    * rule first reaches it, then memoised. Semantically identical to the
+    * reference's per-rule re-normalization — `normalize_text` is pure — and
+    * a page no rule reaches is never prepared. */
   final class Doc(val raw: IndexedSeq[String]) {
     val total: Int = raw.length
-    val norm: Array[String] = raw.iterator.map(PyText.normalize).toArray
-    val normLower: Array[String] = norm.map(PyText.pyLower)
+    private val normed = new Array[String](total)
+    private val lowered = new Array[String](total)
+
+    private def prepare(i: Int): Unit =
+      if (normed(i) eq null) {
+        val (n, l) = PyText.normalizeLower(raw(i))
+        normed(i) = n
+        lowered(i) = l
+      }
+
+    def norm(i: Int): String = { prepare(i); normed(i) }
+    def normLower(i: Int): String = { prepare(i); lowered(i) }
   }
 
   @inline private def isDemarcated(page: Int, claimed: List[(Int, Int)]): Boolean =
@@ -108,16 +129,11 @@ object Demarcator {
       while (pageNum < doc.total) {
         val potential = pageNum + 1 + startOffset
         if (!isDemarcated(potential, claimed)) {
-          val nPage = doc.norm(pageNum)
-          val nPageLower = doc.normLower(pageNum)
           var a = 0
           while (a < alts.length) {
             val alt = alts(a)
-            if (alt.isExact) {
-              if (PyText.ciEquals(nPage, alt.cleanId)) counter += 1
-            } else if (nPageLower.contains(PyText.pyLower(alt.norm))) {
-              counter += PyText.countOccurrences(nPage, alt.norm)
-            }
+            if (altHits(doc, pageNum, alt))
+              counter += (if (alt.isExact) 1 else PyText.countOccurrences(doc.norm(pageNum), alt.norm))
             a += 1
           }
           if (counter >= occurrence) return potential
@@ -129,16 +145,11 @@ object Demarcator {
       var pageNum = 0
       while (pageNum < doc.total) {
         if (!isDemarcated(pageNum + 1, claimed)) {
-          val nPage = doc.norm(pageNum)
-          val nPageLower = doc.normLower(pageNum)
           var a = 0
           while (a < alts.length) {
             val alt = alts(a)
-            if (alt.isExact) {
-              if (PyText.ciEquals(nPage, alt.cleanId)) counter += 1
-            } else if (nPageLower.contains(PyText.pyLower(alt.norm))) {
-              counter += PyText.countOccurrences(nPage, alt.norm)
-            }
+            if (altHits(doc, pageNum, alt))
+              counter += (if (alt.isExact) 1 else PyText.countOccurrences(doc.norm(pageNum), alt.norm))
             a += 1
           }
           if (counter >= occurrence) return pageNum + 1
@@ -164,15 +175,10 @@ object Demarcator {
       val alts = splitAlts(endIdMinus1)
       var pageNum = firstPage - 1
       while (pageNum < doc.total) {
-        val nPage = doc.norm(pageNum)
-        val nPageLower = doc.normLower(pageNum)
         var a = 0
         while (a < alts.length) {
           val alt = alts(a)
-          val found =
-            if (alt.isExact) PyText.ciEquals(nPage, alt.cleanId)
-            else nPageLower.contains(PyText.pyLower(alt.norm))
-          if (found) {
+          if (altHits(doc, pageNum, alt)) {
             val potential = (pageNum + 1) - endOffset
             return if (firstPage <= potential) potential else -1
           }
@@ -185,15 +191,9 @@ object Demarcator {
       val alts = splitAlts(endId)
       var pageNum = firstPage - 1
       while (pageNum < doc.total) {
-        val nPage = doc.norm(pageNum)
-        val nPageLower = doc.normLower(pageNum)
         var a = 0
         while (a < alts.length) {
-          val alt = alts(a)
-          val found =
-            if (alt.isExact) PyText.ciEquals(nPage, alt.cleanId)
-            else nPageLower.contains(PyText.pyLower(alt.norm))
-          if (found) return pageNum + 1
+          if (altHits(doc, pageNum, alts(a))) return pageNum + 1
           a += 1
         }
         pageNum += 1

@@ -18,6 +18,15 @@ package graft.core.text
   *
   * All kernels are pure and allocation-conscious: they sit on the per-turn
   * hot path of a 10^12-row pipeline.
+  *
+  * `normalize`, `normalizeLower` and `pyLower` take an ASCII path: one scan
+  * of the string's chars against a 128-entry class table (Python `\s` from
+  * `py_whitespace.tsv`, so `\x1c`–`\x1f` count; `A`–`Z`, the only ASCII
+  * chars `str.lower()` changes). It writes Latin-1 bytes only from the
+  * first change on and returns the input itself when nothing changes. The
+  * boundary is per string: the first char ≥ 0x80 anywhere sends the whole
+  * string to the code-point loop (`normalizeCp`, `pyLowerCp`), which is the
+  * general path and the oracle the fast paths are tested against.
   */
 object PyText {
 
@@ -105,8 +114,57 @@ object PyText {
 
   @inline def foldCp(cp: Int): Int = foldArr(cp)
 
-  /** Exact CPython `str.lower()`. */
+  private final val AsciiOther: Byte = 0
+  private final val AsciiWs: Byte = 1
+  private final val AsciiUpper: Byte = 2
+
+  /** Class of each ASCII char: Python `\s`, `A`–`Z`, or neither. */
+  private val asciiClass: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if (wsSet.get(c)) AsciiWs else if (c >= 'A' && c <= 'Z') AsciiUpper else AsciiOther
+  }
+
+  /** `str.lower()` of each ASCII char: only `A`–`Z` change. */
+  private val asciiLowerByte: Array[Byte] =
+    Array.tabulate[Byte](128)(c => (if (c >= 'A' && c <= 'Z') c + 32 else c).toByte)
+
+  /** `s[0, len)` as Latin-1 bytes in a fresh array of `cap`; `s` is ASCII there. */
+  private def asciiPrefix(s: String, len: Int, cap: Int): Array[Byte] = {
+    val out = new Array[Byte](cap)
+    var j = 0
+    while (j < len) { out(j) = s.charAt(j).toByte; j += 1 }
+    out
+  }
+
+  private def latin1(bytes: Array[Byte], len: Int): String =
+    new String(bytes, 0, len, java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** Exact CPython `str.lower()`. ASCII strings map only `A`–`Z`; any
+    * other string takes [[pyLowerCp]]. */
   def pyLower(s: String): String = {
+    val n = s.length
+    var i = 0
+    var upper = false
+    while (i < n && !upper) {
+      val c = s.charAt(i)
+      if (c >= 0x80) return pyLowerCp(s)
+      upper = asciiClass(c) == AsciiUpper
+      i += 1
+    }
+    if (!upper) return s
+    val low = asciiPrefix(s, i - 1, n)
+    i -= 1
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c >= 0x80) return pyLowerCp(s)
+      low(i) = asciiLowerByte(c)
+      i += 1
+    }
+    latin1(low, n)
+  }
+
+  /** `str.lower()` by code point over the frozen tables: the general path
+    * of [[pyLower]]. */
+  private[text] def pyLowerCp(s: String): String = {
     // fast path: no change needed
     var i = 0
     var changed = false
@@ -146,8 +204,86 @@ object PyText {
   }
 
   /** `re.sub(r"\s+", " ", text).strip()` — reference `normalize_text`
-    * (`ocr_processor.py:273-275`). Single pass. */
+    * (`ocr_processor.py:273-275`). Single pass; ASCII strings take the
+    * class-table path, any other string [[normalizeCp]]. */
   def normalize(s: String): String = {
+    val r = asciiNormalizeLower(s, withLower = false)
+    if (r ne null) r._1 else normalizeCp(s)
+  }
+
+  /** `(normalize(s), pyLower(normalize(s)))`. On ASCII both come from one
+    * pass over `s`, and the two are the same string when the page has no
+    * upper case; any other string falls back to `(n, pyLower(n))`. */
+  def normalizeLower(s: String): (String, String) = {
+    val r = asciiNormalizeLower(s, withLower = true)
+    if (r ne null) r
+    else {
+      val n = normalizeCp(s)
+      (n, pyLower(n))
+    }
+  }
+
+  /** The ASCII path of [[normalize]] / [[normalizeLower]]: null when `s`
+    * holds a char ≥ 0x80. The lowered result is null unless `withLower`.
+    * The first loop walks the prefix that normalization leaves as is and
+    * allocates nothing; from the first change on, the second writes the
+    * normalized bytes, which are then lowered in place for the second result. */
+  private def asciiNormalizeLower(s: String, withLower: Boolean): (String, String) = {
+    val n = s.length
+    var i = 0
+    var upper = false
+    var afterSpace = true // at the start, or just past a single ' '
+    var changed = false
+    while (i < n && !changed) {
+      val c = s.charAt(i)
+      if (c >= 0x80) return null
+      val k = asciiClass(c)
+      if (k == AsciiWs) {
+        changed = c != ' ' || afterSpace
+        if (!changed) { afterSpace = true; i += 1 }
+      } else {
+        afterSpace = false
+        upper |= k == AsciiUpper
+        i += 1
+      }
+    }
+    if (!changed) {
+      // only a single trailing ' ' can be stripped from an unchanged prefix
+      val norm = if (afterSpace && n > 0) s.substring(0, n - 1) else s
+      return (norm, if (!withLower) null else if (!upper) norm else pyLower(norm))
+    }
+    // s[0, i) is output as is, but for a single ' ' just before s(i), which
+    // joins the run that s(i) starts or continues
+    var len = if (afterSpace) math.max(i - 1, 0) else i
+    val out = asciiPrefix(s, len, n)
+    var pending = true
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c >= 0x80) return null
+      val k = asciiClass(c)
+      if (k == AsciiWs) pending = true
+      else {
+        if (pending && len > 0) { out(len) = ' '; len += 1 }
+        pending = false
+        out(len) = c.toByte
+        len += 1
+        upper |= k == AsciiUpper
+      }
+      i += 1
+    }
+    val norm = latin1(out, len)
+    if (!withLower) (norm, null)
+    else if (!upper) (norm, norm)
+    else {
+      var j = 0
+      while (j < len) { out(j) = asciiLowerByte(out(j)); j += 1 }
+      (norm, latin1(out, len))
+    }
+  }
+
+  /** `re.sub(r"\s+", " ", text).strip()` by code point: the general path of
+    * [[normalize]]. */
+  private[text] def normalizeCp(s: String): String = {
     val n = s.length
     val sb = new java.lang.StringBuilder(n)
     var i = 0
@@ -173,10 +309,6 @@ object PyText {
     * (`ocr_processor.py:350,370,405,427`). */
   def ciContains(page: String, id: String): Boolean =
     pyLower(page).contains(pyLower(id))
-
-  /** `a.lower() == b.lower()` — reference `_is_page_contains_only`
-    * (`ocr_processor.py:285-287`). */
-  def ciEquals(a: String, b: String): Boolean = pyLower(a) == pyLower(b)
 
   private def toCps(s: String): Array[Int] = {
     val out = new Array[Int](s.codePointCount(0, s.length))

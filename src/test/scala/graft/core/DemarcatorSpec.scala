@@ -143,4 +143,58 @@ class DemarcatorSpec extends AnyFunSuite {
     assert(SubDocXml.render(rows.toVector).contains("<DocumentTypeId></DocumentTypeId>")
       || SubDocXml.render(rows.toVector).contains("<DocumentTypeId/>"))
   }
+
+  // ---- pages are prepared only when a rule first reaches them; hand-written
+  // expected rows, checked against the reference's functions under python3 ----
+
+  private def row(dt: String, seq: String, from: Int, to: Int, total: Int): SegmentRow =
+    SegmentRow(None, from, to, None, Some(dt), None, total,
+      if (from > 0) to - from + 1 else 0, Some(seq), None)
+
+  test("a rule reaches non-ASCII pages (final sigma, U+0130) after ASCII pages") {
+    val pages = IndexedSeq("intro page", "Second Page", "\u039f\u0394\u039f\u03a3 report",
+      "\u0130stanbul close", "tail")
+    val rules = Seq(
+      // "ΟΔΟΣ".lower() ends in final ς, as does the page's; "İ".lower() is "i̇"
+      Rule(documentTypeId = Some("A"), startingIdentifier = "\u039f\u0394\u039f\u03a3",
+        endingIdentifier = "i\u0307stanbul", sequence = Some("1")),
+      // a medial σ before the space: not a substring of the page's "οδος report"
+      Rule(documentTypeId = Some("B"), startingIdentifier = "\u03bf\u03b4\u03bf\u03c3 report",
+        sequence = Some("2")),
+      // matches page 3, which rule A has claimed
+      Rule(documentTypeId = Some("C"), startingIdentifier = "\u03bf\u03b4\u03bf\u03c2 REPORT",
+        sequence = Some("3")))
+    assert(Demarcator.demarcate(pages, rules) ==
+      Vector(row("A", "1", 3, 4, 5), row("B", "2", 0, 0, 5), row("C", "3", 0, 0, 5)))
+  }
+
+  test("a Kelvin-sign alternative counts ASCII k occurrences") {
+    // "\u212aey".lower() == "key"; re.IGNORECASE folds K to k: page 1 counts
+    // one, page 3 two, so occurrence 3 is reached on page 3
+    val pages = IndexedSeq("a key here", "nothing", "key and KEY", "last")
+    val rules = Seq(Rule(documentTypeId = Some("K"), startingIdentifier = "nope|\u212aey",
+      occurence = 3, endingIdentifier = "last", sequence = Some("1")))
+    assert(Demarcator.demarcate(pages, rules) == Vector(row("K", "1", 3, 4, 4)))
+  }
+
+  test("ExactMatch against a page separated by \\x1c (Python whitespace)") {
+    val pages = IndexedSeq("cover", "\u001cTotal\u001c\u001cDue\u001c", "Total Due extra", "end")
+    val rules = Seq(Rule(documentTypeId = Some("X"), startingIdentifier = "ExactMatch: total due",
+      endingIdentifier = "ExactMatch:END", sequence = Some("1")))
+    assert(Demarcator.demarcate(pages, rules) == Vector(row("X", "1", 2, 4, 4)))
+  }
+
+  test("rules that stop before a pathological last page give the same rows") {
+    val ws = " \t\u3000\n\u001c"
+    val huge = (ws * (1 << 20)).take(1 << 20) // 1 MB of mixed Python whitespace
+    val rules = Seq(
+      Rule(documentTypeId = Some("D1"), startingIdentifier = "cover sheet", noOfPages = 1,
+        sequence = Some("1")),
+      Rule(documentTypeId = Some("D2"), startingIdentifier = "INVOICE 7",
+        endingIdentifier = "invoice END", sequence = Some("2")))
+    val expected = Vector(row("D1", "1", 1, 1, 5), row("D2", "2", 2, 4, 5))
+    for (last <- Seq(huge, "", "tail"))
+      assert(Demarcator.demarcate(
+        IndexedSeq("Cover Sheet", "Invoice 7 start", "body", "Invoice end", last), rules) == expected)
+  }
 }
