@@ -10,15 +10,16 @@ import org.apache.spark.sql.SparkSession
   * whole run: the burst session prepares in the background during the cold
   * pass, then one alternating burst pair runs between every few queries
   * and the remaining budget drains after the passes. Spreading the pairs
-  * across the full multi-minute run maximizes the chance that each level
-  * samples a clean host window (this box has multi-minute tenant-noise
-  * episodes that a single dedicated slot can land inside entirely).
+  * across the full multi-minute run lets host-noise episodes land on both
+  * levels alike; every scaling number is a median over all timed samples
+  * ([[graft.bench.Scaling]]). The kernel-ceiling probe before any work and
+  * after the bursts brackets the window as a diagnostic; it gates nothing.
   * One JSON line on stdout.
   *
   * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
   * SPARK_GRAFT_SCALE_CONVS (default 100000; 0 disables scaling),
-  * SPARK_GRAFT_SCALE_BUDGET_MS (default 420000 — total time inside
-  * burst pairs).
+  * SPARK_GRAFT_SCALE_BUDGET_MS (default 420000, positive — total time
+  * inside burst pairs, always drained).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -37,38 +38,14 @@ object Bench {
       if (scaleConvs > 0)
         Some(new graft.bench.Scaling.BurstSession(scaleConvs, Seq(4, 16), budgetMs = scaleBudget))
       else None
-    // pre-run endpoint of the kernel-ceiling BRACKET, measured before ANY
-    // other work starts (no prep thread, no Spark session — the box is as
-    // quiet as this run will ever see it); the post endpoint runs after
-    // teardown below. Together they bound the window the bursts rode.
-    //
-    // PROBE-GATED LAUNCH: when the pre-probe reads a hardware ceiling
-    // below the north-rule bar, no pipeline measurement in that window
-    // can clear it — the 4-thread level is turbo-inflated relative to the
-    // memory-bandwidth-bound 16-thread level (BENCH.md "what the numbers
-    // mean"). Rather than record a number that measures the weather, wait
-    // (bounded) and re-probe until the window can physically show ≥bar
-    // scaling; if the wait budget expires, proceed and record honestly —
-    // the bracket in the JSON attributes the result either way.
-    def ceilEff(m: Map[Int, Double]): Double =
-      if (m.size < 2) 1.0 else (m(16) / m(4)) / 4.0
-    var kernelPre: Map[Int, Double] =
+    // pre-run endpoint of the kernel-ceiling bracket, measured before ANY
+    // other work starts (no prep thread, no Spark session); the post
+    // endpoint runs after teardown below. Together they bound the window
+    // the bursts rode.
+    val kernelPre: Map[Int, Double] =
       if (session.isDefined)
         graft.bench.KernelBench.ceiling(42L, nConvs = 6000, Seq(4, 16))
       else Map.empty
-    var probeWaits = 0
-    if (session.isDefined) {
-      val bar = sys.env.getOrElse("SPARK_GRAFT_PROBE_BAR", "0.78").toDouble
-      val waitWall = System.nanoTime() +
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_WAIT_MS", "420000").toLong * 1000000L
-      while (ceilEff(kernelPre) < bar && System.nanoTime() < waitWall) {
-        probeWaits += 1
-        System.err.println(
-          f"[bench] kernel ceiling ${ceilEff(kernelPre)}%.3f < $bar%.2f — waiting for a cleaner window (wait $probeWaits)")
-        Thread.sleep(60000L)
-        kernelPre = graft.bench.KernelBench.ceiling(42L, nConvs = 6000, Seq(4, 16))
-      }
-    }
     // prepare (materialize + child spawn + warmup) in the background while
     // the cold pass runs — contention only affects cold timings, which are
     // informational; warm timings and bursts never overlap
@@ -78,9 +55,7 @@ object Bench {
       t.start()
       t
     }
-    def maybePulse(): Unit =
-      session.foreach(s => if (s.isReady && s.wantMore)
-        try s.pulse() catch { case e: Throwable => System.err.println(s"[bench] pulse: ${e.getMessage}") })
+    def maybePulse(): Unit = session.foreach(s => if (s.wantMore) s.pulse())
 
     val spark = graft.bench.Scaling.session(cpus)
     def gcMs: Long = graft.bench.Scaling.gcMs
@@ -129,10 +104,10 @@ object Bench {
 
     // drain the remaining scaling budget, bounded by a hard wall cap so
     // the JSON line below always prints
-    val scaling: Option[graft.bench.Scaling.Result] = session.flatMap { s =>
+    val scaling: Option[Either[String, graft.bench.Scaling.Result]] = session.map { s =>
       prep.foreach(_.join(240000L))
       val wallCap = System.nanoTime() + scaleBudget * 1000000L
-      while (s.isReady && s.wantMore && System.nanoTime() < wallCap) s.pulse()
+      while (s.wantMore && System.nanoTime() < wallCap) s.pulse()
       val r = s.result()
       // bounded teardown: a still-running prepare() holds the session
       // monitor, so close on a daemon thread and print the JSON regardless
@@ -144,7 +119,7 @@ object Bench {
       closer.join(30000L)
       // kernel-ceiling probe (same-window hardware bound; see
       // Scaling.Result.kernelTps) — AFTER teardown so it never overlaps a
-      // timed burst; Scaling.run's path attaches the same field
+      // timed burst; Scaling.run attaches the same field
       r.map(_.copy(kernelTpsPre = kernelPre, kernelTps =
         graft.bench.KernelBench.ceiling(42L, nConvs = 6000, Seq(4, 16))))
     }
@@ -166,16 +141,23 @@ object Bench {
       .mkString("{", ",", "}")
     val total = warm.values.sum
     val coldTotal = cold.values.sum
-    val scalingJson = scaling.map(r =>
-      s""","scaling":${r.json},"scaling_note":"min over interleaved bursts; pulses in cold pass + after passes only (warm pass pulse-free); see BENCH.md"""")
-      .getOrElse("")
+    def jsonText(v: String): String =
+      v.replace("\\", "\\\\").replace("\"", "\\\"").replaceAll("[\\x00-\\x1f]", " ")
+    val scalingJson = scaling.map {
+      case Right(r) =>
+        s""","scaling":${r.json},"scaling_note":"medians over interleaved bursts; pulses in cold pass + after passes only (warm pass pulse-free); see BENCH.md""""
+      case Left(cause) =>
+        s""","scaling":null,"scaling_note":"not recorded: ${jsonText(cause)}""""
+    }.getOrElse("")
     val failedJson =
       if (failed.isEmpty) ""
       else failed.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
         .mkString(",\"failed_queries\":{", ",", "}")
+    // probe_waits is always 0 (the launch waits for no window); the key
+    // keeps the record's top-level schema unchanged
     val line =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"warm_gc_ms":$gcs,"sf":"$sfDir","cold_total_sec":${f"$coldTotal%.3f"},"cpus":$cpus,"warm_pass_pulse_free":$warmPulseFree,"probe_waits":$probeWaits$failedJson$scalingJson}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"warm_gc_ms":$gcs,"sf":"$sfDir","cold_total_sec":${f"$coldTotal%.3f"},"cpus":$cpus,"warm_pass_pulse_free":$warmPulseFree,"probe_waits":0$failedJson$scalingJson}"""
     println(line)
     // the driver keeps only the last ~2000 chars of the line; persist the
     // full JSON at the REPO ROOT (GRAFT_REPO_ROOT / build.sbt-ancestor —

@@ -38,7 +38,9 @@ import graft.schema.{ConvRule, Turn}
   *    nodes declare `ClusteredDistribution(conv_id)`, so a turns table
   *    bucketed by `conv_id` is not shuffled at all;
   *  - `--two-stage` (`Pipeline.segmentTwoStage`): salted extraction, then
-  *    the join node regroups and folds, for monster-conversation corpora.
+  *    the join node regroups and folds. It spreads a hot conversation's
+  *    extraction over all tasks; its fold buffers each conversation under
+  *    the same `Pipeline.DefaultMaxConvPages`/`DefaultMaxConvChars` limits.
   *
   * `--buckets N` pins the conv_id shuffle (under `--two-stage`, the salted
   * extraction) at N partitions. Without it the shuffle starts from

@@ -52,15 +52,14 @@ object KernelBench {
     turns.length / sec
   }
 
-  /** Best-of-`reps` throughput per thread level (the cleanest draw, the
-    * same statistic as the Spark levels' min-seconds), after one warmup
+  /** Median throughput of three reps per thread level (the same
+    * statistic as the Spark levels' median seconds), after one warmup
     * pass at the highest level. */
-  def ceiling(seed: Long, nConvs: Int, levels: Seq[Int],
-              reps: Int = 3): Map[Int, Double] = {
+  def ceiling(seed: Long, nConvs: Int, levels: Seq[Int]): Map[Int, Double] = {
     val turns =
       (0 until nConvs).flatMap(i => SyntheticTranscripts.turnsFor(seed, i.toLong)).toArray
     measure(turns, levels.max): Unit // warmup: JIT + page-in
-    levels.map(t => t -> (1 to reps).map(_ => measure(turns, t)).max).toMap
+    levels.map(t => t -> Scaling.median((1 to 3).map(_ => measure(turns, t)))).toMap
   }
 
   def main(args: Array[String]): Unit = {

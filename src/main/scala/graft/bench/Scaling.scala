@@ -1,75 +1,75 @@
 package graft.bench
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
 import graft.gen.SyntheticTranscripts
+import graft.io.SnapshotStore
 import graft.pipeline.Pipeline
 import graft.schema.Turn
 
 /** Two-cluster-size scaling evidence for the north rule ("throughput
   * scaling efficiency ≥ 0.8 from N to 4N executors"). No real cluster
-  * exists in this sandbox, so per the driver's instruction the SAME job is
-  * run on the SAME materialized input at two parallelism levels
-  * (`local[4]` vs `local[16]`) in fresh JVMs, and
-  * `efficiency = (tps_hi / tps_lo) / (cpus_hi / cpus_lo)` is reported.
+  * exists in this sandbox, so the SAME job is run on the SAME materialized
+  * input at two parallelism levels (`local[4]` vs `local[16]`) in fresh
+  * JVMs.
   *
   * Measurement protocol (see BENCH.md for the full justification):
   *
   *  - '''one long-lived child JVM per level''' (ParallelGC, GC threads =
   *    task threads, fixed heap): levels never share JIT/GC/broadcast state,
-  *    and — unlike a fresh JVM per round — the JIT warmup cost is paid once
-  *    per level, so the same time budget buys ~an order of magnitude more
-  *    timed samples;
+  *    and the JIT warmup cost is paid once per level;
   *  - '''alternating bursts''': the two children take turns running short
   *    timed bursts (stdin `GO`/stdout `REP` protocol), so a host-noise
-  *    episode hits both levels rather than biasing one; per-level result is
-  *    the MIN across every rep of every burst — tenant noise only slows a
-  *    rep, so the min converges on the undisturbed time as samples
-  *    accumulate;
+  *    episode hits both levels rather than biasing one;
   *  - '''occupancy pinning''': pure-ALU ballast threads hold the active
   *    core count at the top level's count while (and only while) a burst
-  *    runs, removing the idle-socket turbo bias (~30% measured via
-  *    KernelBench) that otherwise flatters the low level;
-  *  - '''budget-adaptive''': bursts keep alternating until the time budget
-  *    is spent or both minima have been stable for several consecutive
-  *    bursts — a noisy episode early in the run cannot strand a single bad
-  *    draw as the only sample (the round-2 failure mode).
+  *    runs, removing the idle-socket turbo bias that otherwise flatters
+  *    the low level;
+  *  - '''fixed budget''': burst pairs run until the time budget is spent,
+  *    whatever they measure, so no stop rule conditions the record.
   *
-  * Headline efficiency is the min-based estimate: (best hi tps / best lo
-  * tps) / core ratio. It is a lower bound of the software scaling ratio
-  * RELATIVE TO THE CLEANEST OBSERVED DRAW of each level (noise only slows
-  * a draw; if even the best low-level draw was slowed, the reported number
-  * still understates). Raw per-burst pair ratios are kept in the JSON as
-  * diagnostics, not the headline — a noisy baseline draw would inflate
-  * them (they are NOT lower bounds).
+  * Every recorded number is a MEDIAN over all timed samples: a level's
+  * seconds over all its reps, each burst's seconds over that burst's reps,
+  * and the headline efficiency over the per-pair ratios
+  * `(s_lo / s_hi) / (cpus_hi / cpus_lo)`. The two bursts of a pair run back
+  * to back under the same clock regime, so each pair's ratio cancels
+  * ambient frequency drift. A host with fewer processors than the top
+  * level records no efficiency: an oversubscribed ratio measures the
+  * host, not scaling.
   */
 object Scaling {
 
   /** Cumulative JVM GC collection time — ONE definition shared by every
-    * bench (Bench warm-pass attribution, runLevel, the burst child), so
-    * gc_ms semantics cannot drift between them. */
+    * bench (Bench warm-pass attribution, the burst child), so gc_ms
+    * semantics cannot drift between them. */
   private[graft] def gcMs: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
 
+  /** Median of a non-empty sample (the mean of the middle two when its
+    * size is even): the one statistic every bench in this package
+    * records, so no record depends on a lucky or unlucky draw. */
+  def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of an empty sample")
+    val s = xs.sorted
+    val m = s.length / 2
+    if (s.length % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
+  /** One parallelism level; `seconds` is the median of all its timed reps. */
   final case class Level(cpus: Int, seconds: Double, turnsPerSec: Double, nSegments: Long)
 
   final case class Result(nConvs: Long, nTurns: Long, levels: Vector[Level],
-                          pinnedTo: Int = 0,
-                          rounds: Vector[Vector[Level]] = Vector.empty,
-                          probeBestMs: Double = -1.0,
-                          probeGatedWaits: Int = 0,
-                          // per-pair BEST-OF-BURST seconds by cpu level (NOT
-                          // cumulative minima): adjacent bursts share the
-                          // host's clock regime, so their ratio cancels
-                          // ambient frequency drift that the min-based
-                          // headline cannot (each level's all-time best draw
-                          // may come from different clock windows)
-                          pairBests: Vector[Map[Int, Double]] = Vector.empty,
+                          // per burst pair, in order: each level's median
+                          // burst seconds by cpu level
+                          pairSeconds: Vector[Map[Int, Double]],
+                          // processors available to the JVMs that ran the
+                          // levels
+                          hostCpus: Int,
                           // raw-thread kernel throughput by cpu level,
                           // measured in the SAME window right after the
                           // bursts ([[KernelBench.ceiling]]): the hardware
@@ -79,69 +79,34 @@ object Scaling {
                           // away from the ceiling) is responsible
                           kernelTps: Map[Int, Double] = Map.empty,
                           // the same ceiling measured BEFORE any timed work
-                          // (pre/post BRACKET): a 10-minute capture can ride
-                          // a window that opens or closes mid-run — the
-                          // 2026-08-20 record's bursts ran at a ~0.87
-                          // ceiling while the post-teardown probe read 0.67
-                          // (window closed after the bursts). One endpoint
-                          // attributes; two endpoints bound the whole run.
+                          // (pre/post bracket): a long capture can ride a
+                          // window that opens or closes mid-run, and two
+                          // endpoints bound the whole run
                           kernelTpsPre: Map[Int, Double] = Map.empty) {
-    /** Scaling efficiency between two measured levels:
-      * (tps_hi / tps_lo) / (cpus_hi / cpus_lo). */
-    def efficiencyBetween(lo: Int, hi: Int): Option[Double] =
-      for {
-        l <- levels.find(_.cpus == lo)
-        h <- levels.find(_.cpus == hi)
-      } yield (h.turnsPerSec / l.turnsPerSec) / (h.cpus.toDouble / l.cpus)
+    private def topCpus: Int = levels.map(_.cpus).max
 
-    /** All N→4N pairs present among the measured levels. */
-    def n4nPairs: Vector[(Int, Int, Double)] =
-      levels.map(_.cpus).sorted.flatMap(c =>
-        efficiencyBetween(c, c * 4).map(e => (c, c * 4, e)))
+    /** Why this run records no efficiency; None when it records one. */
+    def nullReason: Option[String] =
+      if (hostCpus < topCpus)
+        Some(s"host has $hostCpus processors, fewer than the top level local[$topCpus]: " +
+          "an oversubscribed ratio measures the host, not scaling")
+      else if (levels.map(_.cpus).distinct.size < 2) Some("fewer than two levels measured")
+      else None
 
-    /** Efficiency from the per-level minima across all bursts — the
-      * headline: a lower-bound estimate relative to the cleanest observed
-      * draw of each level. */
-    def efficiencyMinBased: Double =
-      n4nPairs.headOption.map(_._3).getOrElse {
-        val lo = levels.minBy(_.cpus)
-        val hi = levels.maxBy(_.cpus)
-        (hi.turnsPerSec / lo.turnsPerSec) / (hi.cpus.toDouble / lo.cpus)
+    /** Per-pair efficiency `(s_lo / s_hi) / (cpus_hi / cpus_lo)` between the
+      * lowest and the highest level, in burst order; empty when
+      * [[nullReason]] is set. */
+    def pairRatios: Vector[Double] =
+      if (nullReason.isDefined) Vector.empty
+      else pairSeconds.map { m =>
+        val (loC, loS) = m.minBy(_._1)
+        val (hiC, hiS) = m.maxBy(_._1)
+        (loS / hiS) / (hiC.toDouble / loC)
       }
 
-    /** Running-min TRAJECTORY: entry k is the min-based ratio using each
-      * level's best draw over bursts 1..k (each burst snapshots the
-      * children's cumulative minima), converging to the headline by
-      * construction. Diagnostic — shows how quickly clean windows were
-      * caught, not independent per-burst draws. */
-    def efficiencyByRound: Vector[Double] =
-      rounds.flatMap { ls =>
-        val lo = ls.minBy(_.cpus)
-        val hi = ls.maxBy(_.cpus)
-        if (lo.cpus == hi.cpus) None
-        else Some((hi.turnsPerSec / lo.turnsPerSec) / (hi.cpus.toDouble / lo.cpus))
-      }
-
-    /** Headline: the min-based lower-bound estimate. */
-    def efficiency: Double = efficiencyMinBased
-
-    /** MEDIAN of the per-pair (same-clock-window) efficiency ratios — the
-      * ambient-frequency-drift-cancelling companion to the min-based
-      * headline: a burst pair runs its two levels back to back, so clock
-      * regime changes between windows hit both sides of each ratio. The
-      * median (not max: a slowed lo draw inflates single pairs) is robust
-      * to tenant noise in either direction. NaN when no pair data. */
-    def efficiencyPairedMedian: Double = {
-      val ratios = pairBests.flatMap { m =>
-        for {
-          (loC, loS) <- m.minByOption(_._1)
-          (hiC, hiS) <- m.maxByOption(_._1)
-          if hiC != loC && !loS.isNaN && !hiS.isNaN
-        } yield (loS / hiS) / (hiC.toDouble / loC)
-      }.sorted
-      if (ratios.isEmpty) Double.NaN
-      else ratios(ratios.size / 2)
-    }
+    /** Headline: the median of [[pairRatios]]; None with a [[nullReason]]. */
+    def efficiency: Option[Double] =
+      if (pairRatios.isEmpty) None else Some(median(pairRatios))
 
     /** Kernel N→4N efficiency over [[kernelTps]]'s extreme levels — the
       * window's hardware ceiling; NaN when not measured. */
@@ -163,9 +128,9 @@ object Scaling {
       val ls = levels.map(l =>
         s"""{"cpus":${l.cpus},"seconds":${f"${l.seconds}%.3f"},"turns_per_sec":${f"${l.turnsPerSec}%.1f"},"segments":${l.nSegments}}""")
         .mkString("[", ",", "]")
-      val byRound = efficiencyByRound.map(e => f"$e%.3f").mkString("[", ",", "]")
-      val pm = efficiencyPairedMedian
-      val pmJson = if (pm.isNaN) "null" else f"$pm%.3f"
+      val eff = efficiency.map(e => f"$e%.3f").getOrElse("null") +
+        nullReason.map(r => s""","efficiency_null_reason":"$r"""").getOrElse("")
+      val ratios = pairRatios.map(e => f"$e%.3f").mkString("[", ",", "]")
       def ceilingJson(m: Map[Int, Double]): String =
         if (m.size < 2) "null"
         else {
@@ -173,15 +138,10 @@ object Scaling {
             .map { case (c, t) => s""""$c":${f"$t%.0f"}""" }.mkString("{", ",", "}")
           s"""{"tps":$tps,"efficiency":${f"${kernelEff(m)}%.3f"}}"""
         }
-      val kJson = ceilingJson(kernelTps)
-      val kPreJson = ceilingJson(kernelTpsPre)
-      s"""{"n_convs":$nConvs,"n_turns":$nTurns,"levels":$ls,"efficiency":${f"$efficiency%.3f"},""" +
-        s""""efficiency_min_based":${f"$efficiencyMinBased%.3f"},""" +
-        s""""efficiency_paired_median":$pmJson,"bursts":${rounds.length},""" +
-        s""""efficiency_trajectory":$byRound,""" +
-        s""""noise_probe":{"best_ms":${f"$probeBestMs%.1f"},"gated_waits":$probeGatedWaits},""" +
-        s""""kernel_ceiling":$kJson,"kernel_ceiling_pre":$kPreJson,""" +
-        s""""occupancy_pinned_to_cores":$pinnedTo}"""
+      s"""{"n_convs":$nConvs,"n_turns":$nTurns,"levels":$ls,"efficiency":$eff,""" +
+        s""""pair_ratios":$ratios,"bursts":${pairSeconds.length},""" +
+        s""""kernel_ceiling":${ceilingJson(kernelTps)},"kernel_ceiling_pre":${ceilingJson(kernelTpsPre)},""" +
+        s""""occupancy_pinned_to_cores":$topCpus}"""
     }
   }
 
@@ -216,20 +176,6 @@ object Scaling {
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Generate and write the fixed input corpus once; returns (dir, nTurns).
-    * Runs in THIS JVM — callers that already hold a live SparkContext must
-    * use [[materializeInChild]] instead (a second context cannot coexist,
-    * and this method stops the context it used). */
-  def materialize(nConvs: Long, seed: Long, genCpus: Int): (String, Long) = {
-    val dir = Files.createTempDirectory(scratchRoot, "graft-scaling").toString
-    val spark = session(genCpus, Some(s"$dir/shuffle-gen"))
-    try {
-      SyntheticTranscripts.turns(spark, nConvs, seed)
-        .write.mode("overwrite").parquet(s"$dir/turns")
-      (dir, spark.read.parquet(s"$dir/turns").count())
-    } finally spark.stop()
-  }
-
   private[bench] def childJvmCmd(mainClass: String, gcThreads: Int, args: Seq[String]): Seq[String] = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     // pair-aware: the two-argument form ("--add-opens" "<module spec>")
@@ -250,8 +196,9 @@ object Scaling {
       mainClass) ++ args
   }
 
-  /** [[materialize]] in a fresh child JVM — safe while the calling JVM
-    * holds a live SparkContext of its own. */
+  /** Generates and writes the fixed input corpus once, in a fresh child
+    * JVM ([[MaterializeRunner]]) — safe while the calling JVM holds a live
+    * SparkContext of its own; returns (dir, nTurns). */
   def materializeInChild(nConvs: Long, seed: Long, genCpus: Int): (String, Long) = {
     val dir = Files.createTempDirectory(scratchRoot, "graft-scaling").toString
     try {
@@ -278,7 +225,7 @@ object Scaling {
     } catch {
       // on tmpfs a leaked partial-parquet dir is leaked RAM across runs
       case e: Throwable =>
-        graft.io.SnapshotStore.deleteRecursively(java.nio.file.Paths.get(dir))
+        SnapshotStore.deleteRecursively(Paths.get(dir))
         throw e
     }
   }
@@ -306,53 +253,6 @@ object Scaling {
     def shutdown(): Unit = { stop.set(true); threads.foreach(_.join(1000)) }
   }
 
-  /** One parallelism level measured in-process: fresh session, warmup,
-    * best-of-`reps` timing of scan → extract → segment → count. Fallback
-    * path when the burst-protocol children cannot be spawned. */
-  def runLevel(cpus: Int, dir: String, nConvs: Long, nTurns: Long, seed: Long,
-               reps: Int = 3, maxRepsOpt: Int = 0, ballastTo: Int = 0): Level = {
-    val ballast = new Ballast(ballastTo - cpus)
-    ballast.engage()
-    val spark = session(cpus, Some(s"$dir/shuffle-c$cpus"))
-    try {
-      val ruleMap = SyntheticTranscripts.rules(spark, nConvs, seed).collect()
-        .groupBy(_.conv_id).map { case (k, v) => k -> v.toSeq.map(Pipeline.toCoreRule) }
-      val bc = spark.sparkContext.broadcast(ruleMap)
-      def job(): Long = {
-        import spark.implicits._
-        val turns = spark.read.parquet(s"$dir/turns").as[Turn]
-        Pipeline.segmentFused(turns, bc).count()
-      }
-      // warmup ×2: full code path on a generated prefix big enough to JIT
-      // the kernels and codegen stages — one pass leaves the first timed
-      // reps still compiling
-      Pipeline.segmentFused(
-        SyntheticTranscripts.turns(spark, math.min(4000L, nConvs), seed), bc).count()
-      Pipeline.segmentFused(
-        SyntheticTranscripts.turns(spark, math.min(4000L, nConvs), seed), bc).count()
-      var best = Double.MaxValue
-      var segs = 0L
-      def gcMs: Long = Scaling.gcMs
-      var i = 0
-      var plateau = 0
-      val maxReps = if (maxRepsOpt > 0) maxRepsOpt else math.max(reps, 10)
-      while (i < maxReps && !(i >= reps && plateau >= 2)) {
-        i += 1
-        val g0 = gcMs
-        val t0 = System.nanoTime()
-        segs = job()
-        val s = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[scaling] local[$cpus] rep$i: $s%.2fs gc=${gcMs - g0}ms")
-        if (s > best * 0.95) plateau += 1 else plateau = 0
-        if (s < best) best = s
-      }
-      Level(cpus, best, nTurns / best, segs)
-    } finally {
-      ballast.shutdown()
-      spark.stop()
-    }
-  }
-
   /** Handle to one long-lived per-level child JVM speaking the burst
     * protocol: parent writes `GO <reps>` / `EXIT`, child answers each rep
     * with `REP <seconds> <segments>` then `BURST_DONE`. Every read is
@@ -364,8 +264,8 @@ object Scaling {
       new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
     private val out = new java.io.PrintWriter(
       new java.io.OutputStreamWriter(proc.getOutputStream, "UTF-8"), true)
-    var best: Double = Double.MaxValue
-    var segments: Long = 0L
+    private val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    private var segments: Long = 0L
 
     /** Next line, or None on EOF (dead child); IOException past `deadline`
       * (wedged child). The child writes whole lines with auto-flush, so
@@ -397,20 +297,20 @@ object Scaling {
     def burst(reps: Int): Seq[Double] = {
       out.println(s"GO $reps")
       val deadline = System.nanoTime() + 15L * 60 * 1000000000L
-      val times = Vector.newBuilder[Double]
+      val burstTimes = Vector.newBuilder[Double]
       var line = readLineWithin(deadline)
       while (line.isDefined && !line.contains("BURST_DONE")) {
         line.filter(_.startsWith("REP ")).foreach { l =>
           val Array(_, s, segs) = l.split(" ")
-          val sec = s.toDouble
-          times += sec
-          if (sec < best) best = sec
+          burstTimes += s.toDouble
           segments = segs.toLong
         }
         line = readLineWithin(deadline)
       }
       if (line.isEmpty) throw new java.io.IOException(s"burst child local[$cpus] died")
-      times.result()
+      val got = burstTimes.result()
+      times ++= got
+      got
     }
 
     def close(): Unit = {
@@ -419,7 +319,11 @@ object Scaling {
         proc.destroyForcibly()
     }
 
-    def level(nTurns: Long): Level = Level(cpus, best, nTurns / best, segments)
+    /** The level over every timed rep so far. */
+    def level(nTurns: Long): Level = {
+      val s = median(times.toSeq)
+      Level(cpus, s, nTurns / s, segments)
+    }
   }
 
   private def spawnBurstChild(cpus: Int, dir: String, nConvs: Long, seed: Long,
@@ -431,71 +335,39 @@ object Scaling {
     new BurstChild(cpus, pb.start())
   }
 
-  /** Single-threaded ~128 MB streaming-sum probe: its time is stable on a
-    * quiet socket and degrades under exactly the interference that poisons
-    * the timed reps (co-tenant memory-bandwidth pressure). Compared against
-    * its own best-of-run to gate bursts into clean windows. */
-  final class NoiseProbe {
-    private val arr: Array[Long] = Array.tabulate(16 << 20)(_.toLong) // 128 MB
-    var bestMs: Double = Double.MaxValue
-    private def once(): Double = {
-      val t0 = System.nanoTime()
-      var i = 0
-      var s = 0L
-      while (i < arr.length) { s += arr(i); i += 1 }
-      if (s == 42L) System.err.println("") // blackhole
-      (System.nanoTime() - t0) / 1e6
-    }
-    /** Best of two passes; updates the run's best. */
-    def measure(): Double = {
-      val m = math.min(once(), once())
-      if (m < bestMs) bestMs = m
-      m
-    }
-    /** True when the current window is within `tol`× of the cleanest
-      * observed probe time. */
-    def windowClean(tol: Double = 1.15): Boolean = measure() <= bestMs * tol
-
-    (0 until 3).foreach(_ => once()) // JIT the loop before first use
-  }
-
   /** Incremental alternating-burst session: `prepare()` materializes the
     * input, spawns one child JVM per level, and warms them up; each
-    * `pulse()` runs ONE alternating burst pair (noise-probe gated). A
-    * caller with other work (graft.Bench's query passes) interleaves
-    * pulses between its own steps, so the sampling horizon for catching a
-    * clean host window becomes the caller's WHOLE run — not one dedicated
-    * slot at its end — while bursts stay strictly serialized with the
-    * caller's work (no self-contention). `budgetMs` bounds the total time
-    * spent inside `pulse()`. */
-  final class BurstSession(nConvs: Long, cpusLevels: Seq[Int], seed: Long = 42L,
-                           reps: Int = 2, frequencyPinned: Boolean = true,
-                           budgetMs: Long = 0L) {
-    private val ballastTo = if (frequencyPinned) cpusLevels.max else 0
+    * `pulse()` runs ONE alternating burst pair. A caller with other work
+    * (graft.Bench's query passes) interleaves pulses between its own
+    * steps, so the sampling horizon becomes the caller's WHOLE run, while
+    * bursts stay strictly serialized with the caller's work (no
+    * self-contention). `budgetMs` bounds the total time spent inside
+    * `pulse()`, and is always drained. The first failure (children that
+    * cannot spawn, never report READY, or die) ends the session; [[result]]
+    * then names it. */
+  final class BurstSession(nConvs: Long, cpusLevels: Seq[Int], budgetMs: Long,
+                           seed: Long = 42L) {
+    require(budgetMs > 0, s"the scaling time budget must be positive, got $budgetMs ms")
+    private val ballastTo = cpusLevels.max
     private var dir: String = null
     private var nTurns = 0L
     private var children: Vector[BurstChild] = Vector.empty
-    private val pairResults = scala.collection.mutable.ArrayBuffer.empty[Vector[Level]]
-    private val pairBestsBuf = scala.collection.mutable.ArrayBuffer.empty[Map[Int, Double]]
-    private var pair = 0
-    private var stablePairs = 0
-    private var minPairMs = Double.MaxValue
-    private var spentMs = 0.0
-    private var probe: NoiseProbe = null
+    // levels snapshot after the last pair: valid once the children close
+    private var levels: Vector[Level] = Vector.empty
+    private val pairSeconds = scala.collection.mutable.ArrayBuffer.empty[Map[Int, Double]]
+    private val pairMs = scala.collection.mutable.ArrayBuffer.empty[Double]
     @volatile private var readyFlag = false
-    @volatile private var dead = false
+    @volatile private var failure: Option[String] = None
     @volatile private var abandonedFlag = false
-
-    def isReady: Boolean = readyFlag
 
     /** Signals that the owner stopped waiting on prepare(): if prepare
       * completes later it releases its children immediately instead of
       * leaving two idle 16g JVMs behind. */
     def abandon(): Unit = abandonedFlag = true
 
-    /** Materialize + spawn + warm up; idempotent; false if unusable. */
-    def prepare(): Boolean = synchronized {
-      if (readyFlag || dead) return readyFlag
+    /** Materialize + spawn + warm up; idempotent. */
+    def prepare(): Unit = synchronized {
+      if (readyFlag || failure.isDefined) return
       try {
         // child-JVM materialization: the caller may hold a live
         // SparkContext of its own (graft.Bench's query session)
@@ -506,168 +378,83 @@ object Scaling {
         // closes the ones already running (no leaked 16g JVMs)
         cpusLevels.foreach(c =>
           children = children :+ spawnBurstChild(c, dir, nConvs, seed, ballastTo))
-        require(children.forall(_.awaitReady(240000L)), "burst child never became READY")
-        probe = new NoiseProbe
-        readyFlag = true
-        if (abandonedFlag) { readyFlag = false; dead = true; close() }
-      } catch { case e: Throwable =>
-        System.err.println(s"[scaling] burst session failed to prepare: ${e.getMessage}")
-        dead = true
-        close()
-      }
-      readyFlag
+        children.find(!_.awaitReady(240000L)).foreach(c =>
+          sys.error(s"burst child local[${c.cpus}] did not report READY within 240 s"))
+        if (abandonedFlag) fail("abandoned before the burst children were READY")
+        else readyFlag = true
+      } catch { case e: Throwable => fail(s"burst session failed to prepare: $e") }
     }
 
-    // the FIRST burst runs more reps to settle JIT/GC; later bursts shrink
-    // to 1 rep at the low level (2 at the high) — finer alternation means
-    // more, shorter bursts, so the baseline level samples many distinct
-    // noise windows and its min has a real chance to catch a clean one
-    private def burstReps(c: BurstChild, pairIdx: Int): Int = {
-      val first = math.max(reps, reps * math.min(2, c.cpus / cpusLevels.min))
-      if (pairIdx == 0) first else math.max(1, first / 2)
+    private def fail(cause: String): Unit = {
+      System.err.println(s"[scaling] $cause")
+      failure = Some(cause)
+      readyFlag = false
+      close()
     }
 
-    private var gatedWaits = 0
-
-    // wait (bounded) for the interference probe to read clean before
-    // spending timed reps; proceed regardless once the wait is up
-    private def awaitCleanWindow(maxWaitMs: Long): Unit = {
-      val deadline = System.nanoTime() + maxWaitMs * 1000000L
-      var waited = false
-      while (!probe.windowClean() && System.nanoTime() < deadline) {
-        waited = true
-        Thread.sleep(2000)
-      }
-      if (waited) {
-        gatedWaits += 1
-        System.err.println(f"[scaling] noise probe: waited for a clean window (best ${probe.bestMs}%.1fms)")
-      }
+    // the FIRST burst runs twice the reps to settle JIT/GC; the high level
+    // runs twice the low level's reps, which roughly evens out the two
+    // bursts' wall time
+    private def burstReps(c: BurstChild): Int = {
+      val n = math.min(2, c.cpus / cpusLevels.min)
+      if (pairSeconds.isEmpty) 2 * n else n
     }
 
-    /** Another pulse is still useful: under the 16-pair cap, and — when a
-      * budget is set — the budget fits another pair at steady-state cost.
-      * A budgeted run always drains its FULL budget, deliberately and
-      * SYMMETRICALLY: r5 showed that stopping on "minima stable for 3
-      * pairs" ends a uniformly-noisy run at a flat 0.77 with budget to
-      * spare, while any stop rule keyed to the headline clearing a bar is
-      * an optional-stopping bias (sample until it passes, stop as soon as
-      * it does). Draining the same budget every run conditions the record
-      * on nothing; the only cost is that clean runs no longer finish
-      * early. Budget-less callers (one-shot ScalingBench) keep the
-      * stability rule as their terminator. */
-    def wantMore: Boolean = readyFlag && !dead && pair < 16 &&
-      (if (budgetMs == 0L) stablePairs < 3
-       else pair < 2 ||
-         spentMs + (if (minPairMs == Double.MaxValue) 0.0 else minPairMs) * 1.1 < budgetMs)
+    /** Another pulse is still useful: under the 16-pair cap, and the
+      * budget fits another pair at the median pair cost so far. The budget
+      * is drained on every run: a stop rule keyed to the measured numbers
+      * would be optional stopping. */
+    def wantMore: Boolean = readyFlag && pairSeconds.length < 16 &&
+      (pairMs.length < 2 || pairMs.sum + median(pairMs.toSeq) * 1.1 < budgetMs)
 
     /** One alternating burst pair across the levels. */
     def pulse(): Unit = synchronized {
-      if (!readyFlag || dead) return
+      if (!readyFlag) return
       val ps = System.nanoTime()
       try {
-        val prevBests = children.map(_.best)
-        val thisPair = children.map { c =>
-          if (pair > 0) awaitCleanWindow(maxWaitMs = 15000L)
-          val times = c.burst(burstReps(c, pair))
-          c.cpus -> times.minOption.getOrElse(Double.NaN)
-        }.toMap
-        pairBestsBuf += thisPair
-        pairResults += children.map(_.level(nTurns))
-        pair += 1
-        // steady-state pair cost = fastest pair seen; estimating from the
-        // last pair would let one noise-inflated pair end the run early
-        minPairMs = math.min(minPairMs, (System.nanoTime() - ps) / 1e6)
-        val improved = children.zip(prevBests).exists { case (c, pb) => c.best < pb * 0.99 }
-        stablePairs = if (improved) 0 else stablePairs + 1
-      } catch { case e: Throwable =>
-        System.err.println(s"[scaling] burst pair failed: ${e.getMessage}")
-        dead = true
-      } finally spentMs += (System.nanoTime() - ps) / 1e6
+        pairSeconds += children.map(c => c.cpus -> median(c.burst(burstReps(c)))).toMap
+        levels = children.map(_.level(nTurns))
+      } catch { case e: Throwable => fail(s"burst pair ${pairSeconds.length + 1} failed: $e") }
+      finally pairMs += (System.nanoTime() - ps) / 1e6
     }
 
-    /** Result from the pairs measured so far (None if none completed).
-      * Valid after `close()` — levels snapshot from the last pair. */
-    def result(): Option[Result] =
-      pairResults.lastOption.map(levels =>
-        Result(nConvs, nTurns, levels, ballastTo, pairResults.toVector,
-          probeBestMs = if (probe != null) probe.bestMs else -1.0,
-          probeGatedWaits = gatedWaits,
-          pairBests = pairBestsBuf.toVector))
+    /** The record over every pair so far, or the cause no record exists. */
+    def result(): Either[String, Result] =
+      failure.orElse(
+        if (!readyFlag && pairSeconds.isEmpty) Some("burst children never became READY")
+        else if (pairSeconds.isEmpty) Some("no burst pair completed")
+        else None
+      ).toLeft(Result(nConvs, nTurns, levels, pairSeconds.toVector,
+        Runtime.getRuntime.availableProcessors))
 
     def close(): Unit = synchronized {
       children.foreach(c => try c.close() catch { case _: Throwable => })
       children = Vector.empty
-      if (dir != null) deleteRecursively(new java.io.File(dir))
+      if (dir != null) SnapshotStore.deleteRecursively(Paths.get(dir))
       dir = null
     }
   }
 
-  /** One-shot entry (ScalingBench): burst session pulsed back-to-back
-    * under the budget, with an in-process single-shot fallback when child
-    * JVMs cannot be spawned. */
-  def run(nConvs: Long, cpusLevels: Seq[Int], seed: Long = 42L,
-          rounds: Int = 2, reps: Int = 2, maxReps: Int = 0,
-          timeBudgetMs: Long = 0L, frequencyPinned: Boolean = true): Result = {
-    // kernel-ceiling BRACKET: one probe before any timed work, one after
+  /** One-shot entry (ScalingBench): the burst session pulsed back to back
+    * until its budget is spent, bracketed by the kernel ceiling. Throws,
+    * naming the cause, when the children fail. */
+  def run(nConvs: Long, cpusLevels: Seq[Int], timeBudgetMs: Long, seed: Long = 42L): Result = {
+    // kernel-ceiling bracket: one probe before any timed work, one after
     // the bursts (each in ITS half of the window, never concurrent with a
     // timed Spark level): raw threads on the same corpus shape, ~10 s per
     // endpoint — see [[Result.kernelTps]]/[[Result.kernelTpsPre]]
-    val pre =
-      if (cpusLevels.distinct.size < 2) Map.empty[Int, Double]
+    def ceiling(): Map[Int, Double] =
+      if (cpusLevels.distinct.size < 2) Map.empty
       else KernelBench.ceiling(seed, nConvs = 6000, Seq(cpusLevels.min, cpusLevels.max))
-    val r = runLevels(nConvs, cpusLevels, seed, rounds, reps, maxReps,
-      timeBudgetMs, frequencyPinned)
-    if (cpusLevels.distinct.size < 2) r
-    else r.copy(kernelTpsPre = pre, kernelTps =
-      KernelBench.ceiling(seed, nConvs = 6000, Seq(cpusLevels.min, cpusLevels.max)))
-  }
-
-  private def runLevels(nConvs: Long, cpusLevels: Seq[Int], seed: Long,
-                        rounds: Int, reps: Int, maxReps: Int,
-                        timeBudgetMs: Long, frequencyPinned: Boolean): Result = {
-    val session = new BurstSession(nConvs, cpusLevels, seed, reps, frequencyPinned, timeBudgetMs)
-    try {
-      if (session.prepare()) {
-        while (session.wantMore) session.pulse()
-        session.result() match {
-          case Some(r) => return r
-          case None =>
-        }
-      }
+    val pre = ceiling()
+    val session = new BurstSession(nConvs, cpusLevels, timeBudgetMs, seed)
+    val r = try {
+      session.prepare()
+      while (session.wantMore) session.pulse()
+      session.result()
     } finally session.close()
-    // in-process fallback: interleaved single-shot rounds (old protocol)
-    val ballastTo = if (frequencyPinned) cpusLevels.max else 0
-    val t0 = System.nanoTime()
-    def elapsedMs: Double = (System.nanoTime() - t0) / 1e6
-    val (dir, nTurns) = materialize(nConvs, seed, genCpus = cpusLevels.max)
-    try {
-      val roundResults = scala.collection.mutable.ArrayBuffer.empty[Vector[Level]]
-      var r = 0
-      var continue = true
-      while (continue) {
-        val rs = System.nanoTime()
-        roundResults += cpusLevels.toVector.map { c =>
-          val mult = math.max(1, c / cpusLevels.min)
-          val (r1, m1) = (reps * math.min(2, mult), maxReps * math.min(2, mult))
-          runLevel(c, dir, nConvs, nTurns, seed, r1, m1, ballastTo)
-        }
-        r += 1
-        val roundMs = (System.nanoTime() - rs) / 1e6
-        continue =
-          if (r < rounds) timeBudgetMs == 0 || elapsedMs + roundMs * 1.1 < timeBudgetMs
-          else timeBudgetMs > 0 && elapsedMs + roundMs * 1.2 < timeBudgetMs
-      }
-      val all = roundResults.flatten
-      val levels = cpusLevels.toVector.map { c =>
-        all.filter(_.cpus == c).minBy(_.seconds)
-      }
-      Result(nConvs, nTurns, levels, ballastTo, roundResults.toVector)
-    } finally deleteRecursively(new java.io.File(dir))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+    r.fold(cause => throw new IllegalStateException(s"scaling run recorded nothing: $cause"),
+      _.copy(kernelTpsPre = pre, kernelTps = ceiling()))
   }
 }
 
@@ -769,9 +556,12 @@ object ScalingBench {
     val rows = res.levels.map(l =>
       f"| local[${l.cpus}] | ${res.nTurns} | ${l.seconds}%.2f | ${l.turnsPerSec}%.0f | ${l.nSegments} |")
       .mkString("\n")
-    val pairRows = res.n4nPairs
-      .map { case (lo, hi, e) => f"| local[$lo] → local[$hi] | ${e}%.3f |" }
-      .mkString("\n")
+    val headline = res.efficiency match {
+      case Some(e) =>
+        f"**N→4N efficiency: $e%.3f**, the median of the per-pair ratios " +
+          res.pairRatios.map(r => f"$r%.3f").mkString(", ")
+      case None => s"**N→4N efficiency: not recorded** — ${res.nullReason.getOrElse("")}"
+    }
     val md =
       s"""# BENCH — measured throughput & scaling
          |
@@ -784,11 +574,15 @@ object ScalingBench {
          |threads — levels never share JIT/GC state, warmup paid once);
          |alternating short timed bursts so a host-noise episode hits both
          |levels; occupancy-pinning ballast active only while a burst runs;
-         |bursts continue until the time budget is spent or both per-level
-         |minima are stable. Per-level MIN across all bursts is reported
-         |(${res.rounds.length} burst pairs this run). Headline efficiency is
-         |the min-based ratio — a lower-bound ESTIMATE relative to the
-         |cleanest observed draw of each level (host noise only slows draws).
+         |burst pairs continue until the time budget is spent
+         |(${res.pairSeconds.length} burst pairs this run). Every number is a
+         |median over all timed samples: a level's seconds over all its reps,
+         |each pair's ratio (s_lo / s_hi) / (cpus_hi / cpus_lo) over each
+         |burst's reps, and the efficiency over the per-pair ratios. The two
+         |bursts of a pair share one clock regime, so each ratio cancels
+         |ambient frequency drift. A host with fewer processors than the top
+         |level records no efficiency: an oversubscribed ratio measures the
+         |host, not scaling.
          |
          |Input: ${res.nConvs} conversations, ${res.nTurns} turns
          |(deterministic synthetic corpus, seed 42, hot-conversation skew
@@ -797,38 +591,27 @@ object ScalingBench {
          |target is compute scaling (a production cluster has NVMe + a
          |network shuffle tier).
          |
-         || level | turns | seconds | turns/sec | segments |
+         || level | turns | seconds (median) | turns/sec | segments |
          ||---|---|---|---|---|
          |%%ROWS%%
          |
-         || pair | scaling efficiency (tps ratio / core ratio) |
-         ||---|---|
-         |%%PAIRS%%
-         |
-         |**Headline N→4N efficiency: ${f"${res.efficiency}%.3f"}** (target
-         |≥ 0.8 per BASELINE.json north rule; measured on identical input at
-         |two parallelism levels per the sandbox protocol — no real cluster
-         |is available here). Drift-cancelling PAIRED-median companion:
-         |**${if (res.efficiencyPairedMedian.isNaN) "n/a" else f"${res.efficiencyPairedMedian}%.3f"}**
-         |— per-pair ratios cancel ambient clock-regime changes that bias
-         |the min-based statistic when one level's all-time best draw lands
-         |in a faster frequency window than the other's.
+         |$headline (target ≥ 0.8 per BASELINE.json north rule; measured on
+         |identical input at two parallelism levels per the sandbox protocol —
+         |no real cluster is available here).
          |
          |Context: a kernel-only microbench (`graft.bench.KernelBench`, no
          |Spark, measured in THIS window right after the bursts) scaled
          |${res.kernelTps.keys.minOption.getOrElse(0)}→${res.kernelTps.keys.maxOption.getOrElse(0)} threads at
          |**${if (res.kernelEfficiency.isNaN) "n/a" else f"${res.kernelEfficiency}%.3f"}**${if (res.kernelEfficiencyPre.isNaN) "" else f" (pre-run bracket endpoint, before any timed work: ${res.kernelEfficiencyPre}%.3f)"} — memory bandwidth, not the pipeline, is the
-         |ceiling at high thread counts on this single-socket box. The Spark
-         |pipeline's efficiency tracks the raw-kernel ceiling, i.e. Spark
-         |overhead (scan, one shuffle, row codecs) adds no anti-scaling of
-         |its own — compare the two numbers above to attribute a weak
-         |capture to window weather vs a pipeline regression. On a real
-         |N→4N *executor* scale-up, memory bandwidth grows with node count.
+         |ceiling at high thread counts on this single-socket box. Compare
+         |the pipeline's efficiency with this raw-kernel ceiling to attribute
+         |a weak capture to window weather vs a pipeline regression. On a
+         |real N→4N *executor* scale-up, memory bandwidth grows with node
+         |count.
          |""".stripMargin
       // rows substituted AFTER stripMargin: their leading '|' table-cell
       // markers would otherwise be eaten as margin characters
       .replace("%%ROWS%%", rows)
-      .replace("%%PAIRS%%", pairRows)
     // preserve any manually-added sections (e.g. the soak results) that
     // follow a "## " heading after the generated report
     val path = java.nio.file.Paths.get("BENCH.md")

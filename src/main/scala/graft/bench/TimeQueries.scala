@@ -3,7 +3,8 @@ package graft.bench
 /** Ad-hoc per-query timer for performance iteration: runs the named
   * [[graft.SparkEntry.queries]] entries (all of them if no args) against
   * SPARK_GRAFT_SF_DIR with one cold and `SPARK_GRAFT_REPS` (default 2)
-  * warm passes, printing per-query cold/warm-best seconds. Unlike
+  * warm passes, printing per-query cold seconds, every warm sample and
+  * their median. Unlike
   * [[graft.Bench]] this has NO driver contract — no JSON line, no scaling
   * session — it exists so a single query's plan change can be measured in
   * seconds instead of re-running the full 100+-query bench.
@@ -35,8 +36,9 @@ object TimeQueries {
         (System.nanoTime() - t0) / 1e9
       }
       val cold = once()
-      val warm = (1 to reps).map(_ => once()).min
-      println(f"$name%-28s cold $cold%7.2f s  warm $warm%7.2f s")
+      val warm = (1 to reps).map(_ => once())
+      println(f"$name%-28s cold $cold%7.2f s  warm median ${Scaling.median(warm)}%7.2f s  " +
+        warm.map(w => f"$w%.2f").mkString("(", "/", ")"))
     }
     spark.stop()
   }

@@ -96,11 +96,12 @@ object Pipeline {
   /** Monster-conversation budget for the per-conversation fold paths. One
     * conversation is the memory unit of the fold (mirroring the reference's
     * all-pages-of-one-PDF bound, `ocr_processor.py:247`): a conversation
-    * whose buffered pages exceed these limits fails LOUDLY with its conv_id
-    * and a pointer to the salted `--two-stage` route instead of OOMing an
-    * executor 40 hours into a 10^12-turn job. Chars, not bytes: JVM strings
-    * cost ≥2 bytes/char, so 256M chars ≈ 0.5–1 GiB of heap in one task —
-    * already the red line for a default 4 GiB executor. */
+    * whose buffered pages exceed these limits fails LOUDLY with its conv_id,
+    * its counts and the limits instead of OOMing an executor 40 hours into
+    * a 10^12-turn job. Every fold route buffers a conversation under these
+    * same limits. Chars, not bytes: JVM strings cost ≥2 bytes/char, so 256M
+    * chars ≈ 0.5–1 GiB of heap in one task — already the red line for a
+    * default 4 GiB executor. */
   val DefaultMaxConvPages: Int = 1000000
   val DefaultMaxConvChars: Long = 256L * 1024 * 1024
 
@@ -119,8 +120,7 @@ object Pipeline {
       throw new IllegalStateException(
         s"conversation $cid exceeds the single-task fold budget " +
           s"($nPages pages / $nChars chars buffered; limits $maxPages pages / " +
-          s"$maxChars chars) — route monster conversations through the salted " +
-          "two-stage path (SubmitMain --two-stage) or raise the budget")
+          s"$maxChars chars)")
   }
 
   /** Per-turn payload extraction, the first stage of [[segmentTwoStage]].

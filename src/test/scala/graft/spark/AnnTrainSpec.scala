@@ -229,7 +229,10 @@ class AnnTrainSpec extends AnyFunSuite with SparkFixture {
       maxConvPages = 3, maxConvChars = 1000000L)
     val e = intercept[IllegalStateException](fold.toVector)
     assert(e.getMessage.contains("conv-monster"))
-    assert(e.getMessage.contains("--two-stage"))
+    // the message states the counts and the limits, and points at no route:
+    // every fold route buffers a conversation under the same limits
+    assert(e.getMessage.contains("(4 pages / 40 chars buffered; limits 3 pages / 1000000 chars)"),
+      e.getMessage)
     // char budget trips independently of the page budget
     val turns2 = Iterator.tabulate(2)(i => ("conv-fat", i, "raw", "y" * 600))
     val fold2 = new Pipeline.GroupFold(turns2, _ => Nil, (_, t) => t,

@@ -48,11 +48,12 @@ def parse_bench(txt):
     if isinstance(d.get("parsed"), dict):
         return d["parsed"]
     tail = d.get("tail", "")
-    m = re.search(r'"scaling":', tail)
+    # "scaling":null (a run whose burst children failed) matches nothing
+    m = re.search(r'"scaling":\{', tail)
     bench = {"value": None, "sf": d.get("sf"), "cpus": d.get("cpus"), "queries": {}}
     if m:
         # parse the balanced JSON object following "scaling":
-        i = tail.index("{", m.end())
+        i = m.end() - 1
         depth, j = 0, i
         while j < len(tail):
             depth += {"{": 1, "}": -1}.get(tail[j], 0)
@@ -79,27 +80,44 @@ def render(bench, src_name):
         out.append("Flagship queries: " + ", ".join(
             f"`{k}` {v:.2f}s" for k, v in sorted(flag.items())) + ".")
     if not s:
-        out += ["", "_No scaling block in this bench run._", END]
+        note = bench.get("scaling_note")
+        out += ["", f"_No scaling block in this bench run{': ' + note if note else ''}._", END]
         return "\n".join(out)
+    # records up to r05 carry min-based levels; later ones carry medians
+    # and the per-pair ratios the headline is the median of
+    medians = "pair_ratios" in s
     out += ["",
-            "| level | seconds (best draw) | turns/sec | segments |",
+            f"| level | seconds ({'median' if medians else 'best draw'}) | turns/sec | segments |",
             "|---|---|---|---|"]
     for l in s["levels"]:
         out.append(f"| local[{l['cpus']}] | {l['seconds']:.2f} | "
                    f"{l['turns_per_sec']:.0f} | {l['segments']} |")
     lo = min(s["levels"], key=lambda l: l["cpus"])
     hi = max(s["levels"], key=lambda l: l["cpus"])
+    pair = f"local[{lo['cpus']}] → local[{hi['cpus']}]"
+    bursts = f" over {s['bursts']} interleaved burst pairs" if "bursts" in s else ""
+    target = "(target ≥ 0.8, BASELINE.json north rule)."
+    if not medians:
+        eff = s.get("efficiency_min_based", s["efficiency"])
+        out += ["", f"**Scaling efficiency {pair} (N→4N, min-based{bursts}): {eff:.3f}** {target}"]
+    elif s.get("efficiency") is None:
+        out += ["", f"**Scaling efficiency {pair}: not recorded** — "
+                    f"{s.get('efficiency_null_reason', 'no reason recorded')} {target}"]
+    else:
+        out += ["", f"**Scaling efficiency {pair} (N→4N, median of the per-pair ratios{bursts}): "
+                    f"{s['efficiency']:.3f}** {target}"]
     out += ["",
-            f"**Scaling efficiency local[{lo['cpus']}] → local[{hi['cpus']}] "
-            f"(N→4N, min-based over {s['bursts']} interleaved burst pairs): "
-            f"{s['efficiency_min_based']:.3f}** (target ≥ 0.8, BASELINE.json north rule).",
-            "",
             f"- Input: {s['n_convs']} conversations / {s['n_turns']} turns "
-            f"(deterministic synthetic corpus, seed 42).",
-            f"- Running-min trajectory (burst k uses each level's best draw so far): "
-            f"{', '.join(f'{e:.3f}' for e in s.get('efficiency_trajectory', []))}.",
-            f"- Occupancy ballast pinned to {s.get('occupancy_pinned_to_cores', 0)} active cores "
-            f"while a burst runs (removes the idle-socket turbo bias)."]
+            f"(deterministic synthetic corpus, seed 42)."]
+    if medians and s["pair_ratios"]:
+        out.append("- Per-pair ratios (s_lo / s_hi) / (cpus_hi / cpus_lo), each burst's median "
+                   "seconds, in burst order: "
+                   f"{', '.join(f'{e:.3f}' for e in s['pair_ratios'])}.")
+    if s.get("efficiency_trajectory"):
+        out.append(f"- Running-min trajectory (burst k uses each level's best draw so far): "
+                   f"{', '.join(f'{e:.3f}' for e in s['efficiency_trajectory'])}.")
+    out.append(f"- Occupancy ballast pinned to {s.get('occupancy_pinned_to_cores', 0)} active cores "
+               f"while a burst runs (removes the idle-socket turbo bias).")
     pm = s.get("efficiency_paired_median")
     if pm is not None:
         out.append(
