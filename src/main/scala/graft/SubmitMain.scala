@@ -50,9 +50,13 @@ import graft.schema.{ConvRule, Turn}
   *
   * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE whichever
   * single pass materialized the segments — no route runs extraction twice.
-  * Each append's `row_count` is observed inside its own write job, so the
-  * job never re-reads what it wrote. Master/executors come from
-  * spark-submit; nothing here assumes local mode.
+  * The segments append's `row_count` is observed inside its write job, so
+  * the job never re-reads what it wrote. The lineage rows are the
+  * accumulator's value, already on the driver, so the driver writes the
+  * lineage snapshot itself, as one parquet file with no Spark job, and
+  * its `row_count` is the number of those rows (see
+  * [[SnapshotStore.append]]). Master/executors come from spark-submit;
+  * nothing here assumes local mode.
   */
 object SubmitMain {
 

@@ -109,15 +109,17 @@ object Scaling {
       if (pairRatios.isEmpty) None else Some(median(pairRatios))
 
     /** Kernel N→4N efficiency over [[kernelTps]]'s extreme levels — the
-      * window's hardware ceiling; NaN when not measured. */
+      * window's hardware ceiling; NaN when not measured, or when
+      * [[nullReason]] is set: threads past the host's processors make the
+      * kernel's ratio as oversubscribed as the pipeline's. */
     def kernelEfficiency: Double = kernelEff(kernelTps)
 
-    /** The pre-run bracket endpoint ([[kernelTpsPre]]); NaN when not
-      * measured. */
+    /** The pre-run bracket endpoint ([[kernelTpsPre]]); NaN as for
+      * [[kernelEfficiency]]. */
     def kernelEfficiencyPre: Double = kernelEff(kernelTpsPre)
 
     private def kernelEff(tps: Map[Int, Double]): Double =
-      if (tps.size < 2) Double.NaN
+      if (tps.size < 2 || nullReason.isDefined) Double.NaN
       else {
         val lo = tps.keys.min
         val hi = tps.keys.max
@@ -136,12 +138,14 @@ object Scaling {
         else {
           val tps = m.toSeq.sortBy(_._1)
             .map { case (c, t) => s""""$c":${f"$t%.0f"}""" }.mkString("{", ",", "}")
-          s"""{"tps":$tps,"efficiency":${f"${kernelEff(m)}%.3f"}}"""
+          val e = kernelEff(m)
+          s"""{"tps":$tps,"efficiency":${if (e.isNaN) "null" else f"$e%.3f"}}"""
         }
       s"""{"n_convs":$nConvs,"n_turns":$nTurns,"levels":$ls,"efficiency":$eff,""" +
         s""""pair_ratios":$ratios,"bursts":${pairSeconds.length},""" +
         s""""kernel_ceiling":${ceilingJson(kernelTps)},"kernel_ceiling_pre":${ceilingJson(kernelTpsPre)},""" +
-        s""""occupancy_pinned_to_cores":$topCpus}"""
+        // the ballast keeps no more cores busy than the host has
+        s""""occupancy_pinned_to_cores":${math.min(topCpus, hostCpus)}}"""
     }
   }
 
@@ -229,6 +233,12 @@ object Scaling {
         throw e
     }
   }
+
+  /** Spinners a level of `cpus` task threads runs beside its bursts: enough
+    * to keep `top` cores busy, but none past the host's `hostCpus` — on
+    * fewer cores a spinner only steals cycles from the measured level. */
+  private[graft] def ballastSpinners(top: Int, cpus: Int, hostCpus: Int): Int =
+    math.min(top - cpus, math.max(0, hostCpus - cpus))
 
   /** Occupancy ballast: `n` pure-ALU spinner threads (no memory traffic,
     * min priority) that actively spin only while `engaged`; parked
@@ -482,7 +492,8 @@ object BurstLevelRunner {
     val Array(cpusS, dir, nConvsS, seedS, ballastToS) = args
     val (cpus, nConvs, seed, ballastTo) =
       (cpusS.toInt, nConvsS.toLong, seedS.toLong, ballastToS.toInt)
-    val ballast = new Scaling.Ballast(ballastTo - cpus)
+    val ballast = new Scaling.Ballast(
+      Scaling.ballastSpinners(ballastTo, cpus, Runtime.getRuntime.availableProcessors))
     val spark = Scaling.session(cpus, Some(s"$dir/shuffle-c$cpus"))
     val stdout = new java.io.PrintWriter(
       new java.io.OutputStreamWriter(System.out, "UTF-8"), true)

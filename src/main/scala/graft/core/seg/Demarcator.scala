@@ -59,8 +59,10 @@ object Demarcator {
 
   /** One pipe-alternative, pre-parsed. Alternatives are themselves normalized
     * at split time (`ocr_processor.py:336,358,396,418`); both lowered forms
-    * are taken here once, not per page. */
-  private final case class Alt(norm: String, normLower: String, isExact: Boolean, cleanLower: String)
+    * and the sre-folded form the occurrence count searches for are taken
+    * here once, not per page. */
+  private final case class Alt(folded: PyText.Folded, normLower: String, isExact: Boolean,
+                               cleanLower: String)
 
   private def splitAlts(ids: String): Array[Alt] =
     ids
@@ -70,7 +72,7 @@ object Demarcator {
       .map { s =>
         val norm = PyText.normalize(s)
         val exact = PyText.isExactMatch(norm)
-        Alt(norm, PyText.pyLower(norm), exact,
+        Alt(new PyText.Folded(norm), PyText.pyLower(norm), exact,
           PyText.pyLower(if (exact) PyText.cleanExactMatch(norm) else norm))
       }
       .toArray
@@ -133,7 +135,7 @@ object Demarcator {
           while (a < alts.length) {
             val alt = alts(a)
             if (altHits(doc, pageNum, alt))
-              counter += (if (alt.isExact) 1 else PyText.countOccurrences(doc.norm(pageNum), alt.norm))
+              counter += (if (alt.isExact) 1 else PyText.countOccurrences(doc.norm(pageNum), alt.folded))
             a += 1
           }
           if (counter >= occurrence) return potential
@@ -149,7 +151,7 @@ object Demarcator {
           while (a < alts.length) {
             val alt = alts(a)
             if (altHits(doc, pageNum, alt))
-              counter += (if (alt.isExact) 1 else PyText.countOccurrences(doc.norm(pageNum), alt.norm))
+              counter += (if (alt.isExact) 1 else PyText.countOccurrences(doc.norm(pageNum), alt.folded))
             a += 1
           }
           if (counter >= occurrence) return pageNum + 1

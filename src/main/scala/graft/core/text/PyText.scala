@@ -322,18 +322,63 @@ object PyText {
     out
   }
 
+  private def hasSurrogate(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if (Character.isSurrogate(s.charAt(i))) return true
+      i += 1
+    }
+    false
+  }
+
+  /** An identifier folded once by the sre fold table, for a search repeated
+    * over many pages (a demarcation alternative, `Demarcator.splitAlts`). */
+  private[graft] final class Folded(id: String) {
+    private[text] val cps: Array[Int] = toCps(id)
+    private[text] val bmp: Boolean = !hasSurrogate(id)
+  }
+
   /** `len(re.findall(re.escape(id), text, re.IGNORECASE))` — non-overlapping,
     * case-insensitive per sre fold classes (`ocr_processor.py:289-293`). */
-  def countOccurrences(page: String, id: String): Int = {
-    if (page.isEmpty || id.isEmpty) return 0
-    val t = toCps(page)
-    val p = toCps(id)
-    val n = t.length
+  def countOccurrences(page: String, id: String): Int =
+    countOccurrences(page, new Folded(id))
+
+  private[graft] def countOccurrences(page: String, id: Folded): Int =
+    scan(page, id, Int.MaxValue)
+
+  /** `countOccurrences(page, id) > 0` with early exit on the first match —
+    * identical fold tables and scan, but O(position of first hit) instead
+    * of a full counting pass over the page. */
+  def containsOccurrence(page: String, id: String): Boolean =
+    scan(page, new Folded(id), 1) > 0
+
+  /** Non-overlapping matches of `id` in `page`, counting up to `limit`.
+    * When neither string holds a surrogate, each char is one code point,
+    * so the page is folded char by char in place; otherwise it is folded
+    * into a code-point array first ([[countCps]]). */
+  private def scan(page: String, id: Folded, limit: Int): Int = {
+    val p = id.cps
     val m = p.length
-    if (m > n) return 0
+    if (page.isEmpty || m == 0) return 0
+    if (!id.bmp || hasSurrogate(page)) return countCps(toCps(page), p, limit)
+    val n = page.length
     var count = 0
     var i = 0
-    while (i <= n - m) {
+    while (i <= n - m && count < limit) {
+      var j = 0
+      while (j < m && foldArr(page.charAt(i + j)) == p(j)) j += 1
+      if (j == m) { count += 1; i += m }
+      else i += 1
+    }
+    count
+  }
+
+  private def countCps(t: Array[Int], p: Array[Int], limit: Int): Int = {
+    val n = t.length
+    val m = p.length
+    var count = 0
+    var i = 0
+    while (i <= n - m && count < limit) {
       var j = 0
       while (j < m && t(i + j) == p(j)) j += 1
       if (j == m) { count += 1; i += m }
@@ -342,25 +387,10 @@ object PyText {
     count
   }
 
-  /** `countOccurrences(page, id) > 0` with early exit on the first match —
-    * identical fold tables and scan, but O(position of first hit) instead
-    * of a full counting pass over the page. */
-  def containsOccurrence(page: String, id: String): Boolean = {
-    if (page.isEmpty || id.isEmpty) return false
-    val t = toCps(page)
-    val p = toCps(id)
-    val n = t.length
-    val m = p.length
-    if (m > n) return false
-    var i = 0
-    while (i <= n - m) {
-      var j = 0
-      while (j < m && t(i + j) == p(j)) j += 1
-      if (j == m) return true
-      i += 1
-    }
-    false
-  }
+  /** [[countOccurrences]] over code-point arrays of both strings: the
+    * general path, and the oracle the in-place scan is tested against. */
+  private[text] def countOccurrencesCp(page: String, id: String): Int =
+    if (page.isEmpty || id.isEmpty) 0 else countCps(toCps(page), toCps(id), Int.MaxValue)
 
   /** `identifier.strip().lower().startswith("exactmatch:")`
     * (`ocr_processor.py:277-279`). */

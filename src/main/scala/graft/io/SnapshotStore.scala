@@ -3,7 +3,12 @@ package graft.io
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Minimal snapshot-versioned parquet table — the in-sandbox stand-in for an
@@ -305,6 +310,23 @@ final class SnapshotStore(val root: String) {
   /** Append `df` as the next snapshot; returns its id. Visible only after
     * the manifest rename commits.
     *
+    * The manifest records the exact committed `row_count`, so consumers
+    * (e.g. SubmitMain's summary line) never rescan the table. The write
+    * path, and with it where the count comes from, is chosen from `df`'s
+    * optimized plan (see [[stageWrite]]):
+    *
+    *  - a non-streaming `LocalRelation` (`createDataset(Seq)`,
+    *    `Pipeline.lineageFromStats`): its rows already sit on the driver,
+    *    which writes them as one parquet file with no Spark job. The count
+    *    is the relation's size, exact by construction;
+    *  - any other plan: a Spark write with an `observe` directly under it.
+    *    The observation is computed in the write's result stage, and the
+    *    DAGScheduler applies a ResultTask's accumulator updates once per
+    *    partition, only from the successful attempt (the one the commit
+    *    coordinator let commit): failed, retried and speculative attempts
+    *    never add. The no-arg Observation has a unique name, so concurrent
+    *    appends in one session cannot mix counts.
+    *
     * `statsCol` (optional) records that LONG column's min/max in the
     * manifest — the snapshot-level analog of Iceberg manifest column
     * stats. Costs one extra aggregation job at write time; buys
@@ -316,19 +338,8 @@ final class SnapshotStore(val root: String) {
       statsCol: Option[String] = None): Long = {
     requireNoDroppedNames(df)
     requireNoRetiredNames(df)
-    // exact committed row count, recorded in the manifest so consumers
-    // (e.g. SubmitMain's summary line) never rescan the table. It is
-    // observed INSIDE the write job — no readback of the staged files. The
-    // observation sits directly under the write, so it is computed in the
-    // write's result stage, and the DAGScheduler applies a ResultTask's
-    // accumulator updates once per partition, only from the successful
-    // attempt (the one the commit coordinator let commit): failed, retried
-    // and speculative attempts never add. The no-arg Observation has a
-    // unique name, so concurrent appends in one session cannot mix counts.
-    val observed = Observation()
-    val stage = stageWrite(df.observe(observed, count(lit(1)).as("n")))
-    val nRows = observed.get("n").asInstanceOf[Long]
-    val withStats = meta + ("row_count" -> nRows.toString) ++
+    val (stage, nRows) = stageWrite(df, countRows = true)
+    val withStats = meta + ("row_count" -> nRows.get.toString) ++
       stagedStats(df.sparkSession, stage, statsCol)
     commitStaged(stage, () => withStats, () => true).get
   }
@@ -336,11 +347,63 @@ final class SnapshotStore(val root: String) {
   /** Write `df` to a uniquely-named staging dir under root/data — data
     * files never land at an id-derived path, so two concurrent writers can
     * NEVER clobber each other's files; the manifest that wins the commit
-    * points at its own stage dir. */
-  private def stageWrite(df: DataFrame): Path = {
+    * points at its own stage dir. Returns the dir and, when the count is
+    * known for free (a driver write) or `countRows` asks for an observed
+    * one, the exact number of rows written.
+    *
+    * Rows of a non-streaming `LocalRelation` are already on the driver:
+    * planning, a stage of tasks and a Hadoop job commit would cost more
+    * than writing them, so [[writeFromDriver]] writes them directly. Every
+    * other plan is a Spark write, as is a frame with duplicate column
+    * names (the Spark write reports them). */
+  private def stageWrite(df: DataFrame, countRows: Boolean = false): (Path, Option[Long]) = {
     val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
-    df.write.mode("errorifexists").parquet(stage.toString)
-    stage
+    df.queryExecution.optimizedPlan match {
+      case rel: LocalRelation if !rel.isStreaming && uniqueNames(df) =>
+        writeFromDriver(df.sparkSession, rel, stage)
+        (stage, Some(rel.data.size.toLong))
+      case _ if countRows =>
+        val observed = Observation()
+        df.observe(observed, count(lit(1)).as("n")).write.mode("errorifexists").parquet(stage.toString)
+        (stage, Some(observed.get("n").asInstanceOf[Long]))
+      case _ =>
+        df.write.mode("errorifexists").parquet(stage.toString)
+        (stage, None)
+    }
+  }
+
+  /** No two columns share a name under the session's resolver. A Spark
+    * write rejects such a frame, so it is left to that path to say so. */
+  private def uniqueNames(df: DataFrame): Boolean = {
+    val names = df.columns.map(normName(df, _))
+    names.distinct.length == names.length
+  }
+
+  /** Write `rel`'s rows into `stage` as one parquet file, on the calling
+    * thread, through the writer a Spark write task opens: the factory of
+    * `ParquetFileFormat.prepareWrite` over the session's Hadoop conf, so
+    * the codec, footer and parquet schema are those of a Spark-written
+    * file. An empty relation writes a schema-only file, as Spark does. */
+  private def writeFromDriver(spark: SparkSession, rel: LocalRelation, stage: Path): Unit = {
+    val schema = rel.schema
+    val format = new ParquetFileFormat()
+    // the schema checks a Spark write runs while planning: an empty schema,
+    // types parquet cannot hold (duplicate names never reach this path)
+    DataSource.validateSchema("parquet", schema, spark.sessionState.conf)
+    DataSourceUtils.verifySchema(format, schema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val attempt = new TaskAttemptID(new TaskID(new JobID("driver", 0), TaskType.MAP, 0), 0)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, attempt)
+    try {
+      Files.createDirectories(stage)
+      val file = stage.resolve(
+        s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(ctx)}")
+      val writer = factory.newInstance(file.toUri.toString, schema, ctx)
+      try rel.data.foreach(writer.write) finally writer.close()
+    } catch {
+      case e: Throwable => deleteRecursively(stage); throw e
+    }
   }
 
   /** Optimistic-concurrency commit of a staged write (the Iceberg commit
@@ -494,7 +557,7 @@ final class SnapshotStore(val root: String) {
         "carried by the matched rows — a CoW merge rewrites whole rows, so the " +
         "omitted values would be silently destroyed; select them into the updates")
     val merged = survivors.unionByName(updates, allowMissingColumns = true)
-    val stage = stageWrite(merged)
+    val (stage, _) = stageWrite(merged)
     val stats = stagedStats(spark, stage, statsCol)
     val dropMeta =
       if (droppedAtPlan.isEmpty) Map.empty[String, String]
@@ -824,7 +887,7 @@ final class SnapshotStore(val root: String) {
     requireNoRetiredNames(df)
     def fresh = !txnLastBatch(appId).exists(_ >= batchId)
     if (!fresh) return None // cheap pre-check before staging any data
-    val stage = stageWrite(df)
+    val (stage, _) = stageWrite(df)
     val m = Map(s"txn_$appId" -> batchId.toString) ++
       stagedStats(df.sparkSession, stage, statsCol)
     commitStaged(stage, () => m, () => fresh)
@@ -956,7 +1019,7 @@ final class SnapshotStore(val root: String) {
     val merged = applyWidenSet(
       applyDropSet(applyRenameChain(readMerged(spark, dataInputs), chain), dropped),
       chain, widens)
-    val stage = stageWrite(merged)
+    val (stage, _) = stageWrite(merged)
     // stats survive compaction when every data input carries them for the
     // same column: merged range = [min of mins, max of maxes] — no extra job
     val inStats = dataInputs.map(snapshotStats)

@@ -437,11 +437,12 @@ object Pipeline {
 
   /** Lineage rows from a [[PartitionStatsAcc]] filled during a SINGLE pass
     * of the pipeline (the accumulator is registered by the caller and
-    * populated by whichever action materialized the segments) — replaces
-    * the second extraction pass `SubmitMain` used to run just for lineage.
-    * The handful of (part_id → counters) entries is driver-resident by
-    * construction (it IS the accumulator value), so `createDataset` here is
-    * not a collect — sized by partition count, not data. */
+    * populated by whichever action materialized the segments), so no
+    * second extraction pass runs just for lineage. The handful of
+    * (part_id → counters) entries is driver-resident by construction (it
+    * IS the accumulator value), sized by partition count, not data. The
+    * result's plan is a `LocalRelation`, which `SnapshotStore.append`
+    * writes from the driver without a Spark job. */
   def lineageFromStats(spark: SparkSession, stage: String,
                        stats: Map[Int, (Long, Long, Long)],
                        snapshotId: Long): Dataset[PartitionLineage] = {

@@ -100,4 +100,28 @@ class ScalingResultSpec extends AnyFunSuite {
     assert(base.copy(kernelTpsPre = Map(4 -> 1.0, 16 -> 4.0)).json
       .contains("\"kernel_ceiling\":null"))
   }
+
+  test("oversubscribed host: kernel ceilings keep their tps, efficiency null") {
+    val r = result(Vector(Map(4 -> 10.0, 16 -> 3.125)), hostCpus = 4).copy(
+      kernelTpsPre = Map(4 -> 200000.0, 16 -> 210000.0),
+      kernelTps = Map(4 -> 200000.0, 16 -> 205000.0))
+    val j = r.json
+    assert(j.contains("\"kernel_ceiling\":{\"tps\":{\"4\":200000,\"16\":205000},\"efficiency\":null}"), j)
+    assert(j.contains("\"kernel_ceiling_pre\":{\"tps\":{\"4\":200000,\"16\":210000},\"efficiency\":null}"), j)
+    assert(j.contains("\"efficiency_null_reason\":\"host has 4 processors"), j)
+    assert(r.kernelEfficiency.isNaN && r.kernelEfficiencyPre.isNaN)
+    // the ballast is capped at the host's cores (ballastSpinners)
+    assert(j.contains("\"occupancy_pinned_to_cores\":4}"), j)
+  }
+
+  test("ballast spinners: the top level's cores, capped at the host's") {
+    // at least as many cores as the top level: unchanged, top - cpus
+    assert(Scaling.ballastSpinners(top = 16, cpus = 4, hostCpus = 16) == 12)
+    assert(Scaling.ballastSpinners(top = 16, cpus = 4, hostCpus = 64) == 12)
+    assert(Scaling.ballastSpinners(top = 16, cpus = 16, hostCpus = 64) == 0)
+    // fewer: only the host's idle cores, never a negative count
+    assert(Scaling.ballastSpinners(top = 16, cpus = 4, hostCpus = 8) == 4)
+    assert(Scaling.ballastSpinners(top = 16, cpus = 4, hostCpus = 4) == 0)
+    assert(Scaling.ballastSpinners(top = 16, cpus = 16, hostCpus = 4) == 0)
+  }
 }

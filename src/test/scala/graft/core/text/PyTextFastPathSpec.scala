@@ -2,6 +2,7 @@ package graft.core.text
 
 import graft.core.extract.Extractor
 import graft.gen.SyntheticTranscripts
+import graft.pipeline.Pipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ASCII paths of `normalize`, `normalizeLower` and `pyLower` against
@@ -9,7 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `PyTextSpec` pins to CPython. Inputs: the generator's pages, raw and
   * extracted, for all three tools; every Python whitespace code point in
   * every position; the case-mapping corners; and the ASCII/non-ASCII
-  * boundary. */
+  * boundary.
+  *
+  * Likewise the in-place scan of `countOccurrences` / `containsOccurrence`
+  * against the code-point-array path (`countOccurrencesCp`), on generator
+  * pages with their rules' identifiers and on strings built from the fold
+  * corners. */
 class PyTextFastPathSpec extends AnyFunSuite {
 
   private def assertAgrees(s: String): Unit = {
@@ -92,5 +98,54 @@ class PyTextFastPathSpec extends AnyFunSuite {
     assert(PyText.pyLower(lower) eq lower)
     val (n2, l2) = PyText.normalizeLower(page)
     assert((n2 eq page) && l2 == "invoice 42 total due")
+  }
+
+  private def assertSameCount(page: String, id: String): Unit = {
+    val want = PyText.countOccurrencesCp(page, id)
+    def hex(x: String) = x.take(40).map(_.toInt.toHexString).mkString(" ")
+    val at = s"page=${hex(page)} id=${hex(id)}"
+    assert(PyText.countOccurrences(page, id) == want, s"countOccurrences, $at")
+    assert(PyText.countOccurrences(page, new PyText.Folded(id)) == want, s"folded, $at")
+    assert(PyText.containsOccurrence(page, id) == (want > 0), s"containsOccurrence, $at")
+  }
+
+  test("occurrence counts: generator pages against their rules' identifiers") {
+    var hits = 0
+    for (seed <- Seq(42L, 7L); ci <- 0L until 80L) {
+      val pages = SyntheticTranscripts.turnsFor(seed, ci).sortBy(_.turn_idx)
+        .map(t => PyText.normalize(Extractor.safeExtract(t.tool, t.text)._1.text))
+      val ids = SyntheticTranscripts.rulesFor(seed, ci).map(Pipeline.toCoreRule)
+        .flatMap(r => Seq(r.startingIdentifier, r.startingIdentifierPlus1,
+          r.endingIdentifier, r.endingIdentifierMinus1))
+        .flatMap(_.split('|')).map(PyText.normalize).filter(_.nonEmpty)
+      for (page <- pages; id <- ids) {
+        assertSameCount(page, id)
+        if (PyText.countOccurrencesCp(page, id) > 0) hits += 1
+      }
+      // a window of each page, upper-cased: a hit on every page
+      for (page <- pages if page.length > 8) {
+        val w = page.substring(page.length / 3, page.length / 3 + 6)
+        assertSameCount(page, w.toUpperCase(java.util.Locale.ROOT))
+      }
+    }
+    assert(hits > 50, s"only $hits identifier hits: the corpus must exercise matches")
+  }
+
+  test("occurrence counts: Kelvin sign, long s, U+0130, sigma forms and surrogates") {
+    val kelvin = "\u212a"
+    val longS = "\u017f"
+    val deseret = new String(Character.toChars(0x10400)) // folds to U+10428
+    val deseretLower = new String(Character.toChars(0x10428))
+    val parts = Array("k", "K", kelvin, "s", "S", longS, "\u0130", "i", "I", "\u0131",
+      "\u03a3", "\u03c3", "\u03c2", "\ud800", "\udc00", deseret, deseretLower,
+      "\ud83d\ude00", " ", "a")
+    for (id <- parts; page <- Seq("", id, s"$id$id$id", s"a${id}b$kelvin$longS", s"\ud800$id\udc00"))
+      assertSameCount(page, id)
+    assert(PyText.countOccurrences(s"kK$kelvin", "k") == 3)
+    assert(PyText.countOccurrences(s"s$longS", "S") == 2)
+    assert(PyText.countOccurrences(s"$deseret$deseretLower", deseretLower) == 2)
+    val rng = new scala.util.Random(23L)
+    def build(max: Int) = (0 until rng.nextInt(max)).map(_ => parts(rng.nextInt(parts.length))).mkString
+    for (_ <- 1 to 4000) assertSameCount(build(16), build(4))
   }
 }

@@ -1,11 +1,6 @@
 package graft.spark
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
@@ -42,35 +37,6 @@ class RuleLoadSpec extends AnyFunSuite with SparkFixture {
       .selectExpr(s"CAST(2 * (${strs.mkString(" + ")}) + 96 AS BIGINT) AS sz")
       .selectExpr("count(*)", "CAST(coalesce(sum(sz), 0) AS BIGINT)").head()
     (r.getLong(0), r.getLong(1))
-  }
-
-  /** Spark jobs `body` starts, as the stage count of each. Listener events
-    * arrive in order but asynchronously, so a sentinel job in its own group
-    * marks the end. */
-  private def jobsOf[A](body: => A): (A, Seq[Int]) = {
-    val sc = spark.sparkContext
-    val group = s"rule-load-${java.util.UUID.randomUUID}"
-    val stages = new ConcurrentLinkedQueue[Int]
-    @volatile var sentinel = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => stages.add(e.stageInfos.size)
-          case g if g == s"$group-end" => sentinel = true
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "rule loading")
-      val a = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel, "listener never saw the sentinel job")
-      (a, stages.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** Encoded size of projected rule rows: an 8-byte size + the UnsafeRow. */

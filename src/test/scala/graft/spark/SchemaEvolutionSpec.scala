@@ -1,12 +1,23 @@
 package graft.spark
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
+
 import graft.io.SnapshotStore
 
 /** ADD-COLUMN schema evolution across snapshots: rows written before a
   * column existed surface it as NULL on read, and the evolved schema
-  * survives compaction and upsert — the Iceberg evolution contract. */
+  * survives compaction and upsert — the Iceberg evolution contract.
+  *
+  * Also the two write paths of [[SnapshotStore.append]]: a `LocalRelation`
+  * is written by the driver without a Spark job, and its file must be
+  * indistinguishable from a Spark-written one to every reader. */
 class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
 
   private def freshStore(tag: String): SnapshotStore =
@@ -15,7 +26,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
   test("readRange merges evolved schemas; old rows carry NULL for new columns") {
     import spark.implicits._
     val store = freshStore("read")
-    store.append(Seq((1L, "x")).toDF("k", "v"))
+    // the old era is written by Spark (repartition), the new one by the driver
+    store.append(Seq((1L, "x")).toDF("k", "v").repartition(1))
     store.append(Seq((2L, "y", "extra2")).toDF("k", "v", "w"))
     val got = store.readRange(spark, 0L, 2L)
     assert(got.columns.sorted.toSeq === Seq("k", "v", "w"))
@@ -291,5 +303,74 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
     assert(after.schema("count").dataType === org.apache.spark.sql.types.LongType)
     assert(after.collect().map(r => r.getAs[Long]("count")).sorted.toSeq ===
       Seq(10L, 30L, 3000000000L))
+  }
+
+  private def parquetFiles(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally listing.close()
+  }
+
+  /** The one parquet file of snapshot `id`: its footer's parquet schema, the
+    * Spark row schema it records, and the codec of every column chunk. */
+  private def footer(store: SnapshotStore, id: Long): (String, String, Set[String]) = {
+    val Seq(file) = parquetFiles(store.dataLocation(id))
+    val in = HadoopInputFile.fromPath(new HPath(file.toUri), spark.sessionState.newHadoopConf())
+    val reader = ParquetFileReader.open(in)
+    try {
+      val meta = reader.getFooter
+      (meta.getFileMetaData.getSchema.toString,
+        meta.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+        meta.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
+    } finally reader.close()
+  }
+
+  test("a driver-resident relation commits one parquet file without a Spark job") {
+    import spark.implicits._
+    val store = freshStore("driver")
+    val df = Seq((1L, "a", 2.5), (2L, null, -1.0), (3L, "c", 0.0)).toDF("k", "v", "x")
+    val (id, jobs) = jobsOf(store.append(df, Map("table" -> "t")))
+    assert(jobs.isEmpty, s"driver append started jobs with stage counts $jobs")
+    assert(parquetFiles(store.dataLocation(id)).size == 1)
+    assert(store.rowCount(id) == Some(3L))
+    assert(store.read(spark, id).orderBy("k").as[(Long, String, Double)].collect().toSeq ==
+      Seq((1L, "a", 2.5), (2L, null, -1.0), (3L, "c", 0.0)))
+  }
+
+  test("driver-written and Spark-written files agree on footer schema, codec and rows") {
+    import spark.implicits._
+    val store = freshStore("footer")
+    val df = Seq((1L, "a", Option(7)), (2L, "b", None), (3L, "\u03a3", Option(-1)))
+      .toDF("k", "v", "n")
+    val driver = store.append(df)
+    val (viaSpark, jobs) = jobsOf(store.append(df.repartition(1)))
+    assert(jobs.nonEmpty, "repartition(1) must take the Spark write")
+    val (schemaD, rowMetaD, codecD) = footer(store, driver)
+    assert((schemaD, rowMetaD, codecD) == footer(store, viaSpark))
+    assert(codecD.nonEmpty)
+    assert(store.read(spark, driver).schema == store.read(spark, viaSpark).schema)
+    assert(store.read(spark, driver).collect().toSet == store.read(spark, viaSpark).collect().toSet)
+    assert(store.rowCount(driver) == store.rowCount(viaSpark))
+  }
+
+  test("an empty local relation commits a readable schema-only file with row_count 0") {
+    import spark.implicits._
+    val store = freshStore("driverempty")
+    val (id, jobs) = jobsOf(store.append(Seq.empty[(Long, String)].toDF("k", "v")))
+    assert(jobs.isEmpty)
+    assert(parquetFiles(store.dataLocation(id)).size == 1)
+    assert(store.rowCount(id) == Some(0L))
+    val back = store.read(spark, id)
+    assert(back.columns.toSeq == Seq("k", "v"))
+    assert(back.count() == 0L)
+  }
+
+  test("the driver path rejects what a Spark write rejects, committing nothing") {
+    import spark.implicits._
+    val store = freshStore("driverreject")
+    val dup = Seq((1L, 2L)).toDF("k", "K")
+    for (df <- Seq(dup, dup.repartition(1), spark.emptyDataFrame))
+      intercept[org.apache.spark.sql.AnalysisException](store.append(df))
+    assert(store.snapshots.isEmpty)
   }
 }

@@ -18,7 +18,11 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
   test("SubmitMain commits segment and lineage snapshots matching the oracle") {
     spark // force fixture session so getOrCreate() inside main reuses it
     val out = Files.createTempDirectory("graft-submit").toString
-    SubmitMain.main(Array("--synthetic-convs", "12", "--out", out))
+    val (_, jobs) = jobsOf(SubmitMain.main(Array("--synthetic-convs", "12", "--out", out)))
+    // rule loading, then the segments write (AQE submits the conv_id
+    // shuffle's map stage, then the result job). The lineage rows sit on
+    // the driver and are committed without a fourth job.
+    assert(jobs.size == 3, s"jobs by stage count: $jobs")
 
     val store = new SnapshotStore(out)
     assert(store.snapshots == Seq(1L, 2L))

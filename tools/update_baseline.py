@@ -134,22 +134,28 @@ def render(bench, src_name):
     def _tps(kc):
         return ", ".join(f"{t} thr {v:.0f} t/s" for t, v in sorted(
             kc.get("tps", {}).items(), key=lambda kv: int(kv[0])))
+    def _eff(kc):
+        # null when the run withholds every ratio (an oversubscribed host)
+        return "not recorded" if kc.get("efficiency") is None else f"{kc['efficiency']:.3f}"
     kc = s.get("kernel_ceiling")
     kcp = s.get("kernel_ceiling_pre")
     if kc and kcp:
         out.append(
             f"- Kernel-ceiling BRACKET (raw threads, no Spark): "
-            f"{kcp['efficiency']:.3f} before any timed work ({_tps(kcp)}), "
-            f"{kc['efficiency']:.3f} after the bursts ({_tps(kc)}) — the "
+            f"{_eff(kcp)} before any timed work ({_tps(kcp)}), "
+            f"{_eff(kc)} after the bursts ({_tps(kc)}) — the "
             f"hardware bound the pipeline number is relative to, at both ends "
             f"of the run; pipeline ≈ ceiling means Spark adds no anti-scaling, "
             f"a low endpoint means window weather on that side of the run.")
     elif kc:
         out.append(
             f"- Kernel ceiling (raw threads, no Spark, SAME window): "
-            f"{kc['efficiency']:.3f} ({_tps(kc)}) — the hardware bound the pipeline "
+            f"{_eff(kc)} ({_tps(kc)}) — the hardware bound the pipeline "
             f"number is relative to; pipeline ≈ ceiling means Spark adds no "
             f"anti-scaling, a low ceiling means window weather.")
+    if kc and kc.get("efficiency") is None:
+        out[-1] += (" Ratios not recorded: "
+                    + s.get("efficiency_null_reason", "no reason recorded") + ".")
     out.append(END)
     return "\n".join(out)
 
