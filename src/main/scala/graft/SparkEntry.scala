@@ -2460,7 +2460,7 @@ object SparkEntry {
          |FROM bx JOIN tbl USING (b)
          |GROUP BY 1 ORDER BY 1""".stripMargin
     },
-    // replays Selection.sourceCap (the two-stage top-k == one window here)
+    // replays Selection.sourceCap (the two-phase top-k == one window here)
     "d_source_cap" ->
       s"""WITH s AS (SELECT doc_id, source,
          |    (CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) * 1000000)

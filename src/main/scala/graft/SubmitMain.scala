@@ -14,8 +14,7 @@ import graft.schema.{ConvRule, Turn}
   *   --conf spark.sql.extensions=graft.functions.GraftExtensions \
   *   ocrspark.jar \
   *   --turns /data/transcripts.parquet --rules /data/rules.parquet \
-  *   --out /data/segments_store [--buckets 4096] [--two-stage] \
-  *   [--format parquet|json|csv]
+  *   --out /data/segments_store [--buckets 4096] [--format parquet|json|csv]
   * }}}
   *
   * Or with the deterministic synthetic corpus (no external data):
@@ -23,33 +22,31 @@ import graft.schema.{ConvRule, Turn}
   *
   * Reads the turns table, segments per conversation, and commits TWO
   * snapshots to the output [[SnapshotStore]]: the segment rows and the
-  * per-partition lineage/metrics rows. Routes:
+  * per-partition lineage/metrics rows. One route, `Pipeline.segmentAuto`:
+  * raw turns shuffle by `conv_id` into a fold node that extracts and
+  * segments in one pass, rules broadcast at or below
+  * `--broadcast-rule-limit` rules (default 1e6) AND `--broadcast-byte-limit`
+  * estimated heap bytes (default 256 MiB), else a co-partitioned child plan
+  * of the join node (no driver rule state). One job over the rules sizes
+  * the corpus and, while each of its P tasks stays within 1/P of both
+  * limits, returns the rows too (else, when the total fits, a second
+  * collect caps each partition at its first count), so the driver never
+  * receives more than the limits; past ~2 GiB of binary rule rows the join
+  * node runs. The nodes declare `ClusteredDistribution(conv_id)`, so a
+  * turns table bucketed by `conv_id` is not shuffled at all. A hot
+  * conversation is extracted and folded in one task, buffered under
+  * `Pipeline.DefaultMaxConvPages`/`DefaultMaxConvChars`; that beat a salted
+  * extraction stage ahead of the fold on hot-conversation input (see
+  * [[Pipeline]]).
   *
-  *  - default (`Pipeline.segmentAuto`): raw turns shuffle by `conv_id`
-  *    into a fold node that extracts and segments in one pass, rules
-  *    broadcast at or below `--broadcast-rule-limit` rules (default 1e6)
-  *    AND `--broadcast-byte-limit` estimated heap bytes (default 256 MiB),
-  *    else a co-partitioned child plan of the join node (no driver rule
-  *    state). One job over the rules sizes the corpus and, while each of
-  *    its P tasks stays within 1/P of both limits, returns the rows too
-  *    (else, when the total fits, a second collect caps each partition
-  *    at its first count), so the driver never receives more than the
-  *    limits; past ~2 GiB of binary rule rows the join node runs. The
-  *    nodes declare `ClusteredDistribution(conv_id)`, so a turns table
-  *    bucketed by `conv_id` is not shuffled at all;
-  *  - `--two-stage` (`Pipeline.segmentTwoStage`): salted extraction, then
-  *    the join node regroups and folds. It spreads a hot conversation's
-  *    extraction over all tasks; its fold buffers each conversation under
-  *    the same `Pipeline.DefaultMaxConvPages`/`DefaultMaxConvChars` limits.
+  * `--buckets N` pins the conv_id shuffle at N partitions. Without it the
+  * shuffle starts from `spark.sql.shuffle.partitions` and AQE (on by
+  * default) coalesces small partitions, so a small delta is not written as
+  * hundreds of tiny files. Every flag takes a value; any other `--name`, or
+  * a flag without a value, is rejected before any work.
   *
-  * `--buckets N` pins the conv_id shuffle (under `--two-stage`, the salted
-  * extraction) at N partitions. Without it the shuffle starts from
-  * `spark.sql.shuffle.partitions` and AQE (on by default) coalesces small
-  * partitions, so a small delta is not written as hundreds of tiny files.
-  * Any other `--name` is rejected.
-  *
-  * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE whichever
-  * single pass materialized the segments — no route runs extraction twice.
+  * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE the single
+  * pass that materializes the segments — extraction never runs twice.
   * The segments append's `row_count` is observed inside its write job, so
   * the job never re-reads what it wrote. The lineage rows are the
   * accumulator's value, already on the driver, so the driver writes the
@@ -62,8 +59,7 @@ object SubmitMain {
 
   /** Every flag [[main]] reads; a typo must fail, not run the default. */
   private val KnownFlags = Seq("turns", "rules", "synthetic-convs", "seed", "out",
-    "format", "master", "buckets", "broadcast-rule-limit", "broadcast-byte-limit",
-    "two-stage")
+    "format", "master", "buckets", "broadcast-rule-limit", "broadcast-byte-limit")
 
   private def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
@@ -73,9 +69,8 @@ object SubmitMain {
       require(k.startsWith("--"), s"unexpected argument $k")
       require(KnownFlags.contains(k.drop(2)),
         s"unknown flag $k (known: ${KnownFlags.map("--" + _).mkString(" ")})")
-      if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
-        m(k.drop(2)) = args(i + 1); i += 2
-      } else { m(k.drop(2)) = "true"; i += 1 }
+      require(i + 1 < args.length && !args(i + 1).startsWith("--"), s"flag $k needs a value")
+      m(k.drop(2)) = args(i + 1); i += 2
     }
     m.toMap
   }
@@ -137,21 +132,16 @@ object SubmitMain {
     val byteLimit = opts.get("broadcast-byte-limit").map(_.toLong).getOrElse(256L << 20)
     val stats = new PartitionStatsAcc
     spark.sparkContext.register(stats, "graft.partition_lineage")
-    val (segments, stage) =
-      if (opts.contains("two-stage"))
-        // salted per-turn extraction (stats filled there), then regroup
-        (Pipeline.segmentTwoStage(turns, rules, buckets, Some(stats)).toDF(), "extract")
-      else
-        // broadcast vs join node by rule-corpus size (count AND estimated
-        // heap bytes — fat rules take the join node)
-        (Pipeline.segmentAuto(turns, rules, buckets, ruleLimit, Some(stats), byteLimit).toDF(),
-          "segment")
+    // broadcast vs join node by rule-corpus size (count AND estimated heap
+    // bytes — fat rules take the join node)
+    val segments =
+      Pipeline.segmentAuto(turns, rules, buckets, ruleLimit, Some(stats), byteLimit).toDF()
 
     val store = new SnapshotStore(out)
     // the ONE pass over the turns: fills `stats` while writing segments
     val segSnap = store.append(segments, Map("table" -> "segments"))
     val linSnap = store.append(
-      Pipeline.lineageFromStats(spark, stage, stats.value, snapshotId = segSnap).toDF(),
+      Pipeline.lineageFromStats(spark, "segment", stats.value, snapshotId = segSnap).toDF(),
       Map("table" -> "lineage", "segments_snapshot" -> segSnap.toString))
     // committed row count comes from the append manifest (exact: observed
     // in the write's result stage, once per committed partition — see

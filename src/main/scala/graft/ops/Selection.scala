@@ -148,7 +148,7 @@ object Selection {
     *
     * Deliberately NOT a row_number window: a window partitioned by source
     * pins every document of a hot domain into ONE task — the exact skew
-    * this operator exists to police. Instead the classic two-stage exact
+    * this operator exists to police. Instead the classic two-phase exact
     * top-k: stage 1 keeps a bounded `cap`-slot heap per source per
     * PARTITION (map-only, memory ≤ sources·cap slots per task), so at most
     * cap·partitions rows per source reach the stage-2 shuffle regardless
@@ -249,7 +249,7 @@ object Selection {
 
   /** TWO-PHASE ANNEALING SCHEDULE — the "decay phase on high-quality
     * data" plan modern pretraining runs execute (Llama 3's annealing,
-    * MiniCPM's two-stage schedule): the MAIN phase spreads most of the
+    * MiniCPM's two-phase schedule): the MAIN phase spreads most of the
     * token budget uniformly over the whole scorable corpus, the ANNEAL
     * phase spends the final `annealFracPermille` of the budget ONLY on
     * the head perplexity tercile ([[pplBuckets]]'s buckets — same

@@ -22,11 +22,10 @@ import graft.schema._
   * the default path used to extract every turn twice). Within a task,
   * [[add]] sums (a route may add once per conversation); across tasks,
   * [[merge]] keeps ONE value per partition id — the last successful
-  * attempt's — instead of summing. A re-executed map stage (the
-  * `--two-stage` extraction after a fetch failure) or a second action over
-  * the same plan re-reports whole partitions, and a sum would count them
-  * twice; a partition's counts are a function of its input, so replacing
-  * keeps lineage exact. */
+  * attempt's — instead of summing. A re-executed fold task (after a fetch
+  * failure) or a second action over the same plan re-reports whole
+  * partitions, and a sum would count them twice; a partition's counts are
+  * a function of its input, so replacing keeps lineage exact. */
 final class PartitionStatsAcc
     extends org.apache.spark.util.AccumulatorV2[(Int, Long, Long, Long), Map[Int, (Long, Long, Long)]] {
   // every access synchronized: executor heartbeats serialize registered
@@ -87,9 +86,13 @@ final class RuleRows private[graft] (bytes: Array[Byte]) extends Serializable {
   * in memory at a time (the reference's pages-in-memory bound,
   * `ocr_processor.py:247`) — inside one of the two Catalyst nodes in
   * [[graft.plans.SegmentPlans]]: [[segmentFused]] (rules broadcast) or,
-  * above [[segmentAuto]]'s rule limits, the join node; [[segmentTwoStage]]
-  * salts extraction of a hot conversation across all tasks first, so a
-  * 10^6-turn conversation only serializes in the (cheap, string-scan) fold.
+  * above [[segmentAuto]]'s rule limits, the join node. Both extract inside
+  * the fold, so a hot conversation is extracted and folded in one task,
+  * under [[DefaultMaxConvPages]]/[[DefaultMaxConvChars]]: on generated
+  * input with 25 % of all turns in one conversation, this ran 5× faster
+  * than a salted extraction stage ahead of the fold (1.31 against 7.26 s,
+  * 4 vCPU). Spreading a hot conversation's extraction over all tasks
+  * belongs in the scan stage, before the `conv_id` exchange (ROADMAP D1).
   */
 object Pipeline {
 
@@ -123,29 +126,21 @@ object Pipeline {
           s"$maxChars chars)")
   }
 
-  /** Per-turn payload extraction, the first stage of [[segmentTwoStage]].
-    * Salted repartition — partition key includes turn_idx so a hot
-    * conversation cannot straggle extraction.
-    * With `stats` set, per-partition (rows, rows, errors) are accumulated in
-    * THIS pass (task-completion flush) so lineage needs no second action. */
-  def extract(turns: Dataset[Turn], partitions: Int = 0,
-              stats: Option[PartitionStatsAcc] = None): Dataset[ExtractedTurn] = {
+  /** Per-turn payload extraction with text spans — the oracle queries'
+    * view of the extraction kernel (`t_extract*`, `t_consolidate`,
+    * `t_lineage`). Salted repartition at the session's shuffle width: the
+    * partition key includes turn_idx, so a hot conversation cannot
+    * straggle extraction. */
+  def extract(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
-    val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
     turns
-      .repartition(p, hash($"conv_id", $"turn_idx"))
+      .repartition(spark.sessionState.conf.numShufflePartitions, hash($"conv_id", $"turn_idx"))
       .as[Turn]
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
-        var in = 0L
-        var errs = 0L
-        for (acc <- stats; tc <- Option(TaskContext.get()))
-          tc.addTaskCompletionListener[Unit](_ => acc.add((pid, in, in, errs)))
         it.map { t =>
-          in += 1
           val (ex, err) = Extractor.safeExtract(t.tool, t.text)
-          if (err) errs += 1
           ExtractedTurn(
             conv_id = t.conv_id,
             turn_idx = t.turn_idx,
@@ -401,20 +396,6 @@ object Pipeline {
       off += part.bytes.toInt
     }
     new RuleRows(all)
-  }
-
-  /** `SubmitMain --two-stage`: salted [[extract]] (which fills `stats`),
-    * then the join node folds the text with extraction off — a U+FFFD in
-    * extracted text (a decoded `&#xFFFD;`) is never re-quarantined. */
-  def segmentTwoStage(
-      turns: Dataset[Turn],
-      rules: Dataset[ConvRule],
-      partitions: Int = 0,
-      stats: Option[PartitionStatsAcc] = None
-  ): Dataset[ConvSegment] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    SegmentPlans.segmentJoinExtracted(extract(turns, partitions, stats), rules).as[ConvSegment]
   }
 
   /** Per-partition lineage rows for the extraction stage (north rule:

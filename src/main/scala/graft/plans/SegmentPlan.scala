@@ -13,13 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.extract.Extractor
 import graft.core.seg.Rule
 import graft.pipeline.Pipeline
-import graft.schema.{ConvRule, ConvSegment, ExtractedTurn, Turn}
+import graft.schema.{ConvRule, ConvSegment, Turn}
 
 /** The segmentation fold as a FIRST-CLASS Catalyst operator — the brief's
   * option (c): a custom `LogicalPlan` node, a `SparkStrategy`, and a
   * physical `SparkPlan` registered through `SparkSessionExtensions` /
   * `experimental.extraStrategies`. These two nodes drive every batch
-  * segmentation route in [[Pipeline]].
+  * segmentation route in [[Pipeline]]; both take raw turns and extract
+  * each page inside the fold, so a hot conversation is extracted and
+  * folded in one task under the [[Pipeline.DefaultMaxConvPages]] /
+  * [[Pipeline.DefaultMaxConvChars]] budget.
   *
   * The point of doing it at this layer: the physical node DECLARES its
   * needs — `requiredChildDistribution = ClusteredDistribution(conv_id)`,
@@ -92,20 +95,7 @@ object SegmentPlans {
     * takes this node when the rule corpus is above its broadcast limits. */
   def segmentJoin(turns: org.apache.spark.sql.Dataset[Turn],
                   rules: org.apache.spark.sql.Dataset[ConvRule],
-                  stats: Option[graft.pipeline.PartitionStatsAcc] = None): org.apache.spark.sql.DataFrame =
-    join(turns, rules, stats, extract = true)
-
-  /** [[segmentJoin]] with extraction off, for [[Pipeline.segmentTwoStage]];
-    * typed so raw turns can never skip extraction. */
-  private[graft] def segmentJoinExtracted(
-      extracted: org.apache.spark.sql.Dataset[ExtractedTurn],
-      rules: org.apache.spark.sql.Dataset[ConvRule]): org.apache.spark.sql.DataFrame =
-    join(extracted, rules, None, extract = false)
-
-  private def join(turns: org.apache.spark.sql.Dataset[_],
-                   rules: org.apache.spark.sql.Dataset[ConvRule],
-                   stats: Option[graft.pipeline.PartitionStatsAcc],
-                   extract: Boolean): org.apache.spark.sql.DataFrame = {
+                  stats: Option[graft.pipeline.PartitionStatsAcc] = None): org.apache.spark.sql.DataFrame = {
     val spark = turns.sparkSession
     ensureStrategy(spark)
     val tChild = turns.select("conv_id", "turn_idx", "tool", "text")
@@ -113,7 +103,7 @@ object SegmentPlans {
     val rChild = rules.toDF().select(RuleCols.map(org.apache.spark.sql.functions.col): _*)
       .queryExecution.analyzed
     org.apache.spark.sql.classic.GraftDatasetBridge.ofRows(
-      spark, SegmentConversationsJoin(tChild, rChild, stats, extract))
+      spark, SegmentConversationsJoin(tChild, rChild, stats))
   }
 }
 
@@ -139,16 +129,15 @@ final case class SegmentConversations(
     copy(child = newChild)
 }
 
-/** Logical two-child node: turns ⋈ rules on conv_id → segment rows;
-  * `extract = false` folds already-extracted `text` as is. */
+/** Logical two-child node: raw turns ⋈ rules on conv_id → segment rows,
+  * extracting inside the fold like [[SegmentConversations]]. */
 final case class SegmentConversationsJoin(
     left: LogicalPlan,
     right: LogicalPlan,
     lineageStats: Option[graft.pipeline.PartitionStatsAcc] = None,
-    extract: Boolean = true,
     output: Seq[Attribute] = SegmentPlans.segmentOutput()
 ) extends BinaryNode {
-  override def stringArgs: Iterator[Any] = Iterator(output, s"extract=$extract")
+  override def stringArgs: Iterator[Any] = Iterator(output)
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
@@ -164,8 +153,7 @@ object SegmentStrategy extends SparkStrategy {
     case s: SegmentConversations =>
       SegmentExec(s.output, s.rulesFor, s.lineageStats, planLater(s.child)) :: Nil
     case s: SegmentConversationsJoin =>
-      SegmentJoinExec(s.output, s.lineageStats, s.extract,
-        planLater(s.left), planLater(s.right)) :: Nil
+      SegmentJoinExec(s.output, s.lineageStats, planLater(s.left), planLater(s.right)) :: Nil
     case _ => Nil
   }
 }
@@ -200,7 +188,7 @@ final case class SegmentExec(
     val acc = lineageStats
     val types = output.map(_.dataType).toArray
     child.execute().mapPartitions { it =>
-      SegmentJoinExec.foldPartition(it, ci, ti, to, te, rules, acc, types, extract = true)
+      SegmentJoinExec.foldPartition(it, ci, ti, to, te, rules, acc, types)
     }
   }
 
@@ -220,12 +208,11 @@ final case class SegmentExec(
 final case class SegmentJoinExec(
     output: Seq[Attribute],
     lineageStats: Option[graft.pipeline.PartitionStatsAcc],
-    extract: Boolean,
     left: SparkPlan,
     right: SparkPlan
 ) extends BinaryExecNode {
 
-  override def stringArgs: Iterator[Any] = Iterator(output, s"extract=$extract")
+  override def stringArgs: Iterator[Any] = Iterator(output)
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
@@ -250,7 +237,6 @@ final case class SegmentJoinExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val (ci, ti, to, te) = (lOrd("conv_id"), lOrd("turn_idx"), lOrd("tool"), lOrd("text"))
     val acc = lineageStats
-    val ext = extract
     val types = output.map(_.dataType).toArray
     left.execute().zipPartitions(right.execute()) { (tIt, rIt0) =>
       // rules stream keyed by UTF8String so the merge compares in the SAME
@@ -273,7 +259,7 @@ final case class SegmentJoinExec(
         while (rIt.hasNext && rIt.head._1.compareTo(ck) == 0) b += rIt.next()._2
         b.result()
       }
-      SegmentJoinExec.foldPartition(tIt, ci, ti, to, te, rulesFor, acc, types, ext)
+      SegmentJoinExec.foldPartition(tIt, ci, ti, to, te, rulesFor, acc, types)
     }
   }
 
@@ -284,18 +270,18 @@ final case class SegmentJoinExec(
 
 object SegmentJoinExec {
 
-  /** Shared per-partition decode → [[Pipeline.GroupFold]] → UnsafeRow
-    * encode used by BOTH physical operators, and so by every batch route.
-    * Rows with a NULL conv_id are counted as input and SKIPPED (no rule can
-    * match them); NULL tool/text extract as passthrough/empty; a NULL
-    * turn_idx fails loudly, naming the conversation. */
+  /** Shared per-partition decode → [[Pipeline.GroupFold]] (each page
+    * through `Extractor.safeExtract`) → UnsafeRow encode used by BOTH
+    * physical operators, and so by every batch route. Rows with a NULL
+    * conv_id are counted as input and SKIPPED (no rule can match them);
+    * NULL tool/text extract as passthrough/empty; a NULL turn_idx fails
+    * loudly, naming the conversation. */
   private[plans] def foldPartition(
       it: Iterator[InternalRow],
       ci: Int, ti: Int, to: Int, te: Int,
       rulesFor: String => Seq[Rule],
       acc: Option[graft.pipeline.PartitionStatsAcc],
-      types: Array[org.apache.spark.sql.types.DataType],
-      extract: Boolean): Iterator[InternalRow] = {
+      types: Array[org.apache.spark.sql.types.DataType]): Iterator[InternalRow] = {
     // downstream consumers require UnsafeRow; the projection is created
     // per partition (codegen'd, not serializable)
     val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(types)
@@ -319,8 +305,7 @@ object SegmentJoinExec {
       }
     }
     new Pipeline.GroupFold(tuples, rulesFor,
-      if (!extract) (_, text) => text
-      else (tool, text) => {
+      (tool, text) => {
         val (ex, err) = Extractor.safeExtract(tool, text)
         if (err) errs += 1
         ex.text

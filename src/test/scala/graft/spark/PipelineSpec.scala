@@ -91,18 +91,6 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(got == want)
   }
 
-  test("cogroup path produces identical segments") {
-    import spark.implicits._
-    // --two-stage: salted extraction, then the join node co-groups the
-    // extracted turns with the rules table
-    val turns = SyntheticTranscripts.turns(spark, NConvs, Seed).as[Turn]
-    val rules = SyntheticTranscripts.rules(spark, NConvs, Seed)
-    val viaCogroup = Pipeline.segmentTwoStage(turns, rules)
-      .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val want = (0L until NConvs).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
-    assert(viaCogroup == want)
-  }
-
   test("segmentAuto routes both branches to identical segments") {
     import spark.implicits._
     val turns = SyntheticTranscripts.turns(spark, NConvs, Seed).as[Turn]
@@ -120,8 +108,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   test("orphan rules (conv_id with no turns) emit nothing on every route") {
     import spark.implicits._
     // rules exist for 5 conversations but turns only for 3: the routing
-    // threshold must never change results, so the join-node routes drop
-    // the orphans exactly like the turns-driven broadcast route
+    // threshold must never change results, so the join node drops the
+    // orphans exactly like the turns-driven broadcast route
     val turns = SyntheticTranscripts.turns(spark, 3, Seed).as[Turn]
     val rules5 = SyntheticTranscripts.rules(spark, 5, Seed)
     val want = (0L until 3L).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
@@ -129,11 +117,8 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     val viaJoin = Pipeline.segmentAuto(turns, rules5, broadcastRuleLimit = 0L)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val viaTwoStage = Pipeline.segmentTwoStage(turns, rules5)
-      .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     assert(viaBroadcast == want)
     assert(viaJoin == want)
-    assert(viaTwoStage == want)
   }
 
   test("corpus hygiene: U+FFFD corruption only on parser-bound turns") {
@@ -188,14 +173,18 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   test("lineage stats stay exact when the extraction stage runs twice") {
     import spark.implicits._
     val turns = SyntheticTranscripts.turns(spark, 5, Seed).as[Turn]
+    val bc = spark.sparkContext.broadcast((0L until 5L).map { ci =>
+      SyntheticTranscripts.convId(ci) -> SyntheticTranscripts.rulesFor(Seed, ci).map(Pipeline.toCoreRule)
+    }.toMap)
     val acc = new PartitionStatsAcc
     spark.sparkContext.register(acc, "graft.partition_lineage.rerun")
-    val extracted = Pipeline.extract(turns, stats = Some(acc))
-    // two actions over one plan re-run every extraction task, as a
-    // resubmitted map stage would
-    extracted.count()
-    extracted.count()
+    val segs = Pipeline.segmentFused(turns, bc, stats = Some(acc))
+    // two actions over one plan re-run every fold task (which extracts),
+    // as a resubmitted stage would
+    val n = segs.collect().length
+    assert(segs.collect().length == n)
     assert(acc.value.values.map(_._1).sum == turns.count())
+    assert(acc.value.values.map(_._2).sum == n.toLong)
   }
 
   test("dedup clustering: chained near-dups collapse to one component") {
@@ -309,9 +298,10 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       new java.sql.Timestamp(SyntheticTranscripts.BaseEpochMs + i)))
     val small = (0L until 5L).flatMap(ci => SyntheticTranscripts.turnsFor(Seed, ci))
     val turns = spark.createDataset(big ++ small)
-    val parts = Pipeline.extract(turns, partitions = 8).groupByKey(_.part_id)
+    val parts = Pipeline.extract(turns).groupByKey(_.part_id)
       .count().collect().map(_._2)
-    assert(parts.length == 8, "all salted partitions used")
+    assert(parts.length == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      "all salted partitions used")
     val mean = parts.sum.toDouble / parts.length
     assert(parts.max < mean * 1.5, s"salting imbalance: ${parts.mkString(",")}")
   }
@@ -333,7 +323,7 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(segs(0).TotalNumberOfpages == n)
   }
 
-  test("two-stage folds extracted text as is: a decoded U+FFFD entity is not re-quarantined") {
+  test("the fold keeps a decoded U+FFFD entity: page 2 is not re-quarantined") {
     import spark.implicits._
     // the entity decodes to the very character raw payloads are refused
     // for; extracting the extracted text again would blank page 2
@@ -350,7 +340,9 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       Map("c-ent" -> rules.collect().toSeq.map(Pipeline.toCoreRule)))
     val want = Pipeline.segmentFused(turns, bc).collect().toSeq
     assert(want.map(_.FromPageNumber) == Seq(2), want)
-    assert(Pipeline.segmentTwoStage(turns, rules).collect().toSeq == want)
+    // SubmitMain's route, on both of its branches
+    for (limit <- Seq(1000000L, 0L))
+      assert(Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit).collect().toSeq == want)
   }
 
   test("the fold reads NULL tool/text as passthrough/empty and rejects a NULL turn_idx") {

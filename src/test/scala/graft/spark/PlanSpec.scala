@@ -126,19 +126,6 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert(pinnedParts == 8)
   }
 
-  test("two-stage pipeline: two exchanges (salted extraction + conv regroup)") {
-    // the turns side of the join node; the rules side adds its own
-    val turns = SyntheticTranscripts.turns(spark, 10)
-    val rules = SyntheticTranscripts.rules(spark, 10)
-    val df = Pipeline.segmentTwoStage(turns, rules).toDF()
-    val join = prepared(df).collectFirst { case j: SegmentJoinExec => j }
-      .getOrElse(fail(formatted(df)))
-    assert(!join.extract, formatted(df))
-    assert(exchanges(join.left) == 2, formatted(df))
-    assert(exchanges(join.right) == 1, formatted(df))
-    assert(df.collect().map(_.toString).sorted.toSeq == oracleRows(10))
-  }
-
   test("bucketed tables co-locate the join: zero exchanges") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
     val orders = Relational.tbl(spark, Sf, "orders").select("o_custkey", "o_totalprice")

@@ -16,19 +16,20 @@ import graft.schema._
   * corpus; this spec re-derives the invariant on fresh corpus shapes so a
   * route bug that happens to be invisible under one rule/page distribution
   * (e.g. an ordering assumption only violated by a specific Sequence mix)
-  * still fails. All four routes — the broadcast node with a planned and
-  * with a pinned (`buckets = 8`) exchange, the join node (`segmentAuto`
-  * above its rule limits) and `--two-stage` — must agree field for field,
-  * with shuffled input. */
+  * still fails. All four routes — the broadcast node over a rule map with
+  * a planned and with a pinned (`buckets = 8`) exchange, and `segmentAuto`
+  * (`SubmitMain`'s route) on its two branches: within its rule limits
+  * (rules broadcast as binary rows) and above them (the join node) — must
+  * agree field for field, with shuffled input. */
 class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
 
-  /** The four surviving routes, by name. */
+  /** The four routes, by name. */
   private def routes(turns: Dataset[Turn], rules: Dataset[ConvRule],
                      bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] = Seq(
     "broadcast node" -> Pipeline.segmentFused(turns, bc),
     "broadcast node, buckets = 8" -> Pipeline.segmentFused(turns, bc, buckets = 8),
     "join node" -> Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 0L),
-    "two-stage" -> Pipeline.segmentTwoStage(turns, rules))
+    "segmentAuto broadcast branch" -> Pipeline.segmentAuto(turns, rules))
 
   private def oracle(seed: Long, nConvs: Long): Seq[ConvSegment] =
     (0L until nConvs).flatMap(SegmentOracle.segments(seed, _))
@@ -158,12 +159,11 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
     assert(want.nonEmpty)
     val turns = SyntheticTranscripts.turns(spark, nConvs, seed)
       .orderBy(hash($"text")).as[Turn]
-    val viaAuto = Pipeline.segmentAuto(turns, rules)
-    assert(!viaAuto.queryExecution.executedPlan.toString.contains("SegmentJoin"))
     def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
       xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val all = routes(turns, rules, spark.sparkContext.broadcast(ruleMap)) :+
-      ("segmentAuto broadcast branch" -> viaAuto)
+    val all = routes(turns, rules, spark.sparkContext.broadcast(ruleMap))
+    assert(!all.toMap.apply("segmentAuto broadcast branch")
+      .queryExecution.executedPlan.toString.contains("SegmentJoin"))
     for ((route, segs) <- all)
       assert(norm(segs.collect()) == want, route)
   }

@@ -78,22 +78,6 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("two-stage flag produces identical segments") {
-    spark
-    val out1 = Files.createTempDirectory("graft-submit-f").toString
-    val out2 = Files.createTempDirectory("graft-submit-t").toString
-    SubmitMain.main(Array("--synthetic-convs", "8", "--out", out1))
-    SubmitMain.main(Array("--synthetic-convs", "8", "--out", out2, "--two-stage"))
-    val a = new SnapshotStore(out1).read(spark, 1L).orderBy("conv_id", "Sequence").collect()
-    val b = new SnapshotStore(out2).read(spark, 1L).orderBy("conv_id", "Sequence").collect()
-    assert(a.toSeq == b.toSeq)
-    // two-stage lineage covers the salted extraction stage, one pass too
-    val lin = new SnapshotStore(out2).read(spark, 2L)
-    assert(lin.select("stage").distinct().collect().map(_.getString(0)).toSeq == Seq("extract"))
-    val totalTurns = (0L until 8L).map(ci => SyntheticTranscripts.turnsFor(42L, ci).size).sum
-    assert(lin.selectExpr("sum(rows_in)").collect()(0).getLong(0) == totalTurns.toLong)
-  }
-
   test("json and csv format turns+rules input produce identical segments to synthetic") {
     spark
     val out1 = Files.createTempDirectory("graft-submit-syn").toString
@@ -121,15 +105,29 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("unknown flags fail before any work, naming the known ones") {
-    // a typo must not silently run the default route; --catalyst is gone
-    for (bad <- Seq(Array("--bucket", "8"), Array("--catalyst"))) {
+    // a typo must not silently run the default route; --catalyst and
+    // --two-stage are gone
+    for (bad <- Seq(Array("--bucket", "8"), Array("--catalyst"), Array("--two-stage"))) {
       val out = Files.createTempDirectory("graft-submit-badflag").toString
       val e = intercept[IllegalArgumentException](
         SubmitMain.main(Array("--synthetic-convs", "8", "--out", out) ++ bad))
       assert(e.getMessage.contains(s"unknown flag ${bad.head}"), e.getMessage)
-      assert(e.getMessage.contains("--buckets") && e.getMessage.contains("--two-stage"),
-        e.getMessage)
+      assert(e.getMessage.contains("--buckets"), e.getMessage)
       assert(new SnapshotStore(out).snapshots.isEmpty)
     }
+    // every flag takes a value: a trailing --out must not write to ./true
+    val out = Files.createTempDirectory("graft-submit-novalue").toString
+    val cwd = new java.io.File("true")
+    val existed = cwd.exists()
+    for (args <- Seq(Array("--out", out, "--synthetic-convs", "8", "--seed"),
+                     Array("--synthetic-convs", "8", "--seed", "--out", out))) {
+      val e = intercept[IllegalArgumentException](SubmitMain.main(args))
+      assert(e.getMessage.contains("flag --seed needs a value"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](
+      SubmitMain.main(Array("--synthetic-convs", "8", "--out")))
+    assert(e.getMessage.contains("flag --out needs a value"), e.getMessage)
+    assert(new SnapshotStore(out).snapshots.isEmpty)
+    assert(cwd.exists() == existed, "a valueless --out must not create ./true")
   }
 }
