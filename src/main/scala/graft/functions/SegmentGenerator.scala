@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -7,7 +8,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.seg.{Demarcator, Rule}
+import graft.pipeline.Pipeline
+import graft.plans.SegmentJoinExec
+import graft.schema.ConvRule
 
 /** `segment_rows(turns, rules)` — the demarcation fold
   * (`/root/reference/ocr_processor.py:439-507`) exposed as a SQL
@@ -16,18 +19,21 @@ import graft.core.seg.{Demarcator, Rule}
   * (`py_*`) and the custom aggregate (`kmv_kth`).
   *
   *  - `turns`: `ARRAY<STRUCT<turn_idx INT, text STRING>>` — sorted here by
-  *    `turn_idx` (the stable-turn-ordering invariant is enforced inside
-  *    the function, so `collect_list` non-determinism can't corrupt it).
+  *    `turn_idx` (collect_list order is non-deterministic). A NULL
+  *    element or `turn_idx` fails, so does a repeated `turn_idx`; a NULL
+  *    text reads as "". No turns, no rows — as on every batch route.
   *  - `rules`: array of structs carrying the reference rule fields
-  *    (`Input_Sample1.json:12-25` names, resolved BY NAME so any
-  *    field order works).
+  *    (`Input_Sample1.json:12-25` names, resolved BY NAME so any field
+  *    order works; an absent optional field reads as NULL), decoded by
+  *    the fold nodes' own [[graft.plans.SegmentJoinExec.rowToRule]].
   *
   * Used as `SELECT conv_id, segment_rows(...).*` after a `groupBy` —
   * Catalyst plans the standard `Generate` node over the aggregated
-  * arrays. The eval path is `CodegenFallback` like every generator; the
-  * per-row work is the same core fold (`Demarcator.demarcateIsolated`)
-  * the batch routes' Catalyst fold nodes run, so SQL users get
-  * byte-identical segments. */
+  * arrays. The eval path is `CodegenFallback` like every generator; each
+  * row runs the batch routes' fold core, [[graft.pipeline.Pipeline.GroupFold]]
+  * (ordering check, per-conversation budget, rule-decode quarantine), so
+  * SQL users get the same segments. Absent optional fields stay NULL in
+  * the output, where the batch routes write 0 / "". */
 case class SegmentRowsGenerator(turns: Expression, rules: Expression)
     extends Generator with CodegenFallback {
 
@@ -53,16 +59,11 @@ case class SegmentRowsGenerator(turns: Expression, rules: Expression)
     case _ => None
   }
 
-  private def idxOf(s: StructType, f: String): Option[Int] = {
-    val i = s.fieldNames.indexOf(f)
-    if (i < 0) None else Some(i)
-  }
-
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
     val turnsOk = structFields(turns).exists { s =>
-      idxOf(s, "turn_idx").exists(i => s(i).dataType == IntegerType) &&
-        idxOf(s, "text").exists(i => s(i).dataType == StringType)
+      s.exists(f => f.name == "turn_idx" && f.dataType == IntegerType) &&
+        s.exists(f => f.name == "text" && f.dataType == StringType)
     }
     if (!turnsOk)
       return TypeCheckResult.TypeCheckFailure(
@@ -70,7 +71,7 @@ case class SegmentRowsGenerator(turns: Expression, rules: Expression)
     structFields(rules) match {
       case Some(s) =>
         val missing = SegmentRowsGenerator.RequiredRuleFields
-          .filterNot(f => idxOf(s, f).isDefined)
+          .filterNot(s.fieldNames.contains)
         if (missing.nonEmpty)
           return TypeCheckResult.TypeCheckFailure(
             s"segment_rows: rules struct is missing fields: ${missing.mkString(", ")}")
@@ -94,108 +95,49 @@ case class SegmentRowsGenerator(turns: Expression, rules: Expression)
   }
 
   private lazy val turnsSchema = structFields(turns).get
-  private lazy val tIdx = idxOf(turnsSchema, "turn_idx").get
-  private lazy val tText = idxOf(turnsSchema, "text").get
+  private lazy val tIdx = turnsSchema.fieldIndex("turn_idx")
+  private lazy val tText = turnsSchema.fieldIndex("text")
   private lazy val rulesSchema = structFields(rules).get
-  // field name → (index, dataType), resolved ONCE — eval must not re-scan
-  // fieldNames per rule per input row
-  private lazy val rIdx: Map[String, (Int, DataType)] =
-    rulesSchema.fields.zipWithIndex.map { case (f, i) => f.name -> (i, f.dataType) }.toMap
-
-  private def str(row: InternalRow, f: String, dflt: String): String =
-    rIdx.get(f) match {
-      case Some((i, StringType)) if !row.isNullAt(i) => row.getUTF8String(i).toString
-      case _ => dflt
-    }
-  private def int(row: InternalRow, f: String): Int =
-    rIdx.get(f) match {
-      case Some((i, IntegerType)) if !row.isNullAt(i) => row.getInt(i)
-      case Some((i, LongType)) if !row.isNullAt(i) =>
-        val v = row.getLong(i)
-        // LongType is accepted for schemaless-JSON convenience, but an
-        // out-of-int-range value must fail HERE, not silently wrap and
-        // run the fold with a wrong page count
-        require(v >= Int.MinValue && v <= Int.MaxValue,
-          s"segment_rows: rule field '$f' value $v overflows INT")
-        v.toInt
-      case _ => 0
-    }
-  private def longOpt(row: InternalRow, f: String): Option[Long] =
-    rIdx.get(f) match {
-      case Some((i, LongType)) if !row.isNullAt(i) => Some(row.getLong(i))
-      case Some((i, IntegerType)) if !row.isNullAt(i) => Some(row.getInt(i).toLong)
-      case _ => None
-    }
-  private def strOpt(row: InternalRow, f: String): Option[String] =
-    rIdx.get(f) match {
-      case Some((i, StringType)) if !row.isNullAt(i) => Some(row.getUTF8String(i).toString)
-      case _ => None
-    }
+  // rule-struct field ordinals, resolved by name ONCE per expression
+  private lazy val ruleLayout = SegmentJoinExec.ruleLayout(rulesSchema)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val tArr = turns.eval(input).asInstanceOf[ArrayData]
     val rArr = rules.eval(input).asInstanceOf[ArrayData]
     if (tArr == null || rArr == null) return Nil
 
+    // sorted here, so collect_list non-determinism can't corrupt the order
     val sorted = Array.tabulate(tArr.numElements()) { i =>
       val row = tArr.getStruct(i, turnsSchema.length)
       // a null array ELEMENT (json nulls, array(…, NULL)) must fail with
-      // the loud invariant below, not a raw NPE from row.isNullAt
-      val idx: Integer =
-        if (row == null || row.isNullAt(tIdx)) null else Int.box(row.getInt(tIdx))
-      val text =
-        if (row == null || row.isNullAt(tText)) "" else row.getUTF8String(tText).toString
-      (idx, text)
-    }.sortBy(t => if (t._1 == null) Int.MaxValue else t._1.intValue())
-    // same loud invariant as the batch routes' fold
-    // (Pipeline.GroupFold's "turn ordering violated"): null or duplicate
-    // turn_idx must fail here too, not silently fold to different output
-    var lastIdx = Int.MinValue
-    sorted.foreach { case (idx, _) =>
-      require(idx != null, "turn ordering violated in segment_rows: null turn_idx")
-      require(idx.intValue() > lastIdx,
-        s"turn ordering violated in segment_rows: ${idx.intValue()} after $lastIdx")
-      lastIdx = idx.intValue()
-    }
-    val pages = sorted.map(_._2).toIndexedSeq
-
+      // this loud invariant, not a raw NPE from row.isNullAt
+      require(row != null && !row.isNullAt(tIdx),
+        "turn ordering violated in segment_rows: null turn_idx")
+      (row.getInt(tIdx), if (row.isNullAt(tText)) "" else row.getUTF8String(tText).toString)
+    }.sortBy(_._1)
     val coreRules = (0 until rArr.numElements()).map { i =>
       val row = rArr.getStruct(i, rulesSchema.length)
       require(row != null, s"segment_rows: rules[$i] is a null struct")
-      Rule(
-        documentTypeId = strOpt(row, "DocumentTypeID"),
-        documentTypeName = str(row, "DocumentTypeName", ""),
-        startingIdentifier = str(row, "StartingIdentifier", ""),
-        startingIdentifierPlus1 = str(row, "StartingIdentifierPlus1", ""),
-        endingIdentifier = str(row, "EndingIdentifier", ""),
-        endingIdentifierMinus1 = str(row, "EndingIdentifierMinus1", ""),
-        noOfPages = int(row, "NoOfPages"),
-        occurence = int(row, "Occurence"),
-        startingMinusN = str(row, "StartingMinusN", " "),
-        endingMinusN = str(row, "EndingMinusN", " "),
-        sequence = strOpt(row, "Sequence"),
-        docReceivedId = longOpt(row, "DocReceivedId"),
-        firmFile = strOpt(row, "FirmFile"),
-        uploadDatasheetId = longOpt(row, "UploadDatasheetid"),
-        sessionId = strOpt(row, "SessionId"))
+      SegmentJoinExec.rowToRule(row, ruleLayout)
     }
 
-    // per-row rule-decode quarantine, matching every pipeline route: a
-    // malformed Sequence yields ZERO segment rows for this input row (the
-    // reference fails one message, main.py:394-402), never the query
-    val (segRows, decodeFailed) = Demarcator.demarcateIsolated(pages, coreRules)
-    if (decodeFailed) {
-      // identify the quarantined row the way the pipeline routes log a
-      // conv_id — segment_rows has no conversation key in scope, so the
-      // rules' own identifiers (DocReceivedId/SessionId) name the input
-      val ids = coreRules.flatMap(r =>
-        r.docReceivedId.map(_.toString).orElse(r.sessionId)).distinct
-      org.slf4j.LoggerFactory.getLogger("graft.functions.SegmentRowsGenerator")
-        .warn("segment_rows: malformed rule integer field failed decode; zero " +
-          s"segments emitted for the row (rule ids: ${
-            if (ids.isEmpty) "none" else ids.take(8).mkString(",")})")
-    }
-    segRows.map { r =>
+    // the batch routes' fold: a duplicate turn_idx fails its ordering
+    // invariant ("turn ordering violated in segment_rows: N after N"), and
+    // a malformed rule Sequence quarantines the row — ZERO segment rows
+    // (the reference fails one message, main.py:394-402), never the query
+    new Pipeline.GroupFold(
+      sorted.iterator.map { case (idx, text) => (SegmentRowsGenerator.Conv, idx, null, text) },
+      _ => coreRules, (_, text) => text,
+      onRuleDecodeError = _ => {
+        // segment_rows has no conversation key in scope, so the rules' own
+        // identifiers (DocReceivedId/SessionId) name the input row
+        val ids = coreRules.flatMap(r =>
+          r.docReceivedId.map(_.toString).orElse(r.sessionId)).distinct
+        org.slf4j.LoggerFactory.getLogger("graft.functions.SegmentRowsGenerator")
+          .warn("segment_rows: malformed rule integer field failed decode; zero " +
+            s"segments emitted for the row (rule ids: ${
+              if (ids.isEmpty) "none" else ids.take(8).mkString(",")})")
+      }).flatMap(_._2).map { r =>
       InternalRow(
         r.DocReceivedId.map(Long.box).orNull,
         r.FromPageNumber,
@@ -220,14 +162,17 @@ object SegmentRowsGenerator {
     "EndingIdentifier", "EndingIdentifierMinus1", "NoOfPages", "Occurence",
     "StartingMinusN", "EndingMinusN", "Sequence")
 
-  /** Expected kind per known rule field: 'S' = string, 'I' = integral.
-    * Unknown extra fields are ignored. */
-  val RuleFieldKinds: Map[String, Char] = Map(
-    "DocumentTypeID" -> 'S', "DocumentTypeName" -> 'S',
-    "StartingIdentifier" -> 'S', "StartingIdentifierPlus1" -> 'S',
-    "EndingIdentifier" -> 'S', "EndingIdentifierMinus1" -> 'S',
-    "NoOfPages" -> 'I', "Occurence" -> 'I',
-    "StartingMinusN" -> 'S', "EndingMinusN" -> 'S', "Sequence" -> 'S',
-    "DocReceivedId" -> 'I', "FirmFile" -> 'S',
-    "UploadDatasheetid" -> 'I', "SessionId" -> 'S')
+  /** Expected kind per rule field the fold reads, from the fold nodes'
+    * rule schema ([[ConvRule]] less `conv_id`): 'S' = STRING, 'I' = INT or
+    * BIGINT. Unknown extra fields are ignored. */
+  val RuleFieldKinds: Map[String, Char] =
+    Encoders.product[ConvRule].schema.fields.iterator.filter(_.name != "conv_id").map { f =>
+      f.name -> (f.dataType match {
+        case StringType => 'S'
+        case IntegerType | LongType => 'I'
+      })
+    }.toMap
+
+  /** The conversation name [[Pipeline.GroupFold]] reports for a row. */
+  private val Conv = "segment_rows"
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.Platform
 
 import graft.core.extract.Extractor
-import graft.core.seg.{Demarcator, Rule}
+import graft.core.seg.{Demarcator, Rule, SegmentRow}
 import graft.core.xml.SubDocXml
 import graft.plans.{SegmentJoinExec, SegmentPlans}
 import graft.schema._
@@ -81,16 +81,18 @@ final class RuleRows private[graft] (bytes: Array[Byte]) extends Serializable {
 }
 
 /** The end-to-end extraction + segmentation pipeline (SURVEY §3.1 "Spark
-  * lifecycle we build"). Every batch route runs [[Pipeline.GroupFold]] —
-  * a streaming fold over (conv_id, turn_idx)-sorted rows, one conversation
-  * in memory at a time (the reference's pages-in-memory bound,
-  * `ocr_processor.py:247`) — inside one of the two Catalyst nodes in
-  * [[graft.plans.SegmentPlans]]: [[segmentFused]] (rules broadcast) or,
-  * above [[segmentAuto]]'s rule limits, the join node. Both extract inside
-  * the fold, so a hot conversation is extracted and folded in one task,
-  * under [[DefaultMaxConvPages]]/[[DefaultMaxConvChars]]: on generated
-  * input with 25 % of all turns in one conversation, this ran 5× faster
-  * than a salted extraction stage ahead of the fold (1.31 against 7.26 s,
+  * lifecycle we build"). Every segmentation route runs [[Pipeline.GroupFold]]
+  * — a streaming fold over (conv_id, turn_idx)-sorted rows, one
+  * conversation in memory at a time (the reference's pages-in-memory
+  * bound, `ocr_processor.py:247`): the batch routes inside one of the two
+  * Catalyst nodes in [[graft.plans.SegmentPlans]] — [[segmentFused]]
+  * (rules broadcast) or, above [[segmentAuto]]'s rule limits, the join
+  * node — the `segment_rows` UDTF per input row and the streaming fold per
+  * closed conversation. The batch nodes extract inside the fold, so a hot
+  * conversation is extracted and folded in one task, under
+  * [[DefaultMaxConvPages]]/[[DefaultMaxConvChars]]: on generated input
+  * with 25 % of all turns in one conversation, this ran 5× faster than a
+  * salted extraction stage ahead of the fold (1.31 against 7.26 s,
   * 4 vCPU). Spreading a hot conversation's extraction over all tasks
   * belongs in the scan stage, before the `conv_id` exchange (ROADMAP D1).
   */
@@ -181,10 +183,13 @@ object Pipeline {
     sessionId = Option(r.SessionId)
   )
 
-  /** Streaming grouping iterator: consumes a (conv_id, turn_idx)-sorted
-    * partition of (conv_id, turn_idx, tool, payload) rows, buffers exactly
-    * one conversation at a time (applying `extractPage` per turn as it
-    * buffers), runs the demarcation fold, emits its segment rows. Asserts
+  /** The one fold core of every segmentation route — both Catalyst fold
+    * nodes, `segment_rows` and the streaming fold. Consumes a (conv_id,
+    * turn_idx)-sorted stream of (conv_id, turn_idx, tool, payload) rows,
+    * buffers exactly one conversation at a time (applying `extractPage`
+    * per turn as it buffers, under the fold budget), runs the demarcation
+    * fold and yields the conversation's core segment rows with its conv_id
+    * (none: skipped); each caller maps them to its own output. Asserts
     * sortedness — the north rule's "stable turn ordering" is a guaranteed
     * invariant, not a hope. */
   private[graft] final class GroupFold(
@@ -198,8 +203,8 @@ object Pipeline {
       // Sequence fails decode; the conversation emits zero segments and the
       // fold continues. Routes with a lineage accumulator tick errors here.
       onRuleDecodeError: String => Unit = logRuleDecodeError
-  ) extends Iterator[ConvSegment] {
-    private var pending: Iterator[ConvSegment] = Iterator.empty
+  ) extends Iterator[(String, Vector[SegmentRow])] {
+    private var pending: (String, Vector[SegmentRow]) = _
     private var lookahead: (String, Int, String, String) = _
     private var hasLookahead = false
 
@@ -230,14 +235,17 @@ object Pipeline {
       }
       val (rows, decodeFailed) = Demarcator.demarcateIsolated(pages.result(), rulesFor(cid))
       if (decodeFailed) onRuleDecodeError(cid)
-      pending = rows.iterator.map(ConvSegment.of(cid, _))
+      if (rows.nonEmpty) pending = (cid, rows)
     }
 
     def hasNext: Boolean = {
-      while (!pending.hasNext && (hasLookahead || it.hasNext)) foldOne()
-      pending.hasNext
+      while (pending == null && (hasLookahead || it.hasNext)) foldOne()
+      pending != null
     }
-    def next(): ConvSegment = { if (!hasNext) throw new NoSuchElementException; pending.next() }
+    def next(): (String, Vector[SegmentRow]) = {
+      if (!hasNext) throw new NoSuchElementException
+      try pending finally pending = null
+    }
   }
 
   /** The default fold: raw turns into [[SegmentPlans.segment]], which
@@ -454,7 +462,7 @@ object Pipeline {
       .groupByKey(_.conv_id)
       .mapGroups { (cid, rows) =>
         val ordered = rows.toVector.sortBy(r => r.Sequence.toIntOption.getOrElse(999))
-        val coreRows = ordered.map(r => graft.core.seg.SegmentRow(
+        val coreRows = ordered.map(r => SegmentRow(
           DocReceivedId = Some(r.DocReceivedId),
           FromPageNumber = r.FromPageNumber,
           ToPageNumber = r.ToPageNumber,

@@ -3,17 +3,18 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, SortOrder}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.extract.Extractor
 import graft.core.seg.Rule
 import graft.pipeline.Pipeline
-import graft.schema.{ConvRule, ConvSegment, Turn}
+import graft.schema.{ConvRule, Turn}
 
 /** The segmentation fold as a FIRST-CLASS Catalyst operator — the brief's
   * option (c): a custom `LogicalPlan` node, a `SparkStrategy`, and a
@@ -35,7 +36,7 @@ import graft.schema.{ConvRule, ConvSegment, Turn}
   */
 object SegmentPlans {
 
-  /** Fresh output attributes in [[ConvSegment]] field order. */
+  /** Fresh output attributes in [[graft.schema.ConvSegment]] field order. */
   def segmentOutput(): Seq[Attribute] = Seq(
     AttributeReference("conv_id", StringType, nullable = false)(),
     AttributeReference("DocReceivedId", LongType, nullable = false)(),
@@ -77,13 +78,9 @@ object SegmentPlans {
       spark, SegmentConversations(child, rulesFor, stats))
   }
 
-  /** Rule columns in the fixed projection order [[SegmentJoinExec]] and
-    * the broadcast rule rows ([[graft.pipeline.RuleRows]]) read by index. */
-  private[graft] val RuleCols = Seq("conv_id", "DocumentTypeID",
-    "DocumentTypeName", "StartingIdentifier", "StartingIdentifierPlus1",
-    "EndingIdentifier", "EndingIdentifierMinus1", "NoOfPages", "Occurence",
-    "StartingMinusN", "EndingMinusN", "Sequence", "DocReceivedId",
-    "FirmFile", "UploadDatasheetid", "SessionId")
+  /** Rule columns in the fixed projection order — the [[ConvRule]] field
+    * order — that [[SegmentJoinExec.rowToRule]] decodes by index. */
+  private[graft] val RuleCols: Seq[String] = Encoders.product[ConvRule].schema.fieldNames.toSeq
 
   /** TWO-CHILD variant: rules arrive as a co-partitioned PLAN, not a
     * driver-side map — the 10^12-conversation regime, where collecting or
@@ -186,9 +183,8 @@ final case class SegmentExec(
     val (ci, ti, to, te) = (ord("conv_id"), ord("turn_idx"), ord("tool"), ord("text"))
     val rules = rulesFor
     val acc = lineageStats
-    val types = output.map(_.dataType).toArray
     child.execute().mapPartitions { it =>
-      SegmentJoinExec.foldPartition(it, ci, ti, to, te, rules, acc, types)
+      SegmentJoinExec.foldPartition(it, ci, ti, to, te, rules, acc)
     }
   }
 
@@ -237,7 +233,6 @@ final case class SegmentJoinExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val (ci, ti, to, te) = (lOrd("conv_id"), lOrd("turn_idx"), lOrd("tool"), lOrd("text"))
     val acc = lineageStats
-    val types = output.map(_.dataType).toArray
     left.execute().zipPartitions(right.execute()) { (tIt, rIt0) =>
       // rules stream keyed by UTF8String so the merge compares in the SAME
       // binary order the exchanges sorted both sides with (Java String
@@ -259,7 +254,7 @@ final case class SegmentJoinExec(
         while (rIt.hasNext && rIt.head._1.compareTo(ck) == 0) b += rIt.next()._2
         b.result()
       }
-      SegmentJoinExec.foldPartition(tIt, ci, ti, to, te, rulesFor, acc, types)
+      SegmentJoinExec.foldPartition(tIt, ci, ti, to, te, rulesFor, acc)
     }
   }
 
@@ -275,16 +270,14 @@ object SegmentJoinExec {
     * physical operators, and so by every batch route. Rows with a NULL
     * conv_id are counted as input and SKIPPED (no rule can match them);
     * NULL tool/text extract as passthrough/empty; a NULL turn_idx fails
-    * loudly, naming the conversation. */
+    * loudly, naming the conversation. Each segment row is written straight
+    * into one reused UnsafeRow in [[SegmentPlans.segmentOutput]] order,
+    * absent optional fields as 0 / "" (as `ConvSegment.of`). */
   private[plans] def foldPartition(
       it: Iterator[InternalRow],
       ci: Int, ti: Int, to: Int, te: Int,
       rulesFor: String => Seq[Rule],
-      acc: Option[graft.pipeline.PartitionStatsAcc],
-      types: Array[org.apache.spark.sql.types.DataType]): Iterator[InternalRow] = {
-    // downstream consumers require UnsafeRow; the projection is created
-    // per partition (codegen'd, not serializable)
-    val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(types)
+      acc: Option[graft.pipeline.PartitionStatsAcc]): Iterator[InternalRow] = {
     val pid = org.apache.spark.TaskContext.getPartitionId()
     var in = 0L
     var out = 0L
@@ -304,6 +297,8 @@ object SegmentJoinExec {
         Some((cid, row.getInt(ti), str(row, to), str(row, te)))
       }
     }
+    val w = new UnsafeRowWriter(11)
+    def utf8(s: Option[String]): UTF8String = UTF8String.fromString(s.getOrElse(""))
     new Pipeline.GroupFold(tuples, rulesFor,
       (tool, text) => {
         val (ex, err) = Extractor.safeExtract(tool, text)
@@ -315,24 +310,60 @@ object SegmentJoinExec {
       onRuleDecodeError = cid => {
         errs += 1; graft.pipeline.Pipeline.logRuleDecodeError(cid)
       })
-      .map { s: ConvSegment =>
-        out += 1
-        toUnsafe(new GenericInternalRow(Array[Any](
-          UTF8String.fromString(s.conv_id), s.DocReceivedId, s.FromPageNumber,
-          s.ToPageNumber, UTF8String.fromString(s.FileNumber),
-          UTF8String.fromString(s.DocumentTypeId), s.UploadDataSheetId,
-          s.TotalNumberOfpages, s.NoOfPages, UTF8String.fromString(s.Sequence),
-          UTF8String.fromString(s.SessionId)))): InternalRow
+      .flatMap { case (cid, rows) =>
+        val c = UTF8String.fromString(cid)
+        rows.iterator.map { r =>
+          out += 1
+          w.reset() // every field is non-null: the null bits stay zero
+          w.write(0, c)
+          w.write(1, r.DocReceivedId.getOrElse(0L))
+          w.write(2, r.FromPageNumber)
+          w.write(3, r.ToPageNumber)
+          w.write(4, utf8(r.FileNumber))
+          w.write(5, utf8(r.DocumentTypeId))
+          w.write(6, r.UploadDataSheetId.getOrElse(0L))
+          w.write(7, r.TotalNumberOfpages)
+          w.write(8, r.NoOfPages)
+          w.write(9, utf8(r.Sequence))
+          w.write(10, utf8(r.SessionId))
+          w.getRow: InternalRow
+        }
       }
   }
 
-  /** Decode one rules row (in [[SegmentPlans.RuleCols]] order) to the core
-    * rule — same mapping as [[Pipeline.toCoreRule]], with a NULL numeric
-    * field as 0. The one decoder of both `segmentAuto` branches. */
-  private[graft] def rowToRule(row: InternalRow): Rule = {
-    def s(i: Int): String = if (row.isNullAt(i)) "" else row.getUTF8String(i).toString
-    def sOpt(i: Int): Option[String] =
-      if (row.isNullAt(i)) None else Some(row.getUTF8String(i).toString)
+  /** Where a rule row holds each [[SegmentPlans.RuleCols]] field — its
+    * ordinal, -1 when absent — and whether the field is BIGINT. */
+  private[graft] final case class RuleLayout(ord: Array[Int], isLong: Array[Boolean])
+
+  /** The layout of rule rows of `schema`, fields found by name. */
+  private[graft] def ruleLayout(schema: StructType): RuleLayout = {
+    val ord = SegmentPlans.RuleCols.map(schema.fieldNames.indexOf(_)).toArray
+    RuleLayout(ord, ord.map(i => i >= 0 && schema(i).dataType == LongType))
+  }
+
+  /** Rule rows projected from a `Dataset[ConvRule]`: the join node's rules
+    * side and [[graft.pipeline.RuleRows]]. */
+  private lazy val ProjectedRules = ruleLayout(Encoders.product[ConvRule].schema)
+
+  /** Decode one rule row to the core rule — same mapping as
+    * [[Pipeline.toCoreRule]], with a NULL numeric field as 0 (None for
+    * `DocReceivedId`/`UploadDatasheetid`, which `ConvSegment.of` writes as
+    * 0) and an absent field as NULL. A BIGINT `NoOfPages`/`Occurence` must
+    * fit an INT. The one rule decoder of both `segmentAuto` branches and
+    * of `segment_rows`, which passes its rule struct's layout. */
+  private[graft] def rowToRule(row: InternalRow, layout: RuleLayout = ProjectedRules): Rule = {
+    val ord = layout.ord
+    def present(k: Int): Boolean = ord(k) >= 0 && !row.isNullAt(ord(k))
+    def sOpt(k: Int): Option[String] = Option.when(present(k))(row.getUTF8String(ord(k)).toString)
+    def s(k: Int): String = sOpt(k).getOrElse("")
+    def lOpt(k: Int): Option[Long] = Option.when(present(k))(
+      if (layout.isLong(k)) row.getLong(ord(k)) else row.getInt(ord(k)).toLong)
+    // an out-of-INT-range BIGINT must fail here, not wrap and run the fold
+    // with a wrong page count
+    def int(k: Int): Int = lOpt(k).fold(0) { v =>
+      require(v.isValidInt, s"rule field '${SegmentPlans.RuleCols(k)}' value $v overflows INT")
+      v.toInt
+    }
     Rule(
       // NULL stays None (reference: `identifier.get("DocumentTypeID")`);
       // the other OPTIONAL fields get the same treatment — Some("") for a
@@ -345,14 +376,14 @@ object SegmentJoinExec {
       startingIdentifierPlus1 = s(4),
       endingIdentifier = s(5),
       endingIdentifierMinus1 = s(6),
-      noOfPages = if (row.isNullAt(7)) 0 else row.getInt(7),
-      occurence = if (row.isNullAt(8)) 0 else row.getInt(8),
+      noOfPages = int(7),
+      occurence = int(8),
       startingMinusN = s(9),
       endingMinusN = s(10),
       sequence = sOpt(11),
-      docReceivedId = Some(if (row.isNullAt(12)) 0L else row.getLong(12)),
+      docReceivedId = lOpt(12),
       firmFile = sOpt(13),
-      uploadDatasheetId = Some(if (row.isNullAt(14)) 0L else row.getLong(14)),
+      uploadDatasheetId = lOpt(14),
       sessionId = sOpt(15))
   }
 }

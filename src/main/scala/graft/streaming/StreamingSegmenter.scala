@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.extract.Extractor
-import graft.core.seg.{Demarcator, Rule}
+import graft.core.seg.Rule
+import graft.pipeline.Pipeline
 import graft.schema.{ConvSegment, Turn}
 
 /** Structured Streaming twin of the batch pipeline: `readStream` → per-turn
@@ -36,10 +37,14 @@ object StreamingSegmenter {
       .select(col("window.start").as("window_start"), col("tool"), col("n_turns"))
   }
 
-  /** Stateful segmentation: buffers extracted turns per conversation, emits
-    * the demarcation fold's segments once the conversation has been idle
-    * past the watermark. `rulesFor` must be a deterministic serializable
-    * lookup (broadcast map or generator-backed). */
+  /** Stateful segmentation: buffers extracted turns per conversation and,
+    * once the conversation has been idle past the watermark, folds them
+    * through the batch routes' core, [[Pipeline.GroupFold]], mapping its
+    * rows with `ConvSegment.of`. Identical re-delivered turns collapse; a
+    * conflicting duplicate `turn_idx` quarantines the conversation (zero
+    * segments, logged), as does a malformed rule `Sequence`. `rulesFor`
+    * must be a deterministic serializable lookup (broadcast map or
+    * generator-backed). */
   def segments(
       turns: Dataset[Turn],
       rulesFor: String => Seq[Rule],
@@ -84,22 +89,17 @@ object StreamingSegmenter {
             val deduped = sorted.foldRight(List.empty[(Int, String)]) {
               (cur, acc) => if (acc.nonEmpty && acc.head == cur) acc else cur :: acc
             }
-            val conflicting = deduped.iterator.map(_._1).toSeq
-            if (conflicting.distinct.length != conflicting.length) {
+            if (deduped.map(_._1).distinct.length != deduped.length) {
               org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingSegmenter")
                 .warn(s"quarantined conversation $cid: conflicting duplicate turn_idx")
               Iterator.empty
-            } else {
-              val pages = deduped.map(_._2).toVector
-              // same rule-decode quarantine as every batch route: a
-              // malformed Sequence costs this conversation, not the query
-              val (segRows, decodeFailed) =
-                Demarcator.demarcateIsolated(pages, rulesFor(cid))
-              if (decodeFailed)
-                org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingSegmenter")
-                  .warn(s"quarantined conversation $cid: malformed rule Sequence")
-              segRows.iterator.map(ConvSegment.of(cid, _))
-            }
+            } else
+              // the batch routes' fold core over the already-extracted
+              // pages, with its rule-decode quarantine
+              new Pipeline.GroupFold(
+                deduped.iterator.map { case (idx, text) => (cid, idx, null, text) },
+                rulesFor, (_, text) => text)
+                .flatMap { case (c, segRows) => segRows.iterator.map(ConvSegment.of(c, _)) }
           } else {
             val prev = state.getOption.getOrElse(ConvState(Nil, 0L, 0L))
             val add = rows.map(r => (r.turn_idx, r.text, r.ts.getTime)).toList
@@ -123,9 +123,8 @@ object StreamingSegmenter {
             // the batch fold's single-task budget, enforced on the state
             // store too: fail loudly instead of growing executor state
             // until the task OOMs
-            graft.pipeline.Pipeline.guardConv(cid, st.turns.length, st.nChars,
-              graft.pipeline.Pipeline.DefaultMaxConvPages,
-              graft.pipeline.Pipeline.DefaultMaxConvChars)
+            Pipeline.guardConv(cid, st.turns.length, st.nChars,
+              Pipeline.DefaultMaxConvPages, Pipeline.DefaultMaxConvChars)
             state.update(st)
             // complete once the watermark passes last-turn-ts + idle gap
             state.setTimeoutTimestamp(st.lastTs + idleGapMs)
@@ -288,9 +287,8 @@ object StreamingSegmenter {
             val st = EchoConvState(fresh ::: prev.turns, lastTs,
               prev.nChars + fresh.iterator.map(r =>
                 if (r._3 == null) 0L else r._3.length.toLong).sum)
-            graft.pipeline.Pipeline.guardConv(cid, st.turns.length, st.nChars,
-              graft.pipeline.Pipeline.DefaultMaxConvPages,
-              graft.pipeline.Pipeline.DefaultMaxConvChars)
+            Pipeline.guardConv(cid, st.turns.length, st.nChars,
+              Pipeline.DefaultMaxConvPages, Pipeline.DefaultMaxConvChars)
             state.update(st)
             state.setTimeoutTimestamp(st.lastTs + idleGapMs)
             Iterator.empty

@@ -368,6 +368,21 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("NULL turn_idx in conversation c-null"), e.getMessage)
   }
 
+  test("a duplicate turn_idx fails both fold nodes loudly, naming the conversation") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0L)
+    val turns = Seq(Turn("c-dup", 1, "user", "alpha START", "", ts),
+      Turn("c-dup", 2, "user", "middle", "", ts), Turn("c-dup", 2, "user", "the END", "", ts)).toDS()
+    val rules = Seq(ConvRule("c-dup", "DT", "t", "START", " ", "END", " ",
+      0, 1, " ", " ", "1", 7L, "ff", 9L, "s")).toDS()
+    for (limit <- Seq(1000000L, 0L)) {
+      val e = intercept[org.apache.spark.SparkException](
+        Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit).collect())
+      assert(e.getMessage.contains("turn ordering violated in c-dup: 2 after 2"),
+        s"limit $limit: ${e.getMessage}")
+    }
+  }
+
   test("observe() metrics report extraction row and error counts") {
     import spark.implicits._
     val turns = SyntheticTranscripts.turns(spark, 8, Seed).as[Turn]

@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,33 +11,98 @@ import graft.core.seg.{Demarcator, Rule}
 import graft.gen.SyntheticTranscripts
 import graft.pipeline.Pipeline
 import graft.schema._
+import graft.streaming.StreamingSegmenter
 
 /** Every distributed route × several CORPUS SEEDS against the sequential
   * oracle: PipelineSpec proves route equality on the canonical seed-42
   * corpus; this spec re-derives the invariant on fresh corpus shapes so a
   * route bug that happens to be invisible under one rule/page distribution
   * (e.g. an ordering assumption only violated by a specific Sequence mix)
-  * still fails. All four routes — the broadcast node over a rule map with
-  * a planned and with a pinned (`buckets = 8`) exchange, and `segmentAuto`
-  * (`SubmitMain`'s route) on its two branches: within its rule limits
-  * (rules broadcast as binary rows) and above them (the join node) — must
-  * agree field for field, with shuffled input. */
+  * still fails. All five routes run the one fold core
+  * (`Pipeline.GroupFold`) and must agree row for row, with shuffled input:
+  * the broadcast node over a rule map with a planned and with a pinned
+  * (`buckets = 8`) exchange, `segmentAuto` (`SubmitMain`'s route) on its
+  * two branches — within its rule limits (rules broadcast as binary rows)
+  * and above them (the join node) — the `segment_rows` UDTF and the
+  * streaming fold. Each corpus runs as two tests: the four fold-node legs,
+  * and `segment_rows` with the streaming fold. */
 class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
 
-  /** The four routes, by name. */
-  private def routes(turns: Dataset[Turn], rules: Dataset[ConvRule],
-                     bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] = Seq(
+  /** The fold-node routes, by name. */
+  private def nodeRoutes(turns: Dataset[Turn], rules: Dataset[ConvRule],
+                         bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] = Seq(
     "broadcast node" -> Pipeline.segmentFused(turns, bc),
     "broadcast node, buckets = 8" -> Pipeline.segmentFused(turns, bc, buckets = 8),
     "join node" -> Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 0L),
     "segmentAuto broadcast branch" -> Pipeline.segmentAuto(turns, rules))
 
+  /** The routes off the fold nodes, by name. The streaming query runs
+    * here, to completion. */
+  private def coreRoutes(turns: Dataset[Turn], rules: Dataset[ConvRule],
+                         bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] = Seq(
+    "segment_rows" -> viaSegmentRows(turns, rules),
+    "streaming" -> viaStreaming(turns, bc))
+
+  private val FourRoutes = "all four routes"
+
+  /** The route sets a corpus test runs, under the name its test carries. */
+  private val routeSets = Seq[(String, (Dataset[Turn], Dataset[ConvRule],
+      Broadcast[Map[String, Seq[Rule]]]) => Seq[(String, Dataset[ConvSegment])])](
+    FourRoutes -> nodeRoutes, "segment_rows and the streaming fold" -> coreRoutes)
+
+  /** `segment_rows` over `collect_list(struct(turn_idx, text))` of the
+    * extracted turns, joined to each conversation's collected rules; its
+    * NULLs read as 0 / "", as `ConvSegment.of` writes an absent field. */
+  private def viaSegmentRows(turns: Dataset[Turn], rules: Dataset[ConvRule]): Dataset[ConvSegment] = {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val convTurns = Pipeline.extract(turns).groupBy("conv_id")
+      .agg(collect_list(struct($"turn_idx", $"text")).as("turns"))
+    val ruleFields = rules.columns.filter(_ != "conv_id").map(col).toSeq
+    val convRules = rules.toDF().groupBy("conv_id")
+      .agg(collect_list(struct(ruleFields: _*)).as("rules"))
+    val defaults = Map[String, Any]("DocReceivedId" -> 0L, "UploadDataSheetId" -> 0L,
+      "FileNumber" -> "", "DocumentTypeId" -> "", "Sequence" -> "", "SessionId" -> "")
+    val segs = convTurns.join(convRules, "conv_id").selectExpr("conv_id", "segment_rows(turns, rules)")
+    segs.select(segs.columns.toSeq.map(c =>
+      defaults.get(c).fold(col(c))(d => coalesce(col(c), lit(d)).as(c))): _*).as[ConvSegment]
+  }
+
+  private val streamQueries = new java.util.concurrent.atomic.AtomicInteger
+
+  /** `StreamingSegmenter.segments` over one micro-batch: every turn and a
+    * far-future sentinel turn, whose watermark then closes every
+    * conversation in the next (no-data) batch. */
+  private def viaStreaming(turns: Dataset[Turn],
+                           bc: Broadcast[Map[String, Seq[Rule]]]): Dataset[ConvSegment] = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[Turn]
+    val name = s"route_streaming_${streamQueries.incrementAndGet()}"
+    val rulesFor = (cid: String) => bc.value.getOrElse(cid, Nil)
+    val query = StreamingSegmenter.segments(input.toDS(), rulesFor,
+      watermark = "1 minute", idleGapMs = 60000L)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      val all = turns.collect()
+      input.addData(all.toSeq :+ Turn("conv-sentinel", 1, "user", "x", "",
+        new java.sql.Timestamp(all.map(_.ts.getTime).max + 24 * 3600 * 1000L)))
+      query.processAllAvailable()
+    } finally query.stop()
+    spark.table(name).where($"conv_id" =!= "conv-sentinel").as[ConvSegment]
+  }
+
+  private def routes(turns: Dataset[Turn], rules: Dataset[ConvRule],
+                     bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] =
+    nodeRoutes(turns, rules, bc) ++ coreRoutes(turns, rules, bc)
+
   private def oracle(seed: Long, nConvs: Long): Seq[ConvSegment] =
     (0L until nConvs).flatMap(SegmentOracle.segments(seed, _))
       .sortBy(s => (s.conv_id, s.Sequence.toInt))
 
-  for (seed <- Seq(7L, 1234L, 98765L, 13L, 271828L, 314159L, 5550123L, 86400L)) {
-    test(s"all four routes equal the sequential oracle (corpus seed $seed)") {
+  for (seed <- Seq(7L, 1234L, 98765L, 13L, 271828L, 314159L, 5550123L, 86400L);
+       (label, routesOf) <- routeSets) {
+    test(s"$label equal the sequential oracle (corpus seed $seed)") {
       import spark.implicits._
       val nConvs = 40L
       val want = oracle(seed, nConvs)
@@ -51,7 +117,7 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
       val bc = spark.sparkContext.broadcast(ruleMap)
       def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
         xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-      for ((route, segs) <- routes(turns, rules, bc))
+      for ((route, segs) <- routesOf(turns, rules, bc))
         assert(norm(segs.collect()) == want, route)
     }
   }
@@ -98,8 +164,9 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
 
   import RouteEquivalenceSpec.mutate
 
-  for (seed <- Seq(31L, 4242L, 161803L, 2718L, 777L, 424243L)) {
-    test(s"all four routes equal the sequential fold on an ADVERSARIAL rule corpus (seed $seed)") {
+  for (seed <- Seq(31L, 4242L, 161803L, 2718L, 777L, 424243L);
+       (label, routesOf) <- routeSets) {
+    test(s"$label equal the sequential fold on an ADVERSARIAL rule corpus (seed $seed)") {
       import spark.implicits._
       val nConvs = 25L
       val turns = SyntheticTranscripts.turns(spark, nConvs, seed)
@@ -118,7 +185,7 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
       assert(want.nonEmpty)
       def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
         xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-      for ((route, segs) <- routes(turns, rules, bc))
+      for ((route, segs) <- routesOf(turns, rules, bc))
         assert(norm(segs.collect()) == want, route)
     }
   }
@@ -168,53 +235,57 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
       assert(norm(segs.collect()) == want, route)
   }
 
-  test("poisoned rule decode quarantines ONE conversation identically on all four routes") {
-    import spark.implicits._
-    val (seed, nConvs) = (7L, 12L)
-    // conv-0's rules get Sequence="" (the reference's int("") ValueError),
-    // conv-1's get a non-integer — both must quarantine (zero segments,
-    // job completes); every other conversation must be untouched
-    val poisonedIds = Set(SyntheticTranscripts.convId(0L), SyntheticTranscripts.convId(1L))
-    def poison(r: ConvRule): ConvRule =
-      if (r.conv_id == SyntheticTranscripts.convId(0L)) r.copy(Sequence = "")
-      else if (r.conv_id == SyntheticTranscripts.convId(1L)) r.copy(Sequence = "not-a-number")
-      else r
-    val turns = SyntheticTranscripts.turns(spark, nConvs, seed)
-      .orderBy(hash($"text")).as[Turn]
-    val rules = SyntheticTranscripts.rules(spark, nConvs, seed).map(poison)
-    val ruleMap = (0L until nConvs).map { ci =>
-      SyntheticTranscripts.convId(ci) ->
-        SyntheticTranscripts.rulesFor(seed, ci).map(r => Pipeline.toCoreRule(poison(r)))
-    }.toMap
-    val bc = spark.sparkContext.broadcast(ruleMap)
-    val want = oracle(seed, nConvs).filterNot(s => poisonedIds.contains(s.conv_id))
-    assert(want.nonEmpty)
-    def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
-      xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    def check(got: Array[ConvSegment], route: String): Unit = {
-      assert(got.count(s => poisonedIds.contains(s.conv_id)) == 0,
-        s"$route: poisoned conversations must emit zero segments")
-      assert(norm(got) == want, s"$route: unpoisoned conversations diverged")
+  for ((label, routesOf) <- routeSets) {
+    test(s"poisoned rule decode quarantines ONE conversation identically on $label") {
+      import spark.implicits._
+      val (seed, nConvs) = (7L, 12L)
+      // conv-0's rules get Sequence="" (the reference's int("") ValueError),
+      // conv-1's get a non-integer — both must quarantine (zero segments,
+      // job completes); every other conversation must be untouched
+      val poisonedIds = Set(SyntheticTranscripts.convId(0L), SyntheticTranscripts.convId(1L))
+      def poison(r: ConvRule): ConvRule =
+        if (r.conv_id == SyntheticTranscripts.convId(0L)) r.copy(Sequence = "")
+        else if (r.conv_id == SyntheticTranscripts.convId(1L)) r.copy(Sequence = "not-a-number")
+        else r
+      val turns = SyntheticTranscripts.turns(spark, nConvs, seed)
+        .orderBy(hash($"text")).as[Turn]
+      val rules = SyntheticTranscripts.rules(spark, nConvs, seed).map(poison)
+      val ruleMap = (0L until nConvs).map { ci =>
+        SyntheticTranscripts.convId(ci) ->
+          SyntheticTranscripts.rulesFor(seed, ci).map(r => Pipeline.toCoreRule(poison(r)))
+      }.toMap
+      val bc = spark.sparkContext.broadcast(ruleMap)
+      val want = oracle(seed, nConvs).filterNot(s => poisonedIds.contains(s.conv_id))
+      assert(want.nonEmpty)
+      def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
+        xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
+      def check(got: Array[ConvSegment], route: String): Unit = {
+        assert(got.count(s => poisonedIds.contains(s.conv_id)) == 0,
+          s"$route: poisoned conversations must emit zero segments")
+        assert(norm(got) == want, s"$route: unpoisoned conversations diverged")
+      }
+      for ((route, segs) <- routesOf(turns, rules, bc)) check(segs.collect(), route)
+      if (label == FourRoutes) {
+        // both fold nodes also surface the quarantine in lineage, identically:
+        // every turn in, every segment out, and the two poisoned conversations
+        // PLUS the corpus's planted U+FFFD extraction corruptions as errors
+        val corruptTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci)
+          .count(_.text.indexOf(Extractor.CorruptMarker) >= 0)).sum
+        val nTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci).size).sum
+        def totals(limit: Long): (Long, Long, Long) = {
+          val acc = new graft.pipeline.PartitionStatsAcc
+          spark.sparkContext.register(acc, s"poisoned_route_stats_$limit")
+          Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit, stats = Some(acc)).collect()
+          val v = acc.value.values
+          (v.map(_._1).sum, v.map(_._2).sum, v.map(_._3).sum)
+        }
+        val viaBroadcast = totals(1000000L)
+        assert(viaBroadcast == totals(0L), "broadcast and join nodes must give the same lineage")
+        assert(viaBroadcast == ((nTurns.toLong, want.size.toLong, 2L + corruptTurns)),
+          s"lineage must count $nTurns turns, ${want.size} segments and 2 rule quarantines " +
+            s"+ $corruptTurns extraction corruptions, got $viaBroadcast")
+      }
     }
-    for ((route, segs) <- routes(turns, rules, bc)) check(segs.collect(), route)
-    // both fold nodes also surface the quarantine in lineage, identically:
-    // every turn in, every segment out, and the two poisoned conversations
-    // PLUS the corpus's planted U+FFFD extraction corruptions as errors
-    val corruptTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci)
-      .count(_.text.indexOf(Extractor.CorruptMarker) >= 0)).sum
-    val nTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci).size).sum
-    def totals(limit: Long): (Long, Long, Long) = {
-      val acc = new graft.pipeline.PartitionStatsAcc
-      spark.sparkContext.register(acc, s"poisoned_route_stats_$limit")
-      Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit, stats = Some(acc)).collect()
-      val v = acc.value.values
-      (v.map(_._1).sum, v.map(_._2).sum, v.map(_._3).sum)
-    }
-    val viaBroadcast = totals(1000000L)
-    assert(viaBroadcast == totals(0L), "broadcast and join nodes must give the same lineage")
-    assert(viaBroadcast == ((nTurns.toLong, want.size.toLong, 2L + corruptTurns)),
-      s"lineage must count $nTurns turns, ${want.size} segments and 2 rule quarantines " +
-        s"+ $corruptTurns extraction corruptions, got $viaBroadcast")
   }
 }
 
@@ -224,7 +295,7 @@ object RouteEquivalenceSpec {
   /** Deterministic ADVERSARIAL rule mutation — fat identifiers, missing
     * fields, unicode whitespace, degenerate pipe-alternatives, non-integer
     * offsets — applied identically to the distributed rules and the
-    * sequential oracle, so the four-route equivalence is exercised on rule
+    * sequential oracle, so the route equivalence is exercised on rule
     * shapes the generator never draws. */
   def mutate(r: ConvRule): ConvRule = {
     val h = (r.conv_id + "|" + r.Sequence).hashCode & 0x7fffffff

@@ -101,4 +101,58 @@ class SegmentGeneratorSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("mistyped") || e.getMessage.contains("DATATYPE_MISMATCH"),
       e.getMessage)
   }
+
+  /** One well-typed rule: START … END, one page at the least. */
+  private val OneRule =
+    """array(struct(
+      |  'a' AS DocumentTypeID, 'START' AS StartingIdentifier,
+      |  '' AS StartingIdentifierPlus1, 'END' AS EndingIdentifier,
+      |  '' AS EndingIdentifierMinus1, 0 AS NoOfPages, 1 AS Occurence,
+      |  ' ' AS StartingMinusN, ' ' AS EndingMinusN, '1' AS Sequence))""".stripMargin
+
+  /** `segment_rows(turns, OneRule)` collected; `turns` is a SQL expression. */
+  private def segmentRows(turns: String, rules: String = OneRule): Seq[org.apache.spark.sql.Row] = {
+    GraftFunctions.register(spark)
+    spark.sql(s"SELECT segment_rows($turns, $rules)").collect().toSeq
+  }
+
+  test("segment_rows fails loudly on a duplicate or NULL turn_idx and on a NULL turns element") {
+    val cases = Seq(
+      "array(struct(1 AS turn_idx, 'START' AS text), struct(1 AS turn_idx, 'END' AS text))" ->
+        "turn ordering violated in segment_rows: 1 after 1",
+      "array(struct(1 AS turn_idx, 'START' AS text), struct(CAST(NULL AS INT) AS turn_idx, 'END' AS text))" ->
+        "turn ordering violated in segment_rows: null turn_idx",
+      "array(struct(1 AS turn_idx, 'START' AS text), NULL)" ->
+        "turn ordering violated in segment_rows: null turn_idx")
+    for ((turns, msg) <- cases) {
+      val e = intercept[Exception](segmentRows(turns))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => t.getMessage != null && t.getMessage.contains(msg)), s"$turns: $e")
+    }
+  }
+
+  test("segment_rows over an empty turns array emits nothing, as every batch route") {
+    assert(segmentRows("CAST(array() AS ARRAY<STRUCT<turn_idx: INT, text: STRING>>)").isEmpty)
+    // NULL text reads as "": page 2 still counts
+    val rows = segmentRows(
+      "array(struct(1 AS turn_idx, 'START' AS text), struct(2 AS turn_idx, CAST(NULL AS STRING) AS text), " +
+        "struct(3 AS turn_idx, 'END' AS text))")
+    assert(rows.map(r => (r.getInt(1), r.getInt(2), r.getInt(6))) == Seq((1, 3, 3)), rows)
+  }
+
+  test("segment_rows reads BIGINT counts within INT range and NULLs absent optional fields") {
+    val turns = "array(struct(1 AS turn_idx, 'START x' AS text), struct(2 AS turn_idx, 'y' AS text), " +
+      "struct(3 AS turn_idx, 'END' AS text))"
+    val asInt = segmentRows(turns)
+    assert(asInt.map(r => (r.getInt(1), r.getInt(2))) == Seq((1, 3)), asInt)
+    assert(segmentRows(turns, OneRule.replace("0 AS NoOfPages, 1 AS Occurence",
+      "CAST(0 AS BIGINT) AS NoOfPages, CAST(1 AS BIGINT) AS Occurence")) == asInt)
+    // DocReceivedId, UploadDatasheetid, FileNumber and SessionId are absent
+    val r = asInt.head
+    assert(r.isNullAt(0) && r.isNullAt(3) && r.isNullAt(5) && r.isNullAt(9), r)
+    val e = intercept[Exception](segmentRows(turns,
+      OneRule.replace("0 AS NoOfPages", s"${1L << 40} AS NoOfPages")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(t =>
+      t.getMessage != null && t.getMessage.contains(s"NoOfPages' value ${1L << 40} overflows INT")), e.toString)
+  }
 }
