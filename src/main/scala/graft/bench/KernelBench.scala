@@ -15,6 +15,10 @@ import graft.schema.Turn
   * this box in this window, so recording both in one JSON lets a reader
   * tell hardware weather (kernel ceiling moved) from a Spark regression
   * (pipeline fell away from the ceiling).
+  *
+  * `main` first prints each tool's warm single-thread cost ([[warmPerTool]]:
+  * median µs/turn over [[Reps]] passes after one discarded warm-up pass),
+  * then the throughput of each thread level.
   * Usage: runMain graft.bench.KernelBench [nConvs] [threadList]
   */
 object KernelBench {
@@ -62,12 +66,49 @@ object KernelBench {
     levels.map(t => t -> Scaling.median((1 to 3).map(_ => measure(turns, t)))).toMap
   }
 
+  /** Timed single-thread passes per tool in [[warmPerTool]]. */
+  private val Reps = 7
+
+  /** Extracted chars of every pass, summed so the JIT cannot drop the work. */
+  @volatile private var sink = 0L
+
+  /** Median µs/turn of one thread extracting each tool's turns, over
+    * [[Reps]] passes after one discarded warm-up pass (JIT + page-in).
+    * Each pass times the tools in turn, so drift in the window reaches all
+    * of them alike. Keys are `tool` values (`""` is passthrough). */
+  private def warmPerTool(turns: Array[Turn]): Seq[(String, Int, Double)] = {
+    val byTool = turns.groupBy(_.tool).toSeq.sortBy(_._1)
+    def pass(ts: Array[Turn]): Double = {
+      val t0 = System.nanoTime()
+      var chars = 0L
+      var i = 0
+      while (i < ts.length) {
+        chars += Extractor.safeExtract(ts(i).tool, ts(i).text)._1.text.length
+        i += 1
+      }
+      val us = (System.nanoTime() - t0) / 1e3 / ts.length
+      sink += chars
+      us
+    }
+    byTool.foreach { case (_, ts) => pass(ts): Unit }
+    val samples = (1 to Reps).map(_ => byTool.map { case (_, ts) => pass(ts) })
+    byTool.indices.map { k =>
+      val (tool, ts) = byTool(k)
+      (tool, ts.length, Scaling.median(samples.map(_(k))))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val nConvs = if (args.length > 0) args(0).toInt else 8000
     val threadLevels = if (args.length > 1) args(1).split(",").toSeq.map(_.toInt) else Seq(1, 8, 32)
 
     val turns = (0 until nConvs).flatMap(i => SyntheticTranscripts.turnsFor(42L, i.toLong)).toArray
     println(s"corpus: ${turns.length} turns")
+
+    warmPerTool(turns).foreach { case (tool, n, us) =>
+      val name = if (tool.isEmpty) "passthrough" else tool
+      println(f"tool=$name%-11s turns=$n%6d warm_median_us_per_turn=$us%.2f (1 thread, $Reps reps)")
+    }
 
     measure(turns, threadLevels.max): Unit // warmup
     threadLevels.foreach { t =>

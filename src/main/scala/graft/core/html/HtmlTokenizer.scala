@@ -11,12 +11,36 @@ package graft.core.html
   *
   * Emits events through a [[HtmlSink]] with **raw char-span offsets** into
   * the original payload, so downstream spans survive normalization.
+  *
+  * One pass per payload: text between tags is found with `indexOf('<')` and
+  * handed to the sink as a range of the payload ([[HtmlSink.onTextRange]]),
+  * so a sink with its own buffer decodes it straight into that buffer
+  * ([[HtmlTokenizer.decodeInto]] appends each run between `&`s in bulk and
+  * writes each reference's replacement in place). `&`s are found with
+  * `indexOf` too, once per payload, and a range without one is passed as
+  * plain text, to be appended whole. Tag names of HTML elements come back
+  * as shared interned strings, so naming a tag allocates nothing.
   */
 trait HtmlSink {
   def onStartTag(name: String, selfClosing: Boolean, start: Int, end: Int): Unit
   def onEndTag(name: String, start: Int, end: Int): Unit
   /** Decoded text (entities resolved); [start,end) is the raw span. */
   def onText(text: String, start: Int, end: Int): Unit
+  /** The text node `s[start,end)`, with character references still in it
+    * when `decode`; otherwise the range is the node's text as is (no `&` in
+    * it, or inside a RAWTEXT element). The default resolves references into
+    * a `String` for [[onText]]; a sink that keeps its own buffer overrides
+    * this to decode into it with [[HtmlTokenizer.decodeInto]]. */
+  def onTextRange(s: String, start: Int, end: Int, decode: Boolean): Unit = {
+    val text =
+      if (!decode) s.substring(start, end)
+      else {
+        val sb = new java.lang.StringBuilder(end - start)
+        HtmlTokenizer.decodeInto(s, start, end, sb)
+        sb.toString
+      }
+    onText(text, start, end)
+  }
 }
 
 object HtmlTokenizer {
@@ -46,30 +70,70 @@ object HtmlTokenizer {
     "thinsp" -> " ", "zwnj" -> "‌", "zwj" -> "‍"
   )
 
+  /** HTML element names, returned interned by [[scanName]]. */
+  private val KnownTags: Array[String] = Array(
+    "a", "abbr", "address", "applet", "area", "article", "aside", "audio",
+    "b", "base", "bdi", "bdo", "big", "blockquote", "body", "br", "button",
+    "canvas", "caption", "center", "cite", "code", "col", "colgroup", "data",
+    "datalist", "dd", "del", "details", "dfn", "dialog", "div", "dl", "dt",
+    "em", "embed", "fieldset", "figcaption", "figure", "font", "footer",
+    "form", "h1", "h2", "h3", "h4", "h5", "h6", "head", "header", "hgroup",
+    "hr", "html", "i", "iframe", "img", "input", "ins", "kbd", "label",
+    "legend", "li", "link", "main", "map", "mark", "math", "menu", "meta",
+    "meter", "nav", "noscript", "object", "ol", "optgroup", "option",
+    "output", "p", "param", "picture", "pre", "progress", "q", "rp", "rt",
+    "ruby", "s", "samp", "script", "section", "select", "slot", "small",
+    "source", "span", "strike", "strong", "style", "sub", "summary", "sup",
+    "svg", "table", "tbody", "td", "template", "textarea", "tfoot", "th",
+    "thead", "time", "title", "tr", "track", "tt", "u", "ul", "var", "video",
+    "wbr", "xmp"
+  )
+
+  /** Open-addressed by `String.hashCode`, which [[scanName]] computes over
+    * the lowered chars as it scans them. */
+  private val TagTable: Array[String] = {
+    val t = new Array[String](512)
+    KnownTags.foreach { name =>
+      var k = name.hashCode & (t.length - 1)
+      while (t(k) != null) k = (k + 1) & (t.length - 1)
+      t(k) = name
+    }
+    t
+  }
+
   @inline private def isAsciiAlpha(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 
   @inline private def lowerAscii(c: Char): Char =
     if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
 
-  /** Decode character references in s[from,to) appending to sb. */
-  private def decodeInto(s: String, from: Int, to: Int, sb: java.lang.StringBuilder): Unit = {
+  @inline private def isNameChar(c: Char): Boolean =
+    isAsciiAlpha(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
+
+  /** Decode character references in s[from,to) appending to sb: each run
+    * between `&`s is appended in one call. */
+  private[html] def decodeInto(s: String, from: Int, to: Int, sb: java.lang.StringBuilder): Unit = {
+    var run = from
     var i = from
     while (i < to) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val res = tryEntity(s, i, to)
-        if (res != null) { sb.append(res._1); i = res._2 }
-        else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+      if (s.charAt(i) != '&') i += 1
+      else {
+        sb.append(s, run, i)
+        val next = appendEntity(s, i, to, sb)
+        if (next < 0) { sb.append('&'); i += 1 }
+        else i = next
+        run = i
+      }
     }
+    sb.append(s, run, to)
   }
 
-  /** Attempt to parse a character reference at s(i)=='&'; returns
-    * (decoded, nextIndex) or null. */
-  private def tryEntity(s: String, i: Int, to: Int): (String, Int) = {
+  /** Attempt to parse a character reference at s(i)=='&'; appends its
+    * replacement to sb and returns the index after it, or -1 (nothing
+    * appended) when there is none. */
+  private def appendEntity(s: String, i: Int, to: Int, sb: java.lang.StringBuilder): Int = {
     var j = i + 1
-    if (j >= to) return null
+    if (j >= to) return -1
     if (s.charAt(j) == '#') {
       j += 1
       var cp = 0
@@ -84,22 +148,21 @@ object HtmlTokenizer {
           cp = cp * 10 + (s.charAt(j) - '0'); any = true; j += 1
         }
       }
-      if (!any) return null
+      if (!any) return -1
       if (j < to && s.charAt(j) == ';') j += 1
-      val safe =
-        if (cp == 0 || cp > 0x10FFFF || (cp >= 0xD800 && cp <= 0xDFFF)) "�"
-        else new String(Character.toChars(cp))
-      (safe, j)
+      if (cp == 0 || cp > 0x10FFFF || (cp >= 0xD800 && cp <= 0xDFFF)) sb.append('\uFFFD')
+      else sb.appendCodePoint(cp)
+      j
     } else {
       var k = j
       while (k < to && k - j < 10 && (isAsciiAlpha(s.charAt(k)) || (s.charAt(k) >= '0' && s.charAt(k) <= '9'))) k += 1
-      if (k == j) return null
+      if (k == j) return -1
       val name = s.substring(j, k)
       Entities.get(name) match {
-        case Some(v) if k < to && s.charAt(k) == ';' => (v, k + 1)
+        case Some(v) if k < to && s.charAt(k) == ';' => sb.append(v); k + 1
         case Some(v) if name == "amp" || name == "lt" || name == "gt" ||
-            name == "quot" || name == "nbsp" => (v, k) // legacy no-semicolon
-        case _ => null
+            name == "quot" || name == "nbsp" => sb.append(v); k // legacy no-semicolon
+        case _ => -1
       }
     }
   }
@@ -109,121 +172,146 @@ object HtmlTokenizer {
   @inline private def hexVal(c: Char): Int =
     if (c <= '9') c - '0' else (lowerAscii(c) - 'a') + 10
 
-  /** Scan a tag name starting at i; returns (lowercased name, next index). */
-  private def scanName(s: String, i0: Int): (String, Int) = {
-    var i = i0
-    val sb = new java.lang.StringBuilder(8)
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (isAsciiAlpha(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':') {
-        sb.append(lowerAscii(c)); i += 1
-      } else return (sb.toString, i)
+  /** One payload's scan state: the position after the last name or tag
+    * scanned, and whether that tag closed with `/`. */
+  private final class Scan(s: String, sink: HtmlSink) {
+    private val n = s.length
+    private var i = 0
+    private var textStart = 0
+    private var selfClosing = false
+    /** The first '&' at or after the last text range asked about (n if
+      * none): ranges only move forward, so each char is searched once. */
+    private var amp = -1
+
+    /** Whether s[from,to) holds a '&', i.e. may hold a reference. */
+    private def hasAmp(from: Int, to: Int): Boolean = {
+      if (amp < from) {
+        amp = s.indexOf('&', from)
+        if (amp < 0) amp = n
+      }
+      amp < to
     }
-    (sb.toString, i)
-  }
 
-  /** Skip attributes; returns (index after '>', selfClosing). Quote-aware. */
-  private def skipAttrs(s: String, i0: Int): (Int, Boolean) = {
-    var i = i0
-    var selfClosing = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '>') return (i + 1, selfClosing)
-      else if (c == '"' || c == '\'') {
-        val q = c
-        i += 1
-        while (i < s.length && s.charAt(i) != q) i += 1
-        if (i < s.length) i += 1
-        selfClosing = false
-      } else if (c == '/') { selfClosing = true; i += 1 }
-      else { if (c != ' ' && c != '\t' && c != '\n' && c != '\r' && c != '=') selfClosing = false; i += 1 }
+    private def flushText(upTo: Int): Unit =
+      if (upTo > textStart) sink.onTextRange(s, textStart, upTo, decode = hasAmp(textStart, upTo))
+
+    /** Scan a tag name starting at i0 into `i`; returns it lowercased, the
+      * interned string for an HTML element name. */
+    private def scanName(i0: Int): String = {
+      var j = i0
+      var h = 0
+      var upper = false
+      while (j < n && isNameChar(s.charAt(j))) {
+        val c = s.charAt(j)
+        upper |= c >= 'A' && c <= 'Z'
+        h = 31 * h + lowerAscii(c)
+        j += 1
+      }
+      i = j
+      val len = j - i0
+      var k = h & (TagTable.length - 1)
+      while (TagTable(k) != null) {
+        val t = TagTable(k)
+        if (t.length == len) {
+          var m = 0
+          while (m < len && lowerAscii(s.charAt(i0 + m)) == t.charAt(m)) m += 1
+          if (m == len) return t
+        }
+        k = (k + 1) & (TagTable.length - 1)
+      }
+      val raw = s.substring(i0, j)
+      if (upper) raw.toLowerCase(java.util.Locale.ROOT) else raw
     }
-    (i, selfClosing) // unterminated tag: runs to EOF
-  }
 
-  def tokenize(s: String, sink: HtmlSink): Unit = {
-    val n = s.length
-    var i = 0
-    var textStart = 0
-
-    def flushText(upTo: Int): Unit = {
-      if (upTo > textStart) {
-        val sb = new java.lang.StringBuilder(upTo - textStart)
-        decodeInto(s, textStart, upTo, sb)
-        sink.onText(sb.toString, textStart, upTo)
+    /** Skip attributes from `i` to after '>' (or EOF: an unterminated tag
+      * runs to the end) and set `selfClosing`. Quote-aware. */
+    private def skipAttrs(): Unit = {
+      selfClosing = false
+      while (i < n) {
+        val c = s.charAt(i)
+        if (c == '>') { i += 1; return }
+        else if (c == '"' || c == '\'') {
+          i += 1
+          while (i < n && s.charAt(i) != c) i += 1
+          if (i < n) i += 1
+          selfClosing = false
+        } else if (c == '/') { selfClosing = true; i += 1 }
+        else { if (c != ' ' && c != '\t' && c != '\n' && c != '\r' && c != '=') selfClosing = false; i += 1 }
       }
     }
 
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c != '<') i += 1
-      else if (i + 1 >= n) i += 1 // trailing bare '<' is text
-      else {
-        val c1 = s.charAt(i + 1)
-        if (isAsciiAlpha(c1)) {
-          flushText(i)
-          val tagStart = i
-          val (name, afterName) = scanName(s, i + 1)
-          val (afterTag, selfClosing) = skipAttrs(s, afterName)
-          sink.onStartTag(name, selfClosing, tagStart, afterTag)
-          i = afterTag
-          textStart = i
-          if (!selfClosing && RawText.contains(name)) {
-            // consume raw text until matching </name (case-insensitive)
-            val close = "</" + name
-            var j = i
-            var found = -1
-            while (found < 0 && j <= n - close.length) {
-              var k = 0
-              while (k < close.length && lowerAscii(s.charAt(j + k)) == close.charAt(k)) k += 1
-              if (k == close.length) found = j else j += 1
-            }
-            val rawEnd = if (found < 0) n else found
-            if (rawEnd > i) sink.onText(s.substring(i, rawEnd), i, rawEnd)
-            if (found < 0) { i = n; textStart = n }
-            else {
-              val (_, afterCloseName) = scanName(s, found + 2)
-              val (afterClose, _) = skipAttrs(s, afterCloseName)
-              sink.onEndTag(name, found, afterClose)
-              i = afterClose
+    /** Skip a bogus comment from `from` to after the next '>' (or EOF). */
+    private def skipToGt(from: Int): Unit = {
+      val gt = s.indexOf('>', from)
+      i = if (gt < 0) n else gt + 1
+    }
+
+    /** Start of the first `</name` at or after `from`, ASCII case-insensitive
+      * on the name; -1 if none. */
+    private def findClose(name: String, from: Int): Int = {
+      val len = name.length + 2
+      var j = s.indexOf('<', from)
+      while (j >= 0 && j <= n - len) {
+        if (s.charAt(j + 1) == '/') {
+          var k = 0
+          while (k < name.length && lowerAscii(s.charAt(j + 2 + k)) == name.charAt(k)) k += 1
+          if (k == name.length) return j
+        }
+        j = s.indexOf('<', j + 1)
+      }
+      -1
+    }
+
+    def run(): Unit = {
+      while (i < n) {
+        val lt = s.indexOf('<', i)
+        if (lt < 0 || lt + 1 >= n) i = n // no tag left; a trailing bare '<' is text
+        else {
+          val c1 = s.charAt(lt + 1)
+          if (isAsciiAlpha(c1)) {
+            flushText(lt)
+            val name = scanName(lt + 1)
+            skipAttrs()
+            sink.onStartTag(name, selfClosing, lt, i)
+            textStart = i
+            if (!selfClosing && RawText.contains(name)) {
+              // consume raw text until matching </name (case-insensitive)
+              val found = findClose(name, i)
+              val rawEnd = if (found < 0) n else found
+              if (rawEnd > i) sink.onTextRange(s, i, rawEnd, decode = false)
+              if (found < 0) i = n
+              else {
+                scanName(found + 2)
+                skipAttrs()
+                sink.onEndTag(name, found, i)
+              }
               textStart = i
             }
-          }
-        } else if (c1 == '/') {
-          if (i + 2 < n && isAsciiAlpha(s.charAt(i + 2))) {
-            flushText(i)
-            val (name, afterName) = scanName(s, i + 2)
-            val (afterTag, _) = skipAttrs(s, afterName)
-            sink.onEndTag(name, i, afterTag)
-            i = afterTag
+          } else if (c1 == '/') {
+            flushText(lt)
+            if (lt + 2 < n && isAsciiAlpha(s.charAt(lt + 2))) {
+              val name = scanName(lt + 2)
+              skipAttrs()
+              sink.onEndTag(name, lt, i)
+            } else skipToGt(lt + 2) // "</>" or "</3" — bogus comment per spec
             textStart = i
-          } else { // "</>" or "</3" — bogus comment per spec; skip to '>'
-            flushText(i)
-            var j = i + 2
-            while (j < n && s.charAt(j) != '>') j += 1
-            i = if (j < n) j + 1 else n
+          } else if (c1 == '!') {
+            flushText(lt)
+            if (lt + 3 < n && s.charAt(lt + 2) == '-' && s.charAt(lt + 3) == '-') {
+              val end = s.indexOf("-->", lt + 4)
+              i = if (end < 0) n else end + 3
+            } else skipToGt(lt + 2) // <!DOCTYPE, <![CDATA[ (treated as bogus), <!...
             textStart = i
-          }
-        } else if (c1 == '!') {
-          flushText(i)
-          if (i + 3 < n && s.charAt(i + 2) == '-' && s.charAt(i + 3) == '-') {
-            val end = s.indexOf("-->", i + 4)
-            i = if (end < 0) n else end + 3
-          } else { // <!DOCTYPE, <![CDATA[ (treated as bogus), <!...
-            var j = i + 2
-            while (j < n && s.charAt(j) != '>') j += 1
-            i = if (j < n) j + 1 else n
-          }
-          textStart = i
-        } else if (c1 == '?') { // processing instruction / bogus
-          flushText(i)
-          var j = i + 2
-          while (j < n && s.charAt(j) != '>') j += 1
-          i = if (j < n) j + 1 else n
-          textStart = i
-        } else i += 1 // bare '<' followed by junk: literal text
+          } else if (c1 == '?') { // processing instruction / bogus
+            flushText(lt)
+            skipToGt(lt + 2)
+            textStart = i
+          } else i = lt + 1 // bare '<' followed by junk: literal text
+        }
       }
+      flushText(n)
     }
-    flushText(n)
   }
+
+  def tokenize(s: String, sink: HtmlSink): Unit = new Scan(s, sink).run()
 }

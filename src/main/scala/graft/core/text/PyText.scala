@@ -123,6 +123,12 @@ object PyText {
     if (wsSet.get(c)) AsciiWs else if (c >= 'A' && c <= 'Z') AsciiUpper else AsciiOther
   }
 
+  /** [[isPyWs]] of one UTF-16 char, by the class table when ASCII. No
+    * surrogate is whitespace, so a word count by char equals one by code
+    * point. */
+  @inline def isPyWsChar(c: Char): Boolean =
+    if (c < 0x80) asciiClass(c) == AsciiWs else wsSet.get(c)
+
   /** `str.lower()` of each ASCII char: only `A`–`Z` change. */
   private val asciiLowerByte: Array[Byte] =
     Array.tabulate[Byte](128)(c => (if (c >= 'A' && c <= 'Z') c + 32 else c).toByte)

@@ -78,28 +78,21 @@ object StreamingSegmenter {
             // an at-least-once source legitimately re-delivers a turn
             // across micro-batches: identical (turn_idx, text) duplicates
             // are dropped at state-UPDATE time (so they never inflate the
-            // guardConv budget or sit in the state store); the collapse
-            // here (sort by the pair, drop equal neighbors) is defense in
-            // depth. Only a genuinely CONFLICTING duplicate — same
-            // turn_idx, different text — remains, and that quarantines
-            // the conversation (zero segments, the batch pipeline's E5
+            // guardConv budget or sit in the state store); the close-time
+            // policy collapses any left and quarantines a genuinely
+            // CONFLICTING duplicate (zero segments, the batch pipeline's E5
             // whole-doc-failure shape) instead of `require`-poisoning a
             // query that could never restart past the bad input.
-            val sorted = st.turns.sortBy(t => (t._1, t._2))
-            val deduped = sorted.foldRight(List.empty[(Int, String)]) {
-              (cur, acc) => if (acc.nonEmpty && acc.head == cur) acc else cur :: acc
+            closeTurns(cid, st.turns)(_._1) match {
+              case None => Iterator.empty
+              case Some(deduped) =>
+                // the batch routes' fold core over the already-extracted
+                // pages, with its rule-decode quarantine
+                new Pipeline.GroupFold(
+                  deduped.iterator.map { case (idx, text) => (cid, idx, null, text) },
+                  rulesFor, (_, text) => text)
+                  .flatMap { case (c, segRows) => segRows.iterator.map(ConvSegment.of(c, _)) }
             }
-            if (deduped.map(_._1).distinct.length != deduped.length) {
-              org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingSegmenter")
-                .warn(s"quarantined conversation $cid: conflicting duplicate turn_idx")
-              Iterator.empty
-            } else
-              // the batch routes' fold core over the already-extracted
-              // pages, with its rule-decode quarantine
-              new Pipeline.GroupFold(
-                deduped.iterator.map { case (idx, text) => (cid, idx, null, text) },
-                rulesFor, (_, text) => text)
-                .flatMap { case (c, segRows) => segRows.iterator.map(ConvSegment.of(c, _)) }
           } else {
             val prev = state.getOption.getOrElse(ConvState(Nil, 0L, 0L))
             val add = rows.map(r => (r.turn_idx, r.text, r.ts.getTime)).toList
@@ -220,6 +213,21 @@ object StreamingSegmenter {
       }
   }
 
+  /** The close-time duplicate policy of [[segments]] and [[echoVerdicts]]
+    * over one conversation's buffered rows: sort by `turnIdx` (stable),
+    * drop identical neighbours, and quarantine the conversation (None, with
+    * a WARN) when a turn_idx still repeats with different content. */
+  private[graft] def closeTurns[T](cid: String, rows: List[T])(turnIdx: T => Int): Option[List[T]] = {
+    val deduped = rows.sortBy(turnIdx).foldRight(List.empty[T]) {
+      (cur, acc) => if (acc.nonEmpty && acc.head == cur) acc else cur :: acc
+    }
+    if (deduped.iterator.zip(deduped.iterator.drop(1)).exists { case (a, b) => turnIdx(a) == turnIdx(b) }) {
+      org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingSegmenter")
+        .warn(s"quarantined conversation $cid: conflicting duplicate turn_idx")
+      None
+    } else Some(deduped)
+  }
+
   final case class EchoConvState(turns: List[(Int, String, String)], lastTs: Long, nChars: Long)
   final case class EchoVerdict(conv_id: String, turn_idx: Int, n_distinct_tokens: Long,
                                overlap_ppm: Long, is_echo: Boolean)
@@ -255,24 +263,21 @@ object StreamingSegmenter {
           if (state.hasTimedOut) {
             val st = state.get
             state.remove()
-            val sorted = st.turns.sortBy(_._1)
-            if (sorted.iterator.map(_._1).toSeq.distinct.length != sorted.length) {
-              org.slf4j.LoggerFactory.getLogger("graft.streaming.StreamingSegmenter")
-                .warn(s"quarantined conversation $cid: conflicting duplicate turn_idx")
-              Iterator.empty
-            } else {
-              var lastUser: Option[Set[String]] = None
-              sorted.iterator.flatMap { case (idx, role, text) =>
-                if (role == "user") {
-                  if (text != null) lastUser = Some(text.split(" ", -1).toSet)
-                  Iterator.empty
-                } else if (role == "assistant" && text != null && lastUser.isDefined) {
-                  val toks = text.split(" ", -1).distinct
-                  val overlap = toks.count(lastUser.get.contains) * 1000000L / toks.length
-                  Iterator.single(EchoVerdict(cid, idx, toks.length.toLong,
-                    overlap, overlap >= thresholdPpm))
-                } else Iterator.empty
-              }.toVector.iterator
+            closeTurns(cid, st.turns)(_._1) match {
+              case None => Iterator.empty
+              case Some(sorted) =>
+                var lastUser: Option[Set[String]] = None
+                sorted.iterator.flatMap { case (idx, role, text) =>
+                  if (role == "user") {
+                    if (text != null) lastUser = Some(text.split(" ", -1).toSet)
+                    Iterator.empty
+                  } else if (role == "assistant" && text != null && lastUser.isDefined) {
+                    val toks = text.split(" ", -1).distinct
+                    val overlap = toks.count(lastUser.get.contains) * 1000000L / toks.length
+                    Iterator.single(EchoVerdict(cid, idx, toks.length.toLong,
+                      overlap, overlap >= thresholdPpm))
+                  } else Iterator.empty
+                }.toVector.iterator
             }
           } else {
             val prev = state.getOption.getOrElse(EchoConvState(Nil, 0L, 0L))

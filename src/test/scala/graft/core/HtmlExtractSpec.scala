@@ -54,6 +54,20 @@ class HtmlExtractSpec extends AnyFunSuite {
     assert(ts.count(_._1 == "start") == 2)
   }
 
+  test("tokenizer: a sink with only onText gets decoded text and raw spans") {
+    // one text node that entities split at both edges, then a legacy
+    // reference with no ';' as a whole node
+    val h = "<p>&amp;mid&#x41;</p><b>&lt</b>"
+    assert(tokens(h) == Vector(
+      ("start", "p", 0, 3),
+      ("text", "&midA", 3, 17),
+      ("end", "p", 17, 21),
+      ("start", "b", 21, 24),
+      ("text", "<", 24, 27),
+      ("end", "b", 27, 31)
+    ))
+  }
+
   test("blocks: anchor word counting and link density") {
     val h = "<div><a href='/x'>home</a> <a href='/y'>about us</a></div>" +
       "<p>real content paragraph with many plain words here</p>"

@@ -120,6 +120,15 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "conflicting duplicate turn_idx must quarantine the conversation")
   }
 
+  test("close-time duplicate policy: sorted, identical rows collapse, a conflict quarantines") {
+    val policy = StreamingSegmenter.closeTurns[(Int, String)]("conv-x", _: List[(Int, String)])(_._1)
+    assert(policy(List(3 -> "c", 1 -> "a", 2 -> "b")) == Some(List(1 -> "a", 2 -> "b", 3 -> "c")))
+    assert(policy(List(2 -> "b", 1 -> "a", 2 -> "b", 2 -> "b")) == Some(List(1 -> "a", 2 -> "b")))
+    assert(policy(List(1 -> "a", 2 -> "b", 1 -> "z")).isEmpty)
+    assert(policy(List(1 -> "a", 1 -> "z", 1 -> "a")).isEmpty)
+    assert(policy(Nil) == Some(Nil))
+  }
+
   test("streaming echo verdicts equal the batch twin on closed input; redelivery-safe") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
