@@ -23,27 +23,22 @@ import graft.schema.{ConvRule, Turn}
   * Reads the turns table, segments per conversation, and commits TWO
   * snapshots to the output [[SnapshotStore]]: the segment rows and the
   * per-partition lineage/metrics rows. One route, `Pipeline.segmentAuto`:
-  * raw turns shuffle by `conv_id` into a fold node that extracts and
-  * segments in one pass, rules broadcast at or below
-  * `--broadcast-rule-limit` rules (default 1e6) AND `--broadcast-byte-limit`
-  * estimated heap bytes (default 256 MiB), else a co-partitioned child plan
-  * of the join node (no driver rule state). One job over the rules sizes
-  * the corpus and, while each of its P tasks stays within 1/P of both
-  * limits, returns the rows too (else, when the total fits, a second
-  * collect caps each partition at its first count), so the driver never
-  * receives more than the limits; past ~2 GiB of binary rule rows the join
-  * node runs. The nodes declare `ClusteredDistribution(conv_id)`, so a
-  * turns table bucketed by `conv_id` is not shuffled at all. A hot
-  * conversation is extracted and folded in one task, buffered under
+  * raw turns and the rules table shuffle by `conv_id` into the join node,
+  * which attaches each conversation's rules and extracts and segments in
+  * one pass. No rule row reaches the driver. The node declares
+  * `ClusteredDistribution(conv_id)` on both sides, so a table bucketed by
+  * `conv_id` is not shuffled at all. A hot conversation is extracted and
+  * folded in one task, buffered under
   * `Pipeline.DefaultMaxConvPages`/`DefaultMaxConvChars`; that beat a salted
   * extraction stage ahead of the fold on hot-conversation input (see
   * [[Pipeline]]).
   *
-  * `--buckets N` pins the conv_id shuffle at N partitions. Without it the
-  * shuffle starts from `spark.sql.shuffle.partitions` and AQE (on by
-  * default) coalesces small partitions, so a small delta is not written as
-  * hundreds of tiny files. Every flag takes a value; any other `--name`, or
-  * a flag without a value, is rejected before any work.
+  * `--buckets N` pins the conv_id shuffle of both the turns and the rules
+  * at N partitions. Without it the shuffle starts from
+  * `spark.sql.shuffle.partitions` and AQE (on by default) coalesces small
+  * partitions, so a small delta is not written as hundreds of tiny files.
+  * Every flag takes a value; any other `--name`, or a flag without a
+  * value, is rejected before any work.
   *
   * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE the single
   * pass that materializes the segments — extraction never runs twice.
@@ -59,7 +54,7 @@ object SubmitMain {
 
   /** Every flag [[main]] reads; a typo must fail, not run the default. */
   private val KnownFlags = Seq("turns", "rules", "synthetic-convs", "seed", "out",
-    "format", "master", "buckets", "broadcast-rule-limit", "broadcast-byte-limit")
+    "format", "master", "buckets")
 
   private def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
@@ -128,14 +123,9 @@ object SubmitMain {
       }
 
     val buckets = opts.get("buckets").map(_.toInt).getOrElse(0)
-    val ruleLimit = opts.get("broadcast-rule-limit").map(_.toLong).getOrElse(1000000L)
-    val byteLimit = opts.get("broadcast-byte-limit").map(_.toLong).getOrElse(256L << 20)
     val stats = new PartitionStatsAcc
     spark.sparkContext.register(stats, "graft.partition_lineage")
-    // broadcast vs join node by rule-corpus size (count AND estimated heap
-    // bytes — fat rules take the join node)
-    val segments =
-      Pipeline.segmentAuto(turns, rules, buckets, ruleLimit, Some(stats), byteLimit).toDF()
+    val segments = Pipeline.segmentAuto(turns, rules, buckets, Some(stats)).toDF()
 
     val store = new SnapshotStore(out)
     // the ONE pass over the turns: fills `stats` while writing segments

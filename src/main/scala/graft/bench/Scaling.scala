@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import graft.gen.SyntheticTranscripts
 import graft.io.SnapshotStore
 import graft.pipeline.Pipeline
-import graft.schema.Turn
+import graft.schema.{ConvRule, Turn}
 
 /** Two-cluster-size scaling evidence for the north rule ("throughput
   * scaling efficiency ≥ 0.8 from N to 4N executors"). No real cluster
@@ -20,7 +20,7 @@ import graft.schema.Turn
   * Measurement protocol (see BENCH.md for the full justification):
   *
   *  - '''one long-lived child JVM per level''' (ParallelGC, GC threads =
-  *    task threads, fixed heap): levels never share JIT/GC/broadcast state,
+  *    task threads, fixed heap): levels never share JIT/GC state,
   *    and the JIT warmup cost is paid once per level;
   *  - '''alternating bursts''': the two children take turns running short
   *    timed bursts (stdin `GO`/stdout `REP` protocol), so a host-noise
@@ -468,8 +468,9 @@ object Scaling {
   }
 }
 
-/** Child-JVM entry that generates and writes the scaling input corpus
-  * (see [[Scaling.materializeInChild]]). Prints `TURNS <count>`. */
+/** Child-JVM entry that generates and writes the scaling input corpus,
+  * `$dir/turns` and `$dir/rules` (see [[Scaling.materializeInChild]]).
+  * Prints `TURNS <count>`. */
 object MaterializeRunner {
   def main(args: Array[String]): Unit = {
     val Array(dir, nConvs, seed, cpus) = args
@@ -477,13 +478,15 @@ object MaterializeRunner {
     try {
       SyntheticTranscripts.turns(spark, nConvs.toLong, seed.toLong)
         .write.mode("overwrite").parquet(s"$dir/turns")
+      SyntheticTranscripts.rules(spark, nConvs.toLong, seed.toLong)
+        .write.mode("overwrite").parquet(s"$dir/rules")
       println("TURNS " + spark.read.parquet(s"$dir/turns").count())
     } finally spark.stop()
   }
 }
 
 /** Child-JVM entry for one scaling level under the alternating-burst
-  * protocol (see [[Scaling]]): set up the session + broadcast rules + JIT
+  * protocol (see [[Scaling]]): set up the session + JIT
   * warmup ONCE, then serve timed bursts on demand. Ballast spinners engage
   * only while a burst runs, so the idle level never steals cycles from the
   * measuring one. */
@@ -499,12 +502,12 @@ object BurstLevelRunner {
       new java.io.OutputStreamWriter(System.out, "UTF-8"), true)
     try {
       import spark.implicits._
-      val ruleMap = SyntheticTranscripts.rules(spark, nConvs, seed).collect()
-        .groupBy(_.conv_id).map { case (k, v) => k -> v.toSeq.map(Pipeline.toCoreRule) }
-      val bc = spark.sparkContext.broadcast(ruleMap)
+      // the production route over the two parquet dirs: rules co-partition
+      // with the turns in the join node, nothing is collected to the driver
+      val rules = spark.read.parquet(s"$dir/rules").as[ConvRule]
       def job(): Long = {
         val turns = spark.read.parquet(s"$dir/turns").as[Turn]
-        Pipeline.segmentFused(turns, bc).count()
+        Pipeline.segmentAuto(turns, rules).count()
       }
       def gcMs: Long = Scaling.gcMs
       // warmup under ballast (same occupancy as the timed reps): a small
@@ -513,10 +516,10 @@ object BurstLevelRunner {
       // first timed rep (a 4k-conv-only warmup left rep1 paying tens of
       // seconds of heap growth + full-size JIT on a noisy host)
       ballast.engage()
-      Pipeline.segmentFused(
-        SyntheticTranscripts.turns(spark, math.min(4000L, nConvs), seed), bc).count()
-      Pipeline.segmentFused(
-        SyntheticTranscripts.turns(spark, math.min(30000L, nConvs), seed), bc).count()
+      Pipeline.segmentAuto(
+        SyntheticTranscripts.turns(spark, math.min(4000L, nConvs), seed), rules).count()
+      Pipeline.segmentAuto(
+        SyntheticTranscripts.turns(spark, math.min(30000L, nConvs), seed), rules).count()
       ballast.disengage()
       stdout.println("READY")
       val stdin = new java.io.BufferedReader(new java.io.InputStreamReader(System.in, "UTF-8"))
@@ -576,12 +579,13 @@ object ScalingBench {
     val md =
       s"""# BENCH — measured throughput & scaling
          |
-         |Pipeline (fused single-shuffle path, `Pipeline.segmentFused`):
-         |parquet scan → repartition(conv_id) + secondary sort (conv_id,
-         |turn_idx) → per-turn extraction (HTML boilerplate strip / PDF layout
-         |parse / passthrough) + per-conversation demarcation fold in one
-         |partition pass → segment count. Same input bytes at every level;
-         |one LONG-LIVED child JVM per level (ParallelGC, GC threads = task
+         |Pipeline (production route, `Pipeline.segmentAuto`): parquet scan
+         |of turns and rules → one conv_id shuffle per side + secondary sort
+         |(conv_id, turn_idx) → join node: per-turn extraction (HTML
+         |boilerplate strip / PDF layout parse / passthrough) +
+         |per-conversation demarcation fold in one partition pass → segment
+         |count; no rule is collected to the driver. Same input bytes at
+         |every level; one LONG-LIVED child JVM per level (ParallelGC, GC threads = task
          |threads — levels never share JIT/GC state, warmup paid once);
          |alternating short timed bursts so a host-noise episode hits both
          |levels; occupancy-pinning ballast active only while a burst runs;

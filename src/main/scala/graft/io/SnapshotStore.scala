@@ -1221,14 +1221,10 @@ object ResumableJob {
           import spark.implicits._
           if (poisonBuckets.contains(b))
             throw new RuntimeException(s"poisoned conversation in bucket $b")
-          val turns = spark.range(lo, hi, 1, spark.sparkContext.defaultParallelism)
-            .flatMap(i => SyntheticTranscripts.turnsFor(corpusSeed, i))
-          val ruleMap = (lo until hi).map { i =>
-            SyntheticTranscripts.convId(i) ->
-              SyntheticTranscripts.rulesFor(corpusSeed, i).map(Pipeline.toCoreRule)
-          }.toMap
-          val bc = spark.sparkContext.broadcast(ruleMap)
-          val segs = Pipeline.segmentFused(turns, bc)
+          val convs = spark.range(lo, hi, 1, spark.sparkContext.defaultParallelism)
+          val turns = convs.flatMap(i => SyntheticTranscripts.turnsFor(corpusSeed, i))
+          val rules = convs.flatMap(i => SyntheticTranscripts.rulesFor(corpusSeed, i))
+          val segs = Pipeline.segmentAuto(turns, rules)
           segs.write.mode("overwrite").parquet(s"$workRoot/segments/bucket=$b")
         }
         atomicWrite(markerPath(workRoot, b), s"""{"bucket": $b, "convs": [$lo, $hi)}""")

@@ -1,19 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.{SparkConf, TaskContext}
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.unsafe.Platform
 
 import graft.core.extract.Extractor
 import graft.core.seg.{Demarcator, Rule, SegmentRow}
 import graft.core.xml.SubDocXml
-import graft.plans.{SegmentJoinExec, SegmentPlans}
+import graft.plans.SegmentPlans
 import graft.schema._
 
 /** Per-partition (rows_in, rows_out, errors) metrics collected INSIDE a
@@ -53,43 +48,18 @@ final class PartitionStatsAcc
   override def value: Map[Int, (Long, Long, Long)] = m.synchronized(m.toMap)
 }
 
-/** A rule corpus collected for broadcast ([[Pipeline.loadRules]]): the
-  * rule rows in [[SegmentPlans.RuleCols]] order as consecutive
-  * `[8-byte size][UnsafeRow bytes]` records in ONE byte array, so
-  * serializing it is a copy and the block manager sizes it at a glance —
-  * a map of ~10^4 case classes costs both a visit per object. The
-  * `conv_id` index is built once per JVM that reads the broadcast, with
-  * the join node's decoder [[SegmentJoinExec.rowToRule]]; rules of a NULL
-  * `conv_id` can match no conversation and are left out. */
-final class RuleRows private[graft] (bytes: Array[Byte]) extends Serializable {
-  @transient private lazy val byConv: Map[String, Seq[Rule]] = {
-    val row = new UnsafeRow(SegmentPlans.RuleCols.size)
-    val sizes = java.nio.ByteBuffer.wrap(bytes)
-    val b = Vector.newBuilder[(String, Rule)]
-    var off = 0
-    while (off < bytes.length) {
-      val size = sizes.getLong(off).toInt
-      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + off + 8, size)
-      if (!row.isNullAt(0)) b += row.getUTF8String(0).toString -> SegmentJoinExec.rowToRule(row)
-      off += 8 + size
-    }
-    b.result().groupMap(_._1)(_._2)
-  }
-
-  /** The rules of conversation `cid`, in load order. */
-  def rulesFor(cid: String): Seq[Rule] = byConv.getOrElse(cid, Nil)
-}
-
 /** The end-to-end extraction + segmentation pipeline (SURVEY §3.1 "Spark
   * lifecycle we build"). Every segmentation route runs [[Pipeline.GroupFold]]
   * — a streaming fold over (conv_id, turn_idx)-sorted rows, one
   * conversation in memory at a time (the reference's pages-in-memory
   * bound, `ocr_processor.py:247`): the batch routes inside one of the two
-  * Catalyst nodes in [[graft.plans.SegmentPlans]] — [[segmentFused]]
-  * (rules broadcast) or, above [[segmentAuto]]'s rule limits, the join
-  * node — the `segment_rows` UDTF per input row and the streaming fold per
-  * closed conversation. The batch nodes extract inside the fold, so a hot
-  * conversation is extracted and folded in one task, under
+  * Catalyst nodes in [[graft.plans.SegmentPlans]] — the join node under
+  * [[segmentAuto]], the production route, with the rules co-partitioned
+  * by `conv_id`, or the closure node under [[segmentFused]], the reference
+  * route over a broadcast rule map — the `segment_rows` UDTF per input row
+  * and the streaming fold per closed conversation. The batch nodes extract
+  * inside the fold, so a hot conversation is extracted and folded in one
+  * task, under
   * [[DefaultMaxConvPages]]/[[DefaultMaxConvChars]]: on generated input
   * with 25 % of all turns in one conversation, this ran 5× faster than a
   * salted extraction stage ahead of the fold (1.31 against 7.26 s,
@@ -248,163 +218,60 @@ object Pipeline {
     }
   }
 
-  /** The default fold: raw turns into [[SegmentPlans.segment]], which
-    * extracts inside the fold, with a broadcast rule lookup (the
-    * reference's envelope→rule enrichment, `main.py:232-236`). The planner
-    * places the `conv_id` exchange: none on input bucketed by `conv_id`,
-    * else one AQE may coalesce (whole hash partitions, sorted after the
-    * merged read). `buckets > 0` pins the width with a repartition. */
+  /** The reference route: raw turns into the closure node
+    * ([[SegmentPlans.segment]]) with a rule map broadcast by the caller.
+    * Tests compare every other route to it, and the benchmark's
+    * `pipeline.route` probe times the fold with it; production takes
+    * [[segmentAuto]]. The planner places the `conv_id` exchange: none on
+    * input bucketed by `conv_id`, else one AQE may coalesce (whole hash
+    * partitions, sorted after the merged read). `buckets > 0` pins the width
+    * with a repartition. */
   def segmentFused(
       turns: Dataset[Turn],
       rules: Broadcast[Map[String, Seq[Rule]]],
       buckets: Int = 0,
       stats: Option[PartitionStatsAcc] = None
-  ): Dataset[ConvSegment] =
-    foldBroadcast(turns, cid => rules.value.getOrElse(cid, Nil), buckets, stats)
-
-  /** The broadcast fold behind [[segmentFused]] and [[segmentAuto]]'s
-    * broadcast branch: the four turn columns, pinned to `buckets`
-    * partitions when `buckets > 0`, into the fold node. */
-  private def foldBroadcast(
-      turns: Dataset[Turn],
-      rulesFor: String => Seq[Rule],
-      buckets: Int,
-      stats: Option[PartitionStatsAcc]
   ): Dataset[ConvSegment] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val cols = turns.select($"conv_id", $"turn_idx", $"tool", $"text")
     SegmentPlans.segment(if (buckets > 0) cols.repartition(buckets, $"conv_id") else cols,
-      rulesFor, stats).as[ConvSegment]
+      cid => rules.value.getOrElse(cid, Nil), stats).as[ConvSegment]
   }
 
-  /** Routes between the two fold nodes by rule-corpus SIZE IN BYTES as
-    * well as count. [[loadRules]] runs ONE job over the rules: every task
-    * counts its partition's rows and estimated heap (2 bytes/char JVM
-    * strings + 96 bytes per row) and returns the rows themselves,
-    * LZ4-compressed, only while the partition stays within 1/P of both
-    * limits (P = rule partitions), so the driver never receives more than
-    * the limits. At or below both limits in total the rows are broadcast
-    * as one byte array ([[RuleRows]]) into the fold node — a second
-    * collect, each partition capped at its first-job count, runs only when
-    * some partition went over its share; above either limit, or past the
-    * ~2 GiB of encoded rows one array holds ([[MaxRuleBytes]]), rules stay
-    * distributed and co-partition with the turns under
-    * [[SegmentPlans.segmentJoin]]. The byte gate matters because a
-    * row-count gate alone would let 10^5 rules × 10 KB identifier strings
-    * collect gigabytes to the driver. Both branches decode a rule row with
-    * the same [[graft.plans.SegmentJoinExec.rowToRule]], so a NULL numeric
-    * rule field reads as 0 on either. */
+  /** The production fold, `SubmitMain`'s route: raw turns and the rule
+    * table into the join node ([[SegmentPlans.segmentJoin]]), which
+    * co-partitions the rules with the turns by `conv_id` — the reference's
+    * per-message rule attachment (`main.py:232-236`) as a plan. No rule row
+    * reaches the driver and building the Dataset starts no Spark job.
+    * `buckets > 0` pins the turns' `conv_id` shuffle at that width with a
+    * repartition, and the planner shuffles the rules to match it; else the
+    * planner places both exchanges and AQE may coalesce them, as under
+    * [[segmentFused]]. */
   def segmentAuto(
       turns: Dataset[Turn],
       rules: Dataset[ConvRule],
       buckets: Int = 0,
-      broadcastRuleLimit: Long = 1000000L,
-      stats: Option[PartitionStatsAcc] = None,
-      broadcastByteLimit: Long = 256L << 20
+      stats: Option[PartitionStatsAcc] = None
+  ): Dataset[ConvSegment] = {
+    val spark = turns.sparkSession
+    import spark.implicits._
+    val pinned = if (buckets > 0) turns.repartition(buckets, $"conv_id") else turns
+    SegmentPlans.segmentJoin(pinned, rules, stats).as[ConvSegment]
+  }
+
+  /** The former signature with the broadcast limits, which are ignored:
+    * rules always take the join node. */
+  @deprecated("rules always take the join node; the broadcast limits are ignored", "0.1.0")
+  def segmentAuto(
+      turns: Dataset[Turn],
+      rules: Dataset[ConvRule],
+      buckets: Int,
+      broadcastRuleLimit: Long,
+      stats: Option[PartitionStatsAcc],
+      broadcastByteLimit: Long
   ): Dataset[ConvSegment] =
-    loadRules(rules, broadcastRuleLimit, broadcastByteLimit) match {
-      case Some(rows) =>
-        val bc = turns.sparkSession.sparkContext.broadcast(rows)
-        foldBroadcast(turns, cid => bc.value.rulesFor(cid), buckets, stats)
-      case None =>
-        val spark = turns.sparkSession
-        import spark.implicits._
-        SegmentPlans.segmentJoin(turns, rules, stats).as[ConvSegment]
-    }
-
-  /** The most encoded rule bytes [[loadRules]] collects: what one JVM
-    * array holds, less room for the compressed stream's block headers. */
-  private[graft] val MaxRuleBytes: Long = Int.MaxValue - (16L << 20)
-
-  /** The codec of the rule rows a task returns — LZ4, as Spark's own
-    * collect, so `spark.driver.maxResultSize` counts compressed bytes. */
-  private lazy val RuleCodec = new LZ4CompressionCodec(new SparkConf(false))
-
-  /** The rule corpus collected for broadcast when it is within `maxRows`
-    * rows, `maxHeap` estimated heap bytes and `maxBytes` encoded bytes,
-    * else None. One job over the rules projected in
-    * [[SegmentPlans.RuleCols]] order; each task runs [[loadPartition]]
-    * with a 1/P share of each limit. When the totals fit but some
-    * partition went over its share, a second job collects with each
-    * partition's own first-job counts as its share, so the driver never
-    * receives more than the totals it checked; a partition that grew in
-    * between sends the corpus to the join node. */
-  private[graft] def loadRules(rules: Dataset[ConvRule], maxRows: Long, maxHeap: Long,
-                               maxBytes: Long = MaxRuleBytes): Option[RuleRows] = {
-    val projected = rules.toDF().select(SegmentPlans.RuleCols.map(col): _*)
-    val schema = projected.schema
-    val rdd = projected.queryExecution.toRdd
-    val p = math.max(rdd.getNumPartitions, 1)
-    def load(shares: Array[(Long, Long, Long)]): Array[RulePart] =
-      rules.sparkSession.sparkContext.runJob(rdd, (ctx: TaskContext, it: Iterator[InternalRow]) => {
-        val (r, h, b) = shares(ctx.partitionId())
-        loadPartition(it, schema, r, h, b)
-      })
-    val first = load(Array.fill(p)((maxRows / p, maxHeap / p, maxBytes / p)))
-    if (first.map(_.rows).sum > maxRows || first.map(_.heap).sum > maxHeap ||
-        first.map(_.bytes).sum > maxBytes) None
-    else {
-      val parts =
-        if (first.forall(_.data.isDefined)) first
-        else load(first.map(f => (f.rows, f.heap, f.bytes)))
-      if (parts.forall(_.data.isDefined)) Some(ruleRows(parts.toSeq)) else None
-    }
-  }
-
-  /** One task's result in [[loadRules]]: the partition's row count,
-    * estimated heap and encoded bytes, and its rows, compressed, if all
-    * three stayed within the task's share. */
-  private[graft] final case class RulePart(rows: Long, heap: Long, bytes: Long,
-                                           data: Option[Array[Byte]])
-
-  /** Counts every row of a rules partition (`schema` = its columns), its
-    * estimated heap — 2 × chars of the string columns + 96 per row — and
-    * its encoded bytes. Rows are kept as `[8-byte size][UnsafeRow bytes]`
-    * records while the partition is within `maxRows`, `maxHeap` and
-    * `maxBytes`; past any, the kept rows are dropped and counting goes on.
-    * The rows are UnsafeRows, as Spark's own collect takes them. */
-  private[graft] def loadPartition(it: Iterator[InternalRow], schema: StructType,
-                                   maxRows: Long, maxHeap: Long, maxBytes: Long): RulePart = {
-    val strCols = schema.fields.indices.filter(schema(_).dataType == StringType).toArray
-    val size = java.nio.ByteBuffer.allocate(8)
-    val copyBuf = new Array[Byte](4096)
-    val out = new java.io.ByteArrayOutputStream()
-    var kept = RuleCodec.compressedOutputStream(out)
-    var rows = 0L
-    var heap = 0L
-    var bytes = 0L
-    it.foreach { row =>
-      val u = row.asInstanceOf[UnsafeRow]
-      var chars = 0L
-      strCols.foreach(i => if (!u.isNullAt(i)) chars += u.getUTF8String(i).numChars)
-      rows += 1
-      heap += 2 * chars + 96
-      bytes += 8 + u.getSizeInBytes
-      if (kept != null) {
-        if (rows > maxRows || heap > maxHeap || bytes > maxBytes) kept = null
-        else {
-          kept.write(size.putLong(0, u.getSizeInBytes.toLong).array(), 0, 8)
-          u.writeToStream(kept, copyBuf)
-        }
-      }
-    }
-    if (kept != null) kept.close()
-    RulePart(rows, heap, bytes, Option(kept).map(_ => out.toByteArray))
-  }
-
-  /** The kept rows of `parts`, decompressed into one [[RuleRows]]. */
-  private[graft] def ruleRows(parts: Seq[RulePart]): RuleRows = {
-    val all = new Array[Byte](parts.map(_.bytes).sum.toInt)
-    var off = 0
-    for (part <- parts; data <- part.data) {
-      val in = new java.io.DataInputStream(
-        RuleCodec.compressedInputStream(new java.io.ByteArrayInputStream(data)))
-      try in.readFully(all, off, part.bytes.toInt) finally in.close()
-      off += part.bytes.toInt
-    }
-    new RuleRows(all)
-  }
+    segmentAuto(turns, rules, buckets = buckets, stats = stats)
 
   /** Per-partition lineage rows for the extraction stage (north rule:
     * partition id, input snapshot, rows in/out, extraction error counts). */
@@ -477,8 +344,8 @@ object Pipeline {
       }
   }
 
-  /** Full pipeline for a synthetic corpus of `nConvs` conversations —
-    * broadcast-vs-join selected by rule-corpus size ([[segmentAuto]]). */
+  /** Full pipeline for a synthetic corpus of `nConvs` conversations,
+    * through [[segmentAuto]]. */
   def run(spark: SparkSession, nConvs: Long, corpusSeed: Long = 42L): Dataset[ConvSegment] = {
     val turns = graft.gen.SyntheticTranscripts.turns(spark, nConvs, corpusSeed)
     val rules = graft.gen.SyntheticTranscripts.rules(spark, nConvs, corpusSeed)

@@ -88,8 +88,8 @@ object SegmentPlans {
     * `ClusteredDistribution(conv_id)` and Catalyst's `EnsureRequirements`
     * co-partitions them (and elides either side's exchange when that side
     * is already bucketed by conv_id); the physical node merge-joins the
-    * sorted streams one conversation at a time. [[Pipeline.segmentAuto]]
-    * takes this node when the rule corpus is above its broadcast limits. */
+    * sorted streams one conversation at a time. [[Pipeline.segmentAuto]],
+    * the production route, always takes this node. */
   def segmentJoin(turns: org.apache.spark.sql.Dataset[Turn],
                   rules: org.apache.spark.sql.Dataset[ConvRule],
                   stats: Option[graft.pipeline.PartitionStatsAcc] = None): org.apache.spark.sql.DataFrame = {
@@ -342,15 +342,15 @@ object SegmentJoinExec {
   }
 
   /** Rule rows projected from a `Dataset[ConvRule]`: the join node's rules
-    * side and [[graft.pipeline.RuleRows]]. */
+    * side. */
   private lazy val ProjectedRules = ruleLayout(Encoders.product[ConvRule].schema)
 
   /** Decode one rule row to the core rule — same mapping as
     * [[Pipeline.toCoreRule]], with a NULL numeric field as 0 (None for
     * `DocReceivedId`/`UploadDatasheetid`, which `ConvSegment.of` writes as
     * 0) and an absent field as NULL. A BIGINT `NoOfPages`/`Occurence` must
-    * fit an INT. The one rule decoder of both `segmentAuto` branches and
-    * of `segment_rows`, which passes its rule struct's layout. */
+    * fit an INT. The one rule decoder of the join node and of
+    * `segment_rows`, which passes its rule struct's layout. */
   private[graft] def rowToRule(row: InternalRow, layout: RuleLayout = ProjectedRules): Rule = {
     val ord = layout.ord
     def present(k: Int): Boolean = ord(k) >= 0 && !row.isNullAt(ord(k))

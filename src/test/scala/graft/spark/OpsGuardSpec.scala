@@ -84,27 +84,6 @@ class OpsGuardSpec extends AnyFunSuite with SparkFixture {
     assert(ok.length == 1 && ok.head.getAs[Long]("n_events") == 3L)
   }
 
-  test("segmentAuto routes fat rule corpora to cogroup by ESTIMATED BYTES, not count") {
-    import graft.gen.SyntheticTranscripts
-    import graft.pipeline.Pipeline
-    val turns = SyntheticTranscripts.turns(spark, 30L, 42L)
-    val rules = SyntheticTranscripts.rules(spark, 30L, 42L)
-    def planOf(byteLimit: Long) =
-      Pipeline.segmentAuto(turns, rules, broadcastByteLimit = byteLimit)
-    // a handful of rules is far under the count gate either way; only the
-    // byte gate separates the two routes
-    val fat = planOf(byteLimit = 1L)
-    assert(fat.queryExecution.executedPlan.toString.contains("SegmentJoin"),
-      "1-byte broadcast budget must route to the join node, rules co-grouped")
-    val thin = planOf(byteLimit = 256L << 20)
-    assert(!thin.queryExecution.executedPlan.toString.contains("SegmentJoin"),
-      "small corpus under both gates must take the broadcast path")
-    // and the routing can never change results
-    val a = fat.collect().sortBy(s => (s.conv_id, s.Sequence))
-    val b = thin.collect().sortBy(s => (s.conv_id, s.Sequence))
-    assert(a.toSeq == b.toSeq)
-  }
-
   test("derivedBinWidth keeps the histQuantiles bin window bounded on a wide-range corpus") {
     import spark.implicits._
     // n_chars spanning ~67M: the fixed default width (64) would push ~1M

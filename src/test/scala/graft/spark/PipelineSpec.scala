@@ -1,5 +1,6 @@
 package graft.spark
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,6 +23,11 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
 
   private def oracleSegments(convIdx: Long): Vector[ConvSegment] =
     SegmentOracle.segments(Seed, convIdx)
+
+  /** `rules` collected into the rule map `segmentFused` broadcasts. */
+  private def broadcastRules(rules: Dataset[ConvRule]) =
+    spark.sparkContext.broadcast(rules.collect().toSeq.groupBy(_.conv_id)
+      .map { case (cid, rs) => cid -> rs.map(Pipeline.toCoreRule) })
 
   test("generator is deterministic and partition-independent") {
     import spark.implicits._
@@ -96,10 +102,11 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     val turns = SyntheticTranscripts.turns(spark, NConvs, Seed).as[Turn]
     val rules = SyntheticTranscripts.rules(spark, NConvs, Seed)
     val want = (0L until NConvs).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
-    // rule count under the limit → broadcast node; limit 0 → join node
-    val viaBroadcast = Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 1000000L)
+    // the two rule branches of the fold: a broadcast rule map into the
+    // closure node (segmentFused), and segmentAuto's join node
+    val viaBroadcast = Pipeline.segmentFused(turns, broadcastRules(rules))
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val viaCogroup = Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 0L)
+    val viaCogroup = Pipeline.segmentAuto(turns, rules)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     assert(viaBroadcast == want)
     assert(viaCogroup == want)
@@ -107,15 +114,14 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
 
   test("orphan rules (conv_id with no turns) emit nothing on every route") {
     import spark.implicits._
-    // rules exist for 5 conversations but turns only for 3: the routing
-    // threshold must never change results, so the join node drops the
-    // orphans exactly like the turns-driven broadcast route
+    // rules exist for 5 conversations but turns only for 3: the join node
+    // drops the orphans exactly like the turns-driven broadcast route
     val turns = SyntheticTranscripts.turns(spark, 3, Seed).as[Turn]
     val rules5 = SyntheticTranscripts.rules(spark, 5, Seed)
     val want = (0L until 3L).flatMap(oracleSegments).sortBy(s => (s.conv_id, s.Sequence.toInt))
-    val viaBroadcast = Pipeline.segmentAuto(turns, rules5, broadcastRuleLimit = 1000000L)
+    val viaBroadcast = Pipeline.segmentFused(turns, broadcastRules(rules5))
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
-    val viaJoin = Pipeline.segmentAuto(turns, rules5, broadcastRuleLimit = 0L)
+    val viaJoin = Pipeline.segmentAuto(turns, rules5)
       .collect().sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     assert(viaBroadcast == want)
     assert(viaJoin == want)
@@ -336,13 +342,10 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       Turn("c-ent", 3, "user", "the END marker", "", ts)).toDS()
     val rules = Seq(ConvRule("c-ent", "DT", "t", "START", " ", "END", " ",
       0, 1, " ", " ", "1", 7L, "ff", 9L, "s")).toDS()
-    val bc = spark.sparkContext.broadcast(
-      Map("c-ent" -> rules.collect().toSeq.map(Pipeline.toCoreRule)))
-    val want = Pipeline.segmentFused(turns, bc).collect().toSeq
+    val want = Pipeline.segmentFused(turns, broadcastRules(rules)).collect().toSeq
     assert(want.map(_.FromPageNumber) == Seq(2), want)
-    // SubmitMain's route, on both of its branches
-    for (limit <- Seq(1000000L, 0L))
-      assert(Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit).collect().toSeq == want)
+    // SubmitMain's route
+    assert(Pipeline.segmentAuto(turns, rules).collect().toSeq == want)
   }
 
   test("the fold reads NULL tool/text as passthrough/empty and rejects a NULL turn_idx") {
@@ -375,11 +378,11 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
       Turn("c-dup", 2, "user", "middle", "", ts), Turn("c-dup", 2, "user", "the END", "", ts)).toDS()
     val rules = Seq(ConvRule("c-dup", "DT", "t", "START", " ", "END", " ",
       0, 1, " ", " ", "1", 7L, "ff", 9L, "s")).toDS()
-    for (limit <- Seq(1000000L, 0L)) {
-      val e = intercept[org.apache.spark.SparkException](
-        Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit).collect())
+    for ((node, segs) <- Seq("closure node" -> Pipeline.segmentFused(turns, broadcastRules(rules)),
+                             "join node" -> Pipeline.segmentAuto(turns, rules))) {
+      val e = intercept[org.apache.spark.SparkException](segs.collect())
       assert(e.getMessage.contains("turn ordering violated in c-dup: 2 after 2"),
-        s"limit $limit: ${e.getMessage}")
+        s"$node: ${e.getMessage}")
     }
   }
 

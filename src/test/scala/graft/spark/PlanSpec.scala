@@ -92,6 +92,26 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
 
+  /** `p` and every node below it, descending into AQE query stages (the
+    * leaves of an adaptive tree). */
+  private def subtree(p: SparkPlan): Seq[SparkPlan] = p match {
+    case q: QueryStageExec => q +: subtree(q.plan)
+    case other => other +: other.children.flatMap(subtree)
+  }
+
+  /** The nodes of `df`'s final adaptive plan, after running it. */
+  private def finalNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => subtree(a.executedPlan)
+      case other => fail(s"not an adaptive plan:\n$other")
+    }
+  }
+
+  /** The shuffle reads under `p`, and the partitions `p` yields. */
+  private def reads(p: SparkPlan): (Seq[AQEShuffleReadExec], Int) =
+    (subtree(p).collect { case r: AQEShuffleReadExec => r }, p.execute().getNumPartitions)
+
   test("fused pipeline: AQE coalesces the conv_id shuffle unless buckets pin it") {
     val turns = SyntheticTranscripts.turns(spark, 10)
     val ruleMap = (0L until 10L).map { ci =>
@@ -100,20 +120,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val bc = spark.sparkContext.broadcast(ruleMap)
     /** The fold's input reads after execution, from the final adaptive plan. */
     def foldReads(buckets: Int): (Seq[AQEShuffleReadExec], Int) = {
-      val df = Pipeline.segmentFused(turns, bc, buckets).toDF()
-      df.collect()
-      val fin = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case other => fail(s"not an adaptive plan:\n$other")
-      }
-      // query stages are leaves of the adaptive tree: descend into them
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-        case q: QueryStageExec => q +: nodes(q.plan)
-        case other => other +: other.children.flatMap(nodes)
-      }
-      val fold = nodes(fin).collectFirst { case m: SegmentExec => m }
-        .getOrElse(fail(s"no fold in\n$fin"))
-      (nodes(fold).collect { case r: AQEShuffleReadExec => r }, fold.execute().getNumPartitions)
+      val all = finalNodes(Pipeline.segmentFused(turns, bc, buckets).toDF())
+      reads(all.collectFirst { case m: SegmentExec => m }.getOrElse(fail(s"no fold in\n$all")))
     }
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     // a few KB of turns over 7 session partitions: merged at runtime
@@ -124,6 +132,28 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     val (pinned, pinnedParts) = foldReads(8)
     assert(!pinned.exists(_.hasCoalescedPartition), pinned)
     assert(pinnedParts == 8)
+  }
+
+  test("segmentAuto: AQE coalesces both join sides unless buckets pin them") {
+    val turns = SyntheticTranscripts.turns(spark, 10)
+    val rules = SyntheticTranscripts.rules(spark, 10)
+    /** The reads of the join node's turns and rules sides. */
+    def sideReads(buckets: Int): Seq[(Seq[AQEShuffleReadExec], Int)] = {
+      val all = finalNodes(Pipeline.segmentAuto(turns, rules, buckets).toDF())
+      val join = all.collectFirst { case j: SegmentJoinExec => j }.getOrElse(fail(s"no join in\n$all"))
+      Seq(reads(join.left), reads(join.right))
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    for ((rs, n) <- sideReads(0)) {
+      assert(rs.exists(_.hasCoalescedPartition), rs)
+      assert(n < width)
+    }
+    // a pinned width holds on both sides, below and above the session width
+    for (buckets <- Seq(3, 8); (rs, n) <- sideReads(buckets)) {
+      assert(!rs.exists(_.hasCoalescedPartition), s"buckets = $buckets: $rs")
+      assert(n == buckets, s"buckets = $buckets: $n partitions")
+    }
   }
 
   test("bucketed tables co-locate the join: zero exchanges") {
@@ -243,8 +273,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("default route over a bucketed turns table: no turns-side exchange on either rule branch") {
-    // segmentAuto itself, not the bare node: the broadcast branch plans
-    // no exchange at all, the join branch shuffles only the rules
+    // the routes themselves, not the bare nodes: the broadcast route
+    // (segmentFused) plans no exchange at all, segmentAuto's join node
+    // shuffles only the rules
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-turns-bucketed-auto").toString
     val n = 6L
@@ -254,10 +285,12 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         .sortBy("conv_id", "turn_idx")
         .option("path", s"$dir/turns_ba").saveAsTable("turns_ba")
       val bucketed = spark.table("turns_ba").as[graft.schema.Turn]
-      val viaBroadcast = Pipeline.segmentAuto(bucketed, rules).toDF()
+      val bc = spark.sparkContext.broadcast(rules.collect().toSeq.groupBy(_.conv_id)
+        .map { case (k, v) => k -> v.map(Pipeline.toCoreRule) })
+      val viaBroadcast = Pipeline.segmentFused(bucketed, bc).toDF()
       assert(exchanges(prepared(viaBroadcast)) == 0, formatted(viaBroadcast))
       assert(viaBroadcast.collect().map(_.toString).sorted.toSeq == oracleRows(n))
-      val viaJoin = Pipeline.segmentAuto(bucketed, rules, broadcastRuleLimit = 0L).toDF()
+      val viaJoin = Pipeline.segmentAuto(bucketed, rules).toDF()
       val join = prepared(viaJoin).collectFirst { case j: SegmentJoinExec => j }
         .getOrElse(fail(formatted(viaJoin)))
       assert(exchanges(join.left) == 0, formatted(viaJoin))

@@ -18,12 +18,11 @@ import graft.streaming.StreamingSegmenter
   * corpus; this spec re-derives the invariant on fresh corpus shapes so a
   * route bug that happens to be invisible under one rule/page distribution
   * (e.g. an ordering assumption only violated by a specific Sequence mix)
-  * still fails. All five routes run the one fold core
-  * (`Pipeline.GroupFold`) and must agree row for row, with shuffled input:
-  * the broadcast node over a rule map with a planned and with a pinned
-  * (`buckets = 8`) exchange, `segmentAuto` (`SubmitMain`'s route) on its
-  * two branches — within its rule limits (rules broadcast as binary rows)
-  * and above them (the join node) — the `segment_rows` UDTF and the
+  * still fails. All routes run the one fold core (`Pipeline.GroupFold`)
+  * and must agree row for row, with shuffled input: the broadcast node
+  * over a rule map and `segmentAuto` (`SubmitMain`'s route: the join node,
+  * rules co-partitioned with the turns), each with a planned and with a
+  * pinned (`buckets = 8`) exchange, the `segment_rows` UDTF and the
   * streaming fold. Each corpus runs as two tests: the four fold-node legs,
   * and `segment_rows` with the streaming fold. */
 class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
@@ -33,8 +32,8 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
                          bc: Broadcast[Map[String, Seq[Rule]]]): Seq[(String, Dataset[ConvSegment])] = Seq(
     "broadcast node" -> Pipeline.segmentFused(turns, bc),
     "broadcast node, buckets = 8" -> Pipeline.segmentFused(turns, bc, buckets = 8),
-    "join node" -> Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = 0L),
-    "segmentAuto broadcast branch" -> Pipeline.segmentAuto(turns, rules))
+    "join node" -> Pipeline.segmentAuto(turns, rules),
+    "join node, buckets = 8" -> Pipeline.segmentAuto(turns, rules, buckets = 8))
 
   /** The routes off the fold nodes, by name. The streaming query runs
     * here, to completion. */
@@ -229,8 +228,7 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
     def norm(xs: Array[ConvSegment]): Seq[ConvSegment] =
       xs.sortBy(s => (s.conv_id, s.Sequence.toInt)).toSeq
     val all = routes(turns, rules, spark.sparkContext.broadcast(ruleMap))
-    assert(!all.toMap.apply("segmentAuto broadcast branch")
-      .queryExecution.executedPlan.toString.contains("SegmentJoin"))
+    assert(all.toMap.apply("join node").queryExecution.executedPlan.toString.contains("SegmentJoin"))
     for ((route, segs) <- all)
       assert(norm(segs.collect()) == want, route)
   }
@@ -272,15 +270,17 @@ class RouteEquivalenceSpec extends AnyFunSuite with SparkFixture {
         val corruptTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci)
           .count(_.text.indexOf(Extractor.CorruptMarker) >= 0)).sum
         val nTurns = (0L until nConvs).map(ci => SyntheticTranscripts.turnsFor(seed, ci).size).sum
-        def totals(limit: Long): (Long, Long, Long) = {
+        def totals(node: String, fold: Option[graft.pipeline.PartitionStatsAcc] => Dataset[ConvSegment])
+            : (Long, Long, Long) = {
           val acc = new graft.pipeline.PartitionStatsAcc
-          spark.sparkContext.register(acc, s"poisoned_route_stats_$limit")
-          Pipeline.segmentAuto(turns, rules, broadcastRuleLimit = limit, stats = Some(acc)).collect()
+          spark.sparkContext.register(acc, s"poisoned_route_stats_$node")
+          fold(Some(acc)).collect()
           val v = acc.value.values
           (v.map(_._1).sum, v.map(_._2).sum, v.map(_._3).sum)
         }
-        val viaBroadcast = totals(1000000L)
-        assert(viaBroadcast == totals(0L), "broadcast and join nodes must give the same lineage")
+        val viaBroadcast = totals("broadcast", acc => Pipeline.segmentFused(turns, bc, stats = acc))
+        assert(viaBroadcast == totals("join", acc => Pipeline.segmentAuto(turns, rules, stats = acc)),
+          "broadcast and join nodes must give the same lineage")
         assert(viaBroadcast == ((nTurns.toLong, want.size.toLong, 2L + corruptTurns)),
           s"lineage must count $nTurns turns, ${want.size} segments and 2 rule quarantines " +
             s"+ $corruptTurns extraction corruptions, got $viaBroadcast")

@@ -19,9 +19,10 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
     spark // force fixture session so getOrCreate() inside main reuses it
     val out = Files.createTempDirectory("graft-submit").toString
     val (_, jobs) = jobsOf(SubmitMain.main(Array("--synthetic-convs", "12", "--out", out)))
-    // rule loading, then the segments write (AQE submits the conv_id
-    // shuffle's map stage, then the result job). The lineage rows sit on
-    // the driver and are committed without a fourth job.
+    // the segments write: AQE submits the map stage of each conv_id
+    // shuffle, turns and rules, as a job of its own, then the result job.
+    // No job loads rules before it, and the lineage rows sit on the
+    // driver and are committed without a fourth job.
     assert(jobs.size == 3, s"jobs by stage count: $jobs")
 
     val store = new SnapshotStore(out)
@@ -105,9 +106,10 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("unknown flags fail before any work, naming the known ones") {
-    // a typo must not silently run the default route; --catalyst and
-    // --two-stage are gone
-    for (bad <- Seq(Array("--bucket", "8"), Array("--catalyst"), Array("--two-stage"))) {
+    // a typo must not silently run the default route; --catalyst,
+    // --two-stage and the two broadcast limits are gone
+    for (bad <- Seq(Array("--bucket", "8"), Array("--catalyst"), Array("--two-stage"),
+                    Array("--broadcast-rule-limit", "5"), Array("--broadcast-byte-limit", "5"))) {
       val out = Files.createTempDirectory("graft-submit-badflag").toString
       val e = intercept[IllegalArgumentException](
         SubmitMain.main(Array("--synthetic-convs", "8", "--out", out) ++ bad))
