@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -26,12 +26,34 @@ import org.apache.spark.sql.functions.{count, lit}
   *    incremental (from, to] reads — the batch analog of the reference's
   *    queue offsets.
   *
+  * A manifest is `_manifests/<id>.json`, one flat JSON object of string
+  * values written by [[SnapshotStore.encodeManifest]] and read back only
+  * by [[SnapshotStore.decodeManifest]]. Every metadata question a call asks
+  * is answered from ONE listing of that directory, each manifest parsed
+  * once (like a Delta Lake snapshot rebuilt from one read of its log);
+  * nothing is cached across calls. The keys:
+  *
+  * | key | written by | read by |
+  * |---|---|---|
+  * | `data` | every commit: its stage dir | every read, `dataLocation`, `expireRetired`, `expireOrphanStages` |
+  * | `snapshot_id` | every commit | nothing (the file name is the id) |
+  * | `row_count` | `append` | `rowCount` |
+  * | `replaces` | `compact`, `upsert` | `snapshots`, `compactionWatermark`, `expireRetired` |
+  * | `schema_only` | `dropColumn`, `renameColumn`, `widenColumn` | `isSchemaOnly`, `dataSnapshots`, every read |
+  * | `drop_cols` | `dropColumn`; carried by `compact`, `upsert` | `droppedColumns`, every read |
+  * | `rename_cols` | `renameColumn`; carried by `compact`, `upsert` | `renamedColumns`, every read, stats-name resolution |
+  * | `widen_cols` | `widenColumn`; carried by `compact`, `upsert` | `widenedColumns`, every read |
+  * | `stats_col`, `stats_min`, `stats_max` | writes with a `statsCol`; merged by `compact` | `snapshotStats`, `pruneSnapshots`, `readRangePruned`, `upsert` |
+  * | `file_stats`, `file_stats_overflow` | writes with a `statsCol` | `fileStats`, `pruneFiles`, `readRangePruned` |
+  * | `txn_<appId>` | `appendExactlyOnce`; global max carried by `compact`, `upsert` | `txnLastBatch`, `appendExactlyOnce` |
+  * | any other key | `append`'s `meta` (e.g. `table`, `segments_snapshot`) | nothing in the store |
+  *
   * On a real cluster the binding swaps to Iceberg (`writeTo(...).append()`,
   * `VERSION AS OF`) with no pipeline-API change.
   */
 final class SnapshotStore(val root: String) {
+  import SnapshotStore.{Evolution, encodeChain}
 
-  private def dataDir(id: Long): Path = Paths.get(root, "data", s"snap=$id")
   private def manifestDir: Path = Paths.get(root, "_manifests")
 
   private def manifestIds: Seq[Long] = {
@@ -51,60 +73,149 @@ final class SnapshotStore(val root: String) {
     }
   }
 
-  private val ReplacesRe = """"replaces": "([0-9,]*)"""".r
-
-  /** Every committed manifest with its `replaces` list (empty for plain
-    * appends). Tolerates a concurrent cleanup deleting a file mid-walk. */
-  private def manifestReplaces: Seq[(Long, Seq[Long])] =
-    manifestIds.flatMap { id =>
-      val m = manifestDir.resolve(s"$id.json")
-      if (!Files.exists(m)) None // raced with cleanup
-      else Some(id -> ReplacesRe.findFirstMatchIn(
-        new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-        .toSeq.flatMap(_.group(1).split(',').filter(_.nonEmpty).map(_.toLong)))
+  /** The one place manifest bytes are read. None when the file is gone:
+    * a concurrent [[expireRetired]] may delete a retired manifest after a
+    * listing named it. */
+  private def readManifest(id: Long): Option[Manifest] =
+    try {
+      val text = new String(
+        Files.readAllBytes(manifestDir.resolve(s"$id.json")), StandardCharsets.UTF_8)
+      Some(new Manifest(id, SnapshotStore.decodeManifest(text)))
+    } catch {
+      case _: NoSuchFileException => None
+      case e: IllegalArgumentException =>
+        throw new IllegalStateException(s"manifest $id: ${e.getMessage}", e)
     }
 
-  /** Ids retired by a committed compaction (union over every manifest's
-    * `replaces` list — a replaced id never becomes live again, so stale
-    * manifests awaiting cleanup can't resurrect one). */
-  private def retiredIds: Set[Long] = manifestReplaces.flatMap(_._2).toSet
+  /** One committed manifest: its id and the fields the codec read. Every
+    * per-snapshot view is a projection of these fields. */
+  private final class Manifest(val id: Long, fields: Map[String, String]) {
+    private def list(key: String, sep: Char = ','): Seq[String] =
+      fields.get(key).toSeq.flatMap(_.split(sep)).filter(_.nonEmpty)
+    def replaces: Seq[Long] = list("replaces").map(_.toLong)
+    def schemaOnly: Boolean = fields.get("schema_only").contains("true")
+    def dropped: Seq[String] = list("drop_cols")
+    def pairs(key: String): Seq[(String, String)] = list(key).map { e =>
+      val i = e.indexOf('>')
+      (e.substring(0, i), e.substring(i + 1))
+    }
+    def rowCount: Option[Long] = fields.get("row_count").map(_.toLong)
+    def txns: Map[String, Long] = fields.collect {
+      case (k, v) if k.startsWith("txn_") => k.stripPrefix("txn_") -> v.toLong
+    }
+    def stats: Option[(String, Long, Long)] =
+      for (c <- fields.get("stats_col"); mn <- fields.get("stats_min"); mx <- fields.get("stats_max"))
+        yield (c, mn.toLong, mx.toLong)
 
-  /** Live snapshots: committed manifests minus compaction-retired ids. */
-  def snapshots: Seq[Long] = {
-    val retired = retiredIds
-    manifestIds.filterNot(retired.contains)
+    /** The stage dir the commit named. Every commit names one, so a
+      * manifest without it is corrupt, not legacy. */
+    def dataPath: Path = Paths.get(root, "data", fields.getOrElse("data",
+      throw new IllegalStateException(s"manifest $id names no data dir")))
+
+    /** False only when recorded stats for `col` (under its pre-rename
+      * name or the current one) cannot intersect [lo, hi]: stats without
+      * a usable range keep the snapshot — stats only ever PRUNE. */
+    def mayMatch(col: String, lo: Long, hi: Long, evo: Evolution): Boolean = stats match {
+      case Some((c, mn, mx)) if evo.resolve(c) == col => mx >= lo && mn <= hi
+      case _ => true
+    }
+
+    /** Per-file (basename, min, max) stats recorded for `col`. */
+    def fileStats(col: String, evo: Evolution): Option[Seq[(String, Long, Long)]] =
+      for (c <- fields.get("stats_col") if evo.resolve(c) == col; _ <- fields.get("file_stats"))
+        yield list("file_stats", ';').map { e =>
+          val Array(name, mn, mx) = e.split(':')
+          (name, mn.toLong, mx.toLong)
+        }
+
+    /** (kept paths, skipped count) of this snapshot's files for a
+      * `col BETWEEN lo AND hi` predicate; None without file stats for `col`. */
+    def pruneFiles(col: String, lo: Long, hi: Long, evo: Evolution): Option[(Seq[String], Int)] =
+      fileStats(col, evo).map { fs =>
+        val (keep, skip) = fs.partition { case (_, mn, mx) => mx >= lo && mn <= hi }
+        (keep.map { case (name, _, _) => dataPath.resolve(name).toString }, skip.size)
+      }
   }
 
-  private val DropColsRe = """"drop_cols": "([^"]*)"""".r
-  private val SchemaOnlyRe = """"schema_only": "true"""".r
+  /** One listing of `_manifests/` and every table-level view derived from
+    * it. Manifests are parsed once, on the first view that needs them, and
+    * only those the listing named: a commit landing later is not seen, so
+    * the checks [[commitStaged]] runs against a listing always describe
+    * the state its id was allocated against. */
+  private final class Listing(ids: Seq[Long]) {
+    /** Above every manifest ever committed (incl. retired ones still
+      * awaiting cleanup), so ids never collide after a compaction. */
+    def nextId: Long = ids.lastOption.getOrElse(0L) + 1L
+    lazy val all: Seq[Manifest] = ids.flatMap(readManifest)
+
+    /** Ids retired by a committed compaction (union over every manifest's
+      * `replaces` list — a replaced id never becomes live again, so stale
+      * manifests awaiting cleanup can't resurrect one). */
+    lazy val retired: Set[Long] = all.flatMap(_.replaces).toSet
+    lazy val live: Seq[Manifest] = all.filterNot(m => retired(m.id))
+    def liveIds: Seq[Long] = live.map(_.id)
+    def data: Seq[Manifest] = live.filterNot(_.schemaOnly)
+    def get(id: Long): Option[Manifest] = all.find(_.id == id)
+
+    /** Drops are the union of every `drop_cols` at or below `asOf`. Rename
+      * and widen commits record their FULL history in commit order and
+      * replacement manifests carry it forward, so each chain is the longest
+      * one recorded at or below `asOf` (length is monotone in commit id;
+      * the order inside it is the commit order the renames must apply in,
+      * for chains like a→b then b→c). */
+    def evolution(asOf: Long): Evolution = {
+      val upTo = all.takeWhile(_.id <= asOf)
+      def longest(key: String) = upTo.map(_.pairs(key))
+        .foldLeft(Seq.empty[(String, String)])((best, c) => if (c.length > best.length) c else best)
+      Evolution(longest("rename_cols"), upTo.flatMap(_.dropped).toSet, longest("widen_cols"))
+    }
+    lazy val current: Evolution = evolution(Long.MaxValue)
+
+    def watermark: Long = all.filter(_.replaces.nonEmpty).lastOption.fold(0L)(_.id)
+
+    /** Per-app max batch ids across EVERY manifest still on disk, including
+      * compaction-retired ones awaiting cleanup — a replayed batch must
+      * stay deduplicated in the commit/cleanup gap. */
+    def txns: Map[String, Long] = all.flatMap(_.txns).groupMapReduce(_._1)(_._2)(math.max)
+
+    /** What a replacement manifest carries forward: the evolution record it
+      * was planned against and the per-app ledger marks of THIS listing —
+      * global, not just the replaced inputs', so dedup survives physical
+      * cleanup of the inputs even when the replacement covers only a prefix
+      * of the table. */
+    def carried(planned: Evolution): Map[String, String] =
+      planned.fields ++ txns.map { case (app, b) => s"txn_$app" -> b.toString }
+  }
+
+  private def listing(): Listing = new Listing(manifestIds)
+
+  /** Live snapshots: committed manifests minus compaction-retired ids. */
+  def snapshots: Seq[Long] = listing().liveIds
 
   /** True when snapshot `id` is a metadata-only commit (no data files) —
     * e.g. a [[dropColumn]]. Such ids participate in snapshot ordering but
     * are skipped by every parquet path list. */
-  def isSchemaOnly(id: Long): Boolean = {
-    val m = manifestDir.resolve(s"$id.json")
-    Files.exists(m) && SchemaOnlyRe.findFirstIn(
-      new String(Files.readAllBytes(m), StandardCharsets.UTF_8)).isDefined
-  }
+  def isSchemaOnly(id: Long): Boolean = readManifest(id).exists(_.schemaOnly)
 
-  /** Live snapshots that actually carry data files. Classification reads
-    * each LISTED id's manifest directly (not a separate dir scan): a
-    * schema-only commit landing between two scans could otherwise be
-    * misclassified as data and break the subsequent parquet read. */
-  def dataSnapshots: Seq[Long] = snapshots.filterNot(isSchemaOnly)
+  /** Live snapshots that actually carry data files, classified from the
+    * same listing that found them live. */
+  def dataSnapshots: Seq[Long] = listing().data.map(_.id)
 
   /** Columns dropped as of snapshot `asOf` — the union of every committed
     * manifest's `drop_cols` at or below it (drop commits record the column;
     * compaction/upsert replacement manifests carry the cumulative set so
     * the drop survives physical cleanup of the drop manifest itself). */
-  def droppedColumns(asOf: Long = Long.MaxValue): Set[String] =
-    manifestIds.filter(_ <= asOf).flatMap { id =>
-      val m = manifestDir.resolve(s"$id.json")
-      if (!Files.exists(m)) Nil
-      else DropColsRe.findFirstMatchIn(
-        new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-        .toSeq.flatMap(_.group(1).split(',').filter(_.nonEmpty))
-    }.toSet
+  def droppedColumns(asOf: Long = Long.MaxValue): Set[String] = listing().evolution(asOf).dropped
+
+  /** Cumulative ordered (column, target-type) widen list as of `asOf` —
+    * recorded and resolved exactly like the rename chain. */
+  def widenedColumns(asOf: Long = Long.MaxValue): Seq[(String, String)] =
+    listing().evolution(asOf).widens
+
+  /** Cumulative ORDERED rename chain as of snapshot `asOf` (see
+    * `Listing.evolution`). */
+  def renamedColumns(asOf: Long = Long.MaxValue): Seq[(String, String)] =
+    listing().evolution(asOf).renames
 
   /** DROP-COLUMN schema evolution — the manifest-only complement of the
     * ADD-COLUMN path (Iceberg's model: data files are untouched; readers
@@ -119,67 +230,19 @@ final class SnapshotStore(val root: String) {
     * read, so dropping the new name removes the pre-rename data too). */
   def dropColumn(spark: SparkSession, col: String): Long = {
     // same metacharacter guard as renameColumn: a ',' would corrupt the
-    // comma-joined drop_cols encoding into two phantom drops, a '"' the
-    // manifest JSON parse
+    // comma-joined drop_cols encoding into two phantom drops
     require(!col.exists(",\"".contains(_)),
       s"dropColumn: column name '$col' must not contain ',' or quotes")
-    val dataIds = dataSnapshots
-    require(dataIds.nonEmpty, "dropColumn: table has no data snapshots")
-    val chain = renamedColumns()
-    val dropped = droppedColumns()
-    val current = applyEvolution(readMerged(spark, dataIds), Long.MaxValue).columns.toSet
-    require(current.contains(col),
-      s"dropColumn: '$col' is not in the current schema ${current.toSeq.sorted.mkString("[", ",", "]")}")
-    val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
-    Files.createDirectories(stage)
-    commitStaged(stage,
-      () => Map("schema_only" -> "true",
-        "drop_cols" -> (droppedColumns() + col).toSeq.sorted.mkString(",")),
-      // the drop was validated against the schema produced by (chain,
-      // dropped) at planning; a concurrent evolution commit invalidates
-      // that validation — abort loudly rather than commit a stale verdict
-      () => renamedColumns() == chain && droppedColumns() == dropped)
-      .getOrElse(throw new IllegalStateException(
-        "dropColumn aborted: a concurrent schema-evolution commit landed; retry"))
+    val (evo, current) = planSchemaOp(spark, "dropColumn")
+    require(current.columns.contains(col),
+      s"dropColumn: '$col' is not in the current schema ${current.columns.sorted.mkString("[", ",", "]")}")
+    commitSchemaOnly("dropColumn", evo, "drop_cols" -> (evo.dropped + col).toSeq.sorted.mkString(","))
   }
-
-  private val RenameColsRe = """"rename_cols": "([^"]*)"""".r
-
-  private def encodeChain(chain: Seq[(String, String)]): String =
-    chain.map { case (f, t) => s"$f>$t" }.mkString(",")
-
-  private val WidenColsRe = """"widen_cols": "([^"]*)"""".r
 
   /** Widening-allowed primitive promotions (the Iceberg v2 set for flat
     * columns): the value space only grows, so old data files remain exact
     * under the cast and no reader can lose information. */
   private val WidenPromotions: Map[String, String] = Map("int" -> "bigint", "float" -> "double")
-
-  /** Longest encoded `from>to,…` chain recorded at or below `asOf` — the
-    * ONE manifest fold behind [[renamedColumns]] and [[widenedColumns]]
-    * (full history per commit, length monotone in commit id, replacement
-    * manifests carry it forward so the record survives physical cleanup
-    * of the evolution commit itself). */
-  private def chainFromManifests(re: scala.util.matching.Regex,
-                                 asOf: Long): Seq[(String, String)] =
-    manifestIds.filter(_ <= asOf).foldLeft(Seq.empty[(String, String)]) { (best, id) =>
-      val m = manifestDir.resolve(s"$id.json")
-      if (!Files.exists(m)) best
-      else {
-        val cur = re.findFirstMatchIn(
-          new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-          .toSeq.flatMap(_.group(1).split(',').filter(_.nonEmpty).map { e =>
-            val i = e.indexOf('>')
-            (e.substring(0, i), e.substring(i + 1))
-          })
-        if (cur.length > best.length) cur else best
-      }
-    }
-
-  /** Cumulative ordered (column, target-type) widen list as of `asOf` —
-    * recorded and resolved exactly like the rename chain. */
-  def widenedColumns(asOf: Long = Long.MaxValue): Seq[(String, String)] =
-    chainFromManifests(WidenColsRe, asOf)
 
   /** TYPE-WIDENING schema evolution — the fourth manifest-only op next to
     * ADD / DROP / RENAME: `int -> bigint` or `float -> double` (the
@@ -201,12 +264,7 @@ final class SnapshotStore(val root: String) {
         s"widenColumn: unsupported target type '$other' — only int->bigint and " +
           "float->double are lossless widenings this store supports")
     }
-    val dataIds = dataSnapshots
-    require(dataIds.nonEmpty, "widenColumn: table has no data snapshots")
-    val chain = renamedColumns()
-    val dropped = droppedColumns()
-    val widens = widenedColumns()
-    val current = applyEvolution(readMerged(spark, dataIds), Long.MaxValue)
+    val (evo, current) = planSchemaOp(spark, "widenColumn")
     val field = current.schema.fields.find(_.name == col).getOrElse(
       throw new IllegalArgumentException(
         s"widenColumn: '$col' is not in the current schema " +
@@ -218,28 +276,9 @@ final class SnapshotStore(val root: String) {
     require(WidenPromotions.get(from).contains(target),
       s"widenColumn: '$col' is $from — cannot widen to $target (allowed: " +
         WidenPromotions.map { case (f, t) => s"$f->$t" }.mkString(", ") + ")")
-    val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
-    Files.createDirectories(stage)
-    commitStaged(stage,
-      () => Map("schema_only" -> "true",
-        "widen_cols" -> encodeChain(widens :+ (col -> target))),
-      // same stale-validation guard as drop/rename: abort if any schema
-      // evolution landed between planning and commit
-      () => renamedColumns() == chain && droppedColumns() == dropped &&
-        widenedColumns() == widens)
-      .getOrElse(throw new IllegalStateException(
-        "widenColumn aborted: a concurrent schema-evolution commit landed; retry"))
+    commitSchemaOnly("widenColumn", evo,
+      "widen_cols" -> encodeChain(evo.widens :+ (col -> target)))
   }
-
-  /** Cumulative ORDERED rename chain as of snapshot `asOf`. Every rename
-    * commit records the FULL history in commit order, and replacement
-    * manifests (compaction/upsert) carry it forward — so the chain at any
-    * point is simply the longest recorded list at or below `asOf` (length
-    * is monotone in commit id; order inside the string is the commit
-    * order, which [[applyRenameChain]] must respect for chains like
-    * a→b then b→c). */
-  def renamedColumns(asOf: Long = Long.MaxValue): Seq[(String, String)] =
-    chainFromManifests(RenameColsRe, asOf)
 
   /** RENAME-COLUMN schema evolution — the third manifest-only op next to
     * ADD (schema-merge reads) and DROP: data files are untouched; readers
@@ -258,57 +297,59 @@ final class SnapshotStore(val root: String) {
     require(from != to, s"renameColumn: '$from' -> '$to' is a no-op")
     Seq(from, to).foreach(c => require(!c.exists(">,\"".contains(_)),
       s"renameColumn: column name '$c' must not contain '>', ',' or quotes"))
-    val dataIds = dataSnapshots
-    require(dataIds.nonEmpty, "renameColumn: table has no data snapshots")
-    val chain = renamedColumns()
-    val dropped = droppedColumns()
-    val current = applyEvolution(readMerged(spark, dataIds), Long.MaxValue).columns.toSet
+    val (evo, currentDf) = planSchemaOp(spark, "renameColumn")
+    val current = currentDf.columns.toSet
     require(current.contains(from),
       s"renameColumn: '$from' is not in the current schema ${current.toSeq.sorted.mkString("[", ",", "]")}")
     require(!current.contains(to), s"renameColumn: '$to' already exists in the schema")
-    require(!dropped.contains(to),
+    require(!evo.dropped.contains(to),
       s"renameColumn: '$to' was DROPPED from this table — name reuse would " +
         "resurrect pre-drop values out of old data files; pick a fresh name")
-    require(!chain.exists(_._1 == to),
+    require(!evo.renames.exists(_._1 == to),
       s"renameColumn: '$to' is the retired source of an earlier rename — " +
         "reusing it would fold new data into that rename's target out of old files")
-    val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
-    Files.createDirectories(stage)
-    commitStaged(stage,
-      () => Map("schema_only" -> "true",
-        "rename_cols" -> encodeChain(chain :+ (from -> to))),
-      // renamedColumns keeps only the LONGEST recorded chain, so a racing
-      // rename committing its own same-length chain would be permanently
-      // shadowed (its rename silently lost); and this rename's freshness
-      // checks were made against (chain, dropped). Abort loudly if either
-      // changed between planning and commit.
-      () => renamedColumns() == chain && droppedColumns() == dropped)
-      .getOrElse(throw new IllegalStateException(
-        "renameColumn aborted: a concurrent schema-evolution commit landed; retry"))
+    commitSchemaOnly("renameColumn", evo,
+      "rename_cols" -> encodeChain(evo.renames :+ (from -> to)))
   }
 
-  /** The current name of `col` after every rename at or below `asOf`. */
-  def currentName(col: String, asOf: Long = Long.MaxValue): String =
-    resolveName(renamedColumns(asOf), col)
+  /** The current evolution record and the evolved relation over every data
+    * snapshot — what a schema op validates against. */
+  private def planSchemaOp(spark: SparkSession, op: String): (Evolution, DataFrame) = {
+    val l = listing()
+    require(l.data.nonEmpty, s"$op: table has no data snapshots")
+    (l.current, l.current(readMerged(spark, l, l.data.map(_.dataPath.toString))))
+  }
 
-  /** [[currentName]] against a PRECOMPUTED chain — the per-snapshot loops
-    * below must not re-scan every manifest per id (O(n²) at 10^3+ commits). */
-  private def resolveName(chain: Seq[(String, String)], col: String): String =
-    chain.foldLeft(col) { case (c, (f, t)) => if (c == f) t else c }
+  /** Commit a metadata-only snapshot recording `field`. The op was
+    * validated against the schema `planned` produces; a concurrent
+    * evolution commit invalidates that validation (and, since a chain
+    * keeps only its LONGEST record, a racing rename committing a
+    * same-length chain would be shadowed for good) — so the commit aborts
+    * loudly if the record changed between planning and commit. */
+  private def commitSchemaOnly(op: String, planned: Evolution, field: (String, String)): Long = {
+    val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
+    Files.createDirectories(stage)
+    commitStaged(stage, _ => Map("schema_only" -> "true", field), _.current == planned)
+      .getOrElse(throw new IllegalStateException(
+        s"$op aborted: a concurrent schema-evolution commit landed; retry"))
+  }
 
   /** The id of the newest committed COMPACTED snapshot (0 if none). The
     * compacted snapshot rewrites older data under a NEWER id, so any
     * incremental checkpoint below this id (other than 0 = full read)
     * would re-see rewritten rows and cannot be served exactly any more —
     * see [[readRange]]. */
-  def compactionWatermark: Long =
-    manifestReplaces.collect { case (id, r) if r.nonEmpty => id }
-      .foldLeft(0L)(math.max)
+  def compactionWatermark: Long = listing().watermark
 
   def latest: Option[Long] = snapshots.lastOption
 
   /** Append `df` as the next snapshot; returns its id. Visible only after
     * the manifest rename commits.
+    *
+    * `meta` adds caller keys to the manifest (e.g. `table`); a key the
+    * store writes itself (see the key table above) is rejected before
+    * any data is staged — it would retire snapshots, hide the rows or
+    * forge a ledger mark.
     *
     * The manifest records the exact committed `row_count`, so consumers
     * (e.g. SubmitMain's summary line) never rescan the table. The write
@@ -336,12 +377,14 @@ final class SnapshotStore(val root: String) {
       df: DataFrame,
       meta: Map[String, String] = Map.empty,
       statsCol: Option[String] = None): Long = {
-    requireNoDroppedNames(df)
-    requireNoRetiredNames(df)
+    val owned = meta.keys.filter(SnapshotStore.storeOwned).toSeq.sorted
+    require(owned.isEmpty,
+      s"append: meta key(s) ${owned.mkString(", ")} are written by the store itself")
+    requireNewNames(df, listing().current)
     val (stage, nRows) = stageWrite(df, countRows = true)
-    val withStats = meta + ("row_count" -> nRows.get.toString) ++
+    val fields = meta + ("row_count" -> nRows.get.toString) ++
       stagedStats(df.sparkSession, stage, statsCol)
-    commitStaged(stage, () => withStats, () => true).get
+    commitStaged(stage, _ => fields, _ => true).get
   }
 
   /** Write `df` to a uniquely-named staging dir under root/data — data
@@ -407,28 +450,28 @@ final class SnapshotStore(val root: String) {
   }
 
   /** Optimistic-concurrency commit of a staged write (the Iceberg commit
-    * model on a plain filesystem): loop { allocate the next id → re-run
-    * `decide` → publish via hard-link, which FAILS atomically if that id
-    * was committed first }. A competing commit either lands before our
-    * `decide` re-check (it sees the new state and may abort) or collides
-    * on the id (we loop and re-decide) — there is no interleaving where
-    * two writers both publish under one id, and none where a same-app
-    * exactly-once append double-commits (see [[appendExactlyOnce]]).
-    * Returns None (stage deleted) when `decide` aborts. */
+    * model on a plain filesystem): loop { list the manifests → allocate the
+    * next id → run `decide` against that listing → publish via hard-link,
+    * which FAILS atomically if that id was committed first }. A competing
+    * commit either is in our listing (`decide` sees the new state and may
+    * abort) or collides on the id (we loop and re-decide) — there is no
+    * interleaving where two writers both publish under one id, and none
+    * where a same-app exactly-once append double-commits (see
+    * [[appendExactlyOnce]]). Returns None (stage deleted) when `decide`
+    * aborts. */
   private def commitStaged(
       stage: Path,
-      meta: () => Map[String, String],
-      decide: () => Boolean): Option[Long] = {
+      meta: Listing => Map[String, String],
+      decide: Listing => Boolean): Option[Long] = {
     try {
       while (true) {
-        // allocate above every manifest ever committed (incl. retired ones
-        // still awaiting cleanup) so ids never collide after a compaction
-        val id = manifestIds.lastOption.getOrElse(0L) + 1L
-        if (!decide()) { deleteRecursively(stage); return None }
+        val l = listing()
+        val id = l.nextId
+        if (!decide(l)) { deleteRecursively(stage); return None }
         // meta is re-evaluated per attempt: a competing commit that forced
         // our id collision may have advanced state the manifest must
         // reflect (e.g. another app's ledger mark carried by a replace)
-        if (tryCommitManifest(id, meta() + ("data" -> stage.getFileName.toString)))
+        if (tryCommitManifest(id, meta(l) + ("data" -> stage.getFileName.toString)))
           return Some(id)
       }
       None // unreachable
@@ -506,39 +549,27 @@ final class SnapshotStore(val root: String) {
     // Spark jobs) must make decide() fail — captured after the probes it
     // would be INCLUDED in the baseline and the write-skew check would
     // wave the conflicting snapshot through unprobed
-    val liveAtPlan = snapshots.toSet
-    val droppedAtPlan = droppedColumns() // one manifest scan, reused below
-    val chainAtPlan = renamedColumns()
-    val widensAtPlan = widenedColumns()
-    requireNoDroppedNames(updates, droppedAtPlan)
-    requireNoRetiredNames(updates, chainAtPlan)
-    val live = dataSnapshots
-    if (live.isEmpty) return append(updates, statsCol = statsCol)
+    val l = listing()
+    val liveAtPlan = l.liveIds.toSet
+    val evo = l.current
+    requireNewNames(updates, evo)
+    if (l.data.isEmpty) return append(updates, statsCol = statsCol)
     val keys = updates.select(keyCol).distinct().localCheckpoint(true)
     require(keys.count() == updates.count(),
       s"upsert: updates carry duplicate '$keyCol' keys — merge would be ambiguous")
     val keyRange = updates.selectExpr(
       s"CAST(min($keyCol) AS LONG) AS mn", s"CAST(max($keyCol) AS LONG) AS mx").head()
-    val candidates = live.filter { id =>
-      snapshotStats(id) match {
-        // stats may be recorded under a pre-rename name; values are unchanged
-        case Some((c, mn, mx)) if resolveName(chainAtPlan, c) == keyCol && !keyRange.isNullAt(0) =>
-          mx >= keyRange.getLong(0) && mn <= keyRange.getLong(1)
-        case _ => true // no usable stats: must probe
-      }
-    }
-    val affected = candidates.filter { id =>
-      // probe under the CURRENT schema, not the snapshot's own era — a
-      // pre-rename snapshot must resolve the key by its current name
-      applyDropSet(
-        applyRenameChain(spark.read.parquet(dataPathOf(id).toString), chainAtPlan),
-        droppedAtPlan)
+    // stats may be recorded under a pre-rename name; values are unchanged
+    val candidates = l.data.filter(m => keyRange.isNullAt(0) ||
+      m.mayMatch(keyCol, keyRange.getLong(0), keyRange.getLong(1), evo))
+    // probe under the CURRENT schema, not the snapshot's own era — a
+    // pre-rename snapshot must resolve the key by its current name
+    val affected = candidates.filter { m =>
+      evo.project(spark.read.parquet(m.dataPath.toString))
         .join(keys, Seq(keyCol), "left_semi").limit(1).count() > 0
     }
     if (affected.isEmpty) return append(updates, statsCol = statsCol)
-    val survivors = applyWidenSet(applyDropSet(
-        applyRenameChain(readMerged(spark, affected), chainAtPlan), droppedAtPlan),
-        chainAtPlan, widensAtPlan)
+    val survivors = evo(readMerged(spark, l, affected.map(_.dataPath.toString)))
       .join(keys, Seq(keyCol), "left_anti")
     // union SCHEMA = survivors ∪ updates: an update column the affected
     // snapshots never carried must land (survivors surface it as NULL),
@@ -547,11 +578,8 @@ final class SnapshotStore(val root: String) {
     // loud: updates omitting a column the affected rows carry would
     // silently NULL that column in every rewritten row (copy-on-write
     // replaces whole rows — there are no partial updates)
-    // name comparison honors the session's resolver (unionByName resolves
-    // case-insensitively under the default spark.sql.caseSensitive=false)
-    val cs = spark.sessionState.conf.caseSensitiveAnalysis
-    def normName(c: String) = if (cs) c else c.toLowerCase(java.util.Locale.ROOT)
-    val missing = survivors.columns.map(normName).toSet -- updates.columns.map(normName).toSet
+    val missing = survivors.columns.map(normName(updates, _)).toSet --
+      updates.columns.map(normName(updates, _))
     require(missing.isEmpty,
       s"upsert: updates omit live column(s) ${missing.toSeq.sorted.mkString(",")} " +
         "carried by the matched rows — a CoW merge rewrites whole rows, so the " +
@@ -559,28 +587,14 @@ final class SnapshotStore(val root: String) {
     val merged = survivors.unionByName(updates, allowMissingColumns = true)
     val (stage, _) = stageWrite(merged)
     val stats = stagedStats(spark, stage, statsCol)
-    val dropMeta =
-      if (droppedAtPlan.isEmpty) Map.empty[String, String]
-      else Map("drop_cols" -> droppedAtPlan.toSeq.sorted.mkString(","))
-    val renameMeta =
-      if (chainAtPlan.isEmpty) Map.empty[String, String]
-      else Map("rename_cols" -> encodeChain(chainAtPlan))
-    val widenMeta =
-      if (widensAtPlan.isEmpty) Map.empty[String, String]
-      else Map("widen_cols" -> encodeChain(widensAtPlan))
     val id = commitStaged(stage,
-      // ledger marks carried GLOBALLY (not just from the replaced inputs):
-      // txnLastBatch scans newest-first, so a replacement manifest must
-      // dominate every older mark for every app — and re-evaluated per
-      // commit attempt so a mark committed during our id race is included
-      () => Map("replaces" -> affected.mkString(",")) ++ dropMeta ++ renameMeta ++
-        widenMeta ++ globalTxns ++ stats,
+      now => Map("replaces" -> affected.map(_.id).mkString(",")) ++ now.carried(evo) ++ stats,
       // abort if the LIVE SET changed at all since planning: a retired
       // input means double-replace, and a concurrent APPEND may have
       // landed rows with matching keys that this rewrite would silently
       // leave duplicated (write skew) — Iceberg's conflicting-data-files
       // validation, taken conservatively
-      () => snapshots.toSet == liveAtPlan)
+      _.liveIds.toSet == liveAtPlan)
       .getOrElse(throw new IllegalStateException(
         "upsert aborted: the table changed under a concurrent commit; retry the upsert"))
     if (cleanup) expireRetired()
@@ -598,18 +612,11 @@ final class SnapshotStore(val root: String) {
     // stats job / commit retries ran (the age floor in expireOrphanStages
     // makes this practically impossible; this check makes it loud, never
     // a committed manifest pointing at deleted data)
-    meta.get("data").foreach { d =>
-      val stage = Paths.get(root, "data", d)
-      require(Files.exists(stage),
-        s"commit aborted: staged data $stage disappeared (orphan GC raced an in-flight commit?)")
-    }
+    val stage = Paths.get(root, "data", meta("data"))
+    require(Files.exists(stage),
+      s"commit aborted: staged data $stage disappeared (orphan GC raced an in-flight commit?)")
     Files.createDirectories(manifestDir)
-    val json = {
-      val kv = (meta ++ Map("snapshot_id" -> id.toString, "rows" -> "")).map {
-        case (k, v) => s""""$k": "${v.replace("\"", "\\\"")}""""
-      }
-      kv.mkString("{", ", ", "}")
-    }
+    val json = SnapshotStore.encodeManifest(meta + ("snapshot_id" -> id.toString))
     val tmp = manifestDir.resolve(s".$id.${java.util.UUID.randomUUID}.tmp")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     try { Files.createLink(manifestDir.resolve(s"$id.json"), tmp); true }
@@ -621,23 +628,12 @@ final class SnapshotStore(val root: String) {
     }
   }
 
-  /** Data location for snapshot `id`: the staging dir its manifest points
-    * at, or the legacy id-derived dir for manifests without one. */
-  private def dataPathOf(id: Long): Path = {
-    val m = manifestDir.resolve(s"$id.json")
-    val named =
-      if (!Files.exists(m)) None
-      else """"data": "([^"]*)"""".r.findFirstMatchIn(
-        new String(Files.readAllBytes(m), StandardCharsets.UTF_8)).map(_.group(1))
-    named.map(n => Paths.get(root, "data", n)).getOrElse(dataDir(id))
-  }
-
   /** Physical data location of snapshot `id` (the staged dir its manifest
     * names) — the file-listing surface tooling and tests inspect. */
-  def dataLocation(id: Long): Path = dataPathOf(id)
+  def dataLocation(id: Long): Path =
+    readManifest(id).getOrElse(throw new IllegalArgumentException(s"snapshot $id has no manifest"))
+      .dataPath
 
-  /** Loud re-add guard: a dropped NAME cannot return (see [[dropColumn]]).
-    * Pass a precomputed set to avoid a second manifest scan per op. */
   /** Name comparison under the SESSION's resolver: the read path's
     * `df.drop` / rename resolution is case-insensitive under the default
     * `spark.sql.caseSensitive=false`, so these guards must be too — an
@@ -647,218 +643,99 @@ final class SnapshotStore(val root: String) {
     if (df.sparkSession.sessionState.conf.caseSensitiveAnalysis) c
     else c.toLowerCase(java.util.Locale.ROOT)
 
-  private def requireNoDroppedNames(df: DataFrame,
-                                    dropped: Set[String] = null): Unit = {
-    val d = (if (dropped == null) droppedColumns() else dropped).map(normName(df, _))
-    val clash = df.columns.filter(c => d.contains(normName(df, c)))
-    require(clash.isEmpty,
-      s"columns ${clash.toSeq.sorted.mkString(",")} were DROPPED from this table; " +
+  /** Loud guards on the names a write may use: a dropped NAME cannot
+    * return (see [[dropColumn]]), and writing under a rename's SOURCE name
+    * would fold the new data into the rename's target out of old files. */
+  private def requireNewNames(df: DataFrame, evo: Evolution): Unit = {
+    val d = evo.dropped.map(normName(df, _))
+    val dropped = df.columns.filter(c => d.contains(normName(df, c)))
+    require(dropped.isEmpty,
+      s"columns ${dropped.toSeq.sorted.mkString(",")} were DROPPED from this table; " +
         "re-adding a dropped name would resurrect pre-drop values out of old " +
         "data files (this store identifies columns by name, not field id) — " +
         "use a fresh column name")
-  }
-
-  /** The full schema-evolution projection as of `asOf`: the rename chain
-    * first (files written before a rename surface the value under the new
-    * name), then the drop set (whose names are post-rename by
-    * construction — [[dropColumn]] validates against the evolved schema),
-    * then the widen set (each widen's recorded name resolved through the
-    * FULL chain — a widen recorded pre-rename follows its column to the
-    * new name; recording post-rename under a not-yet-current name is
-    * impossible since [[widenColumn]] validates against the evolved
-    * schema). The pairs cannot interleave incorrectly: a drop's name can
-    * never be a rename source (a renamed-away name is not in the schema to
-    * drop) and a rename target can never be a dropped name
-    * ([[renameColumn]] rejects it), so chain-then-set-then-cast is
-    * order-exact. */
-  private def applyEvolution(df: DataFrame, asOf: Long): DataFrame = {
-    val chain = renamedColumns(asOf)
-    applyWidenSet(applyDropSet(applyRenameChain(df, chain), droppedColumns(asOf)),
-      chain, widenedColumns(asOf))
-  }
-
-  /** Up-cast every widened column still present (a widened-then-dropped
-    * column is simply absent). Cast of an already-wide column is a no-op
-    * the optimizer removes, so post-compaction reads pay nothing. */
-  private def applyWidenSet(df: DataFrame, chain: Seq[(String, String)],
-                            widens: Seq[(String, String)]): DataFrame =
-    widens.foldLeft(df) { case (d, (n, t)) =>
-      val cur = resolveName(chain, n)
-      if (d.columns.contains(cur)) d.withColumn(cur, d(cur).cast(t)) else d
-    }
-
-  /** Apply the ordered rename chain to a (possibly mixed-era) relation:
-    * both names present (old files + post-rename files under mergeSchema)
-    * → fold the old column into the new one (disjoint by construction —
-    * [[append]] rejects the retired name, so no row carries both); only
-    * the old name → plain rename; only the new name (post-compaction) →
-    * no-op. Exact name matching, like every other store surface. */
-  private def applyRenameChain(df: DataFrame, chain: Seq[(String, String)]): DataFrame =
-    chain.foldLeft(df) { case (d, (f, t)) =>
-      val has = d.columns.toSet
-      if (has(f) && has(t))
-        d.withColumn(t, org.apache.spark.sql.functions.coalesce(d(t), d(f))).drop(f)
-      else if (has(f)) d.withColumnRenamed(f, t)
-      else d
-    }
-
-  /** Loud retired-name guard, the rename twin of [[requireNoDroppedNames]]:
-    * writing under a rename's SOURCE name would fold the new data into the
-    * rename's target out of old files. Pass a precomputed chain to avoid a
-    * second manifest scan per op. */
-  private def requireNoRetiredNames(df: DataFrame,
-                                    chain: Seq[(String, String)] = null): Unit = {
-    val c = if (chain == null) renamedColumns() else chain
-    val renamedTo = c.map { case (f, t) => normName(df, f) -> t }.toMap
-    val clash = df.columns.filter(col => renamedTo.contains(normName(df, col))).sorted
-    require(clash.isEmpty,
-      clash.map(f => s"'$f' (renamed to '${renamedTo(normName(df, f))}')").mkString(", ") +
+    val renamedTo = evo.renames.map { case (f, t) => normName(df, f) -> t }.toMap
+    val retired = df.columns.filter(col => renamedTo.contains(normName(df, col))).sorted
+    require(retired.isEmpty,
+      retired.map(f => s"'$f' (renamed to '${renamedTo(normName(df, f))}')").mkString(", ") +
         ": these columns were RENAMED on this table; write the new name(s)")
   }
-
-  private def applyDropSet(df: DataFrame, dropped: Set[String]): DataFrame =
-    if (dropped.isEmpty) df else df.drop(dropped.toSeq.sorted: _*)
 
   /** Read one snapshot (time-travel: only drops committed at or below `id`
     * apply, mirroring Iceberg's per-snapshot schema). */
   def read(spark: SparkSession, id: Long): DataFrame = {
-    require(snapshots.contains(id), s"snapshot $id not committed")
-    require(!isSchemaOnly(id),
+    val l = listing()
+    val m = l.live.find(_.id == id)
+    require(m.isDefined, s"snapshot $id not committed")
+    require(!m.get.schemaOnly,
       s"snapshot $id is a metadata-only (schema) commit — it has no data to read")
-    applyEvolution(spark.read.parquet(dataPathOf(id).toString), id)
+    l.evolution(id)(spark.read.parquet(m.get.dataPath.toString))
   }
 
   /** One relation over several snapshots with ADD-COLUMN schema evolution:
-    * `mergeSchema` unions the per-snapshot parquet schemas, so rows written
-    * before a column existed surface it as NULL — the Iceberg evolution
-    * contract — and DROP-COLUMN projection (columns dropped at or below the
-    * newest requested id vanish from the relation). Every multi-snapshot
-    * read below goes through here (a plain multi-path read would silently
-    * project everything onto the FIRST file's schema, dropping later
-    * columns). Callers pass data ids only and apply [[applyEvolution]] at their
-    * own asOf bound (a schema commit can be NEWER than the newest data id in
-    * the range, so the bound is the range end, not `ids.max`). */
-  private def readMerged(spark: SparkSession, ids: Seq[Long]): DataFrame =
-    mergedScan(spark, ids.map(id => dataPathOf(id).toString))
-
-  /** Multi-era scan primitive: parquet `mergeSchema` while every era agrees
-    * on types (ONE scan node — the cheap steady state), switching to
-    * per-path reads folded with `unionByName(allowMissingColumns = true)`
-    * once any widen is recorded — parquet schema merging cannot reconcile
-    * int/bigint eras, while union coercion widens them exactly (and
-    * missing columns still null-fill, the same ADD-COLUMN contract). The
-    * union plan grows with the path count; compaction collapses it back to
-    * the single-scan shape, which is the maintenance cadence a
-    * high-frequency append table runs anyway. */
-  // widen-PRESENCE cache for the scan-path routing decision below: widens
-  // are cumulative and never removed, so the verdict is a pure function of
-  // the manifest set — keyed by (count, max id), both from the directory
-  // listing every operation performs anyway. Without this, EVERY scan of a
-  // widen-free store (the steady state) re-read and re-regexed the entire
-  // manifest directory just to learn "no widens" — O(#manifests) file
-  // reads per read at the 10^3-commit scale this file's own resolveName
-  // comment warns about. A concurrent commit changes the key and refreshes.
-  @volatile private var widenPresence: ((Int, Long), Boolean) = ((-1, -1L), false)
-  private def anyWiden: Boolean = {
-    val ids = manifestIds
-    val key = (ids.size, if (ids.isEmpty) 0L else ids.max)
-    val cached = widenPresence
-    if (cached._1 == key) cached._2
-    else {
-      val v = widenedColumns().nonEmpty
-      widenPresence = (key, v)
-      v
-    }
-  }
-
-  private def mergedScan(spark: SparkSession, paths: Seq[String]): DataFrame =
-    if (!anyWiden)
+    * rows written before a column existed surface it as NULL — the Iceberg
+    * evolution contract. Every multi-snapshot read goes through here (a
+    * plain multi-path read would silently project everything onto the
+    * FIRST file's schema, dropping later columns). Callers apply the
+    * listing's evolution at their own asOf bound (a schema commit can be
+    * NEWER than the newest data id in the range, so the bound is the range
+    * end, not `ids.max`).
+    *
+    * Parquet `mergeSchema` while every era agrees on types (ONE scan node
+    * — the cheap steady state), switching to per-path reads folded with
+    * `unionByName(allowMissingColumns = true)` once any widen is recorded
+    * — parquet schema merging cannot reconcile int/bigint eras, while
+    * union coercion widens them exactly (and missing columns still
+    * null-fill). The union plan grows with the path count; compaction
+    * collapses it back to the single-scan shape, which is the maintenance
+    * cadence a high-frequency append table runs anyway. */
+  private def readMerged(spark: SparkSession, l: Listing, paths: Seq[String]): DataFrame =
+    if (l.current.widens.isEmpty)
       spark.read.option("mergeSchema", "true").parquet(paths: _*)
     else
       paths.map(p => spark.read.parquet(p))
         .reduce(_.unionByName(_, allowMissingColumns = true))
 
-  /** Incremental read of snapshots in (fromExclusive, toInclusive].
-    *
-    * A checkpoint strictly inside a compacted range cannot be served
-    * exactly (the compacted snapshot holds the WHOLE retired prefix, so
-    * the reader would re-see rows it already processed) — that read fails
-    * loudly instead of silently duplicating; `fromExclusive = 0` (a full
-    * read from the beginning) stays valid across compactions, as does any
-    * checkpoint at or above the watermark. Same contract as expiring
-    * snapshots under an Iceberg incremental scan. */
-  def readRange(spark: SparkSession, fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val wm = compactionWatermark
+  /** Data snapshots of (fromExclusive, toInclusive], after the checkpoint
+    * check every range read makes. A checkpoint strictly inside a
+    * compacted range cannot be served exactly (the compacted snapshot
+    * holds the WHOLE retired prefix, so the reader would re-see rows it
+    * already processed) — that read fails loudly instead of silently
+    * duplicating; `fromExclusive = 0` (a full read from the beginning)
+    * stays valid across compactions, as does any checkpoint at or above
+    * the watermark. Same contract as expiring snapshots under an Iceberg
+    * incremental scan. */
+  private def dataInRange(l: Listing, fromExclusive: Long, toInclusive: Long): Seq[Manifest] = {
+    val wm = l.watermark
     require(fromExclusive == 0L || fromExclusive >= wm,
       s"checkpoint $fromExclusive predates the compaction watermark $wm: " +
         "the retired snapshots were rewritten; restart from a full read (from=0)")
-    val ids = dataSnapshots.filter(id => id > fromExclusive && id <= toInclusive)
-    require(ids.nonEmpty, s"no data snapshots in ($fromExclusive, $toInclusive]")
-    applyEvolution(readMerged(spark, ids), toInclusive)
+    val ms = l.data.filter(m => m.id > fromExclusive && m.id <= toInclusive)
+    require(ms.nonEmpty, s"no data snapshots in ($fromExclusive, $toInclusive]")
+    ms
+  }
+
+  /** Incremental read of snapshots in (fromExclusive, toInclusive]; see
+    * [[dataInRange]] for the checkpoint contract. */
+  def readRange(spark: SparkSession, fromExclusive: Long, toInclusive: Long): DataFrame = {
+    val l = listing()
+    val ms = dataInRange(l, fromExclusive, toInclusive)
+    l.evolution(toInclusive)(readMerged(spark, l, ms.map(_.dataPath.toString)))
   }
 
   /** Column stats recorded for snapshot `id` at append time:
     * (column, min, max), if any. */
-  def snapshotStats(id: Long): Option[(String, Long, Long)] = {
-    val m = manifestDir.resolve(s"$id.json")
-    if (!Files.exists(m)) None
-    else {
-      val s = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-      def f(k: String) = (s""""$k": "([^"]*)"""").r.findFirstMatchIn(s).map(_.group(1))
-      for { c <- f("stats_col"); mn <- f("stats_min"); mx <- f("stats_max") }
-        yield (c, mn.toLong, mx.toLong)
-    }
-  }
+  def snapshotStats(id: Long): Option[(String, Long, Long)] = readManifest(id).flatMap(_.stats)
 
   /** Exact row count recorded in snapshot `id`'s manifest at append time
     * (absent for metadata-only commits and manifests written before the
     * field existed). */
-  def rowCount(id: Long): Option[Long] = {
-    val m = manifestDir.resolve(s"$id.json")
-    if (!Files.exists(m)) None
-    else """"row_count": "([0-9]+)"""".r
-      .findFirstMatchIn(new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-      .map(_.group(1).toLong)
-  }
+  def rowCount(id: Long): Option[Long] = readManifest(id).flatMap(_.rowCount)
 
-  private val TxnRe = """"txn_([^"]+)": "([0-9]+)"""".r
-
-  /** Highest batch id ever committed for `appId`, scanning manifests still
-    * on disk (including compaction-retired ones awaiting cleanup — a
-    * replayed batch must stay deduplicated in the commit/cleanup gap).
-    * [[compact]] and [[upsert]] carry each app's max forward into their
-    * replacement manifest, so the ledger survives physical cleanup.
-    *
-    * Scans NEWEST-first with early exit: per-app batch ids are strictly
-    * increasing in commit order ([[appendExactlyOnce]] refuses anything at
-    * or below the mark, and carried marks are maxes), so the newest
-    * manifest mentioning the app holds its max — the common steady-state
-    * cost is one or two manifest reads, not O(total commits). */
-  def txnLastBatch(appId: String): Option[Long] =
-    manifestIds.reverseIterator.flatMap { id =>
-      val m = manifestDir.resolve(s"$id.json")
-      if (!Files.exists(m)) Iterator.empty
-      else TxnRe.findAllMatchIn(
-        new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-        .collect { case mm if mm.group(1) == appId => mm.group(2).toLong }
-    }.nextOption()
-
-  /** Per-app max batch ids across EVERY manifest still on disk — carried
-    * into any replacement manifest so (a) dedup survives physical cleanup
-    * of the replaced inputs and (b) the replacement, being the newest
-    * manifest, dominates every older mark, keeping [[txnLastBatch]]'s
-    * newest-first early exit exact even when the replacement covers only a
-    * PREFIX of the table (a partial compact must not shadow a newer
-    * append's mark with an older carried one). */
-  private def globalTxns: Map[String, String] =
-    manifestIds.flatMap { id =>
-      val m = manifestDir.resolve(s"$id.json")
-      if (!Files.exists(m)) Nil
-      else TxnRe.findAllMatchIn(
-        new String(Files.readAllBytes(m), StandardCharsets.UTF_8))
-        .map(mm => mm.group(1) -> mm.group(2).toLong).toSeq
-    }.groupMapReduce(_._1)(_._2)(math.max)
-      .map { case (app, b) => s"txn_$app" -> b.toString }
+  /** Highest batch id ever committed for `appId`, over every manifest still
+    * on disk. [[compact]] and [[upsert]] carry each app's max forward into
+    * their replacement manifest, so the ledger survives physical cleanup. */
+  def txnLastBatch(appId: String): Option[Long] = listing().txns.get(appId)
 
   /** Idempotent append keyed by `(appId, batchId)` — the sink half of the
     * streaming exactly-once contract (Structured Streaming's foreachBatch
@@ -883,50 +760,32 @@ final class SnapshotStore(val root: String) {
       batchId: Long,
       statsCol: Option[String] = None): Option[Long] = {
     require(!appId.contains("\""), s"appId must not contain quotes: $appId")
-    requireNoDroppedNames(df)
-    requireNoRetiredNames(df)
-    def fresh = !txnLastBatch(appId).exists(_ >= batchId)
-    if (!fresh) return None // cheap pre-check before staging any data
+    val l = listing()
+    requireNewNames(df, l.current)
+    def fresh(now: Listing) = !now.txns.get(appId).exists(_ >= batchId)
+    if (!fresh(l)) return None // cheap pre-check before staging any data
     val (stage, _) = stageWrite(df)
     val m = Map(s"txn_$appId" -> batchId.toString) ++
       stagedStats(df.sparkSession, stage, statsCol)
-    commitStaged(stage, () => m, () => fresh)
+    commitStaged(stage, _ => m, fresh)
   }
 
   /** Per-file (basename, min, max) stats recorded for snapshot `id`, if
     * the manifest carries them for `col` (under its recorded pre-rename
     * name or the current one). */
-  def fileStats(id: Long, col: String): Option[Seq[(String, Long, Long)]] =
-    fileStats(id, col, renamedColumns())
-
-  private def fileStats(id: Long, col: String,
-      chain: Seq[(String, String)]): Option[Seq[(String, Long, Long)]] = {
-    val m = manifestDir.resolve(s"$id.json")
-    if (!Files.exists(m)) return None
-    val s = new String(Files.readAllBytes(m), StandardCharsets.UTF_8)
-    def f(k: String) = (s""""$k": "([^"]*)"""").r.findFirstMatchIn(s).map(_.group(1))
-    for {
-      c <- f("stats_col") if resolveName(chain, c) == col
-      enc <- f("file_stats")
-    } yield enc.split(';').toSeq.filter(_.nonEmpty).map { e =>
-      val Array(name, mn, mx) = e.split(':')
-      (name, mn.toLong, mx.toLong)
-    }
+  def fileStats(id: Long, col: String): Option[Seq[(String, Long, Long)]] = {
+    val l = listing()
+    l.get(id).flatMap(_.fileStats(col, l.current))
   }
 
   /** Split snapshot `id`'s data files into (kept paths, skipped count) for
     * a `col BETWEEN lo AND hi` predicate using the per-file manifest
     * stats; None when the manifest has no file stats for `col` (caller
     * reads the whole snapshot — stats only ever PRUNE). */
-  def pruneFiles(id: Long, col: String, lo: Long, hi: Long): Option[(Seq[String], Int)] =
-    pruneFiles(id, col, lo, hi, renamedColumns())
-
-  private def pruneFiles(id: Long, col: String, lo: Long, hi: Long,
-      chain: Seq[(String, String)]): Option[(Seq[String], Int)] =
-    fileStats(id, col, chain).map { fs =>
-      val (keep, skip) = fs.partition { case (_, mn, mx) => mx >= lo && mn <= hi }
-      (keep.map { case (name, _, _) => dataPathOf(id).resolve(name).toString }, skip.size)
-    }
+  def pruneFiles(id: Long, col: String, lo: Long, hi: Long): Option[(Seq[String], Int)] = {
+    val l = listing()
+    l.get(id).flatMap(_.pruneFiles(col, lo, hi, l.current))
+  }
 
   /** Split the live snapshots of (fromExclusive, toInclusive] into
     * (kept, skipped) for a `col BETWEEN lo AND hi` predicate using the
@@ -935,14 +794,10 @@ final class SnapshotStore(val root: String) {
     * that column are conservatively kept — stats only ever PRUNE. */
   def pruneSnapshots(fromExclusive: Long, toInclusive: Long,
       col: String, lo: Long, hi: Long): (Seq[Long], Seq[Long]) = {
-    val chain = renamedColumns() // once, not per snapshot
-    snapshots.filter(id => id > fromExclusive && id <= toInclusive)
-      .partition { id =>
-        snapshotStats(id) match {
-          case Some((c, mn, mx)) if resolveName(chain, c) == col => mx >= lo && mn <= hi
-          case _ => true
-        }
-      }
+    val l = listing()
+    val (kept, skipped) = l.live.filter(m => m.id > fromExclusive && m.id <= toInclusive)
+      .partition(_.mayMatch(col, lo, hi, l.current))
+    (kept.map(_.id), skipped.map(_.id))
   }
 
   /** [[readRange]] plus two-level predicate pruning — the manifest analog
@@ -957,33 +812,19 @@ final class SnapshotStore(val root: String) {
     * decide, membership. */
   def readRangePruned(spark: SparkSession, fromExclusive: Long, toInclusive: Long,
       col: String, lo: Long, hi: Long): DataFrame = {
-    val wm = compactionWatermark
-    require(fromExclusive == 0L || fromExclusive >= wm,
-      s"checkpoint $fromExclusive predates the compaction watermark $wm: " +
-        "the retired snapshots were rewritten; restart from a full read (from=0)")
-    val (kept0, _) = pruneSnapshots(fromExclusive, toInclusive, col, lo, hi)
-    val kept = kept0.filterNot(isSchemaOnly)
-    val all = dataSnapshots.filter(id => id > fromExclusive && id <= toInclusive)
-    require(all.nonEmpty, s"no data snapshots in ($fromExclusive, $toInclusive]")
-    // ONE chain read for the whole loop — the public pruneFiles overload
-    // would re-scan every manifest per kept snapshot (O(n²) at 10^3+
-    // commits on the hottest read path)
-    val chain = renamedColumns()
-    val paths = kept.flatMap { id =>
-      pruneFiles(id, col, lo, hi, chain) match {
-        case Some((keepPaths, _)) => keepPaths
-        case None => Seq(dataPathOf(id).toString) // no file stats: whole snapshot
-      }
+    val l = listing()
+    val all = dataInRange(l, fromExclusive, toInclusive)
+    val paths = all.filter(_.mayMatch(col, lo, hi, l.current)).flatMap { m =>
+      m.pruneFiles(col, lo, hi, l.current).fold(Seq(m.dataPath.toString))(_._1)
     }
     val base =
-      if (paths.nonEmpty) mergedScan(spark, paths)
+      if (paths.nonEmpty) readMerged(spark, l, paths)
       else // everything pruned: empty result with the table's FULL merged
         // schema (a first-snapshot-only read would lack later-era added
         // columns, making .select on the empty result throw where the
         // unpruned path succeeds); lit(false) keeps it schema-only cost
-        mergedScan(spark, all.map(dataPathOf(_).toString))
-          .where(org.apache.spark.sql.functions.lit(false))
-    applyEvolution(base, toInclusive).where(s"$col BETWEEN $lo AND $hi")
+        readMerged(spark, l, all.map(_.dataPath.toString)).where(lit(false))
+    l.evolution(toInclusive)(base).where(s"$col BETWEEN $lo AND $hi")
   }
 
   /** Compact every live snapshot with id ≤ `upToInclusive` into ONE new
@@ -1001,33 +842,28 @@ final class SnapshotStore(val root: String) {
     *
     * Returns the compacted snapshot id. */
   def compact(spark: SparkSession, upToInclusive: Long, cleanup: Boolean = true): Long = {
-    val inputs = snapshots.filter(_ <= upToInclusive)
+    val l = listing()
+    val inputs = l.live.filter(_.id <= upToInclusive)
     require(inputs.size >= 2,
       s"compaction needs >= 2 live snapshots <= $upToInclusive, found ${inputs.size}")
-    val dataInputs = inputs.filterNot(isSchemaOnly)
+    val dataInputs = inputs.filterNot(_.schemaOnly)
     require(dataInputs.nonEmpty,
       s"compaction over <= $upToInclusive covers only metadata-only snapshots")
-    // the rewrite applies the CURRENT cumulative drop set — compaction is
-    // the step that removes dropped columns physically (Iceberg's model);
-    // the set is still carried in the replacement manifest so drops keep
-    // projecting any older non-compacted data and keep rejecting re-adds
-    val dropped = droppedColumns()
-    val chain = renamedColumns()
-    val widens = widenedColumns()
-    // the rewrite also materializes any widened types physically (the
-    // widen twin of the drop-removal above)
-    val merged = applyWidenSet(
-      applyDropSet(applyRenameChain(readMerged(spark, dataInputs), chain), dropped),
-      chain, widens)
-    val (stage, _) = stageWrite(merged)
+    // the rewrite applies the CURRENT evolution record — compaction is the
+    // step that removes dropped columns and materializes renames and widened
+    // types physically (Iceberg's model); the record is still carried in the
+    // replacement manifest so it keeps projecting any older non-compacted
+    // data and keeps rejecting re-adds
+    val evo = l.current
+    val (stage, _) = stageWrite(evo(readMerged(spark, l, dataInputs.map(_.dataPath.toString))))
     // stats survive compaction when every data input carries them for the
     // same column: merged range = [min of mins, max of maxes] — no extra job
-    val inStats = dataInputs.map(snapshotStats)
+    val inStats = dataInputs.map(_.stats)
     // inputs may record the SAME logical column under pre- and post-rename
     // names (values are unchanged by a rename) — resolve through the chain
     // before asking "one column?", else a renamed table's compaction would
     // silently drop the stats its bulk manifest needs for pruning
-    val statNames = inStats.flatten.map(s => resolveName(chain, s._1)).distinct
+    val statNames = inStats.flatten.map(s => evo.resolve(s._1)).distinct
     val stats =
       if (inStats.forall(_.isDefined) && statNames.size == 1)
         // the rewrite stored the column under its CURRENT name — map the
@@ -1036,19 +872,10 @@ final class SnapshotStore(val root: String) {
           "stats_min" -> inStats.flatten.map(_._2).min.toString,
           "stats_max" -> inStats.flatten.map(_._3).max.toString)
       else Nil
-    val dropMeta =
-      if (dropped.isEmpty) Map.empty[String, String]
-      else Map("drop_cols" -> dropped.toSeq.sorted.mkString(","))
-    val renameMeta =
-      if (chain.isEmpty) Map.empty[String, String]
-      else Map("rename_cols" -> encodeChain(chain))
-    val widenMeta =
-      if (widens.isEmpty) Map.empty[String, String]
-      else Map("widen_cols" -> encodeChain(widens))
+    val inputIds = inputs.map(_.id)
     val id = commitStaged(stage,
-      () => Map("replaces" -> inputs.mkString(",")) ++ dropMeta ++ renameMeta ++
-        widenMeta ++ globalTxns ++ stats,
-      () => inputs.forall(snapshots.contains))
+      now => Map("replaces" -> inputIds.mkString(",")) ++ now.carried(evo) ++ stats,
+      now => inputIds.forall(now.liveIds.contains))
       .getOrElse(throw new IllegalStateException(
         "compact aborted: an input snapshot was retired by a concurrent commit"))
     if (cleanup) expireRetired()
@@ -1068,7 +895,7 @@ final class SnapshotStore(val root: String) {
         "a shorter window could reclaim the stage of an in-flight commit")
     val dataRoot = Paths.get(root, "data")
     if (!Files.exists(dataRoot)) return 0
-    val referenced = manifestIds.map(id => dataPathOf(id).getFileName.toString).toSet
+    val referenced = listing().all.map(_.dataPath.getFileName.toString).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val candidates = Vector.newBuilder[Path]
     val stream = Files.list(dataRoot)
@@ -1092,10 +919,148 @@ final class SnapshotStore(val root: String) {
     * manifest committed — retired ids are invisible to readers already.
     * The data path is resolved from the manifest BEFORE it is deleted
     * (staged dirs are named in the manifest, not derived from the id). */
-  def expireRetired(): Unit =
-    retiredIds.foreach { id =>
-      deleteRecursively(dataPathOf(id))
-      Files.deleteIfExists(manifestDir.resolve(s"$id.json"))
+  def expireRetired(): Unit = {
+    val l = listing()
+    l.all.filter(m => l.retired(m.id)).foreach { m =>
+      deleteRecursively(m.dataPath)
+      Files.deleteIfExists(manifestDir.resolve(s"${m.id}.json"))
+    }
+  }
+}
+
+object SnapshotStore {
+  /** Cap on per-file stats entries in one manifest (a manifest is a small
+    * JSON document; a 100 TB snapshot with 10^5 files needs a real stats
+    * table — Iceberg's manifest FILES — not a flat string). */
+  val MaxFileStats = 512
+
+  private def encodeChain(chain: Seq[(String, String)]): String =
+    chain.map { case (f, t) => s"$f>$t" }.mkString(",")
+
+  /** The schema-evolution record as of one snapshot: the ordered rename
+    * chain, the drop set and the ordered (column, target type) widen list.
+    *
+    * Applied to a relation as rename chain first (files written before a
+    * rename surface the value under the new name), then the drop set (whose
+    * names are post-rename by construction — `dropColumn` validates against
+    * the evolved schema), then the widen set (each widen's recorded name
+    * resolved through the FULL chain — a widen recorded pre-rename follows
+    * its column to the new name; recording post-rename under a
+    * not-yet-current name is impossible since `widenColumn` validates
+    * against the evolved schema). The pairs cannot interleave incorrectly:
+    * a drop's name can never be a rename source (a renamed-away name is not
+    * in the schema to drop) and a rename target can never be a dropped name
+    * (`renameColumn` rejects it), so chain-then-set-then-cast is
+    * order-exact. */
+  private final case class Evolution(
+      renames: Seq[(String, String)], dropped: Set[String], widens: Seq[(String, String)]) {
+
+    /** The current name of `col` after every rename in the chain. */
+    def resolve(col: String): String =
+      renames.foldLeft(col) { case (c, (f, t)) => if (c == f) t else c }
+
+    /** Rename chain, then drop set. Renames on a (possibly mixed-era)
+      * relation: both names present (old files + post-rename files under
+      * mergeSchema) → fold the old column into the new one (disjoint by
+      * construction — `append` rejects the retired name, so no row carries
+      * both); only the old name → plain rename; only the new name
+      * (post-compaction) → no-op. Exact name matching, like every other
+      * store surface. */
+    def project(df: DataFrame): DataFrame = {
+      val renamed = renames.foldLeft(df) { case (d, (f, t)) =>
+        val has = d.columns.toSet
+        if (has(f) && has(t))
+          d.withColumn(t, org.apache.spark.sql.functions.coalesce(d(t), d(f))).drop(f)
+        else if (has(f)) d.withColumnRenamed(f, t)
+        else d
+      }
+      if (dropped.isEmpty) renamed else renamed.drop(dropped.toSeq.sorted: _*)
+    }
+
+    /** [[project]], then up-cast every widened column still present (a
+      * widened-then-dropped column is simply absent). Cast of an
+      * already-wide column is a no-op the optimizer removes, so
+      * post-compaction reads pay nothing. */
+    def apply(df: DataFrame): DataFrame =
+      widens.foldLeft(project(df)) { case (d, (n, t)) =>
+        val cur = resolve(n)
+        if (d.columns.contains(cur)) d.withColumn(cur, d(cur).cast(t)) else d
+      }
+
+    /** The record as manifest fields, for a replacement manifest to carry
+      * so it survives physical cleanup of the evolution commits. */
+    def fields: Map[String, String] =
+      Map("drop_cols" -> dropped.toSeq.sorted.mkString(","),
+        "rename_cols" -> encodeChain(renames), "widen_cols" -> encodeChain(widens)).filter(_._2.nonEmpty)
+  }
+
+  /** Manifest keys the store writes itself (see the key table on the
+    * class); `append`'s caller `meta` may not set them. */
+  private def storeOwned(key: String): Boolean =
+    Set("data", "snapshot_id", "row_count", "replaces", "schema_only",
+      "drop_cols", "rename_cols", "widen_cols")(key) ||
+      Seq("stats_", "file_stats", "txn_").exists(key.startsWith)
+
+  /** Manifest text: one flat JSON object of string values. Keys and values
+    * escape `"`, `\` and every control character (the latter as a JSON
+    * four-hex-digit escape); everything else, supplementary-plane
+    * characters included, is written as is. */
+  private[graft] def encodeManifest(fields: Map[String, String]): String = {
+    def str(s: String) = s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    fields.map { case (k, v) => s""""${str(k)}": "${str(v)}"""" }.mkString("{", ", ", "}")
+  }
+
+  /** The fields of one manifest's text: the inverse of [[encodeManifest]],
+    * undoing exactly its three escapes. Anything else throws. */
+  private[graft] def decodeManifest(text: String): Map[String, String] = {
+    var i = 0
+    def fail(what: String) = throw new IllegalArgumentException(s"malformed at char $i: $what")
+    def at(c: Char): Boolean = {
+      while (i < text.length && text.charAt(i).isWhitespace) i += 1
+      i < text.length && text.charAt(i) == c
+    }
+    def expect(c: Char): Unit = if (at(c)) i += 1 else fail(s"expected '$c'")
+    def str(): String = {
+      expect('"')
+      val sb = new java.lang.StringBuilder
+      while (i < text.length && text.charAt(i) != '"') {
+        if (text.charAt(i) != '\\') { sb.append(text.charAt(i)); i += 1 }
+        else if (text.startsWith("\\u", i) && i + 6 <= text.length) {
+          sb.append(Integer.parseInt(text.substring(i + 2, i + 6), 16).toChar); i += 6
+        } else if (i + 1 < text.length && "\"\\".indexOf(text.charAt(i + 1)) >= 0) {
+          sb.append(text.charAt(i + 1)); i += 2
+        } else fail("unknown escape")
+      }
+      expect('"')
+      sb.toString
+    }
+    val out = Map.newBuilder[String, String]
+    expect('{')
+    var more = !at('}')
+    while (more) {
+      val k = str()
+      expect(':')
+      out += k -> str()
+      more = at(',')
+      if (more) i += 1
+    }
+    expect('}')
+    out.result()
+  }
+
+  /** Recursive delete shared by the store's stage cleanup and callers
+    * tearing down query-scoped scratch stores — ONE deletion semantics
+    * (NIO walk, depth-first, tolerant of already-gone entries). */
+  private[graft] def deleteRecursively(d: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(d)) {
+      val it = java.nio.file.Files.walk(d)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).iterator()
+      while (it.hasNext) java.nio.file.Files.deleteIfExists(it.next())
     }
 }
 
@@ -1115,23 +1080,6 @@ final class SnapshotStore(val root: String) {
   * forever (the batch analog of the reference deleting poison messages,
   * `main.py:399-402`).
   */
-object SnapshotStore {
-  /** Cap on per-file stats entries in one manifest (a manifest is a small
-    * JSON document; a 100 TB snapshot with 10^5 files needs a real stats
-    * table — Iceberg's manifest FILES — not a flat string). */
-  val MaxFileStats = 512
-
-  /** Recursive delete shared by the store's stage cleanup and callers
-    * tearing down query-scoped scratch stores — ONE deletion semantics
-    * (NIO walk, depth-first, tolerant of already-gone entries). */
-  private[graft] def deleteRecursively(d: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(d)) {
-      val it = java.nio.file.Files.walk(d)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).iterator()
-      while (it.hasNext) java.nio.file.Files.deleteIfExists(it.next())
-    }
-}
-
 object ResumableJob {
 
   /** Outcome of one [[run]]: `completed` chunks committed this run,

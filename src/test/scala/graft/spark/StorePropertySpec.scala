@@ -1,6 +1,9 @@
 package graft.spark
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
@@ -9,37 +12,51 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.SnapshotStore
 
 /** Model-based randomized exercise of the SnapshotStore op surface: a
-  * seeded sequence of append / add-column append / dropColumn / renameColumn /
-  * compact /
-  * upsert is replayed against an in-memory model, asserting after every
-  * few ops that `readRange(0, latest)` returns exactly the model's rows
-  * (missing columns as NULL, dropped columns absent) — the whole-store
-  * consistency invariant no single-path spec can cover. */
+  * seeded sequence of append / add-column append / exactly-once append /
+  * dropColumn / renameColumn / widenColumn / compact / upsert is replayed
+  * against an in-memory model, asserting after every few ops that
+  * `readRange(0, latest)` returns exactly the model's rows (missing columns
+  * as NULL, dropped columns absent, narrow columns int until widened) and
+  * that every metadata view — the evolution record, the watermark, the
+  * ledger mark, the live and data snapshots and their row counts — agrees
+  * with the model: the whole-store consistency invariant no single-path
+  * spec can cover. */
 class StorePropertySpec extends AnyFunSuite with SparkFixture {
 
   /** model row: key -> (col -> value); absent col = null on read */
   private type Model = scala.collection.mutable.LinkedHashMap[Long, Map[String, Long]]
 
-  private def writeDf(rows: Seq[(Long, Map[String, Long])], cols: Seq[String]) = {
+  /** model snapshot: the keys it holds, its recorded row count, and
+    * whether it carries data (false for a schema-only commit) */
+  private final case class Snap(keys: Set[Long], rowCount: Option[Long], data: Boolean)
+
+  /** Columns in `ints` are written as INT (narrow, widenable), the rest as
+    * BIGINT. */
+  private def writeDf(rows: Seq[(Long, Map[String, Long])], cols: Seq[String],
+                      ints: Set[String]) = {
     val schema = StructType(StructField("k", LongType, nullable = false) +:
-      cols.map(c => StructField(c, LongType, nullable = true)))
+      cols.map(c => StructField(c, if (ints(c)) IntegerType else LongType, nullable = true)))
     val data = rows.map { case (k, m) =>
-      Row.fromSeq(k +: cols.map(c => m.get(c).map(Long.box).orNull))
+      Row.fromSeq(k +: cols.map(c => m.get(c).map[Any](v => if (ints(c)) v.toInt else v).orNull))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(data, 2), schema)
   }
 
   private def check(store: SnapshotStore, model: Model, dropped: Set[String],
-                    allCols: Seq[String], tag: String,
+                    allCols: Seq[String], ints: Set[String], tag: String,
                     rng: scala.util.Random): Unit = {
     val visible = allCols.filterNot(dropped.contains)
     val got = store.readRange(spark, 0L, store.latest.get)
     assert(got.columns.sorted.toSeq == ("k" +: visible).sorted,
       s"[$tag] schema mismatch: ${got.columns.sorted.toSeq}")
+    visible.foreach { c =>
+      val want = if (ints(c)) IntegerType else LongType
+      assert(got.schema(c).dataType == want, s"[$tag] '$c' reads as ${got.schema(c).dataType}")
+    }
     val gotRows = got.collect().map { r =>
       r.getLong(r.fieldIndex("k")) -> visible.flatMap { c =>
         val i = r.fieldIndex(c)
-        if (r.isNullAt(i)) None else Some(c -> r.getLong(i))
+        if (r.isNullAt(i)) None else Some(c -> r.getAs[Number](i).longValue)
       }.toMap
     }.toMap
     val want = model.map { case (k, m) =>
@@ -65,8 +82,13 @@ class StorePropertySpec extends AnyFunSuite with SparkFixture {
     val store = new SnapshotStore(
       Files.createTempDirectory(s"graft-storeprop-$seed").toString)
     val model: Model = scala.collection.mutable.LinkedHashMap.empty
+    val snaps = scala.collection.mutable.LinkedHashMap.empty[Long, Snap]
     var allCols = Vector("a", "b")
+    var ints = Set("b") // narrow columns not yet widened
     var dropped = Set.empty[String]
+    var renames = Vector.empty[(String, String)]
+    var widens = Vector.empty[(String, String)]
+    var watermark = 0L
     var nextKey = 0L
     var nextCol = 0
 
@@ -75,74 +97,102 @@ class StorePropertySpec extends AnyFunSuite with SparkFixture {
         val k = nextKey; nextKey += 1
         k -> cols.map(c => c -> (k * 31 + c.hashCode % 97)).toMap
       }
+    def df(rows: Seq[(Long, Map[String, Long])], cols: Seq[String]) = writeDf(rows, cols, ints)
+    def appended(id: Long, rows: Seq[(Long, Map[String, Long])], rowCount: Boolean): Unit = {
+      rows.foreach { case (k, m) => model(k) = m }
+      snaps(id) = Snap(rows.map(_._1).toSet, if (rowCount) Some(rows.size.toLong) else None, data = true)
+    }
+    def schemaCommit(id: Long): Unit = snaps(id) = Snap(Set.empty, None, data = false)
 
     // first snapshot so every later op has something to act on
     val init = freshRows(4, allCols)
-    store.append(writeDf(init, allCols), statsCol = Some("k"))
-    init.foreach { case (k, m) => model(k) = m }
+    appended(store.append(df(init, allCols), statsCol = Some("k")), init, rowCount = true)
     var batchMark = 0L // exactly-once ledger model for app "prop"
+    val took = scala.collection.mutable.Set.empty[String] // op kinds that took effect
 
     for (op <- 1 to 24) {
-      rng.nextInt(7) match {
+      rng.nextInt(8) match {
         case 0 => // plain append over the current visible schema
           val cols = allCols.filterNot(dropped.contains)
           val rows = freshRows(1 + rng.nextInt(3), cols)
-          store.append(writeDf(rows, cols), statsCol = Some("k"))
-          rows.foreach { case (k, m) => model(k) = m }
+          appended(store.append(df(rows, cols), statsCol = Some("k")), rows, rowCount = true)
         case 5 => // exactly-once append: a replayed batch must be a no-op
           val cols = allCols.filterNot(dropped.contains)
           if (rng.nextBoolean() && batchMark > 0) {
-            // replay an already-committed batch id: rows must NOT land
+            // replay an already-committed batch id: nothing may land
+            val before = store.snapshots
             val rows = freshRows(1, cols)
-            val r = store.appendExactlyOnce(writeDf(rows, cols), "prop",
-              batchId = rng.nextInt(batchMark.toInt).toLong, statsCol = Some("k"))
+            val r = store.appendExactlyOnce(df(rows, cols), "prop",
+              batchId = 1L + rng.nextInt(batchMark.toInt), statsCol = Some("k"))
             assert(r.isEmpty, s"replayed batch committed at op $op")
+            assert(store.snapshots == before, s"replayed batch changed the table at op $op")
+            took += "replay"
             nextKey -= 1 // the row never landed; reuse its key
           } else {
             batchMark += 1
             val rows = freshRows(1 + rng.nextInt(2), cols)
-            val r = store.appendExactlyOnce(writeDf(rows, cols), "prop",
+            val r = store.appendExactlyOnce(df(rows, cols), "prop",
               batchId = batchMark, statsCol = Some("k"))
             assert(r.isDefined, s"fresh batch $batchMark refused at op $op")
-            rows.foreach { case (k, m) => model(k) = m }
+            appended(r.get, rows, rowCount = false)
+            took += "exactlyOnce"
           }
-        case 1 => // ADD-COLUMN append: a brand-new column appears
+        case 1 => // ADD-COLUMN append: a brand-new column appears, INT half the time
           val c = s"x$nextCol"; nextCol += 1
           allCols = allCols :+ c
+          if (rng.nextBoolean()) ints += c
           val cols = allCols.filterNot(dropped.contains)
           val rows = freshRows(1 + rng.nextInt(2), cols)
-          store.append(writeDf(rows, cols))
-          rows.foreach { case (k, m) => model(k) = m }
+          appended(store.append(df(rows, cols)), rows, rowCount = true)
         case 2 => // DROP-COLUMN (keep at least one non-key column visible)
           val candidates = allCols.filterNot(dropped.contains)
           if (candidates.size > 1) {
             val c = candidates(rng.nextInt(candidates.size))
-            store.dropColumn(spark, c)
+            schemaCommit(store.dropColumn(spark, c))
+            took += "drop"
             dropped += c
             // re-adding the dropped name must be rejected loudly
             intercept[IllegalArgumentException] {
-              store.append(writeDf(freshRows(1, Seq(c)), Seq(c)))
+              store.append(df(freshRows(1, Seq(c)), Seq(c)))
             }
             nextKey -= 1 // the rejected row never landed; reuse its key
           }
         case 3 => // compact everything so far
-          if (store.snapshots.size >= 2)
-            store.compact(spark, upToInclusive = store.latest.get)
+          if (store.snapshots.size >= 2) {
+            val id = store.compact(spark, upToInclusive = store.latest.get)
+            val keys = snaps.values.flatMap(_.keys).toSet
+            snaps.clear()
+            snaps(id) = Snap(keys, None, data = true)
+            watermark = id
+            took += "compact"
+          }
         case 6 => // RENAME-COLUMN: old rows must surface under the new name
           val candidates = allCols.filterNot(dropped.contains)
           if (candidates.nonEmpty) {
             val c = candidates(rng.nextInt(candidates.size))
             val c2 = s"r$nextCol"; nextCol += 1
-            store.renameColumn(spark, c, c2)
+            schemaCommit(store.renameColumn(spark, c, c2))
+            took += "rename"
+            renames :+= (c -> c2)
             allCols = allCols.map(x => if (x == c) c2 else x)
+            if (ints(c)) ints = ints - c + c2
             model.foreach { case (k, m) =>
               if (m.contains(c)) model(k) = m - c + (c2 -> m(c))
             }
             // the retired source name must be rejected loudly
             intercept[IllegalArgumentException] {
-              store.append(writeDf(freshRows(1, Seq(c)), Seq(c)))
+              store.append(df(freshRows(1, Seq(c)), Seq(c)))
             }
             nextKey -= 1 // the rejected row never landed; reuse its key
+          }
+        case 7 => // WIDEN-COLUMN: a narrow column reads as BIGINT from now on
+          val candidates = allCols.filter(c => ints(c) && !dropped(c))
+          if (candidates.nonEmpty) {
+            val c = candidates(rng.nextInt(candidates.size))
+            schemaCommit(store.widenColumn(spark, c, "bigint"))
+            took += "widen"
+            widens :+= (c -> "bigint")
+            ints -= c
           }
         case 4 => // upsert: update some existing keys + insert a new one
           val cols = allCols.filterNot(dropped.contains)
@@ -150,11 +200,83 @@ class StorePropertySpec extends AnyFunSuite with SparkFixture {
           val updKeys = rng.shuffle(keys).take(1 + rng.nextInt(2))
           val ins = freshRows(1, cols)
           val upd = updKeys.map(k => k -> cols.map(c => c -> (k * 7 + op)).toMap)
-          store.upsert(spark, writeDf(upd ++ ins, cols), "k", statsCol = Some("k"))
+          val id = store.upsert(spark, df(upd ++ ins, cols), "k", statsCol = Some("k"))
           (upd ++ ins).foreach { case (k, m) => model(k) = m }
+          val affected = snaps.filter { case (_, s) => s.data && s.keys.exists(updKeys.contains) }
+          affected.keys.foreach(snaps.remove)
+          snaps(id) = Snap(affected.values.flatMap(_.keys).toSet ++ updKeys ++ ins.map(_._1),
+            None, data = true)
+          watermark = id
+          took += "upsert"
       }
-      if (op % 5 == 0 || op == 24)
-        check(store, model, dropped, allCols, s"seed=$seed op=$op", rng)
+      if (op % 5 == 0 || op == 24) {
+        val tag = s"seed=$seed op=$op"
+        check(store, model, dropped, allCols, ints, tag, rng)
+        assert(store.droppedColumns() == dropped, s"[$tag] droppedColumns")
+        assert(store.renamedColumns() == renames, s"[$tag] renamedColumns")
+        assert(store.widenedColumns() == widens, s"[$tag] widenedColumns")
+        assert(store.compactionWatermark == watermark, s"[$tag] compactionWatermark")
+        assert(store.txnLastBatch("prop") == Some(batchMark).filter(_ > 0), s"[$tag] txnLastBatch")
+        assert(store.snapshots == snaps.keys.toSeq, s"[$tag] snapshots")
+        assert(store.dataSnapshots == snaps.collect { case (id, s) if s.data => id }.toSeq,
+          s"[$tag] dataSnapshots")
+        snaps.foreach { case (id, s) =>
+          assert(store.rowCount(id) == s.rowCount, s"[$tag] rowCount($id)")
+        }
+      }
     }
+    val kinds = Set("replay", "exactlyOnce", "drop", "compact", "rename", "widen", "upsert")
+    assert(kinds.subsetOf(took), s"op kinds that never took effect: ${kinds -- took}")
+  }
+
+  test("manifest codec round-trips quotes, backslashes, control and supplementary characters") {
+    val values = Seq("\"", "\\", "\n", "\u0000", "\uD83D\uDE00", "\\\"\\u0041\t\"\\", "", "a:b;c,d>e")
+    val fields = values.zipWithIndex.map { case (v, i) => s"k$i$v" -> v }.toMap
+    val text = SnapshotStore.encodeManifest(fields)
+    assert(SnapshotStore.decodeManifest(text) == fields)
+    assert(!text.exists(_ < ' '), "a control character was written raw")
+    // the text is plain JSON, not a private dialect
+    val viaJackson = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(text, classOf[java.util.Map[String, String]])
+    assert(viaJackson.asScala.toMap == fields)
+
+    // through a commit: a caller value holding every such character is
+    // written and parsed back on every later listing
+    val store = new SnapshotStore(Files.createTempDirectory("graft-codec").toString)
+    val id = store.append(df1(Seq(1L, 2L)), Map("table" -> values.mkString))
+    assert(store.rowCount(id).contains(2L))
+    assert(store.snapshots == Seq(id))
+  }
+
+  private def df1(keys: Seq[Long]) =
+    writeDf(keys.map(k => k -> Map("v" -> k)), Seq("v"), Set.empty)
+
+  test("append rejects manifest keys the store writes itself, naming the key, before staging") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-reserved").toString)
+    val first = store.append(df1(Seq(1L)), statsCol = Some("k"))
+    for (key <- Seq("data", "snapshot_id", "row_count", "replaces", "schema_only",
+      "drop_cols", "rename_cols", "widen_cols", "stats_col", "stats_min", "stats_max",
+      "file_stats", "file_stats_overflow", "txn_app")) {
+      val e = intercept[IllegalArgumentException](
+        store.append(df1(Seq(2L)), Map("table" -> "t", key -> "1")))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+    // nothing committed, nothing staged, nothing retired or hidden
+    assert(store.snapshots == Seq(first) && store.dataSnapshots == Seq(first))
+    assert(Files.list(Paths.get(store.root, "data")).count() == 1L)
+    assert(store.txnLastBatch("app").isEmpty)
+    // caller keys the store does not own still land
+    val id = store.append(df1(Seq(2L)), Map("table" -> "segments", "segments_snapshot" -> "1"))
+    assert(store.readRange(spark, 0L, id).count() == 2L)
+  }
+
+  test("a manifest that names no data dir fails loudly, naming its id") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-nodata").toString)
+    store.append(df1(Seq(1L)))
+    Files.write(Paths.get(store.root, "_manifests", "2.json"),
+      SnapshotStore.encodeManifest(Map("snapshot_id" -> "2")).getBytes(StandardCharsets.UTF_8))
+    val e = intercept[IllegalStateException](store.dataLocation(2L))
+    assert(e.getMessage.contains("manifest 2"), e.getMessage)
+    intercept[IllegalStateException](store.readRange(spark, 0L, 2L))
   }
 }
