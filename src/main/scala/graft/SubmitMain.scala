@@ -37,8 +37,11 @@ import graft.schema.{ConvRule, Turn}
   * at N partitions. Without it the shuffle starts from
   * `spark.sql.shuffle.partitions` and AQE (on by default) coalesces small
   * partitions, so a small delta is not written as hundreds of tiny files.
-  * Every flag takes a value; any other `--name`, or a flag without a
-  * value, is rejected before any work.
+  * Every flag takes a value; any other `--name`, a flag without a value,
+  * a value of the wrong form (`--buckets` and `--synthetic-convs` take
+  * positive integers, `--seed` an integer, `--format` parquet|json|csv),
+  * or an input flag next to `--synthetic-convs` is rejected before any
+  * work.
   *
   * Lineage derives from a [[PartitionStatsAcc]] filled INSIDE the single
   * pass that materializes the segments — extraction never runs twice.
@@ -67,6 +70,16 @@ object SubmitMain {
       require(i + 1 < args.length && !args(i + 1).startsWith("--"), s"flag $k needs a value")
       m(k.drop(2)) = args(i + 1); i += 2
     }
+    def check(flag: String, ok: String => Boolean, want: String): Unit =
+      m.get(flag).foreach(v => require(ok(v), s"flag --$flag must be $want, got '$v'"))
+    check("buckets", _.toIntOption.exists(_ > 0), "a positive integer")
+    check("synthetic-convs", _.toLongOption.exists(_ > 0), "a positive integer")
+    check("seed", _.toLongOption.isDefined, "an integer")
+    check("format", Set("parquet", "json", "csv"), "one of parquet|json|csv")
+    // the synthetic corpus reads no input, so an input flag next to it
+    // would be silently ignored
+    for (f <- Seq("turns", "rules", "format") if m.contains("synthetic-convs"))
+      require(!m.contains(f), s"flag --$f cannot be combined with --synthetic-convs")
     m.toMap
   }
 
@@ -108,7 +121,6 @@ object SubmitMain {
           // a MEANINGFUL rule value, so a NUL sentinel marks true nulls)
           .option("nullValue", "\u0000")
           .csv(path)
-        case other => sys.error(s"unknown --format $other (parquet|json|csv)")
       }).as[T]
     }
     val (turns, rules): (org.apache.spark.sql.Dataset[Turn], org.apache.spark.sql.Dataset[ConvRule]) =

@@ -1,5 +1,10 @@
 package graft.bench
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+
 /** Ad-hoc per-query timer for performance iteration: runs the named
   * [[graft.SparkEntry.queries]] entries (all of them if no args) against
   * SPARK_GRAFT_SF_DIR with one cold and `SPARK_GRAFT_REPS` (default 2)
@@ -7,7 +12,11 @@ package graft.bench
   * their median. Unlike
   * [[graft.Bench]] this has NO driver contract — no JSON line, no scaling
   * session — it exists so a single query's plan change can be measured in
-  * seconds instead of re-running the full 100+-query bench.
+  * seconds instead of re-running the full 100+-query bench. Each warm
+  * sample also prints the Spark jobs and stages it ran (stages skipped
+  * because their shuffle output was reused are not counted), from a
+  * listener read after the listener bus drains, so a plan change that
+  * adds a job or a stage shows next to its timing.
   *
   * The timed action is `.count()` DELIBERATELY, for parity with
   * [[graft.Bench]] (the graded metric): both let Catalyst prune the final
@@ -28,17 +37,29 @@ object TimeQueries {
       else args.toSeq
     val missing = wanted.filterNot(graft.SparkEntry.queries.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
+    val sc = spark.sparkContext
+    val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+    })
     wanted.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def once(): Double = {
+      // (seconds, jobs, stages) of one run
+      def once(): (Double, Int, Int) = {
+        BusDrain(sc)
+        jobs.set(0); stages.set(0)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+        val t = (System.nanoTime() - t0) / 1e9
+        BusDrain(sc)
+        (t, jobs.get, stages.get)
       }
-      val cold = once()
+      val cold = once()._1
       val warm = (1 to reps).map(_ => once())
-      println(f"$name%-28s cold $cold%7.2f s  warm median ${Scaling.median(warm)}%7.2f s  " +
-        warm.map(w => f"$w%.2f").mkString("(", "/", ")"))
+      println(f"$name%-28s cold $cold%7.2f s  warm median ${Scaling.median(warm.map(_._1))}%7.2f s  " +
+        warm.map(w => f"${w._1}%.2f").mkString("(", "/", ")") +
+        "  jobs/stages " + warm.map(w => s"${w._2}/${w._3}").mkString(" "))
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Deduplication operators over `documents` — exact, MinHash+LSH, SimHash,
   * and n-gram Jaccard. All pure DataFrame algebra, designed to the same
@@ -61,66 +62,48 @@ object Dedup {
   private def shingleSetsOf(documents: DataFrame): DataFrame =
     documents
       .where("size(split(text, ' ')) >= 3")
-      .selectExpr("doc_id", s"${Shingles.ws} AS ws")
+      .selectExpr("CAST(doc_id AS BIGINT) AS doc_id", s"${Shingles.ws} AS ws")
       .selectExpr("doc_id", s"${Shingles.shingles} AS shs")
-
-  /** Shingle hashes → [[NumPerms]] permutation minima → [[Bands]] banded
-    * keys (rolling-31 combine), exploded to one (doc_id, band, key) row
-    * per band. ONE construction shared by [[minhashLsh]] and
-    * [[incrementalMinhash]] (and mirrored by both DuckDB oracles), so the
-    * band layout can't drift between the batch and incremental paths.
-    *
-    * Runs as a JIT'd typed map, not SQL array lambdas: higher-order
-    * expressions are interpreted (no whole-stage codegen) and the 32
-    * per-shingle permutation evaluations dominated the operator's cost.
-    * The arithmetic is the exact formula the DuckDB oracles replay —
-    * md5-first-8-hex-chars hash (`Shingles.h32`), `(a_k·h + b_k) % P`
-    * minima, rolling-31 band combine — all exact integer ops. */
-  private def bandedOf(shingleSets: DataFrame): DataFrame = {
-    val spark = shingleSets.sparkSession
-    import spark.implicits._
-    shingleSets.selectExpr("CAST(doc_id AS BIGINT) AS doc_id", "shs")
-      .as[(Long, Array[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, shs) =>
-          val keys = bandKeys(md, shs)
-          (0 until Bands).iterator.map(b => (id, b, keys(b)))
-        }
-      }
-      .toDF("doc_id", "band", "key")
-  }
 
   private val PermAs: Array[Long] = (0 until NumPerms).map(permA).toArray
   private val PermBs: Array[Long] = (0 until NumPerms).map(permB).toArray
 
-  /** Shingle set → [[Bands]] band keys: the [[bandedOf]] arithmetic as a
-    * reusable per-row kernel, so the conversation-level LSH
-    * ([[TranscriptOps.convDedup]], string conv ids) shares the EXACT band
-    * layout with the doc-level paths (Long doc ids) and neither can drift
-    * from the DuckDB replays. Shingles.h32: first 8 lowercase-hex chars of
-    * md5 = first 4 digest bytes, parsed base-16 (unsigned 32-bit, fits
-    * Long); minima fold `(a_k·h + b_k) % P`; band keys roll base-31 — all
-    * exact integer ops in any engine. */
-  private[ops] def bandKeys(md: java.security.MessageDigest, shs: Array[String]): Array[Long] = {
-    val hs = new Array[Long](shs.length)
-    var i = 0
-    while (i < shs.length) {
-      val d = md.digest(shs(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      hs(i) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-      i += 1
+  /** Shingle sets → [[NumPerms]] permutation minima → [[Bands]] banded
+    * keys (rolling-31 combine), exploded to one (id, band, key) row per
+    * band. `sets` is (id, shs): the id column passes through under its
+    * own name and type (Long doc ids, String conv ids), and `shs` holds
+    * either shingle strings or their `Shingles.h32` hashes — the string
+    * path's first move is that reduction, so both give the same keys. ONE
+    * construction for every MinHash operator (doc-level, conversation-
+    * level, stored-index) and mirrored by the DuckDB oracles, so the band
+    * layout cannot drift between them.
+    *
+    * Runs as a JIT'd Scala function, not SQL array lambdas: higher-order
+    * expressions are interpreted (no whole-stage codegen) and the 32
+    * per-shingle permutation evaluations dominated the operator's cost.
+    * The arithmetic is the exact formula the DuckDB oracles replay —
+    * md5-first-8-hex-chars hash, `(a_k·h + b_k) % P` minima, rolling-31
+    * band combine — all exact integer ops. */
+  private[ops] def banded(sets: DataFrame): DataFrame = {
+    val Array(id, shs) = sets.columns
+    val keys = sets.schema(shs).dataType match {
+      case ArrayType(StringType, _) => udf((s: Array[String]) => bandKeys(s))
+      case _ => udf((hs: Array[Long]) => bandKeysFromHashes(hs))
     }
-    bandKeysFromHashes(hs)
+    sets.select(col(id), posexplode(keys(col(shs))).as(Seq("band", "key")))
   }
 
-  /** [[bandKeys]] from PRE-HASHED shingles (unsigned-32-bit `h32` values,
-    * the first step of the string path above) — the entry a stored
-    * hashed-fingerprint index uses ([[TranscriptOps.convDedupIncr]]):
-    * band keys derived from stored hashes are bit-identical to keys
-    * derived from the original shingle strings, because the string path's
-    * first move is exactly this reduction. */
-  private[ops] def bandKeysFromHashes(hs: Array[Long]): Array[Long] = {
+  /** One MD5 per executor thread: the banding UDF runs once per row. */
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  private def bandKeys(shs: Array[String]): Array[Long] = {
+    val md = md5.get
+    bandKeysFromHashes(shs.map(s =>
+      Shingles.sliceU32(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)), 0)))
+  }
+
+  private def bandKeysFromHashes(hs: Array[Long]): Array[Long] = {
     val sigs = Array.fill(NumPerms)(Long.MaxValue)
     var i = 0
     while (i < hs.length) {
@@ -145,6 +128,61 @@ object Dedup {
     keys
   }
 
+  /** Appends `jaccard_ppm`, the exact integer Jaccard of two distinct-set
+    * array columns in parts per million (`inter · 10^6 DIV union`), to
+    * the `keep` columns. The intersection is projected once and read
+    * twice. */
+  private def withJaccardPpm(df: DataFrame, keep: Seq[String],
+                             sa: String, sb: String): DataFrame =
+    df.selectExpr(keep ++ Seq(s"size(array_intersect($sa, $sb)) AS inter",
+        s"size($sa) AS na", s"size($sb) AS nb"): _*)
+      .selectExpr(keep :+ "(CAST(inter AS BIGINT) * 1000000) DIV (na + nb - inter) AS jaccard_ppm": _*)
+
+  /** Candidate verification, the one kernel behind every MinHash operator:
+    * band-join `xBands` (aliased `x`) with `yBands` (`y`) on equal
+    * (band, key) under the caller's `pairPred`, count shared bands per
+    * pair, then score each pair by exact Jaccard of its two shingle sets,
+    * looked up in `xSets` and `ySets` (id, shs). Output
+    * `(a, b, n_shared_bands, jaccard_ppm)`; the id column is the one
+    * [[banded]] passed through.
+    *
+    * Verification joins only the (few) LSH candidates back to the sets and
+    * intersects arrays — O(candidates × shingles-per-set), never the
+    * shingle×shingle join. */
+  private[ops] def verifiedPairs(xBands: DataFrame, yBands: DataFrame, pairPred: String,
+                                 xSets: DataFrame, ySets: DataFrame,
+                                 a: String, b: String): DataFrame = {
+    val id = xBands.columns(0)
+    val candidates = xBands.as("x")
+      .join(yBands.as("y"), expr(s"x.band = y.band AND x.key = y.key AND $pairPred"))
+      .groupBy(col(s"x.$id").as(a), col(s"y.$id").as(b))
+      .agg(count(lit(1)).as("n_shared_bands"))
+      .join(xSets.toDF(a, "shs_a"), a)
+      .join(ySets.toDF(b, "shs_b"), b)
+    withJaccardPpm(candidates, Seq(a, b, "n_shared_bands"), "shs_a", "shs_b")
+  }
+
+  /** Verdict rollup over [[verifiedPairs]] output (id, partner, …,
+    * jaccard_ppm): per id, `n_candidates`, `max_jaccard_ppm`, `n_dups`
+    * (pairs at or above `thresholdPpm`) and `dup_of` (the smallest such
+    * partner), left-joined onto `universe` (one id column) so an id with
+    * no candidate reads 0/0/0/NULL instead of vanishing. */
+  private[ops] def verdicts(universe: DataFrame, pairs: DataFrame,
+                            thresholdPpm: Long): DataFrame = {
+    val Array(id, partner) = pairs.columns.take(2)
+    val dup = col("jaccard_ppm") >= thresholdPpm
+    universe
+      .join(pairs.groupBy(id).agg(
+        count(lit(1)).as("n_candidates"),
+        max("jaccard_ppm").as("max_jaccard_ppm"),
+        sum(when(dup, 1L).otherwise(0L)).as("n_dups"),
+        min(when(dup, col(partner))).as("dup_of")), Seq(id), "left")
+      .selectExpr(id,
+        "CAST(coalesce(n_candidates, 0) AS BIGINT) AS n_candidates",
+        "CAST(coalesce(max_jaccard_ppm, 0) AS BIGINT) AS max_jaccard_ppm",
+        "CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups", "dup_of")
+  }
+
   /** MinHash + LSH near-duplicate pairs, verified with exact Jaccard over
     * distinct 3-shingles. Emits (doc_a, doc_b, n_shared_bands, jaccard_ppm)
     * for candidate pairs with Jaccard ≥ `thresholdPpm`. Jaccard is reported
@@ -156,19 +194,8 @@ object Dedup {
     * where all-pairs output is the actual ask). */
   def minhashLsh(documents: DataFrame, thresholdPpm: Long = 500000L): DataFrame = {
     val shingleSets = shingleSetsOf(documents)
-    val banded = bandedOf(shingleSets)
-    val candidates = banded.as("x")
-      .join(banded.as("y"), expr("x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    candidates
-      .join(shingleSets.selectExpr("doc_id AS doc_a", "shs AS shs_a"), "doc_a")
-      .join(shingleSets.selectExpr("doc_id AS doc_b", "shs AS shs_b"), "doc_b")
-      .selectExpr("doc_a", "doc_b", "n_shared_bands",
-        "size(array_intersect(shs_a, shs_b)) AS inter",
-        "size(shs_a) AS na", "size(shs_b) AS nb")
-      .selectExpr("doc_a", "doc_b", "n_shared_bands",
-        "(CAST(inter AS BIGINT) * 1000000) DIV (na + nb - inter) AS jaccard_ppm")
+    val bands = banded(shingleSets)
+    verifiedPairs(bands, bands, "x.doc_id < y.doc_id", shingleSets, shingleSets, "doc_a", "doc_b")
       .where(s"jaccard_ppm >= $thresholdPpm")
       .orderBy("doc_a", "doc_b")
   }
@@ -198,39 +225,19 @@ object Dedup {
                          deltaMod: Long = DefaultDeltaMod): DataFrame = {
     val d = deltaMod - 1
     val shingleSets = shingleSetsOf(documents)
-    val banded = bandedOf(shingleSets)
+    val bands = banded(shingleSets)
     // one-sided probe: x is a delta doc; y is any index doc or an EARLIER
     // delta doc — the index never self-joins
-    val candidates = banded.where(s"doc_id % $deltaMod = $d").as("x")
-      .join(banded.as("y"), expr(
-        s"x.band = y.band AND x.key = y.key AND x.doc_id != y.doc_id AND " +
-          s"(y.doc_id % $deltaMod != $d OR y.doc_id < x.doc_id)"))
-      .groupBy(col("x.doc_id").as("doc_id"), col("y.doc_id").as("partner"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    val verified = candidates
-      .join(shingleSets.selectExpr("doc_id", "shs AS shs_a"), "doc_id")
-      .join(shingleSets.selectExpr("doc_id AS partner", "shs AS shs_b"), "partner")
-      .selectExpr("doc_id", "partner",
-        "size(array_intersect(shs_a, shs_b)) AS inter",
-        "size(shs_a) AS na", "size(shs_b) AS nb")
-      .selectExpr("doc_id", "partner",
-        "(CAST(inter AS BIGINT) * 1000000) DIV (na + nb - inter) AS jaccard_ppm")
-    val agg = verified.groupBy("doc_id").agg(
-      count(lit(1)).as("n_candidates"),
-      sum(when(col("jaccard_ppm") >= thresholdPpm, 1L).otherwise(0L)).as("n_dups"),
-      min(when(col("jaccard_ppm") >= thresholdPpm, col("partner"))).as("dup_of"))
+    val pairs = verifiedPairs(bands.where(s"doc_id % $deltaMod = $d"), bands,
+      s"x.doc_id != y.doc_id AND (y.doc_id % $deltaMod != $d OR y.doc_id < x.doc_id)",
+      shingleSets, shingleSets, "doc_id", "partner")
     // verdicts for EVERY delta document, not just shingle-bearing ones: a
     // short (<3-token) doc has no shingles, hence no possible near-dup —
     // it must surface as admitted=true, not silently vanish from the
     // refresh output
-    documents.where(s"doc_id % $deltaMod = $d")
-      .select(col("doc_id").cast("long").as("doc_id"))
-      .join(agg, Seq("doc_id"), "left")
-      .selectExpr("doc_id",
-        "CAST(coalesce(n_candidates, 0) AS BIGINT) AS n_candidates",
-        "CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups",
-        "dup_of",
-        "coalesce(n_dups, 0) = 0 AS admitted")
+    verdicts(documents.where(s"doc_id % $deltaMod = $d")
+        .select(col("doc_id").cast("long").as("doc_id")), pairs, thresholdPpm)
+      .selectExpr("doc_id", "n_candidates", "n_dups", "dup_of", "n_dups = 0 AS admitted")
       .orderBy("doc_id")
   }
 
@@ -772,7 +779,7 @@ object Dedup {
     * (doc_id, band, key) — no pair explosion anywhere, so the gate can
     * run on the full corpus at any scale, not just a sample. */
   def lshRecall(documents: DataFrame, thresholdPpm: Long = 500000L): DataFrame = {
-    val base = documents
+    val twins = documents
       .where("size(split(text, ' ')) >= 8") // keep≥50% leaves ≥3 twin tokens
       // loud range guard (the repo convention — monster-conv budget, bin
       // caps, maxDays): an id at or above the twin offset (or negative)
@@ -788,15 +795,12 @@ object Dedup {
       .selectExpr("doc_id", "keep_pct",
         s"${Shingles.shingles} AS sa",
         s"${Shingles.shinglesOf("slice(ws, 1, CAST(size(ws) * keep_pct DIV 100 AS INT))")} AS sb")
-      .selectExpr("doc_id", "keep_pct", "sa", "sb",
-        "size(array_intersect(sa, sb)) AS inter", "size(sa) AS na", "size(sb) AS nb")
-      .selectExpr("doc_id", "keep_pct", "sa", "sb",
-        "(CAST(inter AS BIGINT) * 1000000) DIV (na + nb - inter) AS jaccard_ppm")
-    val banded = bandedOf(
+    val base = withJaccardPpm(twins, Seq("doc_id", "keep_pct", "sa", "sb"), "sa", "sb")
+    val bands = banded(
       base.selectExpr("doc_id", "sa AS shs")
         .union(base.selectExpr(s"doc_id + $RecallTwinOffset AS doc_id", "sb AS shs")))
-    val shared = banded.as("x")
-      .join(banded.as("y"), expr(
+    val shared = bands.as("x")
+      .join(bands.as("y"), expr(
         s"x.doc_id + $RecallTwinOffset = y.doc_id AND x.band = y.band AND x.key = y.key"))
       .groupBy(col("x.doc_id").as("doc_id"))
       .agg(count(lit(1)).as("nsb"))

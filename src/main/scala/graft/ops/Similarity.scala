@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an `embeddings(vec_id, embedding float[], label)`
@@ -145,6 +147,105 @@ object Similarity {
       .agg(expr("SUM(sv)").as("sum_scaled"), count(lit(1)).as("n"))
       .orderBy("label", "pos")
 
+  /** Exact squared L2 between grid vectors. */
+  private def sqDist(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < a.length) { val t = a(i) - b(i); acc += t * t; i += 1 }
+    acc
+  }
+
+  /** Index of the argmin-squared-distance centroid: the first strict min
+    * in array order, so ties go to the smallest cluster id, cell index or
+    * code (callers keep centroids in that order). Static, so RDD lambdas
+    * referencing it close cleanly. */
+  private def nearest(cs: Array[Array[Long]], x: Array[Long]): Int = {
+    var best = 0
+    var bestD = Long.MaxValue
+    var c = 0
+    while (c < cs.length) {
+      val d = sqDist(x, cs(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Centroids keyed by their seed vec_id, ascending (the [[kmeans]] and
+    * PQ codebook shape): [[nearest]] indexes both arrays, so a tie goes
+    * to the smaller id. */
+  private[ops] case class Keyed(ids: Array[Long], ms: Array[Array[Long]]) {
+    def key(x: Array[Long]): Long = ids(nearest(ms, x))
+    /** The empty-cluster rule of k-means and PQ: a centroid that lost
+      * every member (no `mean`) dies. */
+    def survivors(mean: Long => Option[Array[Long]]): Keyed = {
+      val live = ids.flatMap(id => mean(id).map(id -> _))
+      Keyed(live.map(_._1), live.map(_._2))
+    }
+  }
+
+  /** The shared `(vec_id, 2^-20-grid vector)` projection behind [[kmeans]]
+    * and [[semanticDedup]] (float→double and ×2^20 are exact). */
+  private def gridDs(embeddings: DataFrame) = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    embeddings.selectExpr(
+      "CAST(vec_id AS BIGINT) AS vec_id",
+      s"transform(${asDouble("embedding")}, v -> CAST(floor(v * 1048576) AS BIGINT)) AS x")
+      .as[(Long, Array[Long])]
+  }
+
+  /** Seeds: vectors with `vec_id < n`, which must be exactly 0..n-1. */
+  private def seedVecs(xs: Dataset[(Long, Array[Long])], n: Int, what: String): Keyed = {
+    val seeds = xs.where(s"vec_id < $n").collect().sortBy(_._1)
+    require(seeds.length == n, s"$what: need vec_ids 0..${n - 1} as seeds, found ${seeds.length}")
+    Keyed(seeds.map(_._1), seeds.map(_._2))
+  }
+
+  /** The Lloyd mean step, the one trainer behind every centroid set in
+    * this file: per round, broadcast `state`, let `assign` map each grid
+    * row to its (key, member vector) contributions, sum the members
+    * elementwise per key in ONE typed scan + `reduceByKey` (keys·(dim+1)
+    * longs cross the shuffle and come back in the collect; nothing scales
+    * with the corpus), and pass each key's integer mean to
+    * `update`. Long `/` truncates toward zero = SQL DIV, and exact Long
+    * adds commute, so reduce order is immaterial and the DuckDB oracles
+    * replay every round. A key no row chose has no mean: `update` applies
+    * the caller's empty-cluster rule. Higher-order SQL lambdas would be
+    * interpreted (measured ~2× the round cost). `rounds` is checked here,
+    * before `init` runs, and `param` names it in the error. */
+  private[ops] def lloyd[S: ClassTag, K: ClassTag](
+      xs: Dataset[(Long, Array[Long])], rounds: Int, param: String, init: => S)(
+      assign: (S, Array[Long]) => Iterator[(K, Array[Long])])(
+      update: (S, Map[K, Array[Long]]) => S): S = {
+    require(rounds >= 0, s"$param must be >= 0 Lloyd rounds, got $rounds")
+    val sc = xs.sparkSession.sparkContext
+    var state = init
+    for (_ <- 1 to rounds) {
+      val bc = sc.broadcast(state)
+      val sums = xs.rdd
+        .flatMap { case (_, x) => assign(bc.value, x).map { case (key, v) => (key, (v, 1L)) } }
+        .reduceByKey { (p, q) =>
+          val s = p._1.clone() // never mutate a shuffled buffer in place
+          var i = 0
+          while (i < s.length) { s(i) += q._1(i); i += 1 }
+          (s, p._2 + q._2)
+        }
+        .collect()
+      bc.destroy()
+      state = update(state, sums.map { case (key, (s, n)) => key -> s.map(_ / n) }.toMap)
+    }
+    state
+  }
+
+  /** [[kmeans]]/[[semanticDedup]] centroids: first-`k`-id seeds, then
+    * `iters - 1` Lloyd rounds (the final assignment is the last
+    * iteration); a cluster that loses every member dies. */
+  private[ops] def lloydCentroids(xs: Dataset[(Long, Array[Long])], k: Int, iters: Int,
+                                  op: String): Keyed =
+    lloyd(xs, iters - 1, s"$op: iters - 1", seedVecs(xs, k, op))(
+      (c: Keyed, x) => Iterator.single((c.key(x), x)))((c, means) => c.survivors(means.get))
+
   /** K-means via Lloyd iterations, engine-exact: vectors are quantized to
     * the 2^-20 fixed-point grid (float→double and ×2^20 are exact), so
     * distances are BIGINT sums ((2·2^20)² · 64 dims ≈ 2^48 — no overflow,
@@ -161,97 +262,25 @@ object Similarity {
     * their argmin centroid (first strict min in ascending cluster-id order
     * = smallest id on ties), then an elementwise `reduceByKey` sums members
     * per cluster, so k·(dim+2) longs cross the shuffle per round and the
-    * driver holds k·dim longs — nothing scales with the corpus. Exact Long
+    * collect returns k·dim longs — nothing scales with the corpus. Exact Long
     * adds are associative/commutative, so reduce order is immaterial and
     * the DuckDB replay is unaffected. Output: per-cluster size, min member
     * id, and total inertia under the final centroids. */
-  /** Index of the argmin-squared-distance centroid; first strict min in
-    * array order = smallest cluster id on ties (callers keep `cs` sorted by
-    * cluster id). Static, so RDD lambdas referencing it close cleanly. */
-  private def nearestIdx(cs: Array[(Long, Array[Long])], x: Array[Long]): Int = {
-    var best = 0
-    var bestD = Long.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val m = cs(c)._2
-      var d = 0L
-      var i = 0
-      while (i < m.length) { val t = x(i) - m(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** The shared `(vec_id, 2^-20-grid vector)` projection behind [[kmeans]]
-    * and [[semanticDedup]] (float→double and ×2^20 are exact). */
-  private def gridDs(embeddings: DataFrame) = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    embeddings.selectExpr(
-      "CAST(vec_id AS BIGINT) AS vec_id",
-      s"transform(${asDouble("embedding")}, v -> CAST(floor(v * 1048576) AS BIGINT)) AS x")
-      .as[(Long, Array[Long])]
-  }
-
-  /** Lloyd-trained centroids: first-`k`-id seeds then `rounds` update
-    * rounds, each ONE typed assignment scan + elementwise `reduceByKey`
-    * (k·(dim+1) longs cross the shuffle; the driver holds k·dim longs).
-    * Returned sorted by cluster id so [[nearestIdx]]'s first-strict-min tie
-    * break = smallest id — shared by [[kmeans]] and [[semanticDedup]] so
-    * both replay identically in the oracle. */
-  private def lloydCentroids(xs: org.apache.spark.sql.Dataset[(Long, Array[Long])],
-                             k: Int, rounds: Int): Array[(Long, Array[Long])] = {
-    val spark = xs.sparkSession
-    var cents: Array[(Long, Array[Long])] = xs.where(s"vec_id < $k")
-      .collect().sortBy(_._1)
-    require(cents.length == k, s"kmeans: need vec_ids 0..${k - 1} as seeds, found ${cents.length}")
-    for (_ <- 1 to rounds) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val sums = xs.rdd
-        .map { case (_, x) =>
-          val cs = bc.value
-          (cs(nearestIdx(cs, x))._1, (x, 1L))
-        }
-        .reduceByKey { (p, q) =>
-          val s = p._1.clone() // never mutate a shuffled buffer in place
-          var i = 0
-          while (i < s.length) { s(i) += q._1(i); i += 1 }
-          (s, p._2 + q._2)
-        }
-        .collect()
-      bc.destroy()
-      // Long / truncates toward zero = SQL DIV; absent clusters died
-      cents = sums.map { case (cl, (s, n)) => (cl, s.map(_ / n)) }.sortBy(_._1)
-    }
-    cents
-  }
-
   def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val xs = gridDs(embeddings)
-    val cents = lloydCentroids(xs, k, iters - 1)
-
-    // final pass: (cluster id, vec_id, squared distance)
-    def assigned(prev: Array[(Long, Array[Long])]) = {
-      val bc = spark.sparkContext.broadcast(prev)
-      (bc, xs.rdd.map { case (vid, x) =>
-        val cs = bc.value
-        val best = nearestIdx(cs, x)
-        val m = cs(best)._2
-        var d = 0L
-        var i = 0
-        while (i < m.length) { val t = x(i) - m(i); d += t * t; i += 1 }
-        (cs(best)._1, vid, d, x)
-      })
-    }
-    val (bcFin, aFin) = assigned(cents)
-    val out = aFin
-      .map { case (cl, vid, d, _) => (cl, (1L, vid, d)) }
+    val bc = spark.sparkContext.broadcast(lloydCentroids(xs, k, iters, "kmeans"))
+    // final pass: per cluster (members, min member id, inertia)
+    val out = xs.rdd
+      .map { case (vid, x) =>
+        val c = bc.value
+        val best = nearest(c.ms, x)
+        (c.ids(best), (1L, vid, sqDist(x, c.ms(best))))
+      }
       .reduceByKey((p, q) => (p._1 + q._1, math.min(p._2, q._2), p._3 + q._3))
       .collect()
-    bcFin.destroy()
+    bc.destroy()
     spark.createDataset(out.toSeq.sortBy(_._1)
         .map { case (cl, (n, minId, inertia)) => (cl, n, minId, inertia) })
       .toDF("cluster", "n_members", "min_vec_id", "inertia")
@@ -289,8 +318,7 @@ object Similarity {
                     threshold: Double = DefaultSemThreshold): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val cents = lloydCentroids(gridDs(embeddings), k, iters - 1)
-    val bc = spark.sparkContext.broadcast(cents)
+    val bc = spark.sparkContext.broadcast(lloydCentroids(gridDs(embeddings), k, iters, "semanticDedup"))
     // NOT destroyed: the plan below is lazy and may re-execute this scan
     withNorm(embeddings)
       .selectExpr("CAST(vec_id AS BIGINT) AS vec_id", "v", "nv")
@@ -299,8 +327,7 @@ object Similarity {
         val x = new Array[Long](v.length)
         var i = 0
         while (i < v.length) { x(i) = math.floor(v(i) * 1048576).toLong; i += 1 }
-        val cs = bc.value
-        (vid, cs(nearestIdx(cs, x))._1, v, nv)
+        (vid, bc.value.key(x), v, nv)
       }
       .groupByKey(_._2)
       .flatMapGroups { (cl, it) =>
@@ -363,43 +390,11 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val xs = gridDs(embeddings)
-    val seeds = xs.filter(_._1 < ks).collect().sortBy(_._1)
-    require(seeds.length == ks,
-      s"annPq: need vec_ids 0..${ks - 1} as codebook seeds, found ${seeds.length}")
-    val dim = seeds.head._2.length
-    require(dim % m == 0, s"annPq: dim $dim is not divisible into $m subspaces")
-    val d = dim / m
-    def sub(x: Array[Long], s: Int): Array[Long] =
-      java.util.Arrays.copyOfRange(x, s * d, s * d + d)
-    // ---- train: one scan per round updates ALL m codebooks
-    var books: Array[Array[(Long, Array[Long])]] =
-      Array.tabulate(m)(s => seeds.map { case (id, x) => (id, sub(x, s)) })
-    for (_ <- 1 to trainRounds) {
-      val bc = spark.sparkContext.broadcast(books)
-      val sums = xs.rdd
-        .flatMap { case (_, x) =>
-          val bs = bc.value
-          Iterator.tabulate(m) { s =>
-            val sv = sub(x, s)
-            ((s, bs(s)(nearestIdx(bs(s), sv))._1), (sv, 1L))
-          }
-        }
-        .reduceByKey { (p, q) =>
-          val sm = p._1.clone() // never mutate a shuffled buffer in place
-          var i = 0
-          while (i < sm.length) { sm(i) += q._1(i); i += 1 }
-          (sm, p._2 + q._2)
-        }
-        .collect()
-      bc.destroy()
-      // integer mean (SQL DIV); clusters that lost every member die
-      books = Array.tabulate(m)(s =>
-        sums.collect { case ((`s`, cl), (sm, n)) => (cl, sm.map(_ / n)) }.sortBy(_._1))
-    }
+    val books = trainBooks(xs, m, ks, trainRounds, "annPq", identity)
     // ---- per-query ADC tables: exact subspace distance to every centroid
     val qs = xs.filter(_._1 < nQueries).collect().sortBy(_._1)
     val qtabs = qs.map { case (qid, qx) =>
-      (qid, qx, Array.tabulate(m)(s => books(s).map { case (_, c) => sqDist(sub(qx, s), c) }))
+      (qid, qx, Array.tabulate(m)(s => books(s).ms.map(sqDist(sub(qx, s, m), _))))
     }
     // ---- encode + ADC + exact distance in ONE map-only pass
     // NOT destroyed: the plan below is lazy and may re-execute this scan
@@ -410,7 +405,7 @@ object Similarity {
         val bs = bcB.value
         val code = new Array[Int](m)
         var s = 0
-        while (s < m) { code(s) = nearestIdx(bs(s), sub(x, s)); s += 1 }
+        while (s < m) { code(s) = nearest(bs(s).ms, sub(x, s, m)); s += 1 }
         bcQ.value.iterator.filter(_._1 != id).map { case (qid, qx, tabs) =>
           var a = 0L
           var t = 0
@@ -439,32 +434,29 @@ object Similarity {
   val IvfPqProbe = 3
   val IvfPqCoarseRounds = 2
 
-  /** Index of the argmin-squared-distance centroid over PLAIN centroid
-    * arrays (first strict min in array order = smallest cell index on
-    * ties) — the [[nearestIdx]] twin for index-keyed codebooks, shared by
-    * [[annIvf]] training and [[annIvfPq]]. */
-  /** Exact squared L2 between grid vectors. */
-  private def sqDist(a: Array[Long], b: Array[Long]): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < a.length) { val t = a(i) - b(i); acc += t * t; i += 1 }
-    acc
+  /** Subvector `s` of `x` split into `m` equal subspaces. */
+  private def sub(x: Array[Long], s: Int, m: Int): Array[Long] = {
+    val d = x.length / m
+    java.util.Arrays.copyOfRange(x, s * d, s * d + d)
   }
 
-  private def nearestCell(cs: Array[Array[Long]], x: Array[Long]): Int = {
-    var best = 0
-    var bestD = Long.MaxValue
-    var c = 0
-    while (c < cs.length) {
-      val m = cs(c)
-      var d = 0L
-      var i = 0
-      while (i < m.length) { val t = x(i) - m(i); d += t * t; i += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
+  /** PQ codebooks, shared by [[annPq]] and [[annIvfPq]]: seeds are the
+    * first `ks` vectors' subvectors of `prep(x)`, then ONE scan per Lloyd
+    * round updates all `m` books, keyed (subspace, seed id); a code that
+    * loses every member dies. `prep` is the identity for flat PQ and the
+    * residual against the nearest coarse cell for IVF-PQ. */
+  private[ops] def trainBooks(xs: Dataset[(Long, Array[Long])], m: Int, ks: Int, rounds: Int,
+                              op: String, prep: Array[Long] => Array[Long]): Array[Keyed] =
+    lloyd(xs, rounds, s"$op: trainRounds", {
+      val seeds = seedVecs(xs, ks, s"$op codebook")
+      val dim = seeds.ms.head.length
+      require(dim % m == 0, s"$op: dim $dim is not divisible into $m subspaces")
+      val rs = seeds.ms.map(prep)
+      Array.tabulate(m)(s => Keyed(seeds.ids, rs.map(sub(_, s, m))))
+    })((bs: Array[Keyed], x) => {
+      val r = prep(x)
+      Iterator.tabulate(m) { s => val sv = sub(r, s, m); ((s, bs(s).key(sv)), sv) }
+    })((bs, means) => Array.tabulate(m)(s => bs(s).survivors(id => means.get((s, id)))))
 
   /** IVF-PQ — the COMPOSED production index (Jégou et al. 2011 §IV;
     * FAISS's IVFPQ): [[annIvf]]'s coarse cells prune the search to
@@ -501,62 +493,23 @@ object Similarity {
 
     // ---- coarse cells: first-nCells id seeds, Lloyd rounds, dead cells
     // keep their previous centroid so cell INDICES stay stable (the
-    // annIvf rule; index == seed vec_id after the contiguity require)
-    var coarse: Array[Array[Long]] = xs.where(s"vec_id < $nCells")
-      .collect().sortBy(_._1).map(_._2)
-    require(coarse.length == nCells,
-      s"annIvfPq: need vec_ids 0..${nCells - 1} as cell seeds, found ${coarse.length}")
-    val dim = coarse.head.length
-    require(dim % m == 0, s"annIvfPq: dim $dim is not divisible into $m subspaces")
-    val d = dim / m
-    coarse = ivfTrainCells(xs, coarse, coarseRounds,
-      "annIvfPq: coarse training round updated no cell — empty corpus")
-
-    def sub(x: Array[Long], s: Int): Array[Long] =
-      java.util.Arrays.copyOfRange(x, s * d, s * d + d)
+    // annIvf rule; index == seed vec_id)
+    val coarse = ivfTrainCells(xs, seedVecs(xs, nCells, "annIvfPq cell").ms, coarseRounds,
+      "annIvfPq: coarseRounds", "annIvfPq: coarse training round updated no cell — empty corpus")
     def residual(x: Array[Long], c: Array[Long]): Array[Long] = {
       val r = new Array[Long](x.length)
       var i = 0
       while (i < x.length) { r(i) = x(i) - c(i); i += 1 }
       r
     }
-
-    // ---- residual codebooks: seeds = the first ks vectors' residuals
-    // under the trained coarse quantizer; then annPq's one-scan-per-round
-    // trainer over on-the-fly residuals (dead codes die, books stay
-    // sorted by seed id = smallest-id tie-break via first-strict-min)
-    val bcCoarse = spark.sparkContext.broadcast(coarse)
+    // ---- residual codebooks: annPq's trainer over on-the-fly residuals
+    // under the trained coarse quantizer.
     // NOT destroyed: every pass below (training, scoring, exact) reuses it
-    val seeds = xs.filter(_._1 < ks).collect().sortBy(_._1)
-    require(seeds.length == ks,
-      s"annIvfPq: need vec_ids 0..${ks - 1} as codebook seeds, found ${seeds.length}")
-    var books: Array[Array[(Long, Array[Long])]] =
-      Array.tabulate(m) { s =>
-        seeds.map { case (id, x) => (id, sub(residual(x, coarse(nearestCell(coarse, x))), s)) }
-      }
-    for (_ <- 1 to trainRounds) {
-      val bc = spark.sparkContext.broadcast(books)
-      val sums = xs.rdd
-        .flatMap { case (_, x) =>
-          val cs = bcCoarse.value
-          val r = residual(x, cs(nearestCell(cs, x)))
-          val bs = bc.value
-          Iterator.tabulate(m) { s =>
-            val sv = sub(r, s)
-            ((s, bs(s)(nearestIdx(bs(s), sv))._1), (sv, 1L))
-          }
-        }
-        .reduceByKey { (p, q) =>
-          val sm = p._1.clone() // never mutate a shuffled buffer in place
-          var i = 0
-          while (i < sm.length) { sm(i) += q._1(i); i += 1 }
-          (sm, p._2 + q._2)
-        }
-        .collect()
-      bc.destroy()
-      books = Array.tabulate(m)(s =>
-        sums.collect { case ((`s`, cl), (sm, n)) => (cl, sm.map(_ / n)) }.sortBy(_._1))
-    }
+    val bcCoarse = spark.sparkContext.broadcast(coarse)
+    val books = trainBooks(xs, m, ks, trainRounds, "annIvfPq", { x =>
+      val cs = bcCoarse.value
+      residual(x, cs(nearest(cs, x)))
+    })
 
     // ---- per-query: nProbe nearest cells by (squared L2, cell idx), and
     // per probed cell the m×ks ADC table over the QUERY residual there
@@ -567,7 +520,7 @@ object Similarity {
       val probes = byCell.map(_._2).toArray
       val tabs: Map[Int, Array[Array[Long]]] = probes.map { c =>
         val qr = residual(qx, coarse(c))
-        c -> Array.tabulate(m)(s => books(s).map { case (_, e) => sqDist(sub(qr, s), e) })
+        c -> Array.tabulate(m)(s => books(s).ms.map(sqDist(sub(qr, s, m), _)))
       }.toMap
       (qid, qx, probes, tabs)
     }
@@ -579,12 +532,12 @@ object Similarity {
     val scored = xs.rdd
       .flatMap { case (id, x) =>
         val cs = bcCoarse.value
-        val cell = nearestCell(cs, x)
+        val cell = nearest(cs, x)
         val r = residual(x, cs(cell))
         val bs = bcB.value
         val code = new Array[Int](m)
         var s = 0
-        while (s < m) { code(s) = nearestIdx(bs(s), sub(r, s)); s += 1 }
+        while (s < m) { code(s) = nearest(bs(s).ms, sub(r, s, m)); s += 1 }
         bcQ.value.iterator
           .filter { case (qid, _, probes, _) => qid != id && probes.contains(cell) }
           .map { case (qid, _, _, tabs) =>
@@ -702,7 +655,7 @@ object Similarity {
     val trainSet =
       if (trainMod == 1) xs
       else xs.where(s"${Shingles.h32("CAST(vec_id AS STRING)")} % $trainMod = 0")
-    val trained = ivfTrainCells(trainSet.as[(Long, Array[Long])], grid, trainIters,
+    val trained = ivfTrainCells(trainSet.as[(Long, Array[Long])], grid, trainIters, "annIvf: trainIters",
       s"annIvf: training round updated no cell — the 1/$trainMod hash sample " +
         "is empty or degenerate; lower trainMod (need >> 64*nCells sampled rows)")
     ivfSearch(embeddings, trained, nQueries, k, nProbe)
@@ -832,7 +785,7 @@ object Similarity {
     gridDs(embeddings)
       .map { case (vid, x) =>
         val cs = bc.value
-        val c = nearestCell(cs, x)
+        val c = nearest(cs, x)
         (c, (vid % deltaMod) == (deltaMod - 1), sqDist(x, cs(c)))
       }
       .toDF("cell", "is_delta", "d")
@@ -917,7 +870,7 @@ object Similarity {
       val bc = spark.sparkContext.broadcast(cents)
       val m = g.map { case (vid, x) =>
           val cs = bc.value
-          ((vid % deltaMod) == (deltaMod - 1), sqDist(x, cs(nearestCell(cs, x))))
+          ((vid % deltaMod) == (deltaMod - 1), sqDist(x, cs(nearest(cs, x))))
         }
         .toDF("is_delta", "d")
         .groupBy("is_delta")
@@ -965,7 +918,7 @@ object Similarity {
         val due = sD / nD > Math.multiplyExact(factor, sS / nS)
         val rs = if (!due) fs
           else sliceStats(g, ivfTrainCells(g, frozen, trainIters,
-            "annIvfRetrain: retrain round updated no cell"))
+            "annIvfRetrain: trainIters", "annIvfRetrain: retrain round updated no cell"))
         val scen = if (drift) "drifted" else "in_dist"
         Seq((scen, "standing", nS, sS / nS, rs(false)._2 / rs(false)._1, due),
             (scen, "delta", nD, sD / nD, rs(true)._2 / rs(true)._1, due))
@@ -990,7 +943,7 @@ object Similarity {
       .collect().sortBy(_._1).map(_._2)
     require(seed.length == nCells,
       s"annIvfAppend: standing slice has ${seed.length} < $nCells vectors to seed cells")
-    ivfTrainCells(standing, seed, trainIters,
+    ivfTrainCells(standing, seed, trainIters, "annIvfAppend: trainIters",
       "annIvfAppend: training round updated no cell — empty standing slice")
   }
 
@@ -998,44 +951,21 @@ object Similarity {
     * oracle so the two cannot drift. */
   val IvfAppendDeltaMod = 4
 
-  /** Lloyd rounds for IVF cells over `train`, from the index-keyed `seed`
-    * grid; a cell that loses every member KEEPS its previous centroid so
-    * cell indices stay stable. One JIT'd typed map + elementwise
-    * `reduceByKey` per round (higher-order SQL lambdas are interpreted,
-    * ~2× the round cost measured); the integer arithmetic (squared L2 on
-    * the grid, first-min tie toward the smaller cell index,
-    * SUM-then-truncating-divide — Long `/` = SQL DIV = DuckDB `//`) is
-    * engine-exact and sum order is immaterial (exact Long adds commute),
-    * so the DuckDB oracles replay every round. Shared by [[annIvf]],
-    * [[annIvfAppend]] and [[annIvfPq]]'s coarse quantizer. */
-  private def ivfTrainCells(train: org.apache.spark.sql.Dataset[(Long, Array[Long])],
-                            seed: Array[Array[Long]], iters: Int,
-                            emptyMsg: String): Array[Array[Long]] = {
-    val spark = train.sparkSession
-    var grid = seed
-    for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(grid)
-      val sums = train.rdd
-        .map { case (_, x) => (nearestCell(bc.value, x), (x, 1L)) }
-        .reduceByKey { (a, b) =>
-          val s = a._1.clone() // never mutate a shuffled buffer in place
-          var i = 0
-          while (i < s.length) { s(i) += b._1(i); i += 1 }
-          (s, a._2 + b._2)
-        }
-        .collect()
-      bc.destroy()
-      val upd: Map[Int, Array[Long]] = sums.map { case (cl, (s, n)) =>
-        cl -> s.map(_ / n)
-      }.toMap
+  /** [[lloyd]] rounds for IVF cells over `train`, from the index-keyed
+    * `seed` grid (cell key = index, ties toward the smaller index); a cell
+    * that loses every member KEEPS its previous centroid so cell indices
+    * stay stable. Shared by [[annIvf]], [[annIvfAppend]], [[annIvfRetrain]]
+    * and [[annIvfPq]]'s coarse quantizer. */
+  private[ops] def ivfTrainCells(train: Dataset[(Long, Array[Long])], seed: Array[Array[Long]],
+                                 iters: Int, param: String, emptyMsg: String): Array[Array[Long]] =
+    lloyd(train, iters, param, seed)(
+      (g: Array[Array[Long]], x) => Iterator.single((nearest(g, x), x))) { (g, means) =>
       // loud, not silent: a degenerate training set would leave every
       // centroid at its raw seed — the fragile-seed failure mode training
       // exists to remove
-      require(upd.nonEmpty, emptyMsg)
-      grid = grid.indices.map(i => upd.getOrElse(i, grid(i))).toArray
+      require(means.nonEmpty, emptyMsg)
+      g.indices.map(i => means.getOrElse(i, g(i))).toArray
     }
-    grid
-  }
 
   /** Frozen-centroid IVF search over the full corpus: one typed assignment
     * pass, the cell equi-join, exact cosine rerank, top-k per query.

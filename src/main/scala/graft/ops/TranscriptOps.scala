@@ -78,8 +78,8 @@ object TranscriptOps {
     * distinct 3-token shingles (per-turn shingling — no cross-turn-boundary
     * grams, so turn insertion/removal perturbs only the affected turns);
     * near-dup candidates come from the SAME MinHash band layout as the
-    * doc-level paths ([[Dedup.bandKeys]] — one kernel, one arithmetic) and
-    * are verified by exact shingle Jaccard.
+    * doc-level paths ([[Dedup.banded]] — one kernel, one arithmetic) and
+    * are verified by exact shingle Jaccard ([[Dedup.verifiedPairs]]).
     *
     * Because the synthetic corpus holds no natural near-dup conversations
     * (closest unrelated pair <20% Jaccard — checked, not assumed), the gate
@@ -111,8 +111,6 @@ object TranscriptOps {
   def convDedup(turns: DataFrame, thresholdPpm: Long = ConvDupThresholdPpm,
                 forkMod: Long = ConvForkMod): DataFrame = {
     require(forkMod >= 0, s"convDedup: forkMod must be >= 0 (0 = no scenario forks), got $forkMod")
-    val spark = turns.sparkSession
-    import spark.implicits._
     // forkMod = 0 is the PRODUCTION mode: no scenario twins, dedup exactly
     // the conversations fed in (the registered gate query keeps the default
     // so both verdicts realize on the synthetic corpus)
@@ -125,32 +123,12 @@ object TranscriptOps {
     // a table instead — the convDedup analog of the persisted ANN index's
     // postings — and reads them once per branch.
     val fingerprints = convFingerprints(allTurns)
-    val banded = convBands(fingerprints)
-    val candidates = banded.as("x")
-      .join(banded.as("y"),
-        expr("x.band = y.band AND x.key = y.key AND x.conv_id != y.conv_id"))
-      .groupBy(col("x.conv_id").as("conv_id"), col("y.conv_id").as("partner"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    val verified = candidates
-      .join(fingerprints.selectExpr("conv_id", "shs AS shs_a"), "conv_id")
-      .join(fingerprints.selectExpr("conv_id AS partner", "shs AS shs_b"), "partner")
-      .selectExpr("conv_id", "partner",
-        "size(array_intersect(shs_a, shs_b)) AS inter",
-        "size(shs_a) AS na", "size(shs_b) AS nb")
-      .selectExpr("conv_id", "partner",
-        "(CAST(inter AS BIGINT) * 1000000) DIV (na + nb - inter) AS jaccard_ppm")
-    val verdicts = verified.groupBy("conv_id").agg(
-      count(lit(1)).as("n_candidates"),
-      max("jaccard_ppm").as("max_jaccard_ppm"),
-      sum(when(col("jaccard_ppm") >= thresholdPpm, 1L).otherwise(0L)).as("n_dups"),
-      min(when(col("jaccard_ppm") >= thresholdPpm, col("partner"))).as("dup_of"))
-    fingerprints.select("conv_id")
-      .join(verdicts, Seq("conv_id"), "left")
-      .selectExpr("conv_id", "conv_id LIKE '%~f' AS is_fork",
-        "CAST(coalesce(n_candidates, 0) AS BIGINT) AS n_candidates",
-        "CAST(coalesce(max_jaccard_ppm, 0) AS BIGINT) AS max_jaccard_ppm",
-        "CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups", "dup_of",
-        "coalesce(n_dups, 0) > 0 AS is_dup")
+    val bands = Dedup.banded(fingerprints)
+    val pairs = Dedup.verifiedPairs(bands, bands, "x.conv_id != y.conv_id",
+      fingerprints, fingerprints, "conv_id", "partner")
+    Dedup.verdicts(fingerprints.select("conv_id"), pairs, thresholdPpm)
+      .selectExpr("conv_id", "conv_id LIKE '%~f' AS is_fork", "n_candidates",
+        "max_jaccard_ppm", "n_dups", "dup_of", "n_dups > 0 AS is_dup")
       .orderBy("conv_id")
   }
 
@@ -187,45 +165,16 @@ object TranscriptOps {
       .groupBy("conv_id")
       .agg(array_distinct(flatten(collect_list("shs"))).as("shs"))
 
-  /** Fingerprints → MinHash band keys via [[Dedup.bandKeys]] (one
-    * arithmetic with the doc-level paths and the DuckDB replays). */
-  private def convBands(fingerprints: DataFrame): DataFrame = {
-    val spark = fingerprints.sparkSession
-    import spark.implicits._
-    fingerprints.as[(String, Array[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, shs) =>
-          val keys = Dedup.bandKeys(md, shs)
-          keys.indices.iterator.map(b => (id, b, keys(b)))
-        }
-      }
-      .toDF("conv_id", "band", "key")
-  }
-
   /** COMPACT (hashed) conversation fingerprints for the stored index:
     * each distinct 3-shingle reduced to its unsigned-32-bit `h32`, the
     * array sorted — 8 bytes per shingle instead of a ~30-byte string, so
     * index snapshots write and read several times faster. Hash collisions
     * collapse deterministically (both engines reduce with the same
     * md5-prefix hash, so replays agree exactly); band keys from these
-    * hashes are bit-identical to the string path's
-    * ([[Dedup.bandKeysFromHashes]]). */
+    * hashes are bit-identical to the string path's ([[Dedup.banded]]). */
   private def convHashedFps(convTurns: DataFrame): DataFrame =
     convFingerprints(convTurns).selectExpr("conv_id",
       s"array_sort(array_distinct(transform(shs, s -> ${Shingles.h32("s")}))) AS shs")
-
-  /** Hashed fingerprints → band keys (stored-index path). */
-  private def convBandsFromHashes(fingerprints: DataFrame): DataFrame = {
-    val spark = fingerprints.sparkSession
-    import spark.implicits._
-    fingerprints.as[(String, Array[Long])]
-      .mapPartitions(_.flatMap { case (id, hs) =>
-        val keys = Dedup.bandKeysFromHashes(hs)
-        keys.indices.iterator.map(b => (id, b, keys(b)))
-      })
-      .toDF("conv_id", "band", "key")
-  }
 
   /** INCREMENTAL conversation dedup against a PERSISTED fingerprint
     * index — the production shape [[convDedup]]'s scaladoc promises: a
@@ -289,7 +238,7 @@ object TranscriptOps {
       //    consumer (the first cut recomputed it ~7× and was 6× slower)
       val standSnap = fpStore.append(standFps)
       val storedFps = fpStore.read(spark, standSnap)
-      bandStore.append(convBandsFromHashes(storedFps))
+      bandStore.append(Dedup.banded(storedFps))
       val storedBands = bandStore.read(spark, bandStore.latest.get)
       // 2. PROBE: the delta fingerprints materialize once (checkpoint) and
       //    feed banding, verification and the admitted append; the delta
@@ -299,7 +248,7 @@ object TranscriptOps {
       //    silently dropped
       val deltaIds = deltaTurns.select("conv_id").distinct().localCheckpoint(true)
       val delta = convHashedFps(deltaTurns).localCheckpoint(true)
-      val deltaBands = convBandsFromHashes(delta)
+      val deltaBands = Dedup.banded(delta)
       // candidate partners: the stored standing bands, PLUS earlier
       // (smaller-id) conversations of the SAME delta batch — without the
       // intra-batch side, two duplicates arriving together would both be
@@ -309,33 +258,13 @@ object TranscriptOps {
         .selectExpr("conv_id", "band", "key", "false AS y_is_delta")
         .unionByName(deltaBands
           .selectExpr("conv_id", "band", "key", "true AS y_is_delta"))
-      val cand = deltaBands.as("x")
-        .join(probeSide.as("y"),
-          expr("x.band = y.band AND x.key = y.key AND x.conv_id != y.conv_id" +
-            " AND (NOT y.y_is_delta OR y.conv_id < x.conv_id)"))
-        .groupBy(col("x.conv_id").as("conv_id"), col("y.conv_id").as("partner"))
-        .agg(count(lit(1)).as("n_shared_bands"))
       val partnerFps = storedFps.select("conv_id", "shs").unionByName(delta)
-      val ver = cand
-        .join(delta.selectExpr("conv_id", "shs AS shs_a"), "conv_id")
-        .join(partnerFps.selectExpr("conv_id AS partner", "shs AS shs_b"), "partner")
-        .selectExpr("conv_id", "partner",
-          "size(array_intersect(shs_a, shs_b)) AS inter",
-          "size(shs_a) AS na", "size(shs_b) AS nb")
-        .selectExpr("conv_id", "partner",
-          "(CAST(inter AS BIGINT) * 1000000) DIV (na + nb - inter) AS jaccard_ppm")
-      val verdicts = ver.groupBy("conv_id").agg(
-        count(lit(1)).as("n_candidates"),
-        max("jaccard_ppm").as("max_jaccard_ppm"),
-        sum(when(col("jaccard_ppm") >= thresholdPpm, 1L).otherwise(0L)).as("n_dups"),
-        min(when(col("jaccard_ppm") >= thresholdPpm, col("partner"))).as("dup_of"))
-      val out = deltaIds
-        .join(verdicts, Seq("conv_id"), "left")
-        .selectExpr("conv_id", "conv_id LIKE '%~f' AS is_fork",
-          "CAST(coalesce(n_candidates, 0) AS BIGINT) AS n_candidates",
-          "CAST(coalesce(max_jaccard_ppm, 0) AS BIGINT) AS max_jaccard_ppm",
-          "CAST(coalesce(n_dups, 0) AS BIGINT) AS n_dups", "dup_of",
-          "coalesce(n_dups, 0) = 0 AS admitted")
+      val pairs = Dedup.verifiedPairs(deltaBands, probeSide,
+        "x.conv_id != y.conv_id AND (NOT y.y_is_delta OR y.conv_id < x.conv_id)",
+        delta, partnerFps, "conv_id", "partner")
+      val out = Dedup.verdicts(deltaIds, pairs, thresholdPpm)
+        .selectExpr("conv_id", "conv_id LIKE '%~f' AS is_fork", "n_candidates",
+          "max_jaccard_ppm", "n_dups", "dup_of", "n_dups = 0 AS admitted")
         .localCheckpoint(true)
       // 3. APPEND: admitted conversations WITH fingerprints join the
       //    index; the invariant reads the MANIFEST row count (zero extra
@@ -343,7 +272,7 @@ object TranscriptOps {
       //    (fingerprint-less admissions are admitted but not indexable)
       val adSnap = fpStore.append(
         delta.join(out.where("admitted").select("conv_id"), "conv_id"))
-      bandStore.append(convBandsFromHashes(fpStore.read(spark, adSnap)))
+      bandStore.append(Dedup.banded(fpStore.read(spark, adSnap)))
       val appended = fpStore.rowCount(adSnap)
       val expected = out.where("admitted").count() - (deltaIds.count() - delta.count())
       require(appended.contains(expected),

@@ -132,4 +132,26 @@ class SubmitMainSpec extends AnyFunSuite with SparkFixture {
     assert(new SnapshotStore(out).snapshots.isEmpty)
     assert(cwd.exists() == existed, "a valueless --out must not create ./true")
   }
+
+  test("flag values are validated before any work, naming the flag") {
+    val input = Array("--turns", "/nonexistent/turns", "--rules", "/nonexistent/rules")
+    val synthetic = Array("--synthetic-convs", "8")
+    for ((args, flag) <- Seq(
+           (synthetic ++ Array("--buckets", "-1"), "--buckets"),
+           (synthetic ++ Array("--buckets", "0"), "--buckets"),
+           (synthetic ++ Array("--buckets", "x"), "--buckets"),
+           (Array("--synthetic-convs", "0"), "--synthetic-convs"),
+           (Array("--synthetic-convs", "x"), "--synthetic-convs"),
+           (synthetic ++ Array("--seed", "x"), "--seed"),
+           (input ++ Array("--format", "xml"), "--format"),
+           (synthetic ++ Array("--format", "xml"), "--format"),
+           (synthetic ++ Array("--format", "json"), "--format"),
+           (synthetic ++ Array("--rules", "/nonexistent/rules"), "--rules"),
+           (synthetic ++ input, "--turns"))) {
+      val out = Files.createTempDirectory("graft-submit-badvalue").toString
+      val e = intercept[IllegalArgumentException](SubmitMain.main(args ++ Array("--out", out)))
+      assert(e.getMessage.contains(s"flag $flag "), s"${args.mkString(" ")}: ${e.getMessage}")
+      assert(new SnapshotStore(out).snapshots.isEmpty, args.mkString(" "))
+    }
+  }
 }
