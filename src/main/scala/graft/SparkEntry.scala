@@ -678,7 +678,7 @@ object SparkEntry {
 
   private def dMoneySum(c: String) = s"CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
 
-  /** Signature + banding CTE fragment replaying [[Dedup.bandedOf]] — ONE
+  /** Signature + banding CTE fragment replaying [[Dedup.banded]] — ONE
     * construction shared by the `d_minhash_lsh`, `d_incr_dedup` and
     * `d_lsh_recall` oracles so the band layout cannot drift between
     * replays. Expects the `sh(doc_id, shs)` CTE in scope; yields `hs`,

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 
 import graft.gen.SyntheticTranscripts
 import graft.io.SnapshotStore
@@ -480,7 +480,8 @@ object MaterializeRunner {
         .write.mode("overwrite").parquet(s"$dir/turns")
       SyntheticTranscripts.rules(spark, nConvs.toLong, seed.toLong)
         .write.mode("overwrite").parquet(s"$dir/rules")
-      println("TURNS " + spark.read.parquet(s"$dir/turns").count())
+      val turns = spark.read.schema(Encoders.product[Turn].schema).parquet(s"$dir/turns")
+      println("TURNS " + turns.count())
     } finally spark.stop()
   }
 }
@@ -502,11 +503,15 @@ object BurstLevelRunner {
       new java.io.OutputStreamWriter(System.out, "UTF-8"), true)
     try {
       import spark.implicits._
-      // the production route over the two parquet dirs: rules co-partition
-      // with the turns in the join node, nothing is collected to the driver
-      val rules = spark.read.parquet(s"$dir/rules").as[ConvRule]
+      // the production route over the two parquet dirs, read like
+      // SubmitMain reads them (declared schemas, no inference job): rules
+      // co-partition with the turns in the join node, nothing is collected
+      // to the driver
+      def readAs[T: Encoder](name: String) =
+        spark.read.schema(implicitly[Encoder[T]].schema).parquet(s"$dir/$name").as[T]
+      val rules = readAs[ConvRule]("rules")
       def job(): Long = {
-        val turns = spark.read.parquet(s"$dir/turns").as[Turn]
+        val turns = readAs[Turn]("turns")
         Pipeline.segmentAuto(turns, rules).count()
       }
       def gcMs: Long = Scaling.gcMs

@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{DataSource, DataSourceUtils}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Minimal snapshot-versioned parquet table — the in-sandbox stand-in for an
   * Iceberg table (no Iceberg runtime jar ships with this image; see SURVEY
@@ -36,6 +37,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * | key | written by | read by |
   * |---|---|---|
   * | `data` | every commit: its stage dir | every read, `dataLocation`, `expireRetired`, `expireOrphanStages` |
+  * | `schema` | every data commit: the Spark schema of the rows it staged, as JSON | every read, `upsert`'s key probes, schema ops |
   * | `snapshot_id` | every commit | nothing (the file name is the id) |
   * | `row_count` | `append` | `rowCount` |
   * | `replaces` | `compact`, `upsert` | `snapshots`, `compactionWatermark`, `expireRetired` |
@@ -52,7 +54,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * `VERSION AS OF`) with no pipeline-API change.
   */
 final class SnapshotStore(val root: String) {
-  import SnapshotStore.{Evolution, encodeChain}
+  import SnapshotStore.{Evolution, Staged, encodeChain}
 
   private def manifestDir: Path = Paths.get(root, "_manifests")
 
@@ -106,6 +108,13 @@ final class SnapshotStore(val root: String) {
     def stats: Option[(String, Long, Long)] =
       for (c <- fields.get("stats_col"); mn <- fields.get("stats_min"); mx <- fields.get("stats_max"))
         yield (c, mn.toLong, mx.toLong)
+
+    /** The schema of the rows in this snapshot's data dir, recorded by the
+      * commit that staged them, so no read asks the files' footers. Every
+      * data commit records one, so a data manifest without it is corrupt,
+      * not legacy. */
+    lazy val schema: StructType = DataType.fromJson(fields.getOrElse("schema",
+      throw new IllegalStateException(s"manifest $id records no schema"))).asInstanceOf[StructType]
 
     /** The stage dir the commit named. Every commit names one, so a
       * manifest without it is corrupt, not legacy. */
@@ -317,7 +326,7 @@ final class SnapshotStore(val root: String) {
   private def planSchemaOp(spark: SparkSession, op: String): (Evolution, DataFrame) = {
     val l = listing()
     require(l.data.nonEmpty, s"$op: table has no data snapshots")
-    (l.current, l.current(readMerged(spark, l, l.data.map(_.dataPath.toString))))
+    (l.current, l.current(readMerged(spark, l, whole(l.data))))
   }
 
   /** Commit a metadata-only snapshot recording `field`. The op was
@@ -329,7 +338,7 @@ final class SnapshotStore(val root: String) {
   private def commitSchemaOnly(op: String, planned: Evolution, field: (String, String)): Long = {
     val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
     Files.createDirectories(stage)
-    commitStaged(stage, _ => Map("schema_only" -> "true", field), _.current == planned)
+    commitStaged(Staged(stage, None), _ => Map("schema_only" -> "true", field), _.current == planned)
       .getOrElse(throw new IllegalStateException(
         s"$op aborted: a concurrent schema-evolution commit landed; retry"))
   }
@@ -381,10 +390,10 @@ final class SnapshotStore(val root: String) {
     require(owned.isEmpty,
       s"append: meta key(s) ${owned.mkString(", ")} are written by the store itself")
     requireNewNames(df, listing().current)
-    val (stage, nRows) = stageWrite(df, countRows = true)
-    val fields = meta + ("row_count" -> nRows.get.toString) ++
-      stagedStats(df.sparkSession, stage, statsCol)
-    commitStaged(stage, _ => fields, _ => true).get
+    val staged = stageWrite(df, countRows = true)
+    val fields = meta + ("row_count" -> staged.rows.get.toString) ++
+      stagedStats(df.sparkSession, staged, statsCol)
+    commitStaged(staged, _ => fields, _ => true).get
   }
 
   /** Write `df` to a uniquely-named staging dir under root/data — data
@@ -392,26 +401,27 @@ final class SnapshotStore(val root: String) {
     * NEVER clobber each other's files; the manifest that wins the commit
     * points at its own stage dir. Returns the dir and, when the count is
     * known for free (a driver write) or `countRows` asks for an observed
-    * one, the exact number of rows written.
+    * one, the exact number of rows written, with the schema of the rows
+    * the commit records for every later read.
     *
     * Rows of a non-streaming `LocalRelation` are already on the driver:
     * planning, a stage of tasks and a Hadoop job commit would cost more
     * than writing them, so [[writeFromDriver]] writes them directly. Every
     * other plan is a Spark write, as is a frame with duplicate column
     * names (the Spark write reports them). */
-  private def stageWrite(df: DataFrame, countRows: Boolean = false): (Path, Option[Long]) = {
+  private def stageWrite(df: DataFrame, countRows: Boolean = false): Staged = {
     val stage = Paths.get(root, "data", s"stage-${java.util.UUID.randomUUID}")
     df.queryExecution.optimizedPlan match {
       case rel: LocalRelation if !rel.isStreaming && uniqueNames(df) =>
         writeFromDriver(df.sparkSession, rel, stage)
-        (stage, Some(rel.data.size.toLong))
+        Staged(stage, Some(rel.schema), Some(rel.data.size.toLong))
       case _ if countRows =>
         val observed = Observation()
         df.observe(observed, count(lit(1)).as("n")).write.mode("errorifexists").parquet(stage.toString)
-        (stage, Some(observed.get("n").asInstanceOf[Long]))
+        Staged(stage, Some(df.schema), Some(observed.get("n").asInstanceOf[Long]))
       case _ =>
         df.write.mode("errorifexists").parquet(stage.toString)
-        (stage, None)
+        Staged(stage, Some(df.schema))
     }
   }
 
@@ -457,12 +467,14 @@ final class SnapshotStore(val root: String) {
     * abort) or collides on the id (we loop and re-decide) — there is no
     * interleaving where two writers both publish under one id, and none
     * where a same-app exactly-once append double-commits (see
-    * [[appendExactlyOnce]]). Returns None (stage deleted) when `decide`
-    * aborts. */
+    * [[appendExactlyOnce]]). The manifest names the stage dir and records
+    * its schema. Returns None (stage deleted) when `decide` aborts. */
   private def commitStaged(
-      stage: Path,
+      staged: Staged,
       meta: Listing => Map[String, String],
       decide: Listing => Boolean): Option[Long] = {
+    val stage = staged.dir
+    val own = Map("data" -> stage.getFileName.toString) ++ staged.schema.map("schema" -> _.json)
     try {
       while (true) {
         val l = listing()
@@ -471,7 +483,7 @@ final class SnapshotStore(val root: String) {
         // meta is re-evaluated per attempt: a competing commit that forced
         // our id collision may have advanced state the manifest must
         // reflect (e.g. another app's ledger mark carried by a replace)
-        if (tryCommitManifest(id, meta(l) + ("data" -> stage.getFileName.toString)))
+        if (tryCommitManifest(id, meta(l) ++ own))
           return Some(id)
       }
       None // unreachable
@@ -493,10 +505,10 @@ final class SnapshotStore(val root: String) {
     * lands and readers fall back to snapshot-level pruning — visible,
     * never silent. */
   private def stagedStats(
-      spark: SparkSession, dataPath: Path, statsCol: Option[String]): Seq[(String, String)] =
+      spark: SparkSession, staged: Staged, statsCol: Option[String]): Seq[(String, String)] =
     statsCol.toSeq.flatMap { c =>
       import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-      val per = spark.read.parquet(dataPath.toString)
+      val per = spark.read.schema(staged.schema.get).parquet(staged.dir.toString)
         .groupBy(input_file_name().as("f"))
         .agg(min(col(c).cast("long")).as("mn"), max(col(c).cast("long")).as("mx"))
         .collect()
@@ -565,11 +577,11 @@ final class SnapshotStore(val root: String) {
     // probe under the CURRENT schema, not the snapshot's own era — a
     // pre-rename snapshot must resolve the key by its current name
     val affected = candidates.filter { m =>
-      evo.project(spark.read.parquet(m.dataPath.toString))
+      evo.project(spark.read.schema(m.schema).parquet(m.dataPath.toString))
         .join(keys, Seq(keyCol), "left_semi").limit(1).count() > 0
     }
     if (affected.isEmpty) return append(updates, statsCol = statsCol)
-    val survivors = evo(readMerged(spark, l, affected.map(_.dataPath.toString)))
+    val survivors = evo(readMerged(spark, l, whole(affected)))
       .join(keys, Seq(keyCol), "left_anti")
     // union SCHEMA = survivors ∪ updates: an update column the affected
     // snapshots never carried must land (survivors surface it as NULL),
@@ -585,9 +597,9 @@ final class SnapshotStore(val root: String) {
         "carried by the matched rows — a CoW merge rewrites whole rows, so the " +
         "omitted values would be silently destroyed; select them into the updates")
     val merged = survivors.unionByName(updates, allowMissingColumns = true)
-    val (stage, _) = stageWrite(merged)
-    val stats = stagedStats(spark, stage, statsCol)
-    val id = commitStaged(stage,
+    val staged = stageWrite(merged)
+    val stats = stagedStats(spark, staged, statsCol)
+    val id = commitStaged(staged,
       now => Map("replaces" -> affected.map(_.id).mkString(",")) ++ now.carried(evo) ++ stats,
       // abort if the LIVE SET changed at all since planning: a retired
       // input means double-replace, and a concurrent APPEND may have
@@ -669,31 +681,44 @@ final class SnapshotStore(val root: String) {
     require(m.isDefined, s"snapshot $id not committed")
     require(!m.get.schemaOnly,
       s"snapshot $id is a metadata-only (schema) commit — it has no data to read")
-    l.evolution(id)(spark.read.parquet(m.get.dataPath.toString))
+    l.evolution(id)(spark.read.schema(m.get.schema).parquet(m.get.dataPath.toString))
   }
 
-  /** One relation over several snapshots with ADD-COLUMN schema evolution:
-    * rows written before a column existed surface it as NULL — the Iceberg
-    * evolution contract. Every multi-snapshot read goes through here (a
-    * plain multi-path read would silently project everything onto the
-    * FIRST file's schema, dropping later columns). Callers apply the
-    * listing's evolution at their own asOf bound (a schema commit can be
-    * NEWER than the newest data id in the range, so the bound is the range
-    * end, not `ids.max`).
+  /** Each of `ms` with all of its data files, for [[readMerged]]. */
+  private def whole(ms: Seq[Manifest]): Seq[(Manifest, Seq[String])] =
+    ms.map(m => m -> Seq(m.dataPath.toString))
+
+  /** One relation over data snapshots (`parts`: each snapshot with the
+    * files of it to scan) with ADD-COLUMN schema evolution: rows written
+    * before a column existed surface it as NULL — the Iceberg evolution
+    * contract. Every multi-snapshot read goes through here (a plain
+    * multi-path read would silently project everything onto the FIRST
+    * file's schema, dropping later columns). Callers apply the listing's
+    * evolution at their own asOf bound (a schema commit can be NEWER than
+    * the newest data id in the range, so the bound is the range end, not
+    * `ids.max`).
     *
-    * Parquet `mergeSchema` while every era agrees on types (ONE scan node
-    * — the cheap steady state), switching to per-path reads folded with
-    * `unionByName(allowMissingColumns = true)` once any widen is recorded
-    * — parquet schema merging cannot reconcile int/bigint eras, while
-    * union coercion widens them exactly (and missing columns still
-    * null-fill). The union plan grows with the path count; compaction
-    * collapses it back to the single-scan shape, which is the maintenance
-    * cadence a high-frequency append table runs anyway. */
-  private def readMerged(spark: SparkSession, l: Listing, paths: Seq[String]): DataFrame =
-    if (l.current.widens.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    else
-      paths.map(p => spark.read.parquet(p))
+    * Planned from the manifests alone: each snapshot's schema is the one
+    * its commit recorded, so building the relation opens no footer and
+    * starts no Spark job. While no widen is recorded, the snapshots'
+    * schemas fold into one read schema (`mergeSchemas`: id order, so the
+    * column order is deterministic) over ONE scan node —
+    * the cheap steady state. Once any widen is recorded, each snapshot is
+    * read under its own schema and the reads fold with
+    * `unionByName(allowMissingColumns = true)`: one read schema cannot
+    * hold both the int and the bigint era of a column, while union
+    * coercion widens them exactly (and missing columns still null-fill).
+    * The union plan grows with the snapshot count; compaction collapses it
+    * back to the single-scan shape, which is the maintenance cadence a
+    * high-frequency append table runs anyway. */
+  private def readMerged(
+      spark: SparkSession, l: Listing, parts: Seq[(Manifest, Seq[String])]): DataFrame =
+    if (l.current.widens.isEmpty) {
+      val schema = SnapshotStore.mergeSchemas(parts.map { case (m, _) => m.id -> m.schema },
+        spark.sessionState.conf.caseSensitiveAnalysis)
+      spark.read.schema(schema).parquet(parts.flatMap(_._2): _*)
+    } else
+      parts.map { case (m, files) => spark.read.schema(m.schema).parquet(files: _*) }
         .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Data snapshots of (fromExclusive, toInclusive], after the checkpoint
@@ -720,7 +745,7 @@ final class SnapshotStore(val root: String) {
   def readRange(spark: SparkSession, fromExclusive: Long, toInclusive: Long): DataFrame = {
     val l = listing()
     val ms = dataInRange(l, fromExclusive, toInclusive)
-    l.evolution(toInclusive)(readMerged(spark, l, ms.map(_.dataPath.toString)))
+    l.evolution(toInclusive)(readMerged(spark, l, whole(ms)))
   }
 
   /** Column stats recorded for snapshot `id` at append time:
@@ -764,10 +789,10 @@ final class SnapshotStore(val root: String) {
     requireNewNames(df, l.current)
     def fresh(now: Listing) = !now.txns.get(appId).exists(_ >= batchId)
     if (!fresh(l)) return None // cheap pre-check before staging any data
-    val (stage, _) = stageWrite(df)
+    val staged = stageWrite(df)
     val m = Map(s"txn_$appId" -> batchId.toString) ++
-      stagedStats(df.sparkSession, stage, statsCol)
-    commitStaged(stage, _ => m, fresh)
+      stagedStats(df.sparkSession, staged, statsCol)
+    commitStaged(staged, _ => m, fresh)
   }
 
   /** Per-file (basename, min, max) stats recorded for snapshot `id`, if
@@ -814,16 +839,16 @@ final class SnapshotStore(val root: String) {
       col: String, lo: Long, hi: Long): DataFrame = {
     val l = listing()
     val all = dataInRange(l, fromExclusive, toInclusive)
-    val paths = all.filter(_.mayMatch(col, lo, hi, l.current)).flatMap { m =>
-      m.pruneFiles(col, lo, hi, l.current).fold(Seq(m.dataPath.toString))(_._1)
-    }
+    val parts = all.filter(_.mayMatch(col, lo, hi, l.current)).map { m =>
+      m -> m.pruneFiles(col, lo, hi, l.current).fold(Seq(m.dataPath.toString))(_._1)
+    }.filter(_._2.nonEmpty)
     val base =
-      if (paths.nonEmpty) readMerged(spark, l, paths)
+      if (parts.nonEmpty) readMerged(spark, l, parts)
       else // everything pruned: empty result with the table's FULL merged
         // schema (a first-snapshot-only read would lack later-era added
         // columns, making .select on the empty result throw where the
         // unpruned path succeeds); lit(false) keeps it schema-only cost
-        readMerged(spark, l, all.map(_.dataPath.toString)).where(lit(false))
+        readMerged(spark, l, whole(all)).where(lit(false))
     l.evolution(toInclusive)(base).where(s"$col BETWEEN $lo AND $hi")
   }
 
@@ -855,7 +880,7 @@ final class SnapshotStore(val root: String) {
     // replacement manifest so it keeps projecting any older non-compacted
     // data and keeps rejecting re-adds
     val evo = l.current
-    val (stage, _) = stageWrite(evo(readMerged(spark, l, dataInputs.map(_.dataPath.toString))))
+    val staged = stageWrite(evo(readMerged(spark, l, whole(dataInputs))))
     // stats survive compaction when every data input carries them for the
     // same column: merged range = [min of mins, max of maxes] — no extra job
     val inStats = dataInputs.map(_.stats)
@@ -873,7 +898,7 @@ final class SnapshotStore(val root: String) {
           "stats_max" -> inStats.flatten.map(_._3).max.toString)
       else Nil
     val inputIds = inputs.map(_.id)
-    val id = commitStaged(stage,
+    val id = commitStaged(staged,
       now => Map("replaces" -> inputIds.mkString(",")) ++ now.carried(evo) ++ stats,
       now => inputIds.forall(now.liveIds.contains))
       .getOrElse(throw new IllegalStateException(
@@ -934,6 +959,11 @@ object SnapshotStore {
     * table — Iceberg's manifest FILES — not a flat string). */
   val MaxFileStats = 512
 
+  /** A write staged under `dir`, not yet committed: the schema of its rows
+    * (None for a metadata-only commit, which stages no files) and, when
+    * known, how many rows it holds. */
+  private final case class Staged(dir: Path, schema: Option[StructType], rows: Option[Long] = None)
+
   private def encodeChain(chain: Seq[(String, String)]): String =
     chain.map { case (f, t) => s"$f>$t" }.mkString(",")
 
@@ -960,10 +990,10 @@ object SnapshotStore {
       renames.foldLeft(col) { case (c, (f, t)) => if (c == f) t else c }
 
     /** Rename chain, then drop set. Renames on a (possibly mixed-era)
-      * relation: both names present (old files + post-rename files under
-      * mergeSchema) → fold the old column into the new one (disjoint by
-      * construction — `append` rejects the retired name, so no row carries
-      * both); only the old name → plain rename; only the new name
+      * relation: both names present (old files + post-rename files in one
+      * merged read schema) → fold the old column into the new one
+      * (disjoint by construction — `append` rejects the retired name, so
+      * no row carries both); only the old name → plain rename; only the new name
       * (post-compaction) → no-op. Exact name matching, like every other
       * store surface. */
     def project(df: DataFrame): DataFrame = {
@@ -994,10 +1024,41 @@ object SnapshotStore {
         "rename_cols" -> encodeChain(renames), "widen_cols" -> encodeChain(widens)).filter(_._2.nonEmpty)
   }
 
+  /** The read schema of several data snapshots, given as (id, recorded
+    * schema), folded in id order: a column keeps the name, type and
+    * position of its first appearance, a column new in a later snapshot is
+    * appended, and every column is nullable (older rows lack newer
+    * columns). Names match under the session's resolver (`caseSensitive`).
+    * A column whose type differs between two snapshots (nullability aside)
+    * fails loudly, naming it and both ids: such eras need a recorded widen,
+    * which the store's `readMerged` reads through its union path. */
+  private def mergeSchemas(schemas: Seq[(Long, StructType)], caseSensitive: Boolean): StructType = {
+    def key(name: String) = if (caseSensitive) name else name.toLowerCase(java.util.Locale.ROOT)
+    val seen = scala.collection.mutable.LinkedHashMap.empty[String, (Long, StructField)]
+    for ((id, schema) <- schemas.sortBy(_._1); f <- schema.fields) seen.get(key(f.name)) match {
+      case None => seen(key(f.name)) = id -> f
+      case Some((first, g)) =>
+        if (loose(g.dataType) != loose(f.dataType)) throw new IllegalStateException(
+          s"column '${f.name}' is ${g.dataType.catalogString} in snapshot $first but " +
+            s"${f.dataType.catalogString} in snapshot $id; only a recorded widenColumn " +
+            "may change a column's type")
+    }
+    StructType(seen.values.map(_._2.copy(nullable = true)).toSeq)
+  }
+
+  /** `t` with every nested nullability flag set and field metadata
+    * dropped: the part of a type two snapshots must agree on. */
+  private def loose(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, loose(f.dataType))))
+    case a: ArrayType => ArrayType(loose(a.elementType), containsNull = true)
+    case m: MapType => MapType(loose(m.keyType), loose(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
   /** Manifest keys the store writes itself (see the key table on the
     * class); `append`'s caller `meta` may not set them. */
   private def storeOwned(key: String): Boolean =
-    Set("data", "snapshot_id", "row_count", "replaces", "schema_only",
+    Set("data", "schema", "snapshot_id", "row_count", "replaces", "schema_only",
       "drop_cols", "rename_cols", "widen_cols")(key) ||
       Seq("stats_", "file_stats", "txn_").exists(key.startsWith)
 

@@ -30,7 +30,8 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
     store.append(Seq((1L, "x")).toDF("k", "v").repartition(1))
     store.append(Seq((2L, "y", "extra2")).toDF("k", "v", "w"))
     val got = store.readRange(spark, 0L, 2L)
-    assert(got.columns.sorted.toSeq === Seq("k", "v", "w"))
+    // snapshots fold in id order: a later era's new column comes last
+    assert(got.columns.toSeq === Seq("k", "v", "w"))
     val byK = got.collect().map(r => r.getLong(0) -> Option(r.getAs[String]("w"))).toMap
     assert(byK === Map(1L -> None, 2L -> Some("extra2")))
   }
@@ -163,10 +164,11 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
     // upsert keyed by the NEW name over pre-rename snapshots
     val uid = store.upsert(spark,
       Seq((2L, "Y", 21L), (3L, "z", 30L)).toDF("id", "v", "aux"), "id")
-    // by NAME: mergeSchema's column order follows file listing order,
-    // which is not deterministic across runs
-    val rows = store.readRange(spark, 0L, uid).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
+    // columns fold in snapshot-id order (the pre-rename snapshot's k, v,
+    // aux, then the upsert's new id); folding k into id keeps id's slot
+    val merged = store.readRange(spark, 0L, uid)
+    assert(merged.columns.toSeq === Seq("v", "aux", "id"))
+    val rows = merged.collect().map(r => r.getLong(2) -> r.getString(0)).toMap
     assert(rows === Map(1L -> "x", 2L -> "Y", 3L -> "z"))
     // dropping by the CURRENT name removes pre-rename data too
     store.renameColumn(spark, "aux", "aux2")
@@ -247,6 +249,20 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkFixture {
     val rows = store.readRange(spark, 0L, uid).collect()
       .map(r => r.getLong(0) -> (r.getString(1), Option(r.getAs[java.lang.Long]("z")))).toMap
     assert(rows === Map(1L -> ("X", Some(9L)), 2L -> ("y", None)))
+  }
+
+  test("a column whose type changes without a widen fails the read, naming it and both snapshots") {
+    import spark.implicits._
+    val store = freshStore("conflict")
+    val s1 = store.append(Seq((1L, 10)).toDF("k", "n"))
+    val s2 = store.append(Seq((2L, 20L)).toDF("k", "n"))
+    for (read <- Seq(() => store.readRange(spark, 0L, s2), () => store.dropColumn(spark, "k"))) {
+      val e = intercept[IllegalStateException](read())
+      assert(Seq("'n'", "int", "bigint", s"snapshot $s1", s"snapshot $s2").forall(e.getMessage.contains),
+        e.getMessage)
+    }
+    // each snapshot alone still reads under its own type
+    assert(store.read(spark, s1).schema("n").dataType === org.apache.spark.sql.types.IntegerType)
   }
 
   test("widenColumn: manifest-only, mixed-era reads up-cast, time travel intact") {

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graft.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
@@ -21,30 +22,22 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
     .getOrCreate()
 
   /** Spark jobs `body` starts, as the stage count of each. Listener events
-    * arrive in order but asynchronously, so a sentinel job in its own group
-    * marks the end. */
+    * arrive asynchronously, so the jobs are read once the listener bus has
+    * delivered every event posted while `body` ran. */
   def jobsOf[A](body: => A): (A, Seq[Int]) = {
     val sc = spark.sparkContext
     val group = s"jobs-of-${java.util.UUID.randomUUID}"
     val stages = new ConcurrentLinkedQueue[Int]
-    @volatile var sentinel = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => stages.add(e.stageInfos.size)
-          case g if g == s"$group-end" => sentinel = true
-          case _ =>
-        }
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          stages.add(e.stageInfos.size)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "counted")
       val a = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!sentinel && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel, "listener never saw the sentinel job")
+      BusDrain(sc)
       (a, stages.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }

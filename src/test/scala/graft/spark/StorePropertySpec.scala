@@ -5,11 +5,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.SnapshotStore
+import graft.schema.{ConvSegment, PartitionLineage}
 
 /** Model-based randomized exercise of the SnapshotStore op surface: a
   * seeded sequence of append / add-column append / exactly-once append /
@@ -254,7 +256,7 @@ class StorePropertySpec extends AnyFunSuite with SparkFixture {
   test("append rejects manifest keys the store writes itself, naming the key, before staging") {
     val store = new SnapshotStore(Files.createTempDirectory("graft-reserved").toString)
     val first = store.append(df1(Seq(1L)), statsCol = Some("k"))
-    for (key <- Seq("data", "snapshot_id", "row_count", "replaces", "schema_only",
+    for (key <- Seq("data", "schema", "snapshot_id", "row_count", "replaces", "schema_only",
       "drop_cols", "rename_cols", "widen_cols", "stats_col", "stats_min", "stats_max",
       "file_stats", "file_stats_overflow", "txn_app")) {
       val e = intercept[IllegalArgumentException](
@@ -278,5 +280,95 @@ class StorePropertySpec extends AnyFunSuite with SparkFixture {
     val e = intercept[IllegalStateException](store.dataLocation(2L))
     assert(e.getMessage.contains("manifest 2"), e.getMessage)
     intercept[IllegalStateException](store.readRange(spark, 0L, 2L))
+  }
+
+  test("a data manifest that records no schema fails loudly, naming its id") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-noschema").toString)
+    store.append(df1(Seq(1L)))
+    // a manifest naming real data but no schema: reads must not infer one
+    val data = store.dataLocation(1L).getFileName.toString
+    Files.write(Paths.get(store.root, "_manifests", "2.json"), SnapshotStore.encodeManifest(
+      Map("snapshot_id" -> "2", "data" -> data)).getBytes(StandardCharsets.UTF_8))
+    for (read <- Seq(() => store.readRange(spark, 0L, 2L), () => store.read(spark, 2L),
+      () => store.readRangePruned(spark, 0L, 2L, "k", 0L, 9L))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("manifest 2") && e.getMessage.contains("schema"), e.getMessage)
+    }
+  }
+
+  /** The (name, type, nullability) set of `df`'s columns. */
+  private def fields(df: DataFrame): Set[(String, DataType, Boolean)] =
+    df.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSet
+
+  /** `df`'s rows as a multiset, columns taken in `cols` order. */
+  private def rows(df: DataFrame, cols: Seq[String]): Map[Row, Int] =
+    df.select(cols.map(col): _*).collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  test("reads are planned from the manifests: no Spark job, and Spark's inference agrees") {
+    import spark.implicits._
+    val store = new SnapshotStore(Files.createTempDirectory("graft-planned").toString)
+    def seg(cid: String, doc: Long) =
+      ConvSegment(cid, doc, 1, 2, s"f$doc", "t", doc * 10, 2, 2, "s", s"x$doc")
+    // segments (a Spark write, with stats) and lineage (a driver write), as
+    // the submitted job commits them
+    val s1 = store.append(Seq(seg("a", 1L), seg("b", 2L), seg("c", 3L)).toDF().repartition(2),
+      Map("table" -> "segments"), statsCol = Some("DocReceivedId"))
+    store.append(Seq(PartitionLineage("segment", 0, s1, 3L, 3L, 0L)).toDF(), Map("table" -> "lineage"))
+    // an added INT column, then a drop and a rename, then a post-rename append
+    val s3 = store.append(Seq(seg("d", 4L), seg("e", 5L)).toDF().withColumn("score", lit(7)),
+      statsCol = Some("DocReceivedId"))
+    store.dropColumn(spark, "SessionId")
+    store.renameColumn(spark, "FileNumber", "file_no")
+    val s6 = store.append(Seq(seg("f", 6L)).toDF().drop("SessionId")
+      .withColumnRenamed("FileNumber", "file_no").withColumn("score", lit(8)))
+
+    // the oracle: Spark's own footer inference over the same files, with
+    // the recorded evolution applied by hand
+    def inferred(paths: Seq[String]) = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    def dirs(ids: Long*) = ids.map(store.dataLocation(_).toString)
+    def evolve(df: DataFrame, widened: Boolean): DataFrame = {
+      val renamed =
+        if (!df.columns.contains("file_no")) df.withColumnRenamed("FileNumber", "file_no")
+        else if (!df.columns.contains("FileNumber")) df
+        else df.withColumn("file_no", coalesce(col("file_no"), col("FileNumber"))).drop("FileNumber")
+      val dropped = renamed.drop("SessionId")
+      if (widened) dropped.withColumn("score", col("score").cast("bigint")) else dropped
+    }
+    def same(tag: String, got: => DataFrame, want: DataFrame): Unit = {
+      val (df, jobs) = jobsOf(got)
+      assert(jobs.isEmpty, s"[$tag] building the read started jobs with stage counts $jobs")
+      assert(fields(df) == fields(want), s"[$tag] ${df.schema} vs ${want.schema}")
+      assert(rows(df, want.columns.toSeq) == rows(want, want.columns.toSeq), s"[$tag] rows differ")
+    }
+    def pruned(from: Long, to: Long, lo: Long, hi: Long): Seq[String] = {
+      val (kept, _) = store.pruneSnapshots(from, to, "DocReceivedId", lo, hi)
+      store.dataSnapshots.filter(kept.contains).flatMap(id =>
+        store.pruneFiles(id, "DocReceivedId", lo, hi).fold(dirs(id))(_._1))
+    }
+
+    same("read below the drop", store.read(spark, s1), inferred(dirs(s1)))
+    same("read of the added column", store.read(spark, s3), inferred(dirs(s3)))
+    same("read after the rename", store.read(spark, s6), evolve(inferred(dirs(s6)), widened = false))
+    val all = store.dataSnapshots
+    same("readRange", store.readRange(spark, 0L, s6), evolve(inferred(dirs(all: _*)), widened = false))
+    same("readRange from a checkpoint", store.readRange(spark, s1, s6),
+      evolve(inferred(dirs(all.filter(_ > s1): _*)), widened = false))
+    same("readRangePruned", store.readRangePruned(spark, 0L, s6, "DocReceivedId", 2L, 4L),
+      evolve(inferred(pruned(0L, s6, 2L, 4L)), widened = false).where("DocReceivedId BETWEEN 2 AND 4"))
+
+    // a widen, then a wide append: each snapshot is read under its own
+    // schema and the eras union, as per-snapshot inference would
+    store.widenColumn(spark, "score", "bigint")
+    val s8 = store.append(Seq(seg("g", 7L)).toDF().drop("SessionId")
+      .withColumnRenamed("FileNumber", "file_no").withColumn("score", lit(3000000000L)))
+    def unioned(paths: Seq[String]) =
+      paths.map(p => spark.read.parquet(p)).reduce(_.unionByName(_, allowMissingColumns = true))
+    val widened = store.dataSnapshots
+    assert(widened.last == s8)
+    same("readRange after the widen", store.readRange(spark, 0L, s8),
+      evolve(unioned(dirs(widened: _*)), widened = true))
+    same("readRangePruned after the widen", store.readRangePruned(spark, 0L, s8, "DocReceivedId", 1L, 9L),
+      evolve(unioned(pruned(0L, s8, 1L, 9L)), widened = true).where("DocReceivedId BETWEEN 1 AND 9"))
+    same("read of the wide append", store.read(spark, s8), evolve(inferred(dirs(s8)), widened = true))
   }
 }
